@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Headline benchmark: one JSON line for the round driver.
 
-Measures, on local[$SPARK_GRAFT_CPUS] (default 32):
+Measures, on local[$SPARK_GRAFT_CPUS] (default: the CPUs this process
+may run on):
 
 * the Gorilla codec through the full Spark path (encode + decode
   points/s) on a distributed-generated synthetic transcript corpus
@@ -88,7 +89,8 @@ _BUDGET_HEADROOM = 1.50
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
     n_conv = int(os.environ.get("BENCH_N_CONV", "6000"))
     mean_turns = int(os.environ.get("BENCH_MEAN_TURNS", "300"))
 

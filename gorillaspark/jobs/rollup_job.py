@@ -17,7 +17,7 @@ Pipeline per day-unit (resumable; see plans/checkpoint.py):
 
 Every stage is stock DataFrame API + the segmented codec kernel; the
 unit key is the UTC day of the turn timestamp so partition pruning
-reaches the parquet/Iceberg scan.
+reaches the parquet scan.
 """
 
 from __future__ import annotations
@@ -35,7 +35,7 @@ from ..operators.sketch import dd_sketch_tier
 from ..plans.checkpoint import run_resumable_shared
 from ..plans.maintenance import compact_sweep
 from ..plans.session import build_session
-from ..sources.tableio import open_table_io
+from ..sources.tableio import ParquetTableIO
 
 
 def day_units(df) -> list[str]:
@@ -54,7 +54,7 @@ def main(argv=None) -> None:
     args = ap.parse_args(argv)
 
     spark = build_session(app=f"gorillaspark-{args.job_id}")
-    io = open_table_io(spark, args.warehouse)
+    io = ParquetTableIO(spark, args.warehouse)
     transcripts = spark.read.parquet(args.transcripts)
     units = day_units(transcripts)
 

@@ -110,17 +110,15 @@ def _day_align(ts: "np.ndarray") -> "np.ndarray":
 
 
 def _encode_table(tbl: "pa.Table", value_kind: str,
-                  predictor: str = "last_value",
-                  key_cols: tuple[str, ...] = ("series_key",)
-                  ) -> "pa.RecordBatch":
+                  predictor: str = "last_value") -> "pa.RecordBatch":
     """Encode one already-sorted Arrow table: group boundaries from the
-    (*key_cols, day(ts)) change points, one segmented-kernel call.
+    (series_key, day(ts)) change points, one segmented-kernel call.
     Strings never materialize as Python objects; the words column is a
     zero-copy ListArray over the kernel's output buffer."""
     import pyarrow as pa
 
     tbl = tbl.combine_chunks()
-    key_arrs = [tbl.column(c).chunk(0) for c in key_cols]
+    keys = tbl.column("series_key").chunk(0)
     vcol = tbl.column("value").chunk(0)
     if vcol.null_count or tbl.column("ts_ms").chunk(0).null_count:
         raise ValueError(
@@ -142,9 +140,8 @@ def _encode_table(tbl: "pa.Table", value_kind: str,
     change[0] = True
     if n > 1:
         change[1:] = bts[1:] != bts[:-1]
-        for arr in key_arrs:
-            key_neq = pc.not_equal(arr.slice(1), arr.slice(0, n - 1))
-            change[1:] |= key_neq.to_numpy(zero_copy_only=False)
+        key_neq = pc.not_equal(keys.slice(1), keys.slice(0, n - 1))
+        change[1:] |= key_neq.to_numpy(zero_copy_only=False)
     starts = np.flatnonzero(change)
     offsets = np.empty(starts.shape[0] + 1, dtype=np.int64)
     offsets[:-1] = starts
@@ -170,7 +167,7 @@ def _encode_table(tbl: "pa.Table", value_kind: str,
         pa.array(list_offsets), pa.array(words.view(np.int64)))
     return pa.RecordBatch.from_arrays(
         [
-            *[pc.take(arr, pa.array(starts)) for arr in key_arrs],
+            pc.take(keys, pa.array(starts)),
             pa.array(bts[starts]),
             pa.array((offsets[1:] - offsets[:-1]).astype(np.int32)),
             pa.array(np.full(len(starts), value_kind, dtype=object),
@@ -179,14 +176,13 @@ def _encode_table(tbl: "pa.Table", value_kind: str,
                      type=pa.string()),
             words_col.cast(pa.list_(pa.int64())),
         ],
-        names=[*key_cols, "block_ts", "n_points", "value_kind",
+        names=["series_key", "block_ts", "n_points", "value_kind",
                "predictor", "words"],
     )
 
 
 def _encode_partition(batches, value_kind: str,
-                      predictor: str = "last_value",
-                      key_cols: tuple[str, ...] = ("series_key",)):
+                      predictor: str = "last_value"):
     """Carry the trailing (possibly incomplete) block across Arrow batch
     boundaries; each yielded batch encodes only whole blocks."""
     import pyarrow as pa
@@ -206,58 +202,29 @@ def _encode_partition(batches, value_kind: str,
                 "or gap-fill upstream)")
         bts = _day_align(tbl.column("ts_ms").to_numpy())
         # size of the trailing group (sorted ⇒ contiguous at the end)
+        keys = tbl.column("series_key")
         tail_np = bts == bts[-1]
-        for c in key_cols:
-            col = tbl.column(c)
-            key_eq = pc.equal(col, col[n - 1])
-            tail_np = tail_np & key_eq.combine_chunks() \
-                .to_numpy(zero_copy_only=False)
+        tail_np &= pc.equal(keys, keys[n - 1]).combine_chunks() \
+            .to_numpy(zero_copy_only=False)
         if tail_np.all():
             held = tbl
             continue
         tail_len = int(tail_np[::-1].argmin())
         held = tbl.slice(n - tail_len)
         yield _encode_table(tbl.slice(0, n - tail_len), value_kind,
-                            predictor, key_cols)
+                            predictor)
     if held is not None and held.num_rows:
-        yield _encode_table(held, value_kind, predictor, key_cols)
-
-
-_HASHED_BLOCK_SCHEMA = StructType([
-    StructField("_sid", LongType(), False),
-    StructField("_sid2", IntegerType(), False),
-    StructField("block_ts", LongType(), False),
-    StructField("n_points", IntegerType(), False),
-    StructField("value_kind", StringType(), False),
-    StructField("predictor", StringType(), False),
-    StructField("words", ArrayType(LongType(), False), False),
-])
+        yield _encode_table(held, value_kind, predictor)
 
 
 def encode_points(points: DataFrame, value_kind: str = "double",
                   partitions: int | None = None,
-                  predictor: str = "last_value",
-                  hashed_shuffle: bool = False) -> DataFrame:
+                  predictor: str = "last_value") -> DataFrame:
     """points(series_key, ts_ms, value) → Gorilla blocks.
 
     One shuffle: hash-repartition on the block key, sort within
     partitions, stream Arrow batches through the segmented kernel
     (``mapInArrow`` — no pandas/object conversion in the hot path).
-
-    ``hashed_shuffle=True`` is the string-free shuffle variant (the
-    encode analogue of ``rollup_tier(hashed_keys=True)``): the shuffle,
-    sort, and Arrow feed carry two integer hashes of the series key
-    (xxhash64 + murmur3, ~96 effective bits — collision merges two
-    series at ~n²/2^97, <1e-9 even at 1e13 series) instead of the
-    string; the string is re-attached per *block* (not per point) by
-    joining a distinct (hash → key) dimension that partial aggregation
-    keeps tiny. Output rows are bit-identical to the default path
-    (pinned by test_hashed_shuffle_encode_bit_identical). MEASURED
-    honestly (pinned 2/8-core A/B, BENCH notes): on this box with
-    short keys and tmpfs shuffle the extra distinct pass makes it
-    ~5-10% SLOWER than the default — the variant pays off only when
-    shuffle bytes are expensive (real network) and keys are wide;
-    default stays the string path.
     """
     from .normalize import block_key
 
@@ -271,31 +238,14 @@ def encode_points(points: DataFrame, value_kind: str = "double",
     pts = points.select("series_key", "ts_ms", "value")
     n_part = partitions or pts.sparkSession.conf.get(
         "spark.sql.shuffle.partitions")
-    if not hashed_shuffle:
-        laid_out = (
-            pts.repartition(int(n_part), F.col("series_key"),
-                            block_key("ts_ms"))
-            .sortWithinPartitions("series_key", "ts_ms")
-        )
-        return laid_out.mapInArrow(
-            lambda it: _encode_partition(it, value_kind, predictor),
-            BLOCK_SCHEMA)
-    hashed = pts.withColumn("_sid", F.xxhash64("series_key")) \
-                .withColumn("_sid2", F.hash("series_key"))
-    dim = hashed.select("_sid", "_sid2", "series_key").distinct()
     laid_out = (
-        hashed.select("_sid", "_sid2", "ts_ms", "value")
-        .repartition(int(n_part), F.col("_sid"), F.col("_sid2"),
-                     block_key("ts_ms"))
-        .sortWithinPartitions("_sid", "_sid2", "ts_ms")
+        pts.repartition(int(n_part), F.col("series_key"),
+                        block_key("ts_ms"))
+        .sortWithinPartitions("series_key", "ts_ms")
     )
-    enc = laid_out.mapInArrow(
-        lambda it: _encode_partition(it, value_kind, predictor,
-                                     ("_sid", "_sid2")),
-        _HASHED_BLOCK_SCHEMA)
-    return (enc.join(dim, ["_sid", "_sid2"])
-            .select("series_key", "block_ts", "n_points",
-                    "value_kind", "predictor", "words"))
+    return laid_out.mapInArrow(
+        lambda it: _encode_partition(it, value_kind, predictor),
+        BLOCK_SCHEMA)
 
 
 def _scalar_decode(words, wc, predictors):

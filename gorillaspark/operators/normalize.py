@@ -3,7 +3,7 @@ derivation, and the (series_key, ts_ms, value) point layout that feeds
 the Gorilla encode stage.
 
 All stock Catalyst operators (window lag, projections) — filters and
-column pruning push down to the parquet/Iceberg scan.
+column pruning push down to the parquet scan.
 """
 
 from __future__ import annotations

@@ -7,11 +7,11 @@ Policy model (the classic downsample-retention ladder):
     1h rollups      keep  R_1h    (e.g. 1 year)
     1d rollups      keep  forever
 
-With Iceberg this is partition-pruned ``DELETE WHERE bucket < cutoff``
-plus ``expire_snapshots`` (IcebergTableIO); on the parquet fallback a
-retention sweep rewrites only the partitions that straddle the cutoff
-and drops whole expired snapshot directories — never a full-table
-rewrite.
+Two forms: :func:`apply_retention` is the logical filter (the rows of a
+tier the policy keeps), and :func:`retention_sweep` is the physical
+sweep on a ParquetTableIO table. The sweep drops whole snapshots by
+their commit time and rewrites nothing, so data whose own time is past
+the cutoff survives when it was committed recently (a backfill).
 """
 
 from __future__ import annotations
@@ -38,11 +38,9 @@ class RetentionPolicy:
 def apply_retention(df: DataFrame, tier: str, now_ms: int,
                     policy: RetentionPolicy | None = None,
                     bucket_col: str = "bucket") -> DataFrame:
-    """Logical retention filter for a tier (the DELETE predicate).
-
-    On Iceberg the same predicate goes to ``DELETE FROM ... WHERE``;
-    the filter form keeps the operator testable engine-side and pushes
-    down to partition pruning on read paths.
+    """Logical retention filter for a tier: keeps rows whose bucket is
+    at or after the tier's cutoff. It pushes down to partition pruning
+    on read paths.
     """
     policy = policy or RetentionPolicy()
     cut = policy.cutoff(tier, now_ms)
@@ -54,8 +52,8 @@ def apply_retention(df: DataFrame, tier: str, now_ms: int,
 
 def retention_sweep(io, table: str, tier: str, now_ms: int,
                     policy: RetentionPolicy | None = None) -> int:
-    """Physical retention on a ParquetTableIO table: drop snapshots
-    entirely older than the cutoff, rewrite none (appends are
-    time-ordered per job run, so old snapshots age out whole)."""
+    """Physical retention on a ParquetTableIO table: drop the snapshots
+    committed before the tier's cutoff, rewrite none. Returns the
+    number of snapshots dropped."""
     policy = policy or RetentionPolicy()
     return io.delete_snapshots_before(table, policy.cutoff(tier, now_ms))

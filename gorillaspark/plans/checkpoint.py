@@ -4,13 +4,18 @@ Contract (north rule): jobs are resumable from snapshot checkpoints
 with *per-partition lineage and metrics rows*. Implementation:
 
 * work is partitioned into logical units (here: day partitions of the
-  input); each unit's completion is one row in the ``_meta`` table:
-  ``(job_id, unit, status, rows_in, rows_out, snapshot_id, wall_ms)``;
+  input); each unit's completion is one row in the ``_meta`` table
+  (``META_SCHEMA``): ``(job_id, unit, status, rows_out, out_partitions,
+  out_bytes_est, snapshot_id, wall_ms, committed_at_ms)``;
+* the row's counts are the ``added_*`` counts of the snapshot entry
+  the output append committed (rows, files, parquet bytes), so the
+  output plan runs once — in its write — and nothing re-counts it;
 * a restarted job anti-joins pending units against completed ``_meta``
   rows — only unfinished units re-run;
 * output appends are keyed ``commit_key = f"{job_id}/{unit}"`` so a
-  crash *between* output commit and meta commit re-runs the unit but
-  the TableIO append is a no-op (idempotent exactly-once output).
+  crash *between* output commit and meta commit replays the unit as a
+  no-op append (idempotent exactly-once output) whose ``_meta`` row is
+  taken from the entry already committed under that key.
 """
 
 from __future__ import annotations
@@ -57,7 +62,8 @@ def pending_units(all_units: list[str], done: set[str]) -> list[str]:
 
 
 def record_unit(spark: SparkSession, io, job_id: str, unit: str,
-                rows_out: int, out_partitions: int, out_bytes_est: int,
+                rows_out: int | None, out_partitions: int | None,
+                out_bytes_est: int | None,
                 snapshot_id: str | None, wall_ms: int) -> None:
     row = [(job_id, unit, "done", rows_out, out_partitions,
             out_bytes_est, snapshot_id or "", wall_ms,
@@ -70,7 +76,6 @@ def unit_metrics(spark: SparkSession, io, job_id: str):
     """The per-unit lineage + metrics rows for a job (throughput,
     output volume, snapshot ids) — the operational view the north rule
     asks for; empty DataFrame if the job never ran."""
-    from pyspark.sql import functions as F
     try:
         meta = io.read(META_TABLE)
     except FileNotFoundError:
@@ -89,11 +94,9 @@ def run_resumable(spark: SparkSession, io, job_id: str,
 
     ``unit_fn(unit) -> DataFrame`` produces a unit's output; completed
     units are skipped on re-run. Each unit commits one lineage+metrics
-    row (rows, partitions, estimated bytes, snapshot id, wall time).
+    row (rows, files, parquet bytes, snapshot id, wall time).
     Returns {unit: rows_out} for the units executed in THIS invocation.
     """
-    from pyspark.sql import functions as F
-
     done = completed_units(spark, io, job_id)
     ran: dict[str, int] = {}
     for unit in pending_units(units, done):
@@ -103,27 +106,19 @@ def run_resumable(spark: SparkSession, io, job_id: str,
 
 
 def _commit_unit(spark: SparkSession, io, job_id: str, unit: str,
-                 out: DataFrame, out_table: str) -> int:
-    """Materialize + append one unit's output and record its
-    lineage/metrics row. Returns rows_out."""
+                 out: DataFrame, out_table: str) -> int | None:
+    """Append one unit's output and record its lineage/metrics row from
+    the snapshot entry the append committed — or, when the commit key
+    was already committed (a replay after a crash), from that entry, so
+    a replay never executes ``out``. Returns rows_out."""
     t0 = time.time()
-    out = out.cache()
-    rows_out = out.count()
-    n_part = out.rdd.getNumPartitions()
-    # cheap volume estimate: words column when present (encoded
-    # blocks), else row count * avg-ish width
-    if "words" in out.columns:
-        bytes_est = (out.agg(F.sum(F.size("words")))
-                     .collect()[0][0] or 0) * 8
-    else:
-        bytes_est = rows_out * 64
-    snap = io.append(out_table, out, commit_key=f"{job_id}/{unit}")
-    out.unpersist()
-    record_unit(spark, io, job_id, unit, rows_out, n_part,
-                int(bytes_est),
-                snap.snapshot_id if snap else None,
+    key = f"{job_id}/{unit}"
+    snap = (io.append(out_table, out, commit_key=key)
+            or io.committed(out_table, key))
+    record_unit(spark, io, job_id, unit, snap.added_rows, snap.added_files,
+                snap.added_bytes, snap.snapshot_id,
                 int((time.time() - t0) * 1000))
-    return rows_out
+    return snap.added_rows
 
 
 def run_resumable_shared(spark: SparkSession, io,

@@ -15,11 +15,14 @@ block counts. ``compact_sweep`` repairs the table in place:
   it compacted, so a crashed/re-run sweep is a no-op and a *changed*
   table compacts again under a fresh key;
 * each sweep commits a ``_meta`` lineage row (job_id =
-  ``{job_id}-compact``, unit = the compacted snapshot id). A crash
+  ``{job_id}-compact``, unit = the compacted snapshot id) whose counts
+  are the rewrite entry's ``added_*`` counts — the compacted blocks are
+  computed once, by the rewrite's write. A crash
   BETWEEN the rewrite commit and the lineage commit is repaired on
   the next sweep: committed ``{job_id}/compact/*`` keys with no
-  matching ``_meta`` row are backfilled (wall_ms 0 marks a backfill),
-  mirroring run_resumable's crash-between-commits contract.
+  matching ``_meta`` row are backfilled from their entries (wall_ms 0
+  marks a backfill), mirroring run_resumable's crash-between-commits
+  contract.
 """
 
 from __future__ import annotations
@@ -47,19 +50,15 @@ def _backfill_lineage(spark: SparkSession, io, table: str,
     on its own commit key)."""
     prefix = f"{job_id}/compact/"
     done = completed_units(spark, io, f"{job_id}-compact")
-    snaps = {s.commit_key: s for s in io.snapshots(table) if s.commit_key}
-    for k, s in snaps.items():
-        if not k.startswith(prefix):
+    for s in io.snapshots(table):
+        if not (s.commit_key or "").startswith(prefix):
             continue
-        unit = k[len(prefix):]
+        unit = s.commit_key[len(prefix):]
         if unit in done:
             continue
-        # count the compacted snapshot itself, not the live table —
-        # appends that landed after the rewrite must not inflate the
-        # backfilled metric
-        rows = io.read(table, snapshot_id=s.snapshot_id).count()
         record_unit(spark, io, f"{job_id}-compact", unit=unit,
-                    rows_out=rows, out_partitions=0, out_bytes_est=0,
+                    rows_out=s.added_rows, out_partitions=s.added_files,
+                    out_bytes_est=s.added_bytes,
                     snapshot_id=s.snapshot_id, wall_ms=0)
 
 
@@ -73,9 +72,9 @@ def compact_sweep(spark: SparkSession, io, table: str = "blocks",
     """
     _backfill_lineage(spark, io, table, job_id)
     # pin the read at the snapshot the commit key names: an append
-    # landing between here and the rewrite neither enters `compacted`
-    # nor gets its files dropped (rewrite preserves snapshots after
-    # expected_snapshot_id)
+    # landing between here and the rewrite neither enters the compacted
+    # blocks nor gets its files dropped (rewrite preserves snapshots
+    # after expected_snapshot_id)
     snap_id = io.current_snapshot_id(table)
     if snap_id is None:
         return 0
@@ -87,10 +86,8 @@ def compact_sweep(spark: SparkSession, io, table: str = "blocks",
     if n_frag == 0:
         return 0
     t0 = time.time()
-    compacted = compact_blocks(blocks, value_kind).localCheckpoint()
-    rows_out = compacted.count()
-    snap = io.rewrite(table, compacted, commit_key=key,
-                      expected_snapshot_id=snap_id)
+    snap = io.rewrite(table, compact_blocks(blocks, value_kind),
+                      commit_key=key, expected_snapshot_id=snap_id)
     if snap is None:
         # nothing landed: either retention removed the anchor snapshot
         # (rewrite aborted) or a concurrent sweep won the same commit
@@ -98,11 +95,9 @@ def compact_sweep(spark: SparkSession, io, table: str = "blocks",
         # here would fabricate a compaction that never happened
         return 0
     record_unit(spark, io, f"{job_id}-compact", unit=str(snap_id),
-                rows_out=rows_out,
-                out_partitions=compacted.rdd.getNumPartitions(),
-                out_bytes_est=(compacted.agg(F.sum(F.size("words")))
-                               .collect()[0][0] or 0) * 8,
-                snapshot_id=snap.snapshot_id if snap else None,
+                rows_out=snap.added_rows, out_partitions=snap.added_files,
+                out_bytes_est=snap.added_bytes,
+                snapshot_id=snap.snapshot_id,
                 wall_ms=max(int((time.time() - t0) * 1000), 1))
     # the rewrite changed the table's file set in place — memoized
     # spread() widen decisions keyed on the pre-rewrite plan are now

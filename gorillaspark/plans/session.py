@@ -23,7 +23,8 @@ def build_session(app: str = "gorillaspark",
     same code runs under spark-submit where master/shuffle come from the
     cluster conf and AQE re-plans at runtime.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions or max(cpus, 32)
     b = (

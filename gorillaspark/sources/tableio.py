@@ -1,19 +1,18 @@
 """TableIO: snapshot-capable table access for the engine.
 
-The engine's north rule targets Iceberg tables (snapshot-based
-checkpoint/resume, partition-level retention deletes). This sandbox has
-no iceberg-spark-runtime jar and no network, so all table access goes
-through this thin interface with two implementations:
+:class:`ParquetTableIO` keeps each table as parquet data directories
+plus a JSON snapshot manifest (``_snapshots.json``) modelled on
+Iceberg's snapshot log: every append commits a new snapshot entry
+listing the directory it added, and readers pin a snapshot id and read
+exactly the files committed up to it.
 
-* :class:`IcebergTableIO` — used when the Iceberg extensions are on the
-  session classpath (``spark.sql.extensions`` +
-  ``org.apache.iceberg.spark.SparkCatalog``); append = native Iceberg
-  snapshot, retention = ``DELETE WHERE`` + ``expire_snapshots``.
-* :class:`ParquetTableIO` — partitioned parquet directories plus a
-  JSON snapshot manifest (`_snapshots.json`) that emulates Iceberg's
-  snapshot ids for checkpointing: every append commits a new snapshot
-  listing the files it added; readers pin a snapshot id and read
-  exactly its files. Retention drops whole partition directories.
+Each entry also records what its commit wrote: ``added_rows``,
+``added_bytes`` and ``added_files``, read from the parquet footers and
+sizes of the new files after the write and before the manifest lock
+(Iceberg's snapshot summary carries the same as ``added-records``,
+``added-files-size`` and ``added-data-files``). The counts stay when a
+later rewrite empties the entry's file list; entries written before
+they existed read them as None.
 
 Writers are idempotent per ``commit_key``: re-running a failed job step
 with the same key is a no-op (the resume contract in SURVEY.md §3.4).
@@ -22,6 +21,7 @@ with the same key is a no-op (the resume contract in SURVEY.md §3.4).
 from __future__ import annotations
 
 import contextlib
+import glob
 import json
 import os
 import shutil
@@ -29,8 +29,8 @@ import time
 import uuid
 from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 @dataclass
@@ -39,6 +39,9 @@ class Snapshot:
     committed_at_ms: int
     files: list[str]
     commit_key: str | None = None
+    added_rows: int | None = None
+    added_bytes: int | None = None
+    added_files: int | None = None
 
 
 class ParquetTableIO:
@@ -94,26 +97,37 @@ class ParquetTableIO:
             with contextlib.suppress(FileNotFoundError):
                 os.unlink(lock)
 
-    def _commit(self, table: str, files: list[str],
-                commit_key: str | None) -> Snapshot | None:
-        with self._manifest_lock(table):
-            # re-read inside the lock: another writer may have committed
-            # (including this very commit_key) since our pre-check
-            snaps = self.snapshots(table)
-            if commit_key and any(s.commit_key == commit_key for s in snaps):
-                return None
-            snap = Snapshot(snapshot_id=uuid.uuid4().hex[:16],
-                            committed_at_ms=int(time.time() * 1000),
-                            files=files, commit_key=commit_key)
-            snaps.append(snap)
-            tmp = self._manifest_path(table) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump([s.__dict__ for s in snaps], f)
-            os.replace(tmp, self._manifest_path(table))  # atomic commit
-            return snap
+    def _store(self, table: str, snaps: list[Snapshot]) -> None:
+        tmp = self._manifest_path(table) + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump([s.__dict__ for s in snaps], f)
+        os.replace(tmp, self._manifest_path(table))  # atomic commit
+
+    def _write(self, table: str, df: DataFrame) -> tuple[str, dict]:
+        """Write ``df`` to a fresh data directory; returns it with the
+        entry counts of the parquet files just written there."""
+        path = os.path.join(self.root, table, "data", uuid.uuid4().hex[:12])
+        df.write.mode("overwrite").parquet(path)
+        files = glob.glob(os.path.join(path, "*.parquet"))
+        return path, {
+            "added_rows": sum(pq.read_metadata(f).num_rows for f in files),
+            "added_bytes": sum(os.path.getsize(f) for f in files),
+            "added_files": len(files)}
+
+    @staticmethod
+    def _snapshot(path: str, commit_key: str | None,
+                  counts: dict) -> Snapshot:
+        return Snapshot(snapshot_id=uuid.uuid4().hex[:16],
+                        committed_at_ms=int(time.time() * 1000),
+                        files=[path], commit_key=commit_key, **counts)
 
     def committed_keys(self, table: str) -> set[str]:
         return {s.commit_key for s in self.snapshots(table) if s.commit_key}
+
+    def committed(self, table: str, commit_key: str) -> Snapshot | None:
+        """The entry committed under ``commit_key``, if any."""
+        return next((s for s in self.snapshots(table)
+                     if s.commit_key == commit_key), None)
 
     # -- I/O -------------------------------------------------------------
     def append(self, table: str, df: DataFrame,
@@ -121,15 +135,19 @@ class ParquetTableIO:
         """Write df as a new snapshot; no-op if commit_key already done."""
         if commit_key and commit_key in self.committed_keys(table):
             return None
-        subdir = uuid.uuid4().hex[:12]
-        path = os.path.join(self.root, table, "data", subdir)
-        df.write.mode("overwrite").parquet(path)
-        snap = self._commit(table, [path], commit_key)
-        if snap is None:
-            # lost a same-commit-key race after writing: remove the
-            # orphaned data directory no snapshot will ever reference
-            shutil.rmtree(path, ignore_errors=True)
-        return snap
+        path, counts = self._write(table, df)
+        with self._manifest_lock(table):
+            # re-read inside the lock: another writer may have committed
+            # this very commit_key since the pre-check
+            snaps = self.snapshots(table)
+            if commit_key and any(s.commit_key == commit_key for s in snaps):
+                # lost a same-commit-key race after writing: remove the
+                # orphaned data directory no snapshot will ever reference
+                shutil.rmtree(path, ignore_errors=True)
+                return None
+            snap = self._snapshot(path, commit_key, counts)
+            self._store(table, snaps + [snap])
+            return snap
 
     def rewrite(self, table: str, df: DataFrame,
                 commit_key: str | None = None,
@@ -161,9 +179,7 @@ class ParquetTableIO:
         """
         if commit_key and commit_key in self.committed_keys(table):
             return None
-        subdir = uuid.uuid4().hex[:12]
-        path = os.path.join(self.root, table, "data", subdir)
-        df.write.mode("overwrite").parquet(path)  # reads old files: pre-swap
+        path, counts = self._write(table, df)  # reads old files: pre-swap
         with self._manifest_lock(table):
             snaps = self.snapshots(table)
             if commit_key and any(s.commit_key == commit_key
@@ -184,20 +200,15 @@ class ParquetTableIO:
             old_files = [f for s in snaps[:n_replace] for f in s.files]
             for s in snaps[:n_replace]:
                 s.files = []
-            snap = Snapshot(snapshot_id=uuid.uuid4().hex[:16],
-                            committed_at_ms=int(time.time() * 1000),
-                            files=[path], commit_key=commit_key)
+            snap = self._snapshot(path, commit_key, counts)
             # insert at the anchor position, NOT the manifest tail:
             # a cumulative read at any concurrent snapshot X that
             # landed after the anchor must still see the compacted
-            # rows (the emptied base snapshots precede X), and
-            # _backfill_lineage's read-up-to-rewrite must not include
-            # concurrent appends (ADVICE r4)
+            # rows (the emptied base snapshots precede X), and a read
+            # up to the rewrite must not include concurrent appends
+            # (ADVICE r4)
             snaps.insert(n_replace, snap)
-            tmp = self._manifest_path(table) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump([s.__dict__ for s in snaps], f)
-            os.replace(tmp, self._manifest_path(table))
+            self._store(table, snaps)
         for f in old_files:
             shutil.rmtree(f, ignore_errors=True)
         return snap
@@ -221,9 +232,9 @@ class ParquetTableIO:
         return snaps[-1].snapshot_id if snaps else None
 
     def delete_snapshots_before(self, table: str, cutoff_ms: int) -> int:
-        """Retention: drop whole snapshots older than the cutoff (the
-        partition-prune analogue of Iceberg DELETE WHERE + expire)."""
-        import shutil
+        """Retention: drop whole snapshots whose commit time is before
+        the cutoff, with their files; the data's own time is not
+        consulted."""
         with self._manifest_lock(table):
             snaps = self.snapshots(table)
             keep, dropped = [], 0
@@ -234,78 +245,5 @@ class ParquetTableIO:
                     dropped += 1
                 else:
                     keep.append(s)
-            tmp = self._manifest_path(table) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump([s.__dict__ for s in keep], f)
-            os.replace(tmp, self._manifest_path(table))
+            self._store(table, keep)
             return dropped
-
-
-class IcebergTableIO:
-    """Iceberg-backed implementation (requires iceberg-spark-runtime on
-    the classpath; configure e.g.::
-
-        spark.sql.catalog.eng = org.apache.iceberg.spark.SparkCatalog
-        spark.sql.catalog.eng.type = hadoop
-        spark.sql.catalog.eng.warehouse = <path>
-
-    Not exercisable in this sandbox (no jar, no network) — the pytest
-    suite covers ParquetTableIO; this class keeps the call surface
-    identical so a cluster deployment only swaps the constructor.)
-    """
-
-    def __init__(self, spark: SparkSession, catalog: str = "eng") -> None:
-        self.spark = spark
-        self.catalog = catalog
-        jvm_ok = True
-        try:
-            spark.sql(f"SHOW NAMESPACES IN {catalog}")
-        except Exception as exc:  # pragma: no cover - no jar in sandbox
-            jvm_ok = False
-            self._err = exc
-        if not jvm_ok:  # pragma: no cover
-            raise RuntimeError(
-                f"Iceberg catalog {catalog!r} unavailable; use "
-                f"ParquetTableIO or add iceberg-spark-runtime") from self._err
-
-    def _fq(self, table: str) -> str:
-        return f"{self.catalog}.db.{table}"
-
-    def append(self, table: str, df: DataFrame,
-               commit_key: str | None = None):  # pragma: no cover
-        fq = self._fq(table)
-        if commit_key:
-            done = {r.commit_key for r in self.spark.sql(
-                f"SELECT snapshot_id, summary['commit_key'] AS commit_key "
-                f"FROM {fq}.snapshots").collect() if r.commit_key}
-            if commit_key in done:
-                return None
-        writer = df.writeTo(fq)
-        if commit_key:
-            writer = writer.option("snapshot-property.commit_key", commit_key)
-        writer.append()
-
-    def read(self, table: str,
-             snapshot_id: str | None = None) -> DataFrame:  # pragma: no cover
-        if snapshot_id:
-            return (self.spark.read.option("snapshot-id", snapshot_id)
-                    .table(self._fq(table)))
-        return self.spark.table(self._fq(table))
-
-    def delete_where(self, table: str, predicate: str):  # pragma: no cover
-        self.spark.sql(f"DELETE FROM {self._fq(table)} WHERE {predicate}")
-
-    def expire_snapshots(self, table: str,
-                         older_than_ms: int):  # pragma: no cover
-        self.spark.sql(
-            f"CALL {self.catalog}.system.expire_snapshots("
-            f"table => '{self._fq(table)}', "
-            f"older_than => TIMESTAMP '{older_than_ms}')")
-
-
-def open_table_io(spark: SparkSession, root: str):
-    """Prefer Iceberg when configured; fall back to parquet+manifest."""
-    try:
-        return IcebergTableIO(spark)
-    except Exception:
-        return ParquetTableIO(spark, root)

@@ -94,6 +94,7 @@ def test_compaction_sweep_run_crash_resume(spark, tmp_path):
     # lineage row for the compacted snapshot
     m = unit_metrics(spark, io, "m1-compact").collect()
     assert [r.unit for r in m] == [frag_snap] and m[0].wall_ms >= 1
+    assert m[0].rows_out == 1  # the rewrite entry's count
     # replay: clean table, nothing to do, no duplicate lineage
     assert compact_sweep(spark, io, "blocks", job_id="m1") == 0
     assert unit_metrics(spark, io, "m1-compact").count() == 1
@@ -115,6 +116,8 @@ def test_compaction_sweep_run_crash_resume(spark, tmp_path):
     m2 = {r.unit: r for r in unit_metrics(spark, io, "m1-compact").collect()}
     assert set(m2) == {frag_snap, snap2}
     assert m2[snap2].wall_ms == 0  # marked as a backfill
+    # backfilled from the rewrite entry, which replaced the whole table
+    assert m2[snap2].rows_out == io.read("blocks").count()
 
 
 def test_job_sketch_tier_merges_to_batch(spark, job_env, transcripts):

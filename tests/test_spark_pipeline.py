@@ -319,22 +319,3 @@ def test_compact_blocks_bit_identical(spark):
     assert (t["n_points"].values == c["n_points"].values).all()
     for a, b in zip(t["words"], c["words"]):
         assert np.array_equal(np.asarray(a), np.asarray(b))
-
-
-def test_hashed_shuffle_encode_bit_identical(spark):
-    """encode_points(hashed_shuffle=True) routes integer key hashes
-    through the shuffle/Arrow layers and re-attaches strings per
-    block — the block set must be bit-identical to the default path."""
-    from gorillaspark.operators.encode import encode_points
-
-    day = 86_400_000
-    rows = [(f"conv_{i % 7}", day * (1 + i % 3) + i * 977, float(i) / 3)
-            for i in range(2000)]
-    pts = spark.createDataFrame(
-        rows, "series_key string, ts_ms long, value double")
-    a = sorted((r.series_key, r.block_ts, tuple(r.words))
-               for r in encode_points(pts, "double").collect())
-    b = sorted((r.series_key, r.block_ts, tuple(r.words))
-               for r in encode_points(pts, "double",
-                                      hashed_shuffle=True).collect())
-    assert a == b and len(a) == 21  # 7 series x 3 days

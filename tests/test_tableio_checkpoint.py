@@ -2,6 +2,11 @@
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -10,13 +15,29 @@ from gorillaspark.operators.retention import (
     apply_retention,
     retention_sweep,
 )
-from gorillaspark.plans.checkpoint import completed_units, run_resumable
+from gorillaspark.plans.checkpoint import (
+    completed_units,
+    run_resumable,
+    unit_metrics,
+)
 from gorillaspark.sources.tableio import ParquetTableIO
 
 
 @pytest.fixture()
 def io(spark, tmp_path):
     return ParquetTableIO(spark, str(tmp_path / "wh"))
+
+
+def _on_disk(snap) -> tuple[int, int, int]:
+    """(rows from the parquet footers, bytes, files) under an entry."""
+    files = [p for d in snap.files
+             for p in glob.glob(os.path.join(d, "*.parquet"))]
+    return (sum(pq.read_metadata(p).num_rows for p in files),
+            sum(os.path.getsize(p) for p in files), len(files))
+
+
+def _counts(snap) -> tuple[int, int, int]:
+    return snap.added_rows, snap.added_bytes, snap.added_files
 
 
 def test_snapshot_append_read(spark, io):
@@ -73,6 +94,60 @@ def test_crash_between_output_and_meta_is_exactly_once(spark, io):
     assert io.read("out").count() == 3           # not 6
 
 
+def test_replay_does_not_rerun_committed_unit(spark, io):
+    """A replayed unit takes its ledger row from the entry committed
+    under its key: its output DataFrame is never executed."""
+    snap = io.append("out", spark.range(3), commit_key="job3/d1")
+
+    @F.udf("long")
+    def boom(x):
+        raise RuntimeError("replayed unit was executed")
+
+    def unit_fn(u):
+        return spark.range(3).select(boom("id").alias("id"))
+
+    with pytest.raises(Exception, match="replayed unit was executed"):
+        unit_fn("d1").collect()
+    ran = run_resumable(spark, io, "job3", ["d1"], unit_fn, out_table="out")
+    assert ran == {"d1": 3}
+    m = unit_metrics(spark, io, "job3").toPandas()
+    assert m["snapshot_id"].tolist() == [snap.snapshot_id]
+    assert m["rows_out"].tolist() == [3]
+
+
+def test_replay_of_entry_without_counts_records_null(spark, io):
+    """Entries committed before they carried counts replay with null
+    ledger counts; nothing re-counts the committed output."""
+    io.append("out", spark.range(3), commit_key="job4/d1")
+    path = io._manifest_path("out")
+    with open(path) as f:
+        legacy = [{k: v for k, v in e.items() if not k.startswith("added_")}
+                  for e in json.load(f)]
+    with open(path, "w") as f:
+        json.dump(legacy, f)
+    ran = run_resumable(spark, io, "job4", ["d1"],
+                        lambda u: spark.range(3), out_table="out")
+    assert ran == {"d1": None}
+    m = unit_metrics(spark, io, "job4").toPandas()
+    assert m["rows_out"].isna().all() and m["out_bytes_est"].isna().all()
+    assert m["snapshot_id"].tolist() == [legacy[0]["snapshot_id"]]
+
+
+def test_entry_counts_match_written_files(spark, io):
+    """append and rewrite record the rows in the written files' parquet
+    footers, their bytes on disk and their number in the entry."""
+    a = io.append("t", spark.range(0, 100, 1, 3))
+    assert _counts(a) == _on_disk(a)
+    assert a.added_rows == 100 and a.added_files == 3
+    r = io.rewrite("t", io.read("t").where("id % 2 = 0").coalesce(1),
+                   commit_key="compact/0")
+    assert _counts(r) == _on_disk(r)
+    assert r.added_rows == 50 and r.added_files == 1
+    # the replaced entry keeps what its commit wrote
+    old = io.snapshots("t")[0]
+    assert old.files == [] and _counts(old) == _counts(a)
+
+
 def test_retention_filter_and_sweep(spark, io):
     now = 100 * 86_400_000
     pol = RetentionPolicy()
@@ -84,7 +159,6 @@ def test_retention_filter_and_sweep(spark, io):
     io.append("blocks", spark.range(2))
     snaps = io.snapshots("blocks")
     snaps[0].committed_at_ms = 0  # age it
-    import json
     with open(io._manifest_path("blocks"), "w") as f:
         json.dump([s.__dict__ for s in snaps], f)
     dropped = retention_sweep(io, "blocks", "raw", now_ms=10**15)
@@ -94,8 +168,6 @@ def test_retention_filter_and_sweep(spark, io):
 
 
 def test_unit_metrics_rows(spark, io):
-    from gorillaspark.plans.checkpoint import run_resumable, unit_metrics
-
     run_resumable(spark, io, "jm", ["u1", "u2"],
                   lambda u: spark.range(10).withColumn("unit", F.lit(u)),
                   out_table="out")
@@ -107,6 +179,11 @@ def test_unit_metrics_rows(spark, io):
     assert (m["wall_ms"] >= 0).all()
     assert (m["committed_at_ms"] > 0).all()
     assert (m["rows_per_sec"] > 0).all()
+    entries = {s.snapshot_id: s for s in io.snapshots("out")}
+    for r in m.itertuples():
+        rows, size, files = _on_disk(entries[r.snapshot_id])
+        assert (r.rows_out, r.out_bytes_est, r.out_partitions) \
+            == (rows, size, files)
 
 
 def test_concurrent_appends_lose_no_snapshot(spark, io):
@@ -222,7 +299,7 @@ def test_rewrite_time_travel_consistent_at_concurrent_snapshot(spark, io):
     concurrent snapshot X (landed after the anchor, before the swap)
     still sees the compacted base rows alongside X's own, and the
     rewrite snapshot's own cumulative read contains ONLY compacted
-    rows (what _backfill_lineage counts)."""
+    rows."""
     io.append("t", spark.range(5).withColumn("v", F.lit("old")),
               commit_key="w/0")
     anchor = io.current_snapshot_id("t")

@@ -37,7 +37,8 @@ def main() -> None:
     ap.add_argument("--label", required=True)
     ap.add_argument("--out", required=True)
     ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS",
+                                               len(os.sched_getaffinity(0)))))
     ap.add_argument("--reps", type=int, default=3)
     args = ap.parse_args()
 
