@@ -230,12 +230,12 @@ def main() -> None:
                             .alias("payload"))
     timed("media_decode_jpeg", lambda: image_stats(media_j).count())
     timed("media_decode_flac", lambda: audio_stats(media_f).count())
-    # r8: H.264 I/P/B GOP decode (avcC + entropy decode + MC +
-    # spatial direct + POC reorder), entropy alternating by doc —
-    # same synth-inside-the-plan protocol as the JPEG/FLAC entries,
-    # on a fifth of the corpus (the per-doc 4-frame GOP encode+decode
-    # is ~5x a JPEG; the 1/5 slice keeps the headline total-seconds
-    # comparable across rounds while still timing thousands of MBs)
+    # r8: H.264 I/P/B GOP decode (avcC + CAVLC decode + MC +
+    # spatial direct + POC reorder) — same synth-inside-the-plan
+    # protocol as the JPEG/FLAC entries, on a fifth of the corpus
+    # (the per-doc 4-frame GOP encode+decode is ~5x a JPEG; the 1/5
+    # slice keeps the headline total-seconds comparable across
+    # rounds while still timing thousands of MBs)
     from gorillaspark.queries import _synth_h264_b_gop_udf
     from gorillaspark.operators.multimodal import video_frame_stats
     media_h = (docs_w.where(F.col("doc_id") % 5 == 0)

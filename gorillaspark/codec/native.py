@@ -117,7 +117,7 @@ def _malloc_prefault() -> bool:
     output buffers (~16 B/point, freed every Arrow batch) come from
     the malloc free-list instead of fresh mmaps: freed pages stay
     faulted, removing kernel page-zeroing from the per-batch cost.
-    tools/decode_cliff_probe.py quantifies the effect (cold-output
+    BENCH/BASELINE.md "Decode-cliff probe" quantifies it (cold-output
     faults collapse 32-proc decode 5×; in the steady-state Spark path
     this trims ~14% off the median batch). Heap high-water memory is
     retained by the worker — bounded by one batch's output footprint.

@@ -1,24 +1,25 @@
-"""Pure-numpy intra-only H.264/AVC (baseline) codec — no libraries.
+"""Pure-numpy H.264/AVC (CAVLC) codec — no libraries.
 
 Closes the last media stub family (multimodal.py's avc1 branch): a
-REAL bitstream decoder for Annex-B H.264 access units containing
-IDR slices coded with CAVLC entropy coding and intra prediction
-only — the constrained-baseline intra subset:
+REAL bitstream decoder for Annex-B H.264 streams coded with CAVLC
+entropy coding:
 
 * NAL unit parsing (Annex B start codes, emulation-prevention
-  0x0003 unescaping), SPS / PPS / IDR slice header parse.
+  0x0003 unescaping), SPS / PPS / slice header parse.
 * CAVLC residual decode AND encode (coeff_token, level prefix/suffix
   adaptation, total_zeros, run_before) for luma DC / luma 4x4 /
   chroma DC / chroma AC blocks.
-* Intra_16x16 (V / H / DC / Plane), Intra_4x4 (all 9 modes) and
-  8x8 chroma (DC / H / V / Plane) prediction, 4:2:0.
+* Intra_16x16 (V / H / DC / Plane), Intra_4x4 (all 9 modes), I_PCM
+  and 8x8 chroma (DC / H / V / Plane) prediction, 4:2:0.
 * Integer inverse core transform, Intra_16x16 luma DC Hadamard and
   2x2 chroma DC transforms, LevelScale dequantisation.
+* High-profile Intra_8x8 and the inter 8x8 transform (h264_hi.py),
+  accepted only from streams carrying the gorillaspark marker SEI
+  (see _GS_MARKER_UUID).
 
-CABAC entropy coding (I, P and B slices, r8) lives in the sibling
-module h264_cabac.py; this module's encoder stays CAVLC and exposes
-the entropy-independent plan/emit split (_plan_mb_i16/_plan_mb_i4 +
-_emit_mb_cavlc) both entropy writers serialize from.
+The encoder is split into entropy-independent MB plans
+(_plan_mb_i16/_plan_mb_i4/_plan_mb_i8) and the CAVLC writer
+(_emit_mb_cavlc).
 
 B slices (r8): B_Skip / B_Direct_16x16 (spatial derivation
 8.4.1.2.2 AND temporal 8.4.1.2.3, per the slice header's
@@ -27,16 +28,17 @@ B_Bi_16x16 (default average) / the 16x8 and 8x16 two-partition
 mode pairs (Table 7-14 types 4..21) / B_8x8 with every Table 7-18
 sub-partition incl. B_Direct_8x8 / intra-in-B, over a two-list DPB
 with poc_type-0 output reordering (h264_encode_b_frame + the GOP
-decoder), under both entropy coders. P slices carry the full
+decoder). P slices carry the full
 partition set (16x16, 16x8, 8x16, P_8x8 with 8x8/8x4/4x8/4x4
 sub-partitions); all inter MV prediction runs at the spec's
 4x4-block granularity (8.4.1.3). Weighted prediction (r8): explicit
 pred_weight_tables in P and B slices plus implicit B biprediction
 (8.4.2.3, weighted_bipred_idc 2).
 
-Out of scope, rejected loudly (NotImplementedError): multiple slice groups, fields/MBAFF, 8x8
-transform (High profile), monochrome / 4:2:2 / 4:4:4, scaling
-matrices, and in-loop deblocking — the encoder below always signals
+Out of scope, rejected loudly (NotImplementedError): CABAC
+(entropy_coding_mode_flag = 1), third-party 8x8-transform streams,
+multiple slice groups, fields/MBAFF, monochrome / 4:2:2 / 4:4:4,
+scaling matrices, and in-loop deblocking — the encoder below always signals
 ``disable_deblocking_filter_idc = 1`` and the decoder refuses
 streams that would require filtering, so reconstruction is exact
 without implementing the filter.
@@ -60,13 +62,12 @@ from __future__ import annotations
 
 import numpy as np
 
-# SEI user_data_unregistered UUID marking streams produced by
-# h264_cabac's writer. Our CABAC probability tables are regenerated
-# from the published design formulas rather than transcribed from the
-# spec's literal init tables (see h264_cabac.py), so only streams
-# carrying this marker are accepted for CABAC decode — a foreign CABAC
-# stream would desync and must be rejected loudly, never decoded wrong.
-_GS_CABAC_UUID = b"gorillaspark-cab"
+# SEI user_data_unregistered UUID marking High-profile streams produced
+# by this module's encoder. The 8x8 dequant tables (h264_hi.py) are
+# transcribed without conformance vectors, so only streams carrying
+# this marker are accepted for 8x8-transform decode — a foreign one is
+# rejected loudly rather than risk a silent misdecode.
+_GS_MARKER_UUID = b"gorillaspark-cab"
 
 # ---------------------------------------------------------------------------
 # bit I/O over RBSP payloads
@@ -1065,7 +1066,10 @@ def _parse_sps(br: _Bits) -> dict:
 def _parse_pps(br: _Bits) -> dict:
     pps_id = br.ue()
     sps_id = br.ue()
-    cabac = bool(br.flag())                  # entropy_coding_mode_flag
+    if br.flag():                             # entropy_coding_mode_flag
+        raise NotImplementedError(
+            "CABAC (entropy_coding_mode_flag = 1) unsupported: only "
+            "CAVLC streams decode")
     bottom_field_poc = br.flag()
     if br.ue() != 0:
         raise NotImplementedError("multiple slice groups (FMO) unsupported")
@@ -1093,7 +1097,7 @@ def _parse_pps(br: _Bits) -> dict:
                 "second_chroma_qp_index_offset != "
                 "chroma_qp_index_offset unsupported (shared Cb/Cr "
                 "qp offset only)")
-    return {"pps_id": pps_id, "sps_id": sps_id, "cabac": cabac,
+    return {"pps_id": pps_id, "sps_id": sps_id,
             "transform_8x8": transform_8x8,
             "init_qp": qp, "chroma_qp_off": chroma_qp_off,
             "deblock_ctrl": deblock_ctrl,
@@ -1214,12 +1218,6 @@ def _parse_slice_header(br: _Bits, sps: dict, pps: dict,
         elif br.flag():                       # adaptive_ref_pic_marking
             raise NotImplementedError(
                 "adaptive reference picture marking unsupported")
-    if pps["cabac"] and st5 in (0, 1):
-        # cabac_init_idc: selects among the spec's three init-table
-        # columns; our contexts init uniformly (see h264_cabac), so
-        # any legal value decodes identically — parse and bound it
-        if br.ue() > 2:
-            raise ValueError("cabac_init_idc out of range")
     qp = pps["init_qp"] + br.se()
     if pps["deblock_ctrl"]:
         if br.ue() != 1:
@@ -1318,7 +1316,7 @@ def h264_decode_gop_planes(payload: bytes):
     quarter-pel motion compensation)."""
     sps = pps = None
     slices = []
-    cabac_marker = False
+    gs_marker = False
     for nal_type, ref_idc, rbsp in _split_annexb(payload):
         if nal_type == 7:
             sps = _parse_sps(_Bits(rbsp))
@@ -1329,8 +1327,8 @@ def h264_decode_gop_planes(payload: bytes):
                 raise ValueError("IDR NAL with nal_ref_idc 0")
             slices.append((rbsp, ref_idc, nal_type == 5))
         elif nal_type == 6:
-            # gorillaspark CABAC marker (see _GS_CABAC_UUID)
-            cabac_marker = cabac_marker or _GS_CABAC_UUID in rbsp
+            # gorillaspark High-profile marker (see _GS_MARKER_UUID)
+            gs_marker = gs_marker or _GS_MARKER_UUID in rbsp
         # other SEI (6), AUD (9), filler (12): ignored
     if sps is None or pps is None or not slices:
         raise ValueError("stream lacks SPS, PPS or a coded slice")
@@ -1347,7 +1345,7 @@ def h264_decode_gop_planes(payload: bytes):
         raise ValueError("frame dimensions implausible for payload size")
     if n_mbs * len(slices) > 1 << 22:
         raise ValueError("implausible GOP size for frame dimensions")
-    if pps.get("transform_8x8") and not cabac_marker:
+    if pps.get("transform_8x8") and not gs_marker:
         raise NotImplementedError(
             "third-party High-profile (8x8 transform) stream "
             "unsupported: the 8x8 dequant norm tables are "
@@ -1431,33 +1429,7 @@ def h264_decode_gop_planes(payload: bytes):
                 raise ValueError("slice overruns the frame's MB count")
             return addr % mbs_w, addr // mbs_w
 
-        if pps["cabac"]:
-            if not cabac_marker:
-                raise NotImplementedError(
-                    "third-party CABAC stream unsupported: this "
-                    "decoder's probability tables are regenerated "
-                    "from the published design formulas, not the "
-                    "spec's literal init tables, so a foreign CABAC "
-                    "stream would desync (see h264_cabac.py)")
-            from . import h264_cabac
-            if sh["slice_type"] == 2:                # I slice, CABAC
-                n = h264_cabac.decode_islice_cabac(
-                    br, qp, pps, Y, Cb, Cr, states, mbs_w, n_mbs,
-                    addr, step)
-                for k in range(n):
-                    mv_map[step(addr + k)] = None    # intra
-            elif sh["slice_type"] == 1:              # B slice, CABAC
-                n = h264_cabac.decode_bslice_cabac(
-                    br, qp, pps, ref0, ref1, col_mvs, Y, Cb, Cr,
-                    states, mvs, mbs_w, n_mbs, addr, step, temporal,
-                    wp)
-            else:                                    # P slice, CABAC
-                n = h264_cabac.decode_pslice_cabac(
-                    br, qp, pps, ref, Y, Cb, Cr, states, mv_map,
-                    mbs_w, n_mbs, addr, step, wp)
-            n_decoded += n
-            addr += n
-        elif sh["slice_type"] == 2:                  # I slice, CAVLC
+        if sh["slice_type"] == 2:                    # I slice, CAVLC
             while True:
                 mbx, mby = step(addr)
                 qp = _decode_mb(br, qp, pps, Y, Cb, Cr, states,
@@ -1960,7 +1932,7 @@ _B_PART_TYPE = {(s, m0, m1): t for t, (s, m0, m1)
 def _code_b_partitions(code_mvd, mb_type, mvs, ref0, ref1, mbx, mby,
                        mbs_w, wp=None):
     """Shared body of a two-partition B macroblock (16x8/8x16,
-    mb_types 4..21) for BOTH directions and entropy coders:
+    mb_types 4..21) for BOTH directions:
     ``code_mvd(li, idx, bx0, by0, w4, h4, mvp) -> (mvx, mvy)``
     either decodes an mvd and returns mvp+mvd, or emits target-mvp
     and returns the target (``idx`` is the partition index). Syntax order follows 7.3.5.1: ALL L0 mvds
@@ -2068,7 +2040,7 @@ def _b8x8_targets(subs):
 def _code_b_8x8(code_mvd, sub_types, mvs, col_mvs, temporal, ref0,
                 ref1, mbx, mby, mbs_w, wp=None):
     """Shared body of a B_8x8 macroblock (mb_type 22) for both
-    directions and entropy coders. ``sub_types`` is the four
+    directions. ``sub_types`` is the four
     Table 7-18 sub_mb_type values (quadrant raster order);
     ``code_mvd(li, q, pi, bx0, by0, w4, h4, mvp) -> (mvx, mvy)``
     decodes mvp+mvd or emits target-mvp and returns the target.
@@ -2246,7 +2218,7 @@ def _direct_predict_mb(mvs, col_mvs, ref0, ref1, mbx, mby, mbs_w,
     """Derive the direct-mode motion for MB (mbx, mby) — spatial, or
     temporal when ``temporal = (tb, td)`` — update the per-list MV
     maps and return the (predY, predCb, predCr) 16x16 prediction —
-    shared by B_Skip and B_Direct_16x16 under both entropy coders.
+    shared by B_Skip and B_Direct_16x16.
     Uniform quadrant grids (the common case) take the whole-MB MC
     fast path; a partitioned colocated MB yields per-quadrant motion
     compensation. ``wp`` is the slice's weighted-prediction context
@@ -2303,7 +2275,7 @@ def _decode_mb_p_skip(ref, Y, Cb, Cr, states, mv_map, mbx, mby,
 
 def _recon_inter_8x8(recon, predY, luma8, cbp_luma, qp):
     """8x8-transform luma reconstruction over inter prediction
-    planes (shared by the CAVLC and CABAC tails): per coded quadrant
+    planes: per coded quadrant
     dequant8 + idct8 on the scan-order levels."""
     from . import h264_hi as hi
     for b in range(4):
@@ -2578,7 +2550,7 @@ def _decode_mb_intra(br, mb_type, qp, pps, Y, Cb, Cr, states, mbx,
 def _recon_mb_i16(Y, Cb, Cr, mbx, mby, pred_mode, chroma_mode, qp,
                   pps, dc_scan, ac, cdc, cac):
     """Intra_16x16 reconstruction from parsed levels (8.3.3, 8.5) —
-    shared by the CAVLC parser above and h264_cabac's parser."""
+    split from the CAVLC parser above."""
     x0, y0 = mbx * 16, mby * 16
     pred = _pred16(Y, x0, y0, pred_mode)
     dc16 = np.zeros(16, dtype=np.int64)
@@ -2696,7 +2668,7 @@ def _decode_mb_i4(br, qp, pps, Y, Cb, Cr, states, mbx, mby, mbs_w, st):
 def _recon_mb_i4(Y, Cb, Cr, states, mbx, mby, mbs_w, modes, luma,
                  chroma_mode, qp, pps, cdc, cac):
     """Intra_4x4 reconstruction from parsed levels — block-by-block
-    (later blocks predict from earlier); shared with h264_cabac."""
+    (later blocks predict from earlier)."""
     x0, y0 = mbx * 16, mby * 16
     for blk in range(16):
         bx, by = _BLK_POS[blk]
@@ -2773,7 +2745,7 @@ def _recon_mb_i8(Y, Cb, Cr, states, mbx, mby, mbs_w, modes, luma8,
                  chroma_mode, qp, pps, cdc, cac):
     """Intra_8x8 reconstruction from parsed levels (8.3.2.2 +
     8.5.12-8.5.13) — block-by-block in raster order of the four 8x8
-    blocks; shared with h264_cabac."""
+    blocks."""
     from . import h264_hi as hi
     x0, y0 = mbx * 16, mby * 16
     for b in range(4):
@@ -2937,13 +2909,12 @@ def _write_sps(mbs_w: int, mbs_h: int, profile: int = 66,
     return bw.bytes()
 
 
-def _write_pps(cabac: bool = False, weighted_pred: bool = False,
-               weighted_bipred: int = 0,
+def _write_pps(weighted_pred: bool = False, weighted_bipred: int = 0,
                transform_8x8: bool = False) -> bytes:
     bw = _BitW()
     bw.ue(0)                                 # pps_id
     bw.ue(0)                                 # sps_id
-    bw.u(1 if cabac else 0, 1)               # entropy_coding_mode
+    bw.u(0, 1)                               # entropy_coding_mode
     bw.u(0, 1)                               # bottom_field_poc
     bw.ue(0)                                 # num_slice_groups_minus1
     bw.ue(0)                                 # num_ref_idx_l0
@@ -2987,10 +2958,10 @@ def _assemble(sps: bytes, pps: bytes, slice_rbsp: bytes,
             + sc + bytes([0x65]) + _escape(slice_rbsp))
 
 
-def _gs_cabac_sei() -> bytes:
+def _gs_marker_sei() -> bytes:
     """SEI RBSP: user_data_unregistered (payloadType 5) carrying the
-    gorillaspark CABAC marker UUID (see _GS_CABAC_UUID)."""
-    payload = _GS_CABAC_UUID + b"ac-v1"
+    gorillaspark marker UUID (see _GS_MARKER_UUID)."""
+    payload = _GS_MARKER_UUID + b"ac-v1"
     return bytes([5, len(payload)]) + payload + b"\x80"
 
 
@@ -3001,7 +2972,6 @@ def h264_encode(y: np.ndarray, qp: int = 30,
                 cb: np.ndarray | None = None,
                 cr: np.ndarray | None = None,
                 mb_mode: str = "i16",
-                entropy: str = "cavlc",
                 poc_lsb: int | None = None,
                 weighted_pred: bool = False,
                 weighted_bipred: int = 0) -> bytes:
@@ -3009,12 +2979,9 @@ def h264_encode(y: np.ndarray, qp: int = 30,
     optional (h/2, w/2) planes, default neutral 128) as a one-slice
     Annex-B IDR access unit. ``mb_mode``: 'i16' (Intra_16x16 DC
     prediction, full AC residual), 'i4' (Intra_4x4, per-block
-    SAD-chosen mode, full residual) or 'pcm' (r8: I_PCM raw
-    macroblocks — LOSSLESS, byte-aligned samples, both coders;
-    under CABAC the engine flushes + restarts per §9.3.1).
-    ``entropy``: 'cavlc' (baseline)
-    or 'cabac' (h264_cabac's writer — same plans, Main-profile SPS,
-    marker SEI; see that module for the interop contract).
+    SAD-chosen mode, full residual), 'i8' (r8: High-profile
+    Intra_8x8, marker SEI) or 'pcm' (r8: I_PCM raw macroblocks —
+    LOSSLESS, byte-aligned samples).
 
     A real lossy encoder with the standard reconstruction loop: each
     MB predicts from the *reconstructed* neighbours, so
@@ -3039,39 +3006,24 @@ def h264_encode(y: np.ndarray, qp: int = 30,
     Cbr = np.full((H // 2, W // 2), 128, dtype=np.int64)
     Crr = np.full((H // 2, W // 2), 128, dtype=np.int64)
     states: dict = {}
-    wr = None
-    if entropy == "cabac":
-        from . import h264_cabac
-        wr = h264_cabac.CabacSliceWriter(mbs_w)
-        wr.transform_8x8 = mb_mode == "i8"
-    elif entropy != "cavlc":
-        raise ValueError(f"unknown entropy coder {entropy!r}")
     bw = _BitW()
     _slice_header(bw, qp, poc_lsb)
-    n_mbs = mbs_w * mbs_h
     for mby in range(mbs_h):
         for mbx in range(mbs_w):
             if mb_mode == "pcm":
-                # I_PCM: lossless raw macroblock, both entropy coders
-                # (r8: CABAC flushes + restarts the engine per §9.3.1)
+                # I_PCM: lossless raw macroblock
                 x0, y0 = mbx * 16, mby * 16
                 cx, cy = mbx * 8, mby * 8
-                if wr is not None:
-                    wr.emit_pcm(y[y0:y0 + 16, x0:x0 + 16],
-                                cbp[cy:cy + 8, cx:cx + 8],
-                                crp[cy:cy + 8, cx:cx + 8], mbx, mby)
-                    wr.end_mb(mby * mbs_w + mbx == n_mbs - 1)
-                else:
-                    bw.ue(25)
-                    while len(bw.bits) % 8:
-                        bw.u(0, 1)       # pcm_alignment_zero_bit
-                    for r in range(16):
-                        for c in range(16):
-                            bw.u(int(y[y0 + r, x0 + c]), 8)
-                    for plane in (cbp, crp):
-                        for r in range(8):
-                            for c in range(8):
-                                bw.u(int(plane[cy + r, cx + c]), 8)
+                bw.ue(25)
+                while len(bw.bits) % 8:
+                    bw.u(0, 1)           # pcm_alignment_zero_bit
+                for r in range(16):
+                    for c in range(16):
+                        bw.u(int(y[y0 + r, x0 + c]), 8)
+                for plane in (cbp, crp):
+                    for r in range(8):
+                        for c in range(8):
+                            bw.u(int(plane[cy + r, cx + c]), 8)
                 st = _MBState()
                 st.intra16 = True
                 st.nnz_l[:] = 16
@@ -3093,33 +3045,19 @@ def h264_encode(y: np.ndarray, qp: int = 30,
                                   mbx, mby, mbs_w, qp)
             else:
                 raise ValueError(f"unknown mb_mode {mb_mode!r}")
-            if wr is not None:
-                wr.emit(sym, mbx, mby)
-                wr.end_mb(mby * mbs_w + mbx == n_mbs - 1)
-            else:
-                _emit_mb_cavlc(bw, states, sym, mbx, mby, mbs_w)
+            _emit_mb_cavlc(bw, states, sym, mbx, mby, mbs_w)
             states[(mbx, mby)] = sym["st"]
     i8 = mb_mode == "i8"
-    if wr is not None:
-        hb = _BitW()
-        _slice_header(hb, qp, poc_lsb)
-        return _assemble(
-            _write_sps(mbs_w, mbs_h, profile=100 if i8 else 77,
-                       poc_type=0 if poc_lsb is not None else 2),
-            _write_pps(cabac=True, weighted_pred=weighted_pred,
-                       weighted_bipred=weighted_bipred,
-                       transform_8x8=i8),
-            wr.rbsp_from_header(hb), sei=_gs_cabac_sei())
     bw.trailing()
-    # High-profile CAVLC streams carry the marker SEI too: the 8x8
-    # dequant tables share CABAC's own-streams-only honesty gate
+    # High-profile streams carry the marker SEI: the 8x8 dequant
+    # tables are accepted from this repo's own streams only
     stream = _assemble(
         _write_sps(mbs_w, mbs_h, profile=100 if i8 else 66,
                    poc_type=0 if poc_lsb is not None else 2),
         _write_pps(weighted_pred=weighted_pred,
                    weighted_bipred=weighted_bipred,
                    transform_8x8=i8), bw.bytes(),
-        sei=_gs_cabac_sei() if i8 else None)
+        sei=_gs_marker_sei() if i8 else None)
     return stream
 
 
@@ -3215,8 +3153,7 @@ def _emit_chroma_cavlc(bw, states, sym, mbx, mby, mbs_w):
 
 def _emit_mb_cavlc(bw, states, sym, mbx, mby, mbs_w):
     """Serialize one planned MB with CAVLC — exactly the bit sequence
-    the pre-r8 inline encoder produced. The plan/emit split exists so
-    h264_cabac.py can serialize the SAME plans with CABAC."""
+    the pre-r8 inline encoder produced."""
     if sym["kind"] == "i16":
         bw.ue(sym["mb_type"])
         bw.ue(sym["chroma_mode"])
@@ -3331,7 +3268,7 @@ def _plan_mb_i16(y, src_cb, src_cr, Yr, Cbr, Crr, states, mbx, mby,
 def _plan_mb_i4(y, src_cb, src_cr, Yr, Cbr, Crr, states, mbx, mby,
                 mbs_w, qp):
     """Plan one Intra_4x4 MB (mode search + quantized levels),
-    reconstructing in place; entropy-layer independent twin of
+    reconstructing in place; twin of
     :func:`_plan_mb_i16`."""
     st = _MBState()
     x0, y0 = mbx * 16, mby * 16
@@ -3393,8 +3330,7 @@ def _plan_mb_i8(y, src_cb, src_cr, Yr, Cbr, Crr, states, mbx, mby,
                 mbs_w, qp):
     """Plan one Intra_8x8 MB (High profile, r8): per-8x8 SAD mode
     search over the FILTERED references, 8x8 transform/quant chain
-    (h264_hi), reconstructing in place; entropy-layer independent
-    like :func:`_plan_mb_i4`."""
+    (h264_hi), reconstructing in place like :func:`_plan_mb_i4`."""
     from . import h264_hi as hi
     st = _MBState()
     x0, y0 = mbx * 16, mby * 16
@@ -3443,7 +3379,6 @@ def _plan_mb_i8(y, src_cb, src_cr, Yr, Cbr, Crr, states, mbx, mby,
 
 
 def h264_encode_flat_mbs(offsets: np.ndarray, qp: int = 36,
-                         entropy: str = "cavlc",
                          poc_lsb: int | None = None,
                          weighted_pred: bool = False,
                          weighted_bipred: int = 0) -> bytes:
@@ -3484,24 +3419,6 @@ def h264_encode_flat_mbs(offsets: np.ndarray, qp: int = 36,
                          "unclipped reconstruction")
     states: dict = {}
     poc_type = 0 if poc_lsb is not None else 2
-    if entropy == "cabac":
-        from . import h264_cabac
-        wr = h264_cabac.CabacSliceWriter(mbs_w)
-        n_mbs = mbs_w * mbs_h
-        for mx, my, sym in _flat_mb_syms(offsets, qp):
-            wr.emit(sym, mx, my)
-            wr.end_mb(my * mbs_w + mx == n_mbs - 1)
-        hb = _BitW()
-        _slice_header(hb, qp, poc_lsb)
-        return _assemble(_write_sps(mbs_w, mbs_h, profile=77,
-                                    poc_type=poc_type),
-                         _write_pps(cabac=True,
-                                    weighted_pred=weighted_pred,
-                                    weighted_bipred=weighted_bipred),
-                         wr.rbsp_from_header(hb),
-                         sei=_gs_cabac_sei())
-    if entropy != "cavlc":
-        raise ValueError(f"unknown entropy coder {entropy!r}")
     bw = _BitW()
     _slice_header(bw, qp, poc_lsb)
     for mx, my, sym in _flat_mb_syms(offsets, qp):
@@ -3514,8 +3431,7 @@ def h264_encode_flat_mbs(offsets: np.ndarray, qp: int = 36,
                      bw.bytes())
 
 
-def h264_encode_flat_i8(values: np.ndarray, qp: int = 0,
-                        entropy: str = "cavlc") -> bytes:
+def h264_encode_flat_i8(values: np.ndarray, qp: int = 0) -> bytes:
     """The High-profile ORACLE FAMILY (r8): an IDR frame of
     Intra_8x8 DC-predicted blocks, each carrying a single 8x8 DC
     coefficient chosen so the block reconstructs EXACTLY to
@@ -3530,7 +3446,6 @@ def h264_encode_flat_i8(values: np.ndarray, qp: int = 0,
     the flat neighbour blocks, so any drift between this replica and
     the real decode shows up as a hard value mismatch in the
     driver's oracle compare, never silently."""
-    from . import h264_cabac, h264_hi as hi
     v = np.asarray(values, dtype=np.int64)
     rows, cols = v.shape
     if rows % 2 or cols % 2:
@@ -3569,15 +3484,8 @@ def h264_encode_flat_i8(values: np.ndarray, qp: int = 0,
         return c
 
     states: dict = {}
-    wr = None
-    if entropy == "cabac":
-        wr = h264_cabac.CabacSliceWriter(mbs_w)
-        wr.transform_8x8 = True
-    elif entropy != "cavlc":
-        raise ValueError(f"unknown entropy coder {entropy!r}")
     bw = _BitW()
     _slice_header(bw, qp)
-    n_mbs = mbs_w * mbs_h
     for mby in range(mbs_h):
         for mbx in range(mbs_w):
             st = _MBState()
@@ -3601,29 +3509,17 @@ def h264_encode_flat_i8(values: np.ndarray, qp: int = 0,
                    "cdc": np.zeros((2, 4), dtype=np.int64),
                    "cac": np.zeros((2, 4, 16), dtype=np.int64),
                    "st": st}
-            if wr is not None:
-                wr.emit(sym, mbx, mby)
-                wr.end_mb(mby * mbs_w + mbx == n_mbs - 1)
-            else:
-                _emit_mb_cavlc(bw, states, sym, mbx, mby, mbs_w)
+            _emit_mb_cavlc(bw, states, sym, mbx, mby, mbs_w)
             states[(mbx, mby)] = st
-    if wr is not None:
-        hb = _BitW()
-        _slice_header(hb, qp)
-        return _assemble(_write_sps(mbs_w, mbs_h, profile=100),
-                         _write_pps(cabac=True, transform_8x8=True),
-                         wr.rbsp_from_header(hb),
-                         sei=_gs_cabac_sei())
     bw.trailing()
     return _assemble(_write_sps(mbs_w, mbs_h, profile=100),
                      _write_pps(transform_8x8=True), bw.bytes(),
-                     sei=_gs_cabac_sei())
+                     sei=_gs_marker_sei())
 
 
 def _flat_mb_syms(offsets, qp):
     """MB plans for the flat-macroblock oracle family (one luma DC
-    coefficient per Intra_16x16 MB, CBP 0/0) — shared by the CAVLC
-    writer above and h264_cabac's CABAC writer."""
+    coefficient per Intra_16x16 MB, CBP 0/0)."""
     mbs_h, mbs_w = offsets.shape
     for my in range(mbs_h):
         for mx in range(mbs_w):
@@ -3733,7 +3629,6 @@ def _emit_inter_levels_cavlc(bw, states, st, levels, ts8_stream,
 def h264_encode_p_frame(mb_specs: list, mbs_w: int, mbs_h: int,
                         qp: int = 30, frame_num: int = 1,
                         ref_idc: int = 2,
-                        entropy: str = "cavlc",
                         poc_lsb: int | None = None,
                         weights: dict | None = None,
                         ts8_stream: bool = False) -> bytes:
@@ -3770,19 +3665,7 @@ def h264_encode_p_frame(mb_specs: list, mbs_w: int, mbs_h: int,
     dict shape ({'ly', 'lc', 'l0': ((wY,oY),(wCb,oCb),(wCr,oCr)),
     'l1': None}) — pass it iff the GOP's IDR was encoded with
     ``weighted_pred=True`` (the PPS flag decides whether the decoder
-    parses the table).
-
-    ``entropy='cabac'`` (r8) serializes the same mb_specs with
-    h264_cabac's writer (the frame must follow an IDR encoded with
-    entropy='cabac', sharing its CABAC PPS and marker SEI)."""
-    if entropy == "cabac":
-        from . import h264_cabac
-        return h264_cabac.encode_p_frame_cabac(mb_specs, mbs_w,
-                                               mbs_h, qp, frame_num,
-                                               ref_idc, poc_lsb,
-                                               weights, ts8_stream)
-    if entropy != "cavlc":
-        raise ValueError(f"unknown entropy coder {entropy!r}")
+    parses the table)."""
     bw = _BitW()
     bw.ue(0)                                 # first_mb_in_slice
     bw.ue(0)                                 # slice_type: P
@@ -3885,7 +3768,6 @@ def h264_encode_p_frame(mb_specs: list, mbs_w: int, mbs_h: int,
 def h264_encode_b_frame(mb_specs: list, mbs_w: int, mbs_h: int,
                         poc_lsb: int, qp: int = 30,
                         frame_num: int = 1,
-                        entropy: str = "cavlc",
                         col_mvs: dict | None = None,
                         temporal: tuple | None = None,
                         weights: dict | None = None,
@@ -3929,20 +3811,7 @@ def h264_encode_b_frame(mb_specs: list, mbs_w: int, mbs_h: int,
     (direct_spatial_mv_pred_flag = 0): ``tb`` = POC(this B) -
     POC(ref0), ``td`` = POC(ref1) - POC(ref0) — the same distances
     the decoder derives from the GOP's poc_lsb values, replicated
-    here so a mismatch is a hard pixel failure in tests.
-
-    ``entropy='cabac'`` (r8) serializes the same mb_specs with
-    h264_cabac's B writer (the frame must belong to a poc_type-0
-    GOP encoded end-to-end with entropy='cabac')."""
-    if entropy == "cabac":
-        from . import h264_cabac
-        return h264_cabac.encode_b_frame_cabac(mb_specs, mbs_w,
-                                               mbs_h, poc_lsb, qp,
-                                               frame_num, col_mvs,
-                                               temporal, weights,
-                                               ts8_stream)
-    if entropy != "cavlc":
-        raise ValueError(f"unknown entropy coder {entropy!r}")
+    here so a mismatch is a hard pixel failure in tests."""
     bw = _BitW()
     bw.ue(0)                                 # first_mb_in_slice
     bw.ue(1)                                 # slice_type: B

@@ -1,37 +1,13 @@
-"""CABAC entropy coding for H.264 I, P and B slices (Rec. H.264
-§9.3).
+"""CABAC binary arithmetic engine (Rec. H.264 §9.3.3.2 decode /
+§9.3.4 encode) — the M-coder with 64 probability states and 4 range
+cells that HEVC reuses unchanged (H.265 §9.3.4), shared by h265.py.
 
-Closes the r7 verdict's remaining media-entropy ask: most real-world
-MP4s carry CABAC, and until r8 any ``entropy_coding_mode_flag = 1``
-PPS was rejected outright. This module implements the CABAC coding
-layer — the binary arithmetic engine (§9.3.3.2 decode / §9.3.4
-encode, M-coder with 64 probability states and 4 range cells), the
-macroblock-layer binarizations (mb_type, intra pred modes,
-coded_block_pattern, mb_qp_delta, coded_block_flag, significance
-map, UEG0 levels, end_of_slice terminate bins; P slices:
-mb_skip_flag, the P_L0_16x16 prefix and UEG3 mvd with
-neighbour-|mvd| contexts) and the context bookkeeping — and
-serializes the SAME entropy-independent macroblock plans h264.py's
-CAVLC writer emits (``_plan_mb_i16`` / ``_plan_mb_i4`` /
-``_flat_mb_syms`` / the P-frame mb_specs), reconstructing through
-the SAME shared pixel path (``_recon_mb_i16`` / ``_recon_mb_i4`` /
-the inter MC+residual chain), so the analytic flat-macroblock
-oracle family and the CAVLC/CABAC pixel-parity tests gate it end to
-end. P coverage matches the CAVLC subset: P_Skip / P_L0_16x16 /
-16x8 / 8x16 / P_8x8 (all Table 7-17 sub-shapes, Table 9-37 prefix
-tree + Table 9-38 sub_mb_types, partition-granular mvd contexts) /
-intra-in-P, one reference. B coverage (r8) matches the CAVLC B
-subset: B_Skip / B_Direct_16x16 (spatial AND temporal direct,
-shared derivation in h264.py) / B_L0/B_L1/B_Bi 16x16 / the 16x8 and
-8x16 mode pairs (types 4..21, full Table 9-37 suffix) / B_8x8 with
-all Table 7-18 sub-partitions incl. B_Direct_8x8 / intra-in-B over
-two lists. I slices also carry I_PCM (r8):
-pcm_flag is the terminate bin, the codeword is flushed, the 384 raw
-samples go byte-aligned, and the engine restarts per §9.3.1 with
-context states persisting (I_PCM in P/B slices stays rejected).
+H.264 CABAC slice syntax is not implemented: h264.py decodes CAVLC
+only and rejects ``entropy_coding_mode_flag = 1`` with
+NotImplementedError.
 
 Honesty contract — a deviation in the spec's DATA, not its STRUCTURE
-(this sandbox has no network, no H.264 binaries and no conformance
+(this sandbox has no network, no codec binaries and no conformance
 vectors, so the spec's literal table values cannot be sourced):
 
 * ``rangeTabLPS`` / ``transIdxLPS`` are REGENERATED at import from
@@ -43,47 +19,22 @@ vectors, so the spec's literal table values cannot be sourced):
   range-cell midpoints (288/352/416/480), LPS transition to the
   state nearest the updated probability. The result satisfies every
   engine invariant of Tables 9-44/9-45 and is close to — but not
-  certified equal to — their 319 literal values.
+  certified equal to — their literal values.
 * Contexts initialize uniformly (pStateIdx 0, valMPS 0) instead of
-  the per-ctxIdx (m, n) pairs of Tables 9-12..9-23 (pure literal
-  data with no generating formula).
+  the spec's per-context init tables (pure literal data with no
+  generating formula).
 
-Both sides of THIS codec share the regenerated tables, so round-trips
-are exact (pinned against the CAVLC decode of the same plans and the
-entropy-independent pixel oracle in tests/test_h264_cabac.py), but a
-third-party CABAC stream WOULD desync. Therefore the Annex-B surface
-(h264.h264_decode_gop_planes) only accepts CABAC slices from streams
-carrying the gorillaspark SEI marker (h264._GS_CABAC_UUID) and
-rejects foreign CABAC loudly with NotImplementedError — it never
-decodes one wrong. Substituting the spec's literal values into
-``_RANGE_LPS`` / ``_TRANS_LPS`` / ``_Ctx.__init__`` is a pure data
-swap that would make this decoder interoperable; every structural
-piece (engine, binarizations, context selection) is already here.
-
-Context-index layout follows the spec's ctxIdx numbering where
-recalled (3 mb_type, 60 mb_qp_delta, 64 intra_chroma_pred_mode,
-68/69 intra4x4 pred mode, 73/77 CBP, 85 coded_block_flag, 105
-significant_coeff_flag, 166 last_significant_coeff_flag, 227
-coeff_abs_level_minus1); with uniform init these indices are pure
-namespacing, so a mis-recalled offset costs nothing as long as the
-sets stay disjoint (asserted below).
-
-Scale note (same contract as h264.py): decode runs per-payload
-inside mapInArrow batches on the media surface — embarrassingly
-parallel, no shuffle; the entropy coder is pure Python but bounded
-by the plausibility caps of the ingestion contract.
-
-Reference parity: the Gorilla reference (burmanm/gorilla-tsc) has no
-media surface; this extends SURVEY §2C's multimodal coverage.
+Both sides of this repo's codecs share the regenerated tables, so
+round-trips are exact (tests/test_h264_cabac.py pins the engine), but
+a third-party stream WOULD desync; h265.py therefore decodes only
+streams carrying the gorillaspark SEI marker. Substituting the spec's
+literal values into ``_RANGE_LPS`` / ``_TRANS_LPS`` / the context
+init is a pure data swap.
 """
 
 from __future__ import annotations
 
-import numpy as np
-
-from .h264 import (_Bits, _BitW, _BLK_POS, _MBState, _slice_header,
-                   _mv_pred_16x16, _mv_pred_skip, _predict_i4_mode,
-                   _recon_mb_i16, _recon_mb_i4)
+from .h264 import _Bits
 
 # ---------------------------------------------------------------------------
 # probability model tables — regenerated from the published design
@@ -116,69 +67,9 @@ assert all(_RANGE_LPS[s][r] <= _RANGE_LPS[s][r + 1]
            for s in range(64) for r in range(3))
 assert all(0 <= _TRANS_LPS[s] <= max(s, 1) for s in range(63))
 
-# ---------------------------------------------------------------------------
-# context allocation (spec ctxIdx offsets; namespacing under uniform
-# init — see module docstring)
-# ---------------------------------------------------------------------------
 
-_MB_TYPE_I = 3      # bin0: 3..5 (neighbour inc); suffix bins 6..10
-_SKIP_P = 11        # mb_skip_flag (P): + condA + condB
-_MB_TYPE_P = 14     # P prefix bins: 14 (P-vs-intra), 15, 16
-_MB_TYPE_PI = 17    # intra mb_type suffix inside P slices: 17..22
-_SKIP_B = 24        # mb_skip_flag (B): + condA + condB
-_MB_TYPE_B = 27     # B prefix bins: 27..29 (bin0 inc), 30, 31, 32
-_MB_TYPE_BI = 33    # intra mb_type suffix inside B slices: 33..38
-_MVD_X = 40         # mvd x: bin0 40..42 (nbr |mvd| inc), 43..46
-_MVD_Y = 47         # mvd y: same shape (contexts shared by L0/L1,
-#                     ctxInc from same-list neighbour |mvd| — §9.3.3.1.1.7)
-_QP_DELTA = 60      # bin0: 60/61; bin1: 62; rest: 63
-_CHROMA_MODE = 64   # bin0: 64..66; rest: 67
-_PREV_I4 = 68
-_REM_I4 = 69
-_CBP_LUMA = 73      # + condA + 2*condB
-_CBP_CHROMA = 77    # bin0: 77+inc; bin1: 81+inc
-_CBF = 85           # + 4*cat + condA + 2*condB   (cats 0..4)
-_SIG = 105          # + cat offset + scan position
-_LAST = 166         # + cat offset + scan position
-_ABS = 227          # + cat offset + level ctx inc
-# ctxBlockCat: 0 I16 luma DC (16), 1 I16 luma AC (15), 2 luma 4x4
-# (16), 3 chroma DC (4), 4 chroma AC (15)
-_SIG_CAT = [0, 15, 29, 44, 47]
-_ABS_CAT = [0, 10, 20, 30, 39]
-_MB_TYPE_P2 = 276   # P prefix bin2 after b1==1 (spec ctxIdx 17)
-_SUB_MB_P = 277     # P sub_mb_type bins (spec ctxIdx 21..23)
-_SUB_MB_B = 280     # B sub_mb_type bins (spec ctxIdx 36..39)
-_TS8 = 284          # transform_size_8x8_flag: + condA + condB (r8)
-# 8x8-transform residual (ctxBlockCat 5, r8). The spec maps the 63
-# significance positions onto 15 contexts (Table 9-43) — that map is
-# DATA we cannot validate without conformance vectors, so, like the
-# probability tables, it is REPLACED by a simple documented one
-# (sig: min(pos >> 2, 14); last: min(pos >> 3, 7)) behind the same
-# own-streams-only marker gate; a validated data swap restores
-# conformance.
-_SIG8 = 287         # 15 significance contexts
-_LAST8 = 302        # 8 last-significant contexts
-_ABS8 = 310         # 10 abs-level contexts (same shape as _ABS cats)
+# context slots per _Ctx (H.264's ctxIdx range)
 N_CTX = 320
-_SIG8_MAP = [min(i >> 2, 14) for i in range(63)]
-_LAST8_MAP = [min(i >> 3, 7) for i in range(63)]
-
-# the allocation blocks must not overlap
-_blocks = [(_MB_TYPE_I, 8), (_SKIP_P, 3), (_MB_TYPE_P, 3),
-           (_MB_TYPE_PI, 6), (_SKIP_B, 3), (_MB_TYPE_B, 6),
-           (_MB_TYPE_BI, 6), (_MVD_X, 7), (_MVD_Y, 7),
-           (_QP_DELTA, 4), (_CHROMA_MODE, 4),
-           (_PREV_I4, 1), (_REM_I4, 1), (_CBP_LUMA, 4),
-           (_CBP_CHROMA, 8), (_CBF, 20), (_SIG, 61), (_LAST, 61),
-           (_ABS, 49), (_MB_TYPE_P2, 1), (_SUB_MB_P, 3),
-           (_SUB_MB_B, 4), (_TS8, 3), (_SIG8, 15), (_LAST8, 8),
-           (_ABS8, 10)]
-_used = set()
-for _b, _n in _blocks:
-    _rng = set(range(_b, _b + _n))
-    assert not (_rng & _used) and max(_rng) < N_CTX
-    _used |= _rng
-del _blocks, _used, _b, _n, _rng
 
 
 class _Ctx:
@@ -394,1836 +285,3 @@ class _CabacDec:
             self.range <<= 1
             self.offset = (self.offset << 1) | self._bit()
         return 0
-
-
-# ---------------------------------------------------------------------------
-# per-MB record for context derivation (both directions build one)
-# ---------------------------------------------------------------------------
-
-
-class _Rec:
-    __slots__ = ("nxn", "cm", "cbp_l", "cbp_c", "qpd", "dcY", "acY",
-                 "dcC", "acC", "skip", "intra", "direct", "ts8")
-
-    def __init__(self):
-        self.nxn = False
-        self.ts8 = False             # transform_size_8x8_flag (r8)
-        self.cm = 0
-        self.cbp_l = 0
-        self.cbp_c = 0
-        self.qpd = 0
-        self.dcY = 0
-        self.acY = [0] * 16          # per luma 4x4 block cbf
-        self.dcC = [0, 0]
-        self.acC = [[0] * 4, [0] * 4]
-        self.skip = False            # P slices: mb_skip_flag
-        self.intra = True            # inter MBs set False
-        self.direct = False          # B_Skip / B_Direct_16x16
-
-
-def _nb(recs, mbx, mby, dx, dy, mbs_w):
-    mx, my = mbx + dx, mby + dy
-    if mx < 0 or my < 0 or mx >= mbs_w:
-        return None
-    return recs.get((mx, my))
-
-
-def _mbtype_inc(recs, mbx, mby, mbs_w) -> int:
-    inc = 0
-    for dx, dy in ((-1, 0), (0, -1)):
-        r = _nb(recs, mbx, mby, dx, dy, mbs_w)
-        if r is not None and not r.nxn:
-            inc += 1
-    return inc
-
-
-def _chroma_mode_inc(recs, mbx, mby, mbs_w) -> int:
-    inc = 0
-    for dx, dy in ((-1, 0), (0, -1)):
-        r = _nb(recs, mbx, mby, dx, dy, mbs_w)
-        if r is not None and r.cm != 0:
-            inc += 1
-    return inc
-
-
-def _cbf_dc_luma_nb(recs, mbx, mby, mbs_w):
-    def one(dx, dy):
-        r = _nb(recs, mbx, mby, dx, dy, mbs_w)
-        if r is None:
-            return 1                 # unavailable: intra default
-        return 0 if r.nxn else r.dcY
-    return one(-1, 0), one(0, -1)
-
-
-def _cbf_luma_blk_nb(recs, cur, mbx, mby, blk, mbs_w):
-    bx, by = _BLK_POS[blk]
-
-    def one(dx, dy):
-        gx, gy = mbx * 4 + bx + dx, mby * 4 + by + dy
-        if gx < 0 or gy < 0:
-            return 1
-        mx, my = gx >> 2, gy >> 2
-        if mx >= mbs_w:
-            return 1
-        r = cur if (mx, my) == (mbx, mby) else recs.get((mx, my))
-        if r is None:
-            return 1
-        return r.acY[_BLK_POS.index((gx & 3, gy & 3))]
-    return one(-1, 0), one(0, -1)
-
-
-def _cbf_dc_chroma_nb(recs, mbx, mby, ci, mbs_w):
-    def one(dx, dy):
-        r = _nb(recs, mbx, mby, dx, dy, mbs_w)
-        if r is None:
-            return 1
-        return r.dcC[ci]
-    return one(-1, 0), one(0, -1)
-
-
-def _cbf_chroma_blk_nb(recs, cur, mbx, mby, ci, blk, mbs_w):
-    bx, by = blk & 1, blk >> 1
-
-    def one(dx, dy):
-        gx, gy = mbx * 2 + bx + dx, mby * 2 + by + dy
-        if gx < 0 or gy < 0:
-            return 1
-        mx, my = gx >> 1, gy >> 1
-        if mx >= mbs_w:
-            return 1
-        r = cur if (mx, my) == (mbx, mby) else recs.get((mx, my))
-        if r is None:
-            return 1
-        return r.acC[ci][(gy & 1) * 2 + (gx & 1)]
-    return one(-1, 0), one(0, -1)
-
-
-def _cbf_ctx(cat: int, a: int, b: int) -> int:
-    return _CBF + 4 * cat + (1 if a else 0) + 2 * (1 if b else 0)
-
-
-def _cbp_luma_ctx(recs, mbx, mby, mbs_w, b8: int, cbp_so_far: int) -> int:
-    """ctx for CBP luma bin b8 (8x8 block, coding order 0..3):
-    condTerm = neighbour 8x8 block NOT coded."""
-    if b8 & 1:                       # left is same-MB block b8-1
-        cond_a = 0 if (cbp_so_far >> (b8 - 1)) & 1 else 1
-    else:
-        r = _nb(recs, mbx, mby, -1, 0, mbs_w)
-        cond_a = 0 if r is None or (r.cbp_l >> (b8 + 1)) & 1 else 1
-    if b8 >= 2:                      # top is same-MB block b8-2
-        cond_b = 0 if (cbp_so_far >> (b8 - 2)) & 1 else 1
-    else:
-        r = _nb(recs, mbx, mby, 0, -1, mbs_w)
-        cond_b = 0 if r is None or (r.cbp_l >> (b8 + 2)) & 1 else 1
-    return _CBP_LUMA + cond_a + 2 * cond_b
-
-
-def _cbp_chroma_ctx(recs, mbx, mby, mbs_w, binidx: int) -> int:
-    a = b = 0
-    ra = _nb(recs, mbx, mby, -1, 0, mbs_w)
-    rb = _nb(recs, mbx, mby, 0, -1, mbs_w)
-    if binidx == 0:
-        a = 1 if ra is not None and ra.cbp_c != 0 else 0
-        b = 1 if rb is not None and rb.cbp_c != 0 else 0
-        return _CBP_CHROMA + a + 2 * b
-    a = 1 if ra is not None and ra.cbp_c == 2 else 0
-    b = 1 if rb is not None and rb.cbp_c == 2 else 0
-    return _CBP_CHROMA + 4 + a + 2 * b
-
-
-def _lvl_ctx(cat: int, binidx: int, n_eq1: int, n_gt1: int) -> int:
-    base = _ABS8 if cat == 5 else _ABS + _ABS_CAT[cat]
-    if binidx == 0:
-        inc = 0 if n_gt1 else min(4, 1 + n_eq1)
-    else:
-        inc = 5 + min(4, n_gt1)
-    return base + inc
-
-
-def _skip_inc(recs, mbx, mby, mbs_w) -> int:
-    inc = 0
-    for dx, dy in ((-1, 0), (0, -1)):
-        r = _nb(recs, mbx, mby, dx, dy, mbs_w)
-        if r is not None and not r.skip:
-            inc += 1
-    return inc
-
-
-def _mbtype_b_inc(recs, mbx, mby, mbs_w) -> int:
-    # §9.3.3.1.1.3: condTerm = neighbour available and not
-    # B_Skip/B_Direct_16x16
-    inc = 0
-    for dx, dy in ((-1, 0), (0, -1)):
-        r = _nb(recs, mbx, mby, dx, dy, mbs_w)
-        if r is not None and not r.skip and not r.direct:
-            inc += 1
-    return inc
-
-
-def _ts8_inc(recs, mbx, mby, mbs_w) -> int:
-    """transform_size_8x8_flag ctx increment: condTermA + condTermB
-    over the neighbours' flags (9.3.3.1.1.10)."""
-    inc = 0
-    for dx, dy in ((-1, 0), (0, -1)):
-        r = _nb(recs, mbx, mby, dx, dy, mbs_w)
-        if r is not None and r.ts8:
-            inc += 1
-    return inc
-
-
-def _mvd_ctx0(mvd_f, bx0, by0, comp: int) -> int:
-    """§9.3.3.1.1.7 at the spec's partition granularity: the bin0
-    context increment sums the |mvd| components of the 4x4 blocks
-    left of and above the partition's top-left block. ``mvd_f`` is
-    the per-list field {(bx, by): (|dx|, |dy|)} — absent blocks
-    (unavailable / intra / skip / direct) contribute 0."""
-    e = (mvd_f.get((bx0 - 1, by0), (0, 0))[comp]
-         + mvd_f.get((bx0, by0 - 1), (0, 0))[comp])
-    base = _MVD_X if comp == 0 else _MVD_Y
-    return base + (0 if e < 3 else (1 if e <= 32 else 2))
-
-
-def _fill_mvd(mvd_f, bx0, by0, w4: int, h4: int, dx: int, dy: int):
-    """Record one partition's |mvd| components for its 4x4 blocks."""
-    v = (abs(dx), abs(dy))
-    for j in range(by0, by0 + h4):
-        for i in range(bx0, bx0 + w4):
-            mvd_f[(i, j)] = v
-
-
-def _code_mvd(x, ctx, mvd_f, bx0, by0, comp: int, v=None):
-    """One mvd_lX component: UEG3 binarization (TU prefix, uCoff 9,
-    same-list neighbour-|mvd| bin0 context) + EG3 bypass suffix +
-    bypass sign. Encode when ``v`` given, else decode and return the
-    value. ``(bx0, by0)`` is the partition's top-left 4x4 block in
-    global block units."""
-    base = _MVD_X if comp == 0 else _MVD_Y
-    b0 = _mvd_ctx0(mvd_f, bx0, by0, comp)
-
-    def bctx(i):
-        return b0 if i == 0 else base + 3 + min(i - 1, 3)
-
-    if v is None:                    # decode
-        a = 0
-        while a < 9 and x.bit(ctx, bctx(a)):
-            a += 1
-        if a == 9:
-            s = 0
-            k = 3
-            while x.bypass():
-                s += 1 << k
-                k += 1
-                if k > 30:
-                    raise ValueError("mvd suffix overflows")
-            while k:
-                k -= 1
-                s += x.bypass() << k
-            a = 9 + s
-        if a == 0:
-            return 0
-        return -a if x.bypass() else a
-    a = abs(v)
-    pref = min(a, 9)
-    for i in range(pref):
-        x.bit(ctx, bctx(i), 1)
-    if pref < 9:
-        x.bit(ctx, bctx(pref), 0)
-    else:                            # EG3 suffix
-        s = a - 9
-        k = 3
-        while s >= (1 << k):
-            x.bypass(1)
-            s -= 1 << k
-            k += 1
-        x.bypass(0)
-        while k:
-            k -= 1
-            x.bypass((s >> k) & 1)
-    if a:
-        x.bypass(1 if v < 0 else 0)
-    return v
-
-
-def _code_sub_mb_p(x, ctx, t=None):
-    """P sub_mb_type (Table 9-38 tree over _SUB_MB_P): P_L0_8x8 '1',
-    P_L0_8x4 '00', P_L0_4x8 '011', P_L0_4x4 '010'. Encode when ``t``
-    given, else decode and return the value."""
-    if t is None:                    # decode
-        if x.bit(ctx, _SUB_MB_P):
-            return 0
-        if not x.bit(ctx, _SUB_MB_P + 1):
-            return 1
-        return 2 if x.bit(ctx, _SUB_MB_P + 2) else 3
-    x.bit(ctx, _SUB_MB_P, 1 if t == 0 else 0)
-    if t:
-        x.bit(ctx, _SUB_MB_P + 1, 0 if t == 1 else 1)
-        if t > 1:
-            x.bit(ctx, _SUB_MB_P + 2, 1 if t == 2 else 0)
-    return t
-
-
-def _code_sub_mb_b(x, ctx, t=None):
-    """B sub_mb_type (Table 9-38 tree over _SUB_MB_B): B_Direct_8x8
-    '0'; L0/L1 8x8 '10x'; the remaining ten types under the '11'
-    prefix with bin2 splitting the 4x4 region. Encode when ``t``
-    given, else decode and return the value."""
-    if t is None:                    # decode
-        if not x.bit(ctx, _SUB_MB_B):
-            return 0
-        if not x.bit(ctx, _SUB_MB_B + 1):
-            return 1 + x.bit(ctx, _SUB_MB_B + 3)
-        base = 3
-        if x.bit(ctx, _SUB_MB_B + 2):
-            if x.bit(ctx, _SUB_MB_B + 3):
-                return 11 + x.bit(ctx, _SUB_MB_B + 3)
-            base += 4
-        base += 2 * x.bit(ctx, _SUB_MB_B + 3)
-        return base + x.bit(ctx, _SUB_MB_B + 3)
-    if t == 0:
-        x.bit(ctx, _SUB_MB_B, 0)
-        return t
-    x.bit(ctx, _SUB_MB_B, 1)
-    if t in (1, 2):
-        x.bit(ctx, _SUB_MB_B + 1, 0)
-        x.bit(ctx, _SUB_MB_B + 3, t - 1)
-        return t
-    x.bit(ctx, _SUB_MB_B + 1, 1)
-    if t >= 11:
-        x.bit(ctx, _SUB_MB_B + 2, 1)
-        x.bit(ctx, _SUB_MB_B + 3, 1)
-        x.bit(ctx, _SUB_MB_B + 3, t - 11)
-        return t
-    if t >= 7:
-        x.bit(ctx, _SUB_MB_B + 2, 1)
-        x.bit(ctx, _SUB_MB_B + 3, 0)
-        v = t - 7
-    else:
-        x.bit(ctx, _SUB_MB_B + 2, 0)
-        v = t - 3
-    x.bit(ctx, _SUB_MB_B + 3, (v >> 1) & 1)
-    x.bit(ctx, _SUB_MB_B + 3, v & 1)
-    return t
-
-
-def _i16dc_sym(c: int) -> dict:
-    """The one-DC-coefficient Intra_16x16 plan (mb_type 3, CBP 0/0)
-    used by intra-in-P macroblocks — the CABAC twin of the inline
-    'i16dc' emit in h264.h264_encode_p_frame."""
-    dc_scan = np.zeros(16, dtype=np.int64)
-    dc_scan[0] = c
-    st = _MBState()
-    st.intra16 = True
-    return {"kind": "i16", "mb_type": 3, "chroma_mode": 0,
-            "qp_delta": 0, "cbp_luma": 0, "cbp_chroma": 0,
-            "dc_scan": dc_scan, "qac": np.zeros((16, 16), np.int64),
-            "cdc": np.zeros((2, 4), np.int64),
-            "cac": np.zeros((2, 4, 16), np.int64), "st": st}
-
-
-# ---------------------------------------------------------------------------
-# residual block coding (§9.3.2.7 shape: cbf handled by caller,
-# significance map, UEG0 levels in reverse scan, bypass signs)
-# ---------------------------------------------------------------------------
-
-
-def _res_ctx_maps(cat: int):
-    """(sig_base, last_base, sig_map, last_map) for a ctxBlockCat:
-    4x4-domain cats address contexts by scan position directly;
-    cat 5 (8x8 transform, r8) maps the 63 positions through the
-    documented _SIG8_MAP/_LAST8_MAP (see the allocation note)."""
-    if cat == 5:
-        return _SIG8, _LAST8, _SIG8_MAP, _LAST8_MAP
-    return (_SIG + _SIG_CAT[cat], _LAST + _SIG_CAT[cat], None, None)
-
-
-def _enc_residual(enc: _CabacEnc, ctx: _Ctx, cat: int, lv) -> None:
-    m = len(lv)
-    sig = [i for i in range(m) if lv[i]]
-    assert sig, "residual coded with cbf=1 must have a coefficient"
-    sb, lb, smap, lmap = _res_ctx_maps(cat)
-    last = sig[-1]
-    for i in range(m - 1):
-        s = 1 if lv[i] else 0
-        enc.bit(ctx, sb + (smap[i] if smap else i), s)
-        if s:
-            enc.bit(ctx, lb + (lmap[i] if lmap else i),
-                    1 if i == last else 0)
-            if i == last:
-                break
-    n_eq1 = n_gt1 = 0
-    for i in reversed(sig):
-        a = abs(int(lv[i]))
-        v = a - 1
-        pref = min(v, 14)
-        for b in range(pref):
-            enc.bit(ctx, _lvl_ctx(cat, b, n_eq1, n_gt1), 1)
-        if pref < 14:
-            enc.bit(ctx, _lvl_ctx(cat, pref, n_eq1, n_gt1), 0)
-        else:                        # EG0 bypass suffix
-            s = v - 14
-            k = 0
-            while s >= (1 << k):
-                enc.bypass(1)
-                s -= 1 << k
-                k += 1
-            enc.bypass(0)
-            while k:
-                k -= 1
-                enc.bypass((s >> k) & 1)
-        enc.bypass(1 if lv[i] < 0 else 0)
-        if a == 1:
-            n_eq1 += 1
-        else:
-            n_gt1 += 1
-
-
-def _dec_residual(dec: _CabacDec, ctx: _Ctx, cat: int,
-                  m: int) -> np.ndarray:
-    sb, lb, smap, lmap = _res_ctx_maps(cat)
-    sig = []
-    ended = False
-    for i in range(m - 1):
-        if dec.bit(ctx, sb + (smap[i] if smap else i)):
-            sig.append(i)
-            if dec.bit(ctx, lb + (lmap[i] if lmap else i)):
-                ended = True
-                break
-    if not ended:
-        sig.append(m - 1)            # last position implicit
-    lv = np.zeros(m, dtype=np.int64)
-    n_eq1 = n_gt1 = 0
-    for i in reversed(sig):
-        pref = 0
-        while pref < 14 and dec.bit(ctx, _lvl_ctx(cat, pref, n_eq1,
-                                                  n_gt1)):
-            pref += 1
-        if pref < 14:
-            a = pref + 1
-        else:
-            s = 0
-            k = 0
-            while dec.bypass():
-                s += 1 << k
-                k += 1
-                if k > 30:
-                    raise ValueError("CABAC level suffix overflows")
-            while k:
-                k -= 1
-                s += dec.bypass() << k
-            a = 15 + s
-        lv[i] = -a if dec.bypass() else a
-        if a == 1:
-            n_eq1 += 1
-        else:
-            n_gt1 += 1
-    return lv
-
-
-def _code_qp_delta(x, ctx, prev_nz: bool, delta=None):
-    """mb_qp_delta: unary of the se() mapping, bin0 ctx conditioned
-    on the previous MB's delta. Encode when ``delta`` given."""
-    b0 = _QP_DELTA + (1 if prev_nz else 0)
-    if delta is None:                # decode
-        if not x.bit(ctx, b0):
-            return 0
-        m = 1
-        if x.bit(ctx, _QP_DELTA + 2):
-            m = 2
-            while x.bit(ctx, _QP_DELTA + 3):
-                m += 1
-                if m > 53:
-                    raise ValueError("mb_qp_delta out of range")
-        return (m + 1) >> 1 if m & 1 else -(m >> 1)
-    m = 2 * delta - 1 if delta > 0 else -2 * delta
-    x.bit(ctx, b0, 1 if m > 0 else 0)
-    if m > 0:
-        x.bit(ctx, _QP_DELTA + 2, 1 if m > 1 else 0)
-        for _ in range(m - 2):
-            x.bit(ctx, _QP_DELTA + 3, 1)
-        if m > 1:
-            x.bit(ctx, _QP_DELTA + 3, 0)
-    return delta
-
-
-def _code_chroma_mode(x, ctx, recs, mbx, mby, mbs_w, mode=None):
-    b0 = _CHROMA_MODE + _chroma_mode_inc(recs, mbx, mby, mbs_w)
-    if mode is None:                 # decode (TU, cMax 3)
-        if not x.bit(ctx, b0):
-            return 0
-        if not x.bit(ctx, _CHROMA_MODE + 3):
-            return 1
-        return 2 + x.bit(ctx, _CHROMA_MODE + 3)
-    x.bit(ctx, b0, 1 if mode > 0 else 0)
-    if mode > 0:
-        x.bit(ctx, _CHROMA_MODE + 3, 1 if mode > 1 else 0)
-        if mode > 1:
-            x.bit(ctx, _CHROMA_MODE + 3, 1 if mode > 2 else 0)
-    return mode
-
-
-# ---------------------------------------------------------------------------
-# encoder: serialize the shared MB plans with CABAC
-# ---------------------------------------------------------------------------
-
-
-class CabacSliceWriter:
-    """Serializes h264.py's entropy-independent MB plans (the ``sym``
-    dicts of _plan_mb_i16/_plan_mb_i4/_flat_mb_syms) as one CABAC
-    slice. I slices: emit() per MB in raster order; P slices (r8):
-    emit_p() with h264_encode_p_frame's mb_spec format. end_mb(last)
-    after each MB, then rbsp(qp) / rbsp_from_header(bw) for the full
-    slice RBSP."""
-
-    def __init__(self, mbs_w: int):
-        self.mbs_w = mbs_w
-        self.enc = _CabacEnc()
-        self.ctx = _Ctx()
-        self.segments: list[bytes] = []  # flushed codewords + raw PCM
-        self.recs: dict = {}
-        self.mv_map: dict = {}       # P/B slices: encoder's L0 MVs
-        self.mv_map1: dict = {}      # B slices: encoder's L1 MVs
-        self.mvd_f = ({}, {})        # per-list |mvd| 4x4 fields
-        self.col_mvs = None          # B: L1 ref's colocated motion
-        self.direct_temporal = None  # B: (tb, td) for temporal direct
-        self.transform_8x8 = False   # PPS flag (High profile, r8)
-        self.prev_qpd = 0
-        self.done = False
-
-    # -- shared bodies (everything after the mb_type bins) ----------
-
-    def _emit_i16_mbtype_suffix(self, sym: dict, base: int):
-        """The 5 mb_type suffix bins of an Intra_16x16 MB (cbp luma,
-        cbp chroma x2, pred mode x2) at context block ``base``."""
-        enc, ctx = self.enc, self.ctx
-        pred = (sym["mb_type"] - 1) % 4
-        cbp_c = sym["cbp_chroma"]
-        enc.bit(ctx, base, 1 if sym["cbp_luma"] else 0)
-        enc.bit(ctx, base + 1, 1 if cbp_c else 0)
-        if cbp_c:
-            enc.bit(ctx, base + 2, 1 if cbp_c == 2 else 0)
-        enc.bit(ctx, base + 3, (pred >> 1) & 1)
-        enc.bit(ctx, base + 4, pred & 1)
-
-    def _emit_i16_rest(self, sym: dict, mbx: int, mby: int, cur):
-        enc, ctx, recs, mbs_w = (self.enc, self.ctx, self.recs,
-                                 self.mbs_w)
-        cur.cbp_l = sym["cbp_luma"]
-        cur.cbp_c = sym["cbp_chroma"]
-        cur.cm = sym["chroma_mode"]
-        _code_chroma_mode(enc, ctx, recs, mbx, mby, mbs_w,
-                          mode=cur.cm)
-        cur.qpd = sym["qp_delta"]
-        _code_qp_delta(enc, ctx, self.prev_qpd != 0, delta=cur.qpd)
-        self.prev_qpd = cur.qpd
-        # luma DC (cat 0)
-        dc = sym["dc_scan"]
-        cbf = 1 if np.any(dc) else 0
-        a, b = _cbf_dc_luma_nb(recs, mbx, mby, mbs_w)
-        enc.bit(ctx, _cbf_ctx(0, a, b), cbf)
-        cur.dcY = cbf
-        if cbf:
-            _enc_residual(enc, ctx, 0, dc)
-        # luma AC (cat 1)
-        if sym["cbp_luma"]:
-            qac = sym["qac"]
-            for blk in range(16):
-                lv = qac[blk, 1:]
-                cbf = 1 if np.any(lv) else 0
-                a, b = _cbf_luma_blk_nb(recs, cur, mbx, mby, blk,
-                                        mbs_w)
-                enc.bit(ctx, _cbf_ctx(1, a, b), cbf)
-                cur.acY[blk] = cbf
-                if cbf:
-                    _enc_residual(enc, ctx, 1, lv)
-        self._emit_chroma(sym, mbx, mby, cur)
-
-    def _emit_i4_rest(self, sym: dict, mbx: int, mby: int, cur):
-        enc, ctx, recs, mbs_w = (self.enc, self.ctx, self.recs,
-                                 self.mbs_w)
-        cur.nxn = True
-        for blk in range(16):
-            pm = sym["pred_modes"][blk]
-            mo = int(sym["modes"][blk])
-            if mo == pm:
-                enc.bit(ctx, _PREV_I4, 1)
-            else:
-                enc.bit(ctx, _PREV_I4, 0)
-                rem = mo if mo < pm else mo - 1
-                for i in (2, 1, 0):
-                    enc.bit(ctx, _REM_I4, (rem >> i) & 1)
-        cur.cm = sym["chroma_mode"]
-        _code_chroma_mode(enc, ctx, recs, mbx, mby, mbs_w,
-                          mode=cur.cm)
-        cbp_l, cbp_c = sym["cbp_luma"], sym["cbp_chroma"]
-        self._emit_cbp(cbp_l, cbp_c, mbx, mby)
-        cur.cbp_l, cur.cbp_c = cbp_l, cbp_c
-        if cbp_l or cbp_c:
-            cur.qpd = sym["qp_delta"]
-            _code_qp_delta(enc, ctx, self.prev_qpd != 0,
-                           delta=cur.qpd)
-            self.prev_qpd = cur.qpd
-        else:
-            self.prev_qpd = 0        # inferred delta counts as 0
-        # luma 4x4 (cat 2)
-        if cbp_l:
-            qb = sym["qblocks"]
-            for blk in range(16):
-                if not (cbp_l >> (blk // 4)) & 1:
-                    continue
-                lv = qb[blk]
-                cbf = 1 if np.any(lv) else 0
-                a, b = _cbf_luma_blk_nb(recs, cur, mbx, mby, blk,
-                                        mbs_w)
-                enc.bit(ctx, _cbf_ctx(2, a, b), cbf)
-                cur.acY[blk] = cbf
-                if cbf:
-                    _enc_residual(enc, ctx, 2, lv)
-        self._emit_chroma(sym, mbx, mby, cur)
-
-    def _emit_i8_rest(self, sym: dict, mbx: int, mby: int, cur):
-        """Intra_8x8 MB body (High profile, r8): four prev/rem-coded
-        modes (shared _PREV_I4/_REM_I4 contexts per the spec), CBP,
-        qp_delta, and per coded 8x8 block ONE cat-5 residual with NO
-        coded_block_flag bin (inferred 1 from the CBP quadrant bit —
-        the four covering 4x4 cbf cells record 1 for later
-        neighbours)."""
-        enc, ctx, recs, mbs_w = (self.enc, self.ctx, self.recs,
-                                 self.mbs_w)
-        cur.nxn = True
-        cur.ts8 = True
-        for b in range(4):
-            pm = sym["pred_modes"][b]
-            mo = int(sym["modes"][b])
-            if mo == pm:
-                enc.bit(ctx, _PREV_I4, 1)
-            else:
-                enc.bit(ctx, _PREV_I4, 0)
-                rem = mo if mo < pm else mo - 1
-                for i in (2, 1, 0):
-                    enc.bit(ctx, _REM_I4, (rem >> i) & 1)
-        cur.cm = sym["chroma_mode"]
-        _code_chroma_mode(enc, ctx, recs, mbx, mby, mbs_w,
-                          mode=cur.cm)
-        cbp_l, cbp_c = sym["cbp_luma"], sym["cbp_chroma"]
-        self._emit_cbp(cbp_l, cbp_c, mbx, mby)
-        cur.cbp_l, cur.cbp_c = cbp_l, cbp_c
-        if cbp_l or cbp_c:
-            cur.qpd = sym["qp_delta"]
-            _code_qp_delta(enc, ctx, self.prev_qpd != 0,
-                           delta=cur.qpd)
-            self.prev_qpd = cur.qpd
-        else:
-            self.prev_qpd = 0
-        if cbp_l:
-            q8 = sym["q8"]
-            for b in range(4):
-                if not cbp_l & (1 << b):
-                    continue
-                _enc_residual(enc, ctx, 5, q8[b])
-                for k in range(4):
-                    cur.acY[4 * b + k] = 1
-        self._emit_chroma(sym, mbx, mby, cur)
-
-    def _emit_cbp(self, cbp_l: int, cbp_c: int, mbx: int, mby: int):
-        enc, ctx, recs, mbs_w = (self.enc, self.ctx, self.recs,
-                                 self.mbs_w)
-        for b8 in range(4):
-            cx = _cbp_luma_ctx(recs, mbx, mby, mbs_w, b8,
-                               cbp_l & ((1 << b8) - 1))
-            enc.bit(ctx, cx, (cbp_l >> b8) & 1)
-        enc.bit(ctx, _cbp_chroma_ctx(recs, mbx, mby, mbs_w, 0),
-                1 if cbp_c else 0)
-        if cbp_c:
-            enc.bit(ctx, _cbp_chroma_ctx(recs, mbx, mby, mbs_w, 1),
-                    1 if cbp_c == 2 else 0)
-
-    def _emit_chroma(self, sym: dict, mbx: int, mby: int, cur):
-        enc, ctx, recs, mbs_w = (self.enc, self.ctx, self.recs,
-                                 self.mbs_w)
-        cbp_c = cur.cbp_c
-        if cbp_c:
-            for ci in range(2):
-                lv = sym["cdc"][ci]
-                cbf = 1 if np.any(lv) else 0
-                a, b = _cbf_dc_chroma_nb(recs, mbx, mby, ci, mbs_w)
-                enc.bit(ctx, _cbf_ctx(3, a, b), cbf)
-                cur.dcC[ci] = cbf
-                if cbf:
-                    _enc_residual(enc, ctx, 3, lv)
-        if cbp_c == 2:
-            for ci in range(2):
-                for blk in range(4):
-                    lv = sym["cac"][ci, blk, 1:]
-                    cbf = 1 if np.any(lv) else 0
-                    a, b = _cbf_chroma_blk_nb(recs, cur, mbx, mby, ci,
-                                              blk, mbs_w)
-                    enc.bit(ctx, _cbf_ctx(4, a, b), cbf)
-                    cur.acC[ci][blk] = cbf
-                    if cbf:
-                        _enc_residual(enc, ctx, 4, lv)
-
-    # -- I slice -----------------------------------------------------
-
-    def emit(self, sym: dict, mbx: int, mby: int):
-        if self.done:
-            raise ValueError("slice already terminated")
-        enc, ctx, recs = self.enc, self.ctx, self.recs
-        cur = _Rec()
-        inc = _mbtype_inc(recs, mbx, mby, self.mbs_w)
-        if sym["kind"] == "i16":
-            enc.bit(ctx, _MB_TYPE_I + inc, 1)
-            enc.terminate(0)         # not I_PCM
-            self._emit_i16_mbtype_suffix(sym, _MB_TYPE_I + 3)
-            self._emit_i16_rest(sym, mbx, mby, cur)
-        else:                        # I_NxN
-            enc.bit(ctx, _MB_TYPE_I + inc, 0)
-            if sym["kind"] == "i8":  # High profile (r8)
-                enc.bit(ctx, _TS8 + _ts8_inc(recs, mbx, mby,
-                                             self.mbs_w), 1)
-                self._emit_i8_rest(sym, mbx, mby, cur)
-            else:
-                if self.transform_8x8:
-                    enc.bit(ctx, _TS8 + _ts8_inc(recs, mbx, mby,
-                                                 self.mbs_w), 0)
-                self._emit_i4_rest(sym, mbx, mby, cur)
-        recs[(mbx, mby)] = cur
-
-    def emit_pcm(self, y_mb, cb_mb, cr_mb, mbx: int, mby: int):
-        """One I_PCM macroblock (§7.3.5 + §9.3.1): pcm_flag is the
-        terminate bin after the intra mb_type prefix; the arithmetic
-        codeword is flushed (EncodeFlush — emits the stop bit), the
-        zero padding of the packed codeword doubles as
-        pcm_alignment_zero_bit, the 384 raw 8-bit samples follow
-        byte-aligned, and a FRESH arithmetic engine codes the
-        remaining MBs while the context states persist. The flush
-        leaves the encoder's bit count exactly 7 past the decoder's
-        consumption point (constant by the range-register symmetry),
-        which is how the decode side re-synchronises."""
-        if self.done:
-            raise ValueError("slice already terminated")
-        enc, ctx, recs = self.enc, self.ctx, self.recs
-        inc = _mbtype_inc(recs, mbx, mby, self.mbs_w)
-        enc.bit(ctx, _MB_TYPE_I + inc, 1)    # intra prefix: not I_NxN
-        enc.terminate(1)                     # pcm_flag
-        seg = bytearray(enc.bytes())
-        for row in np.asarray(y_mb, dtype=np.int64):
-            seg.extend(int(v) & 0xFF for v in row)
-        for plane in (cb_mb, cr_mb):
-            for row in np.asarray(plane, dtype=np.int64):
-                seg.extend(int(v) & 0xFF for v in row)
-        self.segments.append(bytes(seg))
-        self.enc = _CabacEnc()               # §9.3.1.2 re-init
-        cur = _Rec()
-        cur.cbp_l, cur.cbp_c = 15, 2         # cbf inferred 1 (§9.3.3.1)
-        cur.dcY, cur.acY = 1, [1] * 16
-        cur.dcC, cur.acC = [1, 1], [[1] * 4, [1] * 4]
-        recs[(mbx, mby)] = cur
-        self.prev_qpd = 0                    # mb_qp_delta absent
-
-    # -- P slice (r8) --------------------------------------------------
-
-    def emit_p(self, spec, mbx: int, mby: int):
-        """One P-slice MB in h264_encode_p_frame's mb_spec format:
-        None (P_Skip), (mvx, mvy[, levels]) (P_L0_16x16),
-        ('p16x8'/'p8x16'/'p8x8', ...) (r8 partitioned inter MBs), or
-        ('i16dc', c) (Intra_16x16 DC inside the P slice)."""
-        if self.done:
-            raise ValueError("slice already terminated")
-        enc, ctx, recs, mbs_w = (self.enc, self.ctx, self.recs,
-                                 self.mbs_w)
-        skip_ctx = _SKIP_P + _skip_inc(recs, mbx, mby, mbs_w)
-        if spec is None:             # P_Skip
-            enc.bit(ctx, skip_ctx, 1)
-            self.mv_map[(mbx, mby)] = _mv_pred_skip(self.mv_map, mbx,
-                                                    mby, mbs_w)
-            cur = _Rec()
-            cur.skip = True
-            cur.intra = False
-            self.prev_qpd = 0        # skipped MB: delta inferred 0
-            recs[(mbx, mby)] = cur
-            return
-        enc.bit(ctx, skip_ctx, 0)
-        cur = _Rec()
-        if spec[0] == "i16dc":       # intra inside the P slice
-            enc.bit(ctx, _MB_TYPE_P, 1)          # prefix: intra
-            enc.bit(ctx, _MB_TYPE_PI, 1)         # suffix b0: not NxN
-            enc.terminate(0)                     # not I_PCM
-            sym = _i16dc_sym(int(spec[1]))
-            self._emit_i16_mbtype_suffix(sym, _MB_TYPE_PI + 1)
-            self._emit_i16_rest(sym, mbx, mby, cur)
-            self.mv_map[(mbx, mby)] = None
-            recs[(mbx, mby)] = cur
-            return
-        if isinstance(spec[0], str):             # partitioned inter
-            levels = self._emit_p_partitions(spec, mbx, mby)
-            cur.intra = False
-            part_ok = spec[0] != "p8x8" or all(
-                sub[0] == "8x8" for sub in spec[1])
-            self._emit_inter_tail(levels, mbx, mby, cur, part_ok)
-            recs[(mbx, mby)] = cur
-            return
-        mvx, mvy = int(spec[0]), int(spec[1])
-        levels = spec[2] if len(spec) > 2 else None
-        enc.bit(ctx, _MB_TYPE_P, 0)              # P_L0_16x16: 000
-        enc.bit(ctx, _MB_TYPE_P + 1, 0)
-        enc.bit(ctx, _MB_TYPE_P + 2, 0)
-        mvpx, mvpy = _mv_pred_16x16(self.mv_map, mbx, mby, mbs_w)
-        dx, dy = mvx - mvpx, mvy - mvpy
-        mvd_f = self.mvd_f[0]
-        _code_mvd(enc, ctx, mvd_f, mbx * 4, mby * 4, 0, v=dx)
-        _code_mvd(enc, ctx, mvd_f, mbx * 4, mby * 4, 1, v=dy)
-        _fill_mvd(mvd_f, mbx * 4, mby * 4, 4, 4, dx, dy)
-        cur.intra = False
-        self._emit_inter_tail(levels, mbx, mby, cur)
-        self.mv_map[(mbx, mby)] = (mvx, mvy)
-        recs[(mbx, mby)] = cur
-
-    def _emit_p_partitions(self, spec, mbx: int, mby: int):
-        """mb_type bins, sub_mb_types and per-partition mvds of a
-        partitioned P MB ('p16x8'/'p8x16'/'p8x16'); returns the
-        optional residual levels for the shared inter tail ('p16x8' /
-        'p8x16' / 'p8x8' mb_spec kinds). The
-        mb_type prefix tree matches Table 9-37 (bin2 context 16 after
-        b1=0, 17 after b1=1 — our _MB_TYPE_P2); sub_mb_type uses the
-        Table 9-38 tree over _SUB_MB_P."""
-        from .h264 import (_PartMvs, _mv_pred_part, _p_partitions)
-        enc, ctx, mbs_w = self.enc, self.ctx, self.mbs_w
-        kind = spec[0]
-        mb_type = {"p16x8": 1, "p8x16": 2, "p8x8": 3}.get(kind)
-        if mb_type is None:
-            raise ValueError(f"unknown P mb_spec kind {kind!r}")
-        enc.bit(ctx, _MB_TYPE_P, 0)
-        sub_types = None
-        if kind == "p8x8":
-            enc.bit(ctx, _MB_TYPE_P + 1, 0)
-            enc.bit(ctx, _MB_TYPE_P + 2, 1)
-            subs = spec[1]
-            if len(subs) != 4:
-                raise ValueError("p8x8 needs 4 quadrant specs")
-            names = {"8x8": 0, "8x4": 1, "4x8": 2, "4x4": 3}
-            sub_types = [names[s[0]] for s in subs]
-            mv_seq = [mv for s in subs for mv in s[1:]]
-            for t in sub_types:
-                _code_sub_mb_p(enc, ctx, t)
-            levels = spec[2] if len(spec) > 2 else None
-        else:
-            enc.bit(ctx, _MB_TYPE_P + 1, 1)
-            enc.bit(ctx, _MB_TYPE_P2, 1 if kind == "p16x8" else 0)
-            mv_seq = [spec[1], spec[2]]
-            levels = spec[3] if len(spec) > 3 else None
-        pm = _PartMvs()
-        self.mv_map[(mbx, mby)] = pm
-        parts = list(_p_partitions(mb_type, sub_types))
-        if len(parts) != len(mv_seq):
-            raise ValueError("sub-partition MV count mismatch")
-        mvd_f = self.mvd_f[0]
-        for (ox, oy, w, h, rule), mv in zip(parts, mv_seq):
-            bx0, by0 = mbx * 4 + ox // 4, mby * 4 + oy // 4
-            mvp = _mv_pred_part(self.mv_map, bx0, by0, w // 4,
-                                mbs_w, rule)
-            dx, dy = int(mv[0]) - mvp[0], int(mv[1]) - mvp[1]
-            _code_mvd(enc, ctx, mvd_f, bx0, by0, 0, v=dx)
-            _code_mvd(enc, ctx, mvd_f, bx0, by0, 1, v=dy)
-            _fill_mvd(mvd_f, bx0, by0, w // 4, h // 4, dx, dy)
-            pm.fill(ox // 4, oy // 4, w // 4, h // 4,
-                    (int(mv[0]), int(mv[1])))
-        return levels
-
-    def _emit_inter_tail(self, levels, mbx: int, mby: int, cur,
-                         part_ok: bool = True):
-        """CBP + optional transform_size_8x8_flag + mb_qp_delta +
-        luma residual of an inter MB (no chroma residual in the
-        supported subset) — shared by the P and B emitters.
-        ``levels`` may be a (4, 64) per-8x8 scan-order array (r8,
-        High profile): ONE cat-5 residual per coded quadrant, no cbf
-        bins."""
-        enc, ctx, recs, mbs_w = (self.enc, self.ctx, self.recs,
-                                 self.mbs_w)
-        lv8 = (levels is not None
-               and np.asarray(levels).shape == (4, 64))
-        if lv8 and not (self.transform_8x8 and part_ok):
-            raise ValueError("8x8-transform levels need a "
-                             "transform_8x8 stream and an all->=8x8 "
-                             "partition shape")
-        cbp_l = 0
-        if levels is not None:
-            levels = np.asarray(levels, dtype=np.int64)
-            if lv8:
-                for b in range(4):
-                    if np.any(levels[b]):
-                        cbp_l |= 1 << b
-            else:
-                for blk in range(16):
-                    if np.any(levels[blk]):
-                        cbp_l |= 1 << (blk // 4)
-        self._emit_cbp(cbp_l, 0, mbx, mby)
-        cur.cbp_l = cbp_l
-        if self.transform_8x8 and part_ok and cbp_l:
-            enc.bit(ctx, _TS8 + _ts8_inc(recs, mbx, mby, mbs_w),
-                    1 if lv8 else 0)
-            cur.ts8 = lv8
-        if cbp_l:
-            _code_qp_delta(enc, ctx, self.prev_qpd != 0, delta=0)
-            self.prev_qpd = 0
-            if lv8:
-                for b in range(4):
-                    if not cbp_l & (1 << b):
-                        continue
-                    _enc_residual(enc, ctx, 5, levels[b])
-                    for k in range(4):
-                        cur.acY[4 * b + k] = 1
-            else:
-                for blk in range(16):
-                    if not (cbp_l >> (blk // 4)) & 1:
-                        continue
-                    lv = levels[blk]
-                    cbf = 1 if np.any(lv) else 0
-                    a, b = _cbf_luma_blk_nb(recs, cur, mbx, mby, blk,
-                                            mbs_w)
-                    enc.bit(ctx, _cbf_ctx(2, a, b), cbf)
-                    cur.acY[blk] = cbf
-                    if cbf:
-                        _enc_residual(enc, ctx, 2, lv)
-        else:
-            self.prev_qpd = 0
-
-    # -- B slice (r8) ----------------------------------------------
-
-    def _code_mvd_b(self, lst: int, mbx: int, mby: int, mvx: int,
-                    mvy: int):
-        """mvd pair for one list of a B 16x16 MB, replicating the
-        decoder's per-list median MV prediction."""
-        mmap = self.mv_map if lst == 0 else self.mv_map1
-        mvpx, mvpy = _mv_pred_16x16(mmap, mbx, mby, self.mbs_w)
-        dx, dy = mvx - mvpx, mvy - mvpy
-        mvd_f = self.mvd_f[lst]
-        _code_mvd(self.enc, self.ctx, mvd_f, mbx * 4, mby * 4, 0,
-                  v=dx)
-        _code_mvd(self.enc, self.ctx, mvd_f, mbx * 4, mby * 4, 1,
-                  v=dy)
-        _fill_mvd(mvd_f, mbx * 4, mby * 4, 4, 4, dx, dy)
-        mmap[(mbx, mby)] = (mvx, mvy)
-
-    def _derive_direct_b(self, mbx: int, mby: int):
-        """Replicate the decoder's direct derivation (spatial or
-        temporal — h264._record_direct) and record the derived MVs."""
-        from .h264 import _record_direct
-        mvs = {"l0": self.mv_map, "l1": self.mv_map1}
-        _record_direct(mvs, self.col_mvs, mbx, mby, self.mbs_w,
-                       self.direct_temporal)
-
-    def emit_b(self, spec, mbx: int, mby: int):
-        """One B-slice MB in h264_encode_b_frame's mb_spec format:
-        None (B_Skip), ('direct'[, levels]) (B_Direct_16x16),
-        ('l0'|'l1', mvx, mvy[, levels]), ('bi', mvx0, mvy0, mvx1,
-        mvy1[, levels]) or ('i16dc', c). mb_type prefix bins follow
-        Table 9-37's truncated tree for the supported subset ('0'
-        Direct, '100' L0, '101' L1, '110000' Bi, '111101' intra)."""
-        if self.done:
-            raise ValueError("slice already terminated")
-        enc, ctx, recs, mbs_w = (self.enc, self.ctx, self.recs,
-                                 self.mbs_w)
-        skip_ctx = _SKIP_B + _skip_inc(recs, mbx, mby, mbs_w)
-        if spec is None:             # B_Skip: spatial direct
-            enc.bit(ctx, skip_ctx, 1)
-            self._derive_direct_b(mbx, mby)
-            cur = _Rec()
-            cur.skip = True
-            cur.intra = False
-            cur.direct = True
-            self.prev_qpd = 0        # skipped MB: delta inferred 0
-            recs[(mbx, mby)] = cur
-            return
-        enc.bit(ctx, skip_ctx, 0)
-        cur = _Rec()
-        binc = _mbtype_b_inc(recs, mbx, mby, mbs_w)
-        if spec[0] == "direct":                  # B_Direct_16x16: '0'
-            enc.bit(ctx, _MB_TYPE_B + binc, 0)
-            cur.intra = False
-            cur.direct = True
-            self._derive_direct_b(mbx, mby)
-            levels = spec[1] if len(spec) > 1 else None
-            self._emit_inter_tail(levels, mbx, mby, cur)
-            recs[(mbx, mby)] = cur
-            return
-        enc.bit(ctx, _MB_TYPE_B + binc, 1)       # not B_Direct_16x16
-        if spec[0] == "i16dc":                   # '111101' + suffix
-            enc.bit(ctx, _MB_TYPE_B + 3, 1)
-            enc.bit(ctx, _MB_TYPE_B + 4, 1)
-            enc.bit(ctx, _MB_TYPE_B + 5, 1)
-            enc.bit(ctx, _MB_TYPE_B + 5, 0)
-            enc.bit(ctx, _MB_TYPE_B + 5, 1)
-            enc.bit(ctx, _MB_TYPE_BI, 1)         # suffix b0: not NxN
-            enc.terminate(0)                     # not I_PCM
-            sym = _i16dc_sym(int(spec[1]))
-            self._emit_i16_mbtype_suffix(sym, _MB_TYPE_BI + 1)
-            self._emit_i16_rest(sym, mbx, mby, cur)
-            self.mv_map[(mbx, mby)] = None
-            self.mv_map1[(mbx, mby)] = None
-            recs[(mbx, mby)] = cur
-            return
-        kind = spec[0]
-        cur.intra = False
-        if kind == "l0":                         # '100'
-            enc.bit(ctx, _MB_TYPE_B + 3, 0)
-            enc.bit(ctx, _MB_TYPE_B + 4, 0)
-            levels = spec[3] if len(spec) > 3 else None
-            self._code_mvd_b(0, mbx, mby, int(spec[1]), int(spec[2]))
-            self.mv_map1[(mbx, mby)] = None
-        elif kind == "l1":                       # '101'
-            enc.bit(ctx, _MB_TYPE_B + 3, 0)
-            enc.bit(ctx, _MB_TYPE_B + 4, 1)
-            levels = spec[3] if len(spec) > 3 else None
-            self._code_mvd_b(1, mbx, mby, int(spec[1]), int(spec[2]))
-            self.mv_map[(mbx, mby)] = None
-        elif kind == "bi":                       # '110' + FL3 000
-            enc.bit(ctx, _MB_TYPE_B + 3, 1)
-            enc.bit(ctx, _MB_TYPE_B + 4, 0)
-            for _ in range(3):
-                enc.bit(ctx, _MB_TYPE_B + 5, 0)
-            levels = spec[5] if len(spec) > 5 else None
-            self._code_mvd_b(0, mbx, mby, int(spec[1]), int(spec[2]))
-            self._code_mvd_b(1, mbx, mby, int(spec[3]), int(spec[4]))
-        elif kind in ("b16x8", "b8x16"):         # r8: two partitions
-            from .h264 import _B_PART_TYPE, _code_b_partitions
-            shape = 1 if kind == "b16x8" else 2
-            p0, p1 = spec[1], spec[2]
-            levels = spec[3] if len(spec) > 3 else None
-            mb_type = _B_PART_TYPE[(shape, p0[0], p1[0])]
-            # '11' + the 4(+1)-bin suffix of Table 9-37: values 3..10
-            # are the FL4 suffix directly, 11 is 14, 12..21 carry a
-            # fifth bin ((mb_type+4) split as bits<<1 | extra)
-            enc.bit(ctx, _MB_TYPE_B + 3, 1)
-            if mb_type <= 10:
-                bits, extra = mb_type - 3, None
-            elif mb_type == 11:
-                bits, extra = 14, None
-            else:
-                v = mb_type + 4
-                bits, extra = v >> 1, v & 1
-            enc.bit(ctx, _MB_TYPE_B + 4, (bits >> 3) & 1)
-            for k in (2, 1, 0):
-                enc.bit(ctx, _MB_TYPE_B + 5, (bits >> k) & 1)
-            if extra is not None:
-                enc.bit(ctx, _MB_TYPE_B + 5, extra)
-            targets = []
-            for part in (p0, p1):
-                if part[0] == "bi":
-                    targets.append(((int(part[1]), int(part[2])),
-                                    (int(part[3]), int(part[4]))))
-                elif part[0] == "l0":
-                    targets.append(((int(part[1]), int(part[2])),
-                                    None))
-                else:
-                    targets.append((None,
-                                    (int(part[1]), int(part[2]))))
-
-            def emit_mvd(li, idx, bx0, by0, w4, h4, mvp,
-                         _t=targets):
-                mv = _t[idx][li]
-                dx, dy = mv[0] - mvp[0], mv[1] - mvp[1]
-                mvd_f = self.mvd_f[li]
-                _code_mvd(enc, ctx, mvd_f, bx0, by0, 0, v=dx)
-                _code_mvd(enc, ctx, mvd_f, bx0, by0, 1, v=dy)
-                _fill_mvd(mvd_f, bx0, by0, w4, h4, dx, dy)
-                return mv
-
-            _code_b_partitions(emit_mvd, mb_type,
-                               {"l0": self.mv_map,
-                                "l1": self.mv_map1},
-                               None, None, mbx, mby, mbs_w)
-        elif kind == "b8x8":                     # '11' + FL4 1111
-            from .h264 import _b8x8_targets, _code_b_8x8
-            subs = spec[1]
-            if len(subs) != 4:
-                raise ValueError("b8x8 needs 4 quadrant specs")
-            levels = spec[2] if len(spec) > 2 else None
-            sub_types, targets = _b8x8_targets(subs)
-            enc.bit(ctx, _MB_TYPE_B + 3, 1)
-            enc.bit(ctx, _MB_TYPE_B + 4, 1)
-            for _ in range(3):
-                enc.bit(ctx, _MB_TYPE_B + 5, 1)
-            for t in sub_types:
-                _code_sub_mb_b(enc, ctx, t)
-
-            def emit_sub_mvd(li, q, pi, bx0, by0, w4, h4, mvp,
-                             _t=targets):
-                mv = _t[(li, q, pi)]
-                dx, dy = mv[0] - mvp[0], mv[1] - mvp[1]
-                mvd_f = self.mvd_f[li]
-                _code_mvd(enc, ctx, mvd_f, bx0, by0, 0, v=dx)
-                _code_mvd(enc, ctx, mvd_f, bx0, by0, 1, v=dy)
-                _fill_mvd(mvd_f, bx0, by0, w4, h4, dx, dy)
-                return mv
-
-            _code_b_8x8(emit_sub_mvd, sub_types,
-                        {"l0": self.mv_map, "l1": self.mv_map1},
-                        self.col_mvs, self.direct_temporal, None,
-                        None, mbx, mby, mbs_w)
-        else:
-            raise ValueError(f"unknown B mb_spec kind {kind!r}")
-        part_ok = kind != "b8x8" or all(
-            sub[0] == "direct" or sub[1] == "8x8" for sub in spec[1])
-        self._emit_inter_tail(levels, mbx, mby, cur, part_ok)
-        recs[(mbx, mby)] = cur
-
-    def end_mb(self, last: bool):
-        self.enc.terminate(1 if last else 0)
-        if last:
-            self.done = True
-
-    def rbsp(self, qp: int) -> bytes:
-        bw = _BitW()
-        _slice_header(bw, qp)
-        return self.rbsp_from_header(bw)
-
-    def rbsp_from_header(self, bw: _BitW) -> bytes:
-        if not self.done:
-            raise ValueError("slice not terminated")
-        while len(bw.bits) % 8:
-            bw.u(1, 1)               # cabac_alignment_one_bit
-        return (bw.bytes() + b"".join(self.segments)
-                + self.enc.bytes())
-
-
-def encode_p_frame_cabac(mb_specs: list, mbs_w: int, mbs_h: int,
-                         qp: int = 30, frame_num: int = 1,
-                         ref_idc: int = 2,
-                         poc_lsb: int | None = None,
-                         weights: dict | None = None,
-                         ts8_stream: bool = False) -> bytes:
-    """CABAC twin of h264.h264_encode_p_frame: ONE P frame as an
-    Annex-B non-IDR NAL from the same mb_spec format (must follow an
-    IDR encoded with entropy='cabac' so the stream shares the
-    entropy_coding_mode=1 PPS and the marker SEI). ``poc_lsb`` only
-    for poc_type-0 streams (B-frame GOPs)."""
-    from .h264 import _escape
-    bw = _BitW()
-    bw.ue(0)                                 # first_mb_in_slice
-    bw.ue(0)                                 # slice_type: P
-    bw.ue(0)                                 # pps_id
-    bw.u(frame_num & 15, 4)                  # frame_num
-    if poc_lsb is not None:                  # poc_type 0 streams
-        bw.u(poc_lsb & 63, 6)
-    bw.u(0, 1)                               # num_ref_idx_override
-    bw.u(0, 1)                               # ref_pic_list_modification
-    if weights is not None:                  # pred_weight_table (r8)
-        from .h264 import _write_pred_weight_table
-        _write_pred_weight_table(bw, weights, is_b=False)
-    if ref_idc:
-        bw.u(0, 1)                           # adaptive_ref_pic_marking
-    bw.ue(0)                                 # cabac_init_idc
-    bw.se(qp - 26)                           # slice_qp_delta
-    bw.ue(1)                                 # disable_deblocking
-    wr = CabacSliceWriter(mbs_w)
-    wr.transform_8x8 = ts8_stream
-    n = len(mb_specs)
-    for addr, spec in enumerate(mb_specs):
-        wr.emit_p(spec, addr % mbs_w, addr // mbs_w)
-        wr.end_mb(addr == n - 1)
-    return (b"\x00\x00\x00\x01" + bytes([(ref_idc & 3) << 5 | 1])
-            + _escape(wr.rbsp_from_header(bw)))
-
-
-def encode_b_frame_cabac(mb_specs: list, mbs_w: int, mbs_h: int,
-                         poc_lsb: int, qp: int = 30,
-                         frame_num: int = 1,
-                         col_mvs: dict | None = None,
-                         temporal: tuple | None = None,
-                         weights: dict | None = None,
-                         ts8_stream: bool = False) -> bytes:
-    """CABAC twin of h264.h264_encode_b_frame: ONE non-reference B
-    frame as an Annex-B NAL for a poc_type-0 CABAC stream (IDR via
-    h264_encode(..., entropy='cabac', poc_lsb=...), reference P
-    frames via encode_p_frame_cabac(..., poc_lsb=...)). Same mb_spec
-    format (incl. B_Skip/B_Direct) and ``col_mvs`` / ``temporal``
-    contracts as the CAVLC B encoder."""
-    from .h264 import _escape
-    bw = _BitW()
-    bw.ue(0)                                 # first_mb_in_slice
-    bw.ue(1)                                 # slice_type: B
-    bw.ue(0)                                 # pps_id
-    bw.u(frame_num & 15, 4)                  # frame_num
-    bw.u(poc_lsb & 63, 6)                    # pic_order_cnt_lsb
-    bw.u(0 if temporal else 1, 1)            # direct_spatial_mv_pred
-    bw.u(0, 1)                               # num_ref_idx_override
-    bw.u(0, 1)                               # ref_pic_list_mod_l0
-    bw.u(0, 1)                               # ref_pic_list_mod_l1
-    if weights is not None:                  # pred_weight_table (r8)
-        from .h264 import _write_pred_weight_table
-        _write_pred_weight_table(bw, weights, is_b=True)
-    # nal_ref_idc 0: no dec_ref_pic_marking
-    bw.ue(0)                                 # cabac_init_idc
-    bw.se(qp - 26)                           # slice_qp_delta
-    bw.ue(1)                                 # disable_deblocking
-    wr = CabacSliceWriter(mbs_w)
-    wr.col_mvs = col_mvs
-    wr.direct_temporal = temporal
-    wr.transform_8x8 = ts8_stream
-    n = len(mb_specs)
-    for addr, spec in enumerate(mb_specs):
-        wr.emit_b(spec, addr % mbs_w, addr // mbs_w)
-        wr.end_mb(addr == n - 1)
-    return (b"\x00\x00\x00\x01" + bytes([0x01])   # ref_idc 0, type 1
-            + _escape(wr.rbsp_from_header(bw)))
-
-
-# ---------------------------------------------------------------------------
-# decoder: CABAC I-slice MB layer, reconstructing through the shared
-# pixel path
-# ---------------------------------------------------------------------------
-
-
-def decode_islice_cabac(br: _Bits, qp: int, pps: dict, Y, Cb, Cr,
-                        states: dict, mbs_w: int, n_mbs: int,
-                        addr: int, step) -> int:
-    """Decode one CABAC I slice starting at macroblock ``addr``;
-    returns the number of MBs decoded. ``br`` is positioned right
-    after the slice header. Called from h264.h264_decode_gop_planes
-    (which gates on the gorillaspark SEI marker — see module
-    docstring)."""
-    while br.pos % 8:
-        if not br.u(1):
-            raise ValueError("cabac_alignment_one_bit is 0")
-    dec = _CabacDec(br)
-    ctx = _Ctx()
-    recs: dict = {}
-    prev_qpd = 0
-    n = 0
-    while True:
-        mbx, mby = step(addr + n)
-        qp, prev_qpd = _decode_mb_cabac(dec, ctx, recs, qp, prev_qpd,
-                                        pps, Y, Cb, Cr, states, mbx,
-                                        mby, mbs_w)
-        n += 1
-        if dec.terminate():          # end_of_slice_flag
-            break
-        if addr + n >= n_mbs:
-            raise ValueError("CABAC slice overruns the frame's MBs")
-    return n
-
-
-def _dec_i16_suffix(dec, ctx, base):
-    """mb_type suffix bins of an Intra_16x16 MB at ctx block ``base``
-    -> (cbp_luma, cbp_chroma, pred_mode)."""
-    cbp_luma = 15 if dec.bit(ctx, base) else 0
-    cbp_chroma = 0
-    if dec.bit(ctx, base + 1):
-        cbp_chroma = 2 if dec.bit(ctx, base + 2) else 1
-    pred = (dec.bit(ctx, base + 3) << 1) | dec.bit(ctx, base + 4)
-    return cbp_luma, cbp_chroma, pred
-
-
-def _dec_i16_body(dec, ctx, recs, cur, st, qp, prev_qpd, pps, Y, Cb,
-                  Cr, mbx, mby, mbs_w, cbp_luma, cbp_chroma, pred):
-    """Everything after the mb_type bins of an Intra_16x16 MB, shared
-    by the I-slice and P-slice (intra-in-P) decoders."""
-    st.intra16 = True
-    chroma_mode = _code_chroma_mode(dec, ctx, recs, mbx, mby, mbs_w)
-    delta = _code_qp_delta(dec, ctx, prev_qpd != 0)
-    if not -27 <= delta <= 26:
-        raise ValueError("mb_qp_delta out of range")
-    qp = (qp + delta + 52) % 52
-    prev_qpd = delta
-    cur.cbp_l, cur.cbp_c = cbp_luma, cbp_chroma
-    cur.cm = chroma_mode
-    cur.qpd = delta
-    a, b = _cbf_dc_luma_nb(recs, mbx, mby, mbs_w)
-    dc_scan = np.zeros(16, dtype=np.int64)
-    if dec.bit(ctx, _cbf_ctx(0, a, b)):
-        cur.dcY = 1
-        dc_scan = _dec_residual(dec, ctx, 0, 16)
-    ac = np.zeros((16, 16), dtype=np.int64)
-    if cbp_luma:
-        for blk in range(16):
-            a, b = _cbf_luma_blk_nb(recs, cur, mbx, mby, blk, mbs_w)
-            if dec.bit(ctx, _cbf_ctx(1, a, b)):
-                cur.acY[blk] = 1
-                coeffs = _dec_residual(dec, ctx, 1, 15)
-                st.nnz_l[blk] = np.count_nonzero(coeffs)
-                ac[blk, 1:] = coeffs
-    cdc, cac = _dec_chroma_cabac(dec, ctx, recs, cur, st, mbx, mby,
-                                 mbs_w, cbp_chroma)
-    _recon_mb_i16(Y, Cb, Cr, mbx, mby, pred, chroma_mode, qp, pps,
-                  dc_scan, ac, cdc, cac)
-    return qp, prev_qpd
-
-
-def _dec_i4_body(dec, ctx, recs, cur, st, qp, prev_qpd, pps, Y, Cb,
-                 Cr, states, mbx, mby, mbs_w):
-    cur.nxn = True
-    modes = st.i4_modes
-    for blk in range(16):
-        pm = _predict_i4_mode(states, st, mbx, mby, mbs_w, blk)
-        if dec.bit(ctx, _PREV_I4):
-            modes[blk] = pm
-        else:
-            rem = 0
-            for _ in range(3):
-                rem = (rem << 1) | dec.bit(ctx, _REM_I4)
-            modes[blk] = rem if rem < pm else rem + 1
-    chroma_mode = _code_chroma_mode(dec, ctx, recs, mbx, mby, mbs_w)
-    cbp_luma, cbp_chroma = _dec_cbp(dec, ctx, recs, mbx, mby, mbs_w)
-    cur.cbp_l, cur.cbp_c = cbp_luma, cbp_chroma
-    cur.cm = chroma_mode
-    if cbp_luma or cbp_chroma:
-        delta = _code_qp_delta(dec, ctx, prev_qpd != 0)
-        if not -27 <= delta <= 26:
-            raise ValueError("mb_qp_delta out of range")
-        qp = (qp + delta + 52) % 52
-        prev_qpd = delta
-        cur.qpd = delta
-    else:
-        prev_qpd = 0                 # inferred delta counts as 0
-    luma = np.zeros((16, 16), dtype=np.int64)
-    if cbp_luma:
-        for blk in range(16):
-            if not (cbp_luma >> (blk // 4)) & 1:
-                continue
-            a, b = _cbf_luma_blk_nb(recs, cur, mbx, mby, blk, mbs_w)
-            if dec.bit(ctx, _cbf_ctx(2, a, b)):
-                cur.acY[blk] = 1
-                coeffs = _dec_residual(dec, ctx, 2, 16)
-                st.nnz_l[blk] = np.count_nonzero(coeffs)
-                luma[blk] = coeffs
-    cdc, cac = _dec_chroma_cabac(dec, ctx, recs, cur, st, mbx, mby,
-                                 mbs_w, cbp_chroma)
-    _recon_mb_i4(Y, Cb, Cr, states, mbx, mby, mbs_w, modes, luma,
-                 chroma_mode, qp, pps, cdc, cac)
-    return qp, prev_qpd
-
-
-def _dec_i8_body(dec, ctx, recs, cur, st, qp, prev_qpd, pps, Y, Cb,
-                 Cr, states, mbx, mby, mbs_w):
-    """Intra_8x8 MB body (High profile, r8) — the decode twin of
-    CabacSliceWriter._emit_i8_rest."""
-    from .h264 import (_BLK_POS, _predict_i8_mode, _recon_mb_i8)
-    cur.nxn = True
-    cur.ts8 = True
-    modes = np.full(4, 2, dtype=np.int64)
-    for b in range(4):
-        pm = _predict_i8_mode(states, st, mbx, mby, mbs_w, b)
-        if dec.bit(ctx, _PREV_I4):
-            modes[b] = pm
-        else:
-            rem = 0
-            for _ in range(3):
-                rem = (rem << 1) | dec.bit(ctx, _REM_I4)
-            modes[b] = rem if rem < pm else rem + 1
-        st.i4_modes[[_BLK_POS.index(((b & 1) * 2 + dx,
-                                     (b >> 1) * 2 + dy))
-                     for dx in (0, 1) for dy in (0, 1)]] = modes[b]
-    chroma_mode = _code_chroma_mode(dec, ctx, recs, mbx, mby, mbs_w)
-    cbp_luma, cbp_chroma = _dec_cbp(dec, ctx, recs, mbx, mby, mbs_w)
-    cur.cbp_l, cur.cbp_c = cbp_luma, cbp_chroma
-    cur.cm = chroma_mode
-    if cbp_luma or cbp_chroma:
-        delta = _code_qp_delta(dec, ctx, prev_qpd != 0)
-        if not -27 <= delta <= 26:
-            raise ValueError("mb_qp_delta out of range")
-        qp = (qp + delta + 52) % 52
-        prev_qpd = delta
-        cur.qpd = delta
-    else:
-        prev_qpd = 0
-    luma8 = np.zeros((4, 64), dtype=np.int64)
-    if cbp_luma:
-        for b in range(4):
-            if not cbp_luma & (1 << b):
-                continue
-            luma8[b] = _dec_residual(dec, ctx, 5, 64)
-            for k in range(4):
-                cur.acY[4 * b + k] = 1
-                st.nnz_l[4 * b + k] = np.count_nonzero(
-                    luma8[b, 4 * np.arange(16) + k])
-    cdc, cac = _dec_chroma_cabac(dec, ctx, recs, cur, st, mbx, mby,
-                                 mbs_w, cbp_chroma)
-    _recon_mb_i8(Y, Cb, Cr, states, mbx, mby, mbs_w, modes, luma8,
-                 chroma_mode, qp, pps, cdc, cac)
-    return qp, prev_qpd
-
-
-def _dec_cbp(dec, ctx, recs, mbx, mby, mbs_w):
-    cbp_luma = 0
-    for b8 in range(4):
-        cx = _cbp_luma_ctx(recs, mbx, mby, mbs_w, b8, cbp_luma)
-        if dec.bit(ctx, cx):
-            cbp_luma |= 1 << b8
-    cbp_chroma = 0
-    if dec.bit(ctx, _cbp_chroma_ctx(recs, mbx, mby, mbs_w, 0)):
-        cbp_chroma = 2 if dec.bit(ctx, _cbp_chroma_ctx(
-            recs, mbx, mby, mbs_w, 1)) else 1
-    return cbp_luma, cbp_chroma
-
-
-def _dec_mb_pcm_cabac(dec, recs, qp, Y, Cb, Cr, states, mbx, mby):
-    """I_PCM under CABAC: pcm_flag (the terminate bin) was 1. The
-    encoder's EncodeFlush leaves its bit count exactly 7 past the
-    decoder's consumption point (range-register symmetry: both sides
-    renormalise in lockstep, and the flush emits 17 bits net of the
-    deferred-carry pool), the 7th being the stop bit — skip 6, check
-    the stop, consume pcm_alignment_zero_bit to the byte boundary,
-    read the 384 raw samples, then restart the arithmetic engine
-    (§9.3.1.2) with the context states untouched."""
-    br = dec.br
-    for _ in range(6):               # tail of the encoder's flush
-        br.u(1)
-    if not br.u(1):
-        raise ValueError("CABAC I_PCM flush stop bit is 0")
-    while br.pos % 8:
-        if br.u(1):
-            raise ValueError("pcm_alignment_zero_bit is 1")
-    x0, y0 = mbx * 16, mby * 16
-    for r in range(16):
-        for c in range(16):
-            Y[y0 + r, x0 + c] = br.u(8)
-    cx, cy = mbx * 8, mby * 8
-    for plane in (Cb, Cr):
-        for r in range(8):
-            for c in range(8):
-                plane[cy + r, cx + c] = br.u(8)
-    dec.restart()
-    cur = _Rec()
-    cur.cbp_l, cur.cbp_c = 15, 2     # cbf inferred 1 (§9.3.3.1)
-    cur.dcY, cur.acY = 1, [1] * 16
-    cur.dcC, cur.acC = [1, 1], [[1] * 4, [1] * 4]
-    recs[(mbx, mby)] = cur
-    st = _MBState()
-    st.intra16 = True
-    st.nnz_l[:] = 16
-    st.nnz_c[:] = 16
-    states[(mbx, mby)] = st
-    return qp, 0                     # mb_qp_delta absent
-
-
-def _decode_mb_cabac(dec, ctx, recs, qp, prev_qpd, pps, Y, Cb, Cr,
-                     states, mbx, mby, mbs_w):
-    cur = _Rec()
-    st = _MBState()
-    inc = _mbtype_inc(recs, mbx, mby, mbs_w)
-    if dec.bit(ctx, _MB_TYPE_I + inc):
-        if dec.terminate():          # pcm_flag
-            return _dec_mb_pcm_cabac(dec, recs, qp, Y, Cb, Cr,
-                                     states, mbx, mby)
-        cbp_luma, cbp_chroma, pred = _dec_i16_suffix(dec, ctx,
-                                                     _MB_TYPE_I + 3)
-        qp, prev_qpd = _dec_i16_body(dec, ctx, recs, cur, st, qp,
-                                     prev_qpd, pps, Y, Cb, Cr, mbx,
-                                     mby, mbs_w, cbp_luma,
-                                     cbp_chroma, pred)
-    else:                            # I_NxN
-        if pps.get("transform_8x8") and dec.bit(
-                ctx, _TS8 + _ts8_inc(recs, mbx, mby, mbs_w)):
-            qp, prev_qpd = _dec_i8_body(dec, ctx, recs, cur, st, qp,
-                                        prev_qpd, pps, Y, Cb, Cr,
-                                        states, mbx, mby, mbs_w)
-        else:
-            qp, prev_qpd = _dec_i4_body(dec, ctx, recs, cur, st, qp,
-                                        prev_qpd, pps, Y, Cb, Cr,
-                                        states, mbx, mby, mbs_w)
-    states[(mbx, mby)] = st
-    recs[(mbx, mby)] = cur
-    return qp, prev_qpd
-
-
-# ---------------------------------------------------------------------------
-# P slices (r8): mb_skip_flag + P_L0_16x16 / intra-in-P macroblocks
-# ---------------------------------------------------------------------------
-
-
-def decode_pslice_cabac(br: _Bits, qp: int, pps: dict, ref, Y, Cb,
-                        Cr, states: dict, mv_map: dict, mbs_w: int,
-                        n_mbs: int, addr: int, step,
-                        wp=None) -> int:
-    """Decode one CABAC P slice starting at macroblock ``addr``;
-    returns the number of MBs decoded. Same gate/contract as
-    :func:`decode_islice_cabac`; supports the CAVLC P subset
-    (P_Skip / P_L0_16x16 / 16x8 / 8x16 / P_8x8 sub-partitions /
-    Intra_16x16-in-P, one reference)."""
-    from .h264 import _decode_mb_p_skip
-    while br.pos % 8:
-        if not br.u(1):
-            raise ValueError("cabac_alignment_one_bit is 0")
-    dec = _CabacDec(br)
-    ctx = _Ctx()
-    recs: dict = {}
-    mvd_f: dict = {}                 # |mvd| per 4x4 block (L0)
-    prev_qpd = 0
-    n = 0
-    while True:
-        mbx, mby = step(addr + n)
-        if dec.bit(ctx, _SKIP_P + _skip_inc(recs, mbx, mby, mbs_w)):
-            _decode_mb_p_skip(ref, Y, Cb, Cr, states, mv_map, mbx,
-                              mby, mbs_w, wp)
-            cur = _Rec()
-            cur.skip = True
-            cur.intra = False
-            recs[(mbx, mby)] = cur
-            prev_qpd = 0
-        else:
-            qp, prev_qpd = _decode_mb_p_cabac(
-                dec, ctx, recs, mvd_f, qp, prev_qpd, pps, ref, Y, Cb,
-                Cr, states, mv_map, mbx, mby, mbs_w, wp)
-        n += 1
-        if dec.terminate():          # end_of_slice_flag
-            break
-        if addr + n >= n_mbs:
-            raise ValueError("CABAC slice overruns the frame's MBs")
-    return n
-
-
-def _decode_mb_p_cabac(dec, ctx, recs, mvd_f, qp, prev_qpd, pps, ref,
-                       Y, Cb, Cr, states, mv_map, mbx, mby, mbs_w,
-                       wp=None):
-    from .h264 import (_PartMvs, _mc_predict_mb, _mv_pred_16x16,
-                       _mv_pred_part, _p_partitions, _part_predict,
-                       _wp_single)
-    cur = _Rec()
-    st = _MBState()
-    if dec.bit(ctx, _MB_TYPE_P):     # intra macroblock in the P slice
-        mv_map[(mbx, mby)] = None
-        if dec.bit(ctx, _MB_TYPE_PI):
-            if dec.terminate():
-                raise NotImplementedError(
-                    "I_PCM in P slices unsupported")
-            cbp_l, cbp_c, pred = _dec_i16_suffix(dec, ctx,
-                                                 _MB_TYPE_PI + 1)
-            qp, prev_qpd = _dec_i16_body(dec, ctx, recs, cur, st, qp,
-                                         prev_qpd, pps, Y, Cb, Cr,
-                                         mbx, mby, mbs_w, cbp_l,
-                                         cbp_c, pred)
-        else:
-            qp, prev_qpd = _dec_i4_body(dec, ctx, recs, cur, st, qp,
-                                        prev_qpd, pps, Y, Cb, Cr,
-                                        states, mbx, mby, mbs_w)
-        states[(mbx, mby)] = st
-        recs[(mbx, mby)] = cur
-        return qp, prev_qpd
-    if ref is None:
-        raise ValueError("P macroblock without a reference frame")
-    # inter mb_type prefix tree (Table 9-37): 000 = 16x16,
-    # 011 = 16x8, 010 = 8x16, 001 = P_8x8 — bin2 context splits on
-    # bin1 (spec ctxIdx 16 vs 17, our _MB_TYPE_P+2 vs _MB_TYPE_P2)
-    if dec.bit(ctx, _MB_TYPE_P + 1):
-        mb_type = 1 if dec.bit(ctx, _MB_TYPE_P2) else 2
-    elif dec.bit(ctx, _MB_TYPE_P + 2):
-        mb_type = 3
-    else:
-        mb_type = 0
-    cur.intra = False
-    if mb_type == 0:                 # P_L0_16x16
-        mvpx, mvpy = _mv_pred_16x16(mv_map, mbx, mby, mbs_w)
-        dx = _code_mvd(dec, ctx, mvd_f, mbx * 4, mby * 4, 0)
-        dy = _code_mvd(dec, ctx, mvd_f, mbx * 4, mby * 4, 1)
-        _fill_mvd(mvd_f, mbx * 4, mby * 4, 4, 4, dx, dy)
-        mvx, mvy = mvpx + dx, mvpy + dy
-        if abs(mvx) > 1 << 14 or abs(mvy) > 1 << 14:
-            raise ValueError("implausible motion vector")
-        predY, predCb, predCr = _mc_predict_mb(ref, mbx, mby, mvx,
-                                               mvy)
-        mv_entry = (mvx, mvy)
-    else:                            # r8: partitioned inter MB
-        sub_types = None
-        if mb_type == 3:
-            sub_types = [_code_sub_mb_p(dec, ctx) for _ in range(4)]
-        pm = _PartMvs()
-        mv_map[(mbx, mby)] = pm
-        predY = np.empty((16, 16), dtype=np.int64)
-        predCb = np.empty((8, 8), dtype=np.int64)
-        predCr = np.empty((8, 8), dtype=np.int64)
-        for ox, oy, w, h, rule in _p_partitions(mb_type, sub_types):
-            bx0, by0 = mbx * 4 + ox // 4, mby * 4 + oy // 4
-            mvp = _mv_pred_part(mv_map, bx0, by0, w // 4, mbs_w,
-                                rule)
-            dx = _code_mvd(dec, ctx, mvd_f, bx0, by0, 0)
-            dy = _code_mvd(dec, ctx, mvd_f, bx0, by0, 1)
-            _fill_mvd(mvd_f, bx0, by0, w // 4, h // 4, dx, dy)
-            mvx, mvy = mvp[0] + dx, mvp[1] + dy
-            if abs(mvx) > 1 << 14 or abs(mvy) > 1 << 14:
-                raise ValueError("implausible motion vector")
-            _part_predict(ref, pm, predY, predCb, predCr, mbx, mby,
-                          ox, oy, w, h, mvx, mvy)
-        mv_entry = pm
-    predY, predCb, predCr = _wp_single((predY, predCb, predCr), wp,
-                                       0)
-    ts8_ok = mb_type in (0, 1, 2) or (mb_type == 3
-                                      and all(t == 0
-                                              for t in sub_types))
-    qp, prev_qpd = _dec_inter_tail(dec, ctx, recs, cur, st, qp,
-                                   prev_qpd, pps, Y, Cb, Cr, predY,
-                                   predCb, predCr, mbx, mby, mbs_w,
-                                   ts8_ok)
-    states[(mbx, mby)] = st
-    mv_map[(mbx, mby)] = mv_entry
-    recs[(mbx, mby)] = cur
-    return qp, prev_qpd
-
-
-def _dec_inter_tail(dec, ctx, recs, cur, st, qp, prev_qpd, pps, Y,
-                    Cb, Cr, predY, predCb, predCr, mbx, mby, mbs_w,
-                    ts8_ok=False):
-    """CBP + mb_qp_delta + residual + reconstruction of a 16x16
-    inter MB over its prediction planes — shared by the P and B
-    macroblock decoders. ``ts8_ok`` (r8, High profile): the MB shape
-    permits transform_size_8x8_flag; when the PPS enables the mode
-    and luma is coded the flag bin is decoded and the residual
-    switches to cat-5 8x8 blocks (no cbf bins — inferred from the
-    CBP quadrant bits)."""
-    from .h264 import (_BLK_POS as BP, _ZZ4, _clip255, _dequant_ac,
-                       _inv_transform_4x4, _recon_chroma_from_pred,
-                       _recon_inter_8x8)
-    cbp_luma, cbp_chroma = _dec_cbp(dec, ctx, recs, mbx, mby, mbs_w)
-    cur.cbp_l, cur.cbp_c = cbp_luma, cbp_chroma
-    ts8 = False
-    if pps.get("transform_8x8") and ts8_ok and cbp_luma:
-        ts8 = bool(dec.bit(ctx, _TS8 + _ts8_inc(recs, mbx, mby,
-                                                mbs_w)))
-        cur.ts8 = ts8
-    if cbp_luma or cbp_chroma:
-        delta = _code_qp_delta(dec, ctx, prev_qpd != 0)
-        if not -27 <= delta <= 26:
-            raise ValueError("mb_qp_delta out of range")
-        qp = (qp + delta + 52) % 52
-        prev_qpd = delta
-        cur.qpd = delta
-    else:
-        prev_qpd = 0
-    recon = predY.copy()
-    if cbp_luma and ts8:             # 8x8 transform (r8)
-        luma8 = np.zeros((4, 64), dtype=np.int64)
-        for b in range(4):
-            if not cbp_luma & (1 << b):
-                continue
-            luma8[b] = _dec_residual(dec, ctx, 5, 64)
-            for k in range(4):
-                cur.acY[4 * b + k] = 1
-                st.nnz_l[4 * b + k] = np.count_nonzero(
-                    luma8[b, 4 * np.arange(16) + k])
-        _recon_inter_8x8(recon, predY, luma8, cbp_luma, qp)
-    elif cbp_luma:
-        for blk in range(16):
-            if not (cbp_luma >> (blk // 4)) & 1:
-                continue
-            a, b = _cbf_luma_blk_nb(recs, cur, mbx, mby, blk, mbs_w)
-            if not dec.bit(ctx, _cbf_ctx(2, a, b)):
-                continue
-            cur.acY[blk] = 1
-            coeffs = _dec_residual(dec, ctx, 2, 16)
-            st.nnz_l[blk] = np.count_nonzero(coeffs)
-            d = np.zeros(16, dtype=np.int64)
-            d[_ZZ4] = coeffs
-            dq = _dequant_ac(d.reshape(4, 4), qp)
-            r = (_inv_transform_4x4(dq) + 32) >> 6
-            bx, by = BP[blk]
-            recon[by * 4:by * 4 + 4, bx * 4:bx * 4 + 4] = _clip255(
-                predY[by * 4:by * 4 + 4, bx * 4:bx * 4 + 4] + r)
-    Y[mby * 16:mby * 16 + 16, mbx * 16:mbx * 16 + 16] = recon
-    cdc, cac = _dec_chroma_cabac(dec, ctx, recs, cur, st, mbx, mby,
-                                 mbs_w, cbp_chroma)
-    _recon_chroma_from_pred(Cb, Cr, predCb, predCr, mbx, mby, cdc,
-                            cac, qp, pps)
-    return qp, prev_qpd
-
-
-def decode_bslice_cabac(br: _Bits, qp: int, pps: dict, ref0, ref1,
-                        col_mvs, Y, Cb, Cr, states: dict, mvs: dict,
-                        mbs_w: int, n_mbs: int, addr: int,
-                        step, temporal=None, wp=None) -> int:
-    """Decode one CABAC B slice starting at macroblock ``addr``;
-    returns the number of MBs decoded. Same gate/contract as
-    :func:`decode_islice_cabac`; supports the CAVLC B subset
-    (B_Skip/B_Direct_16x16 spatial direct, B_L0/B_L1/B_Bi 16x16 +
-    intra-in-B, one reference per list; r8 late additions: 16x8 and
-    8x16 mode pairs, B_8x8 sub-partitions, temporal direct).
-    ``col_mvs`` is the L1 reference's per-MB L0 motion for the
-    direct derivation; ``temporal`` the (tb, td) POC distances when
-    direct_spatial_mv_pred_flag is 0."""
-    from .h264 import _decode_mb_b_skip
-    while br.pos % 8:
-        if not br.u(1):
-            raise ValueError("cabac_alignment_one_bit is 0")
-    dec = _CabacDec(br)
-    ctx = _Ctx()
-    recs: dict = {}
-    mvd_f = ({}, {})                 # per-list |mvd| 4x4 fields
-    prev_qpd = 0
-    n = 0
-    while True:
-        mbx, mby = step(addr + n)
-        if dec.bit(ctx, _SKIP_B + _skip_inc(recs, mbx, mby, mbs_w)):
-            _decode_mb_b_skip(ref0, ref1, col_mvs, Y, Cb, Cr, states,
-                              mvs, mbx, mby, mbs_w, temporal, wp)
-            cur = _Rec()
-            cur.skip = True
-            cur.intra = False
-            cur.direct = True
-            recs[(mbx, mby)] = cur
-            prev_qpd = 0
-        else:
-            qp, prev_qpd = _decode_mb_b_cabac(
-                dec, ctx, recs, mvd_f, qp, prev_qpd, pps, ref0, ref1,
-                col_mvs, Y, Cb, Cr, states, mvs, mbx, mby, mbs_w,
-                temporal, wp)
-        n += 1
-        if dec.terminate():          # end_of_slice_flag
-            break
-        if addr + n >= n_mbs:
-            raise ValueError("CABAC slice overruns the frame's MBs")
-    return n
-
-
-def _decode_mb_b_cabac(dec, ctx, recs, mvd_f, qp, prev_qpd, pps,
-                       ref0, ref1, col_mvs, Y, Cb, Cr, states, mvs,
-                       mbx, mby, mbs_w, temporal=None, wp=None):
-    from .h264 import (_direct_predict_mb, _mc_predict_mb,
-                       _mv_pred_16x16, _wp_bi, _wp_single)
-    cur = _Rec()
-    st = _MBState()
-    binc = _mbtype_b_inc(recs, mbx, mby, mbs_w)
-    if not dec.bit(ctx, _MB_TYPE_B + binc):  # B_Direct_16x16: '0'
-        cur.intra = False
-        cur.direct = True
-        predY, predCb, predCr = _direct_predict_mb(
-            mvs, col_mvs, ref0, ref1, mbx, mby, mbs_w, temporal, wp)
-        qp, prev_qpd = _dec_inter_tail(dec, ctx, recs, cur, st, qp,
-                                       prev_qpd, pps, Y, Cb, Cr,
-                                       predY, predCb, predCr, mbx,
-                                       mby, mbs_w, True)
-        states[(mbx, mby)] = st
-        recs[(mbx, mby)] = cur
-        return qp, prev_qpd
-    if dec.bit(ctx, _MB_TYPE_B + 3):             # '11' + FL suffix
-        bits = dec.bit(ctx, _MB_TYPE_B + 4)
-        for _ in range(3):
-            bits = (bits << 1) | dec.bit(ctx, _MB_TYPE_B + 5)
-        if bits == 13:
-            # '111101': intra macroblock in the B slice
-            mvs["l0"][(mbx, mby)] = None
-            mvs["l1"][(mbx, mby)] = None
-            if dec.bit(ctx, _MB_TYPE_BI):
-                if dec.terminate():
-                    raise NotImplementedError(
-                        "I_PCM in B slices unsupported")
-                cbp_l, cbp_c, pred = _dec_i16_suffix(
-                    dec, ctx, _MB_TYPE_BI + 1)
-                qp, prev_qpd = _dec_i16_body(dec, ctx, recs, cur, st,
-                                             qp, prev_qpd, pps, Y,
-                                             Cb, Cr, mbx, mby, mbs_w,
-                                             cbp_l, cbp_c, pred)
-            else:
-                qp, prev_qpd = _dec_i4_body(dec, ctx, recs, cur, st,
-                                            qp, prev_qpd, pps, Y, Cb,
-                                            Cr, states, mbx, mby,
-                                            mbs_w)
-            states[(mbx, mby)] = st
-            recs[(mbx, mby)] = cur
-            return qp, prev_qpd
-        if bits == 15:               # r8: B_8x8 sub-partitions
-            from .h264 import _code_b_8x8
-            cur.intra = False
-            sub_types = [_code_sub_mb_b(dec, ctx) for _ in range(4)]
-
-            def read_sub_mvd(li, q, pi, bx0, by0, w4, h4, mvp):
-                mvd_f_l = mvd_f[li]
-                dx = _code_mvd(dec, ctx, mvd_f_l, bx0, by0, 0)
-                dy = _code_mvd(dec, ctx, mvd_f_l, bx0, by0, 1)
-                _fill_mvd(mvd_f_l, bx0, by0, w4, h4, dx, dy)
-                return mvp[0] + dx, mvp[1] + dy
-
-            predY, predCb, predCr = _code_b_8x8(
-                read_sub_mvd, sub_types, mvs, col_mvs, temporal,
-                ref0, ref1, mbx, mby, mbs_w, wp)
-            qp, prev_qpd = _dec_inter_tail(dec, ctx, recs, cur, st,
-                                           qp, prev_qpd, pps, Y, Cb,
-                                           Cr, predY, predCb, predCr,
-                                           mbx, mby, mbs_w,
-                                           all(t <= 3
-                                               for t in sub_types))
-            states[(mbx, mby)] = st
-            recs[(mbx, mby)] = cur
-            return qp, prev_qpd
-        if bits < 8:
-            mb_type = 3 + bits
-        elif bits == 14:
-            mb_type = 11
-        else:                        # 12..21 carry a fifth bin
-            mb_type = ((bits << 1)
-                       | dec.bit(ctx, _MB_TYPE_B + 5)) - 4
-        if mb_type > 3:              # r8: 16x8 / 8x16 partitions
-            from .h264 import _code_b_partitions
-            cur.intra = False
-
-            def read_mvd(li, idx, bx0, by0, w4, h4, mvp):
-                mvd_f_l = mvd_f[li]
-                dx = _code_mvd(dec, ctx, mvd_f_l, bx0, by0, 0)
-                dy = _code_mvd(dec, ctx, mvd_f_l, bx0, by0, 1)
-                _fill_mvd(mvd_f_l, bx0, by0, w4, h4, dx, dy)
-                return mvp[0] + dx, mvp[1] + dy
-
-            predY, predCb, predCr = _code_b_partitions(
-                read_mvd, mb_type, mvs, ref0, ref1, mbx, mby, mbs_w,
-                wp)
-            qp, prev_qpd = _dec_inter_tail(dec, ctx, recs, cur, st,
-                                           qp, prev_qpd, pps, Y, Cb,
-                                           Cr, predY, predCb, predCr,
-                                           mbx, mby, mbs_w, True)
-            states[(mbx, mby)] = st
-            recs[(mbx, mby)] = cur
-            return qp, prev_qpd
-        use_l0 = use_l1 = True       # B_Bi_16x16
-    else:                                        # '10x': L0 / L1
-        use_l1 = bool(dec.bit(ctx, _MB_TYPE_B + 4))
-        use_l0 = not use_l1
-    cur.intra = False
-    preds = []
-    for lst, use, refp in ((0, use_l0, ref0), (1, use_l1, ref1)):
-        mmap = mvs["l0"] if lst == 0 else mvs["l1"]
-        if not use:
-            mmap[(mbx, mby)] = None
-            continue
-        if refp is None:
-            raise ValueError("B macroblock without a reference frame")
-        mvpx, mvpy = _mv_pred_16x16(mmap, mbx, mby, mbs_w)
-        dx = _code_mvd(dec, ctx, mvd_f[lst], mbx * 4, mby * 4, 0)
-        dy = _code_mvd(dec, ctx, mvd_f[lst], mbx * 4, mby * 4, 1)
-        _fill_mvd(mvd_f[lst], mbx * 4, mby * 4, 4, 4, dx, dy)
-        mvx, mvy = mvpx + dx, mvpy + dy
-        if abs(mvx) > 1 << 14 or abs(mvy) > 1 << 14:
-            raise ValueError("implausible motion vector")
-        mmap[(mbx, mby)] = (mvx, mvy)
-        preds.append((lst, _mc_predict_mb(refp, mbx, mby, mvx, mvy)))
-    if len(preds) == 2:
-        predY, predCb, predCr = _wp_bi(preds[0][1], preds[1][1], wp)
-    else:
-        predY, predCb, predCr = _wp_single(preds[0][1], wp,
-                                           preds[0][0])
-    qp, prev_qpd = _dec_inter_tail(dec, ctx, recs, cur, st, qp,
-                                   prev_qpd, pps, Y, Cb, Cr, predY,
-                                   predCb, predCr, mbx, mby, mbs_w,
-                                   True)
-    states[(mbx, mby)] = st
-    recs[(mbx, mby)] = cur
-    return qp, prev_qpd
-
-
-def _dec_chroma_cabac(dec, ctx, recs, cur, st, mbx, mby, mbs_w,
-                      cbp_chroma):
-    cdc = np.zeros((2, 4), dtype=np.int64)
-    cac = np.zeros((2, 4, 16), dtype=np.int64)
-    if cbp_chroma:
-        for ci in range(2):
-            a, b = _cbf_dc_chroma_nb(recs, mbx, mby, ci, mbs_w)
-            if dec.bit(ctx, _cbf_ctx(3, a, b)):
-                cur.dcC[ci] = 1
-                cdc[ci] = _dec_residual(dec, ctx, 3, 4)
-    if cbp_chroma == 2:
-        for ci in range(2):
-            for blk in range(4):
-                a, b = _cbf_chroma_blk_nb(recs, cur, mbx, mby, ci,
-                                          blk, mbs_w)
-                if dec.bit(ctx, _cbf_ctx(4, a, b)):
-                    cur.acC[ci][blk] = 1
-                    coeffs = _dec_residual(dec, ctx, 4, 15)
-                    st.nnz_c[ci][blk] = np.count_nonzero(coeffs)
-                    cac[ci, blk, 1:] = coeffs
-    return cdc, cac

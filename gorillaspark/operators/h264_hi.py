@@ -2,11 +2,11 @@
 §8.5.12-8.5.13): the 8x8 zigzag scan, flat-scaling quant/dequant
 tables, the integer 8x8 inverse (and a matching forward) transform,
 and the nine Intra_8x8 prediction modes with §8.3.2.2.1 reference
-filtering. Pure math + tables; the MB-layer integration lives in
-h264.py / h264_cabac.py.
+filtering. Pure math + tables; the MB-layer integration (CAVLC)
+lives in h264.py.
 
 Honesty contract (same posture as h264_cabac's regenerated
-probability tables): this sandbox has no H.264 conformance vectors
+arithmetic-coder tables): this sandbox has no H.264 conformance vectors
 or third-party codec, so the Table-derived CONSTANTS below
 (_DEQUANT8 / _QUANT8_MF norm-adjustment rows) are transcriptions
 that cannot be cross-validated here. The GOP decoder therefore only

@@ -16,11 +16,12 @@ avc1 MP4 tracks (avcC record + length-prefixed samples, ISO/IEC
 14496-15) — and GOPs with P slices (one reference, P_L0_16x16 /
 P_Skip / intra-in-P, quarter-pel motion compensation,
 h264_decode_gop). The r8 rounds closed most of that module's old
-stub list (CABAC, B slices, every inter partition shape, weighted
+stub list (B slices, every inter partition shape, weighted
 prediction, High-profile Intra_8x8), and late r8 added HEVC
 Main-profile intra (h265.py — hvc1/hvcC MP4 tracks, lossless
-transquant-bypass). Out of scope, honestly: H.264/HEVC inter
-features beyond those, deblocking/SAO in-loop filters.
+transquant-bypass). Out of scope, honestly: H.264 CABAC (rejected
+with NotImplementedError), H.264/HEVC inter features beyond those,
+deblocking/SAO in-loop filters.
 
 Also defines GSV1, a minimal documented frame container (magic +
 frame interval + length-prefixed BMP frames) so video frame-sampling

@@ -9,14 +9,14 @@ media_codecs.py) — via ``decoder='native'`` and the typed operators
 :func:`audio_stats` / :func:`image_stats` / :func:`video_frame_stats`.
 media_codecs.py grew a real baseline JPEG codec in r5 (MP4/MJPEG
 demux+decode with it), an H.264 decoder in r7-r8 (h264.py —
-Annex-B and avc1/avcC MP4 tracks, CAVLC + CABAC, I/P/B GOPs with
+Annex-B and avc1/avcC MP4 tracks, CAVLC, I/P/B GOPs with
 every inter partition shape, quarter-pel MC, spatial+temporal
 direct, weighted prediction, and High-profile Intra_8x8 via
 h264_hi.py), and an HEVC Main-profile intra codec in late r8
 (h265.py — Annex-B and hvc1/hvcC MP4 tracks, CABAC on the shared
-M-coder, lossless transquant-bypass), so only HEVC inter slices and
-interlaced H.264 stay honestly stubbed — behind ``decoder=`` hooks
-/ parsers that raise ``NotImplementedError``. Swapping in
+M-coder, lossless transquant-bypass), so only H.264 CABAC, HEVC
+inter slices and interlaced H.264 stay honestly stubbed — behind
+``decoder=`` hooks / parsers that raise ``NotImplementedError``. Swapping in
 ffmpeg/torchaudio on a real cluster changes only the per-format
 branch: batch shapes, schemas and partitioning are already exercised
 end-to-end.

@@ -1297,7 +1297,8 @@ def ivfpq_topk_fixed_codebook(emb: DataFrame, queries: DataFrame,
        packed-code relation plus a broadcast: no per-subspace row
        explosion, no groupBy shuffle (the r5 probe showed the exploded
        (vid, m, code) form shuffled 12x more than recon-join scoring;
-       the packed form shuffles ~30x less — tools/ivfpq_adc_probe.py).
+       the packed form shuffles ~30x less — BENCH/BASELINE.md
+       "IVF-PQ ADC scoring bytes").
        LUT entries are quantized to integers (``floor(dot * 1e6 +
        0.5)`` as BIGINT) so per-candidate sums are exact integer
        sums: order-independent, bit-identical across engines (no
@@ -1360,6 +1361,11 @@ def ivfpq_topk_fixed_codebook(emb: DataFrame, queries: DataFrame,
              .select(F.col(id_col).alias("query_id"), "unit")
              .collect())
     qids = [r["query_id"] for r in qrows]
+    if len(set(qids)) != len(qids):
+        # every downstream join keys on query_id: a repeated id would
+        # multiply its candidate rows instead of failing
+        raise ValueError("ivfpq_topk_fixed_codebook: duplicate query_id "
+                         "in queries")
     QU = (np.array([r["unit"] for r in qrows], dtype=np.float64)
           if qrows else np.empty((0, dim)))
     CU = np.asarray(cell_units, dtype=np.float64)

@@ -2550,7 +2550,7 @@ _MEDIA_FRAMES_SQL = """
 """
 
 
-def _synth_avc1_udf(entropy="cavlc"):
+def _synth_avc1_udf():
     """Per-doc avc1 MP4 — a REAL ISO/IEC 14496-15 track (avcC
     decoder-configuration record + 4-byte-length-prefixed sample
     NALs) of intra-only H.264 I-frames from the flat-macroblock
@@ -2560,11 +2560,7 @@ def _synth_avc1_udf(entropy="cavlc"):
     the closed-form value v = 20 + (doc*7 + k*37 + mx*13 + my*29)
     % 200 with neutral chroma — a real entropy + intra-prediction
     decode whose statistics a DuckDB oracle predicts analytically
-    (the H.264 analogue of the quantization-exact JPEG family).
-    ``entropy``: 'cavlc' (baseline profile) or 'cabac' (r8 — the
-    h264_cabac writer: Main-profile SPS, marker SEI in the samples,
-    §9.3 arithmetic decode on the read side; the pixel formula is
-    entropy-coder-independent, so the SAME oracle gates both)."""
+    (the H.264 analogue of the quantization-exact JPEG family)."""
     from .operators import media_codecs as mc
     from .operators import h264 as hh
 
@@ -2587,8 +2583,7 @@ def _synth_avc1_udf(entropy="cavlc"):
                         else:
                             pred = (v[my, mx - 1] + v[my - 1, mx] + 1) >> 1
                         off[my, mx] = v[my, mx] - pred
-                ab = hh.h264_encode_flat_mbs(off, qp=36,
-                                             entropy=entropy)
+                ab = hh.h264_encode_flat_mbs(off, qp=36)
                 if cfg is None:
                     cfg = mc._box(b"avcC", hh.h264_avcc_config(ab))
                 frames.append(hh.h264_to_avcc_sample(ab))
@@ -2605,10 +2600,7 @@ def _synth_h264_pcm_udf():
     byte-aligned samples, so the decode is LOSSLESS — the grey
     16x16 pixel field v = (doc*7 + x*3 + y*5) % 256 comes back
     bit-exactly (the H.264 analogue of the PNG/BMP lossless
-    families, with neutral chroma so RGB equals the luma plane).
-    Entropy alternates by doc parity (even CAVLC, odd CABAC —
-    §9.3.1 pcm_flag + engine restart), exercising BOTH coders'
-    I_PCM paths against the same entropy-independent oracle."""
+    families, with neutral chroma so RGB equals the luma plane)."""
     from .operators import h264 as hh
 
     @pandas_udf("binary")
@@ -2616,9 +2608,7 @@ def _synth_h264_pcm_udf():
         def one(d):
             xg, yg = np.meshgrid(np.arange(16), np.arange(16))
             v = ((d * 7 + xg * 3 + yg * 5) % 256).astype(np.uint8)
-            return hh.h264_encode(
-                v, mb_mode="pcm",
-                entropy="cabac" if d % 2 else "cavlc")
+            return hh.h264_encode(v, mb_mode="pcm")
 
         return ids.map(one)
 
@@ -2684,9 +2674,8 @@ def _synth_h264_i8_udf():
     back pixel-exactly through the profile-100 SPS, the PPS
     transform_8x8 extension, the transform_size_8x8_flag, the
     filtered-reference DC prediction and the qp-0 dequant/IDCT8
-    (offset map (5c + 32) >> 6). Entropy alternates by doc parity,
-    driving BOTH coders' Intra_8x8 paths (CAVLC interleaved 4x4
-    sub-blocks; CABAC ts8 context + cat-5 residuals)."""
+    (offset map (5c + 32) >> 6), driving the CAVLC Intra_8x8 path
+    (interleaved 4x4 sub-blocks)."""
     from .operators import h264 as hh
 
     @pandas_udf("binary")
@@ -2694,8 +2683,7 @@ def _synth_h264_i8_udf():
         def one(d):
             gig, gjg = np.meshgrid(np.arange(8), np.arange(4))
             v = 20 + (d * 7 + gig * 9 + gjg * 31) % 200
-            return hh.h264_encode_flat_i8(
-                v, entropy="cabac" if d % 2 else "cavlc")
+            return hh.h264_encode_flat_i8(v)
 
         return ids.map(one)
 
@@ -2705,8 +2693,7 @@ def _synth_h264_i8_udf():
 def q_media_h264_i8_stats(spark, sf_dir):
     """High-profile Intra_8x8 decode value-checked end to end (r8):
     profile-100 parameter sets, the 8x8 transform chain and the
-    filtered-reference DC prediction, under BOTH entropy coders
-    (CAVLC even docs, CABAC odd docs) — against a pure-SQL oracle
+    filtered-reference DC prediction — against a pure-SQL oracle
     over the exact block-target construction."""
     from .operators.multimodal import image_stats
     from .operators.spread import spread as _sp
@@ -2799,28 +2786,6 @@ def q_media_h264_stats(spark, sf_dir):
                      "frame_ts_ms", "ahash")
 
 
-def q_media_h264_cabac_stats(spark, sf_dir):
-    """CABAC twin of media_h264_stats (r8): the same flat-macroblock
-    avc1 tracks re-coded with h264_cabac's §9.3 arithmetic coder
-    (Main-profile SPS, entropy_coding_mode=1 PPS, marker SEI), so the
-    read side exercises the CABAC engine, the I-slice binarizations
-    and the context machinery end to end — and because the pixel
-    formula is entropy-coder-independent, the IDENTICAL analytic
-    oracle gates it."""
-    from .operators.multimodal import video_frame_stats
-    from .operators.spread import spread as _sp
-    # widen before the synth UDF (the expensive stage; a small
-    # corpus is one parquet split - see the h265 families)
-    docs = _sp(_docs(spark, sf_dir))
-    vid = docs.select(F.col("doc_id").cast("long").alias("media_id"),
-                      _synth_avc1_udf(entropy="cabac")(F.col("doc_id"))
-                      .alias("payload"))
-    st = video_frame_stats(vid, every_ms=1000)
-    return st.select(F.col("media_id").alias("doc_id"),
-                     F.col("frame_index").cast("long").alias("frame_index"),
-                     "frame_ts_ms", "ahash")
-
-
 # 64x32 frame of 4x2 flat MBs: ahash cell (i,j) spans 8x4 px inside
 # MB (mx=j//2, my=i//4); with lum = 1000*v and cell area 32 the
 # block-mean > frame-mean comparison reduces exactly to 8*v > sum(v)
@@ -2869,12 +2834,10 @@ def _synth_h264_b_gop_udf():
     frame is the exact average (v0+v1+1)>>1) — stored in DECODING
     order [I,P,B,B] with a version-1 ctts box. Zero-MV motion
     compensation keeps every pixel closed-form, so a DuckDB oracle
-    predicts all four frames' ahashes analytically. Entropy
-    alternates by doc (even CAVLC, odd CABAC) so ONE query drives
-    BOTH B-slice entropy decoders — mb_skip_run and the CABAC
-    mb_skip_flag path included — plus the two-list DPB, the POC
-    output reordering and the ctts presentation timeline; the pixel
-    formula is entropy-coder-independent."""
+    predicts all four frames' ahashes analytically. One query drives
+    the B-slice decoder — mb_skip_run included — plus the two-list
+    DPB, the POC output reordering and the ctts presentation
+    timeline."""
     from .operators import media_codecs as mc
     from .operators import h264 as hh
 
@@ -2903,18 +2866,16 @@ def _synth_h264_b_gop_udf():
             return c
 
         def one(d):
-            ent = "cabac" if d % 2 else "cavlc"
             mxg, myg = np.meshgrid(np.arange(4), np.arange(2))
             v0 = 20 + (d * 7 + mxg * 13 + myg * 29) % 200
             v1 = 20 + (d * 11 + mxg * 17 + myg * 23) % 200
             idr = hh.h264_encode_flat_mbs(flat_offsets(v0), qp=36,
-                                          entropy=ent, poc_lsb=0)
+                                          poc_lsb=0)
             p_off = flat_offsets(v1)
             p_specs = [("i16dc", dc_level(int(p_off[my, mx])))
                        for my in range(2) for mx in range(4)]
             p = hh.h264_encode_p_frame(p_specs, 4, 2, qp=36,
-                                       frame_num=1, poc_lsb=8,
-                                       entropy=ent)
+                                       frame_num=1, poc_lsb=8)
             b_specs = []
             for my in range(2):
                 for mx in range(4):
@@ -2923,13 +2884,11 @@ def _synth_h264_b_gop_udf():
                                    ("l1", 0, 0) if k == 1 else
                                    ("bi", 0, 0, 0, 0))
             b = hh.h264_encode_b_frame(b_specs, 4, 2, poc_lsb=2,
-                                       qp=36, frame_num=2,
-                                       entropy=ent)
+                                       qp=36, frame_num=2)
             # all-skip B: spatial direct over the all-intra
             # colocated P ref -> exact bipred average everywhere
             b2 = hh.h264_encode_b_frame([None] * 8, 4, 2, poc_lsb=4,
-                                        qp=36, frame_num=3,
-                                        entropy=ent)
+                                        qp=36, frame_num=3)
             cfg = mc._box(b"avcC", hh.h264_avcc_config(idr))
             samples = [hh.h264_to_avcc_sample(s)
                        for s in (idr, p, b, b2)]
@@ -2956,10 +2915,9 @@ def _synth_h264_part_gop_udf():
     opposite half) — stored in decoding order [I,P,B] with a ctts
     box. Flat 16x16 source MBs + cell-aligned shifts keep every
     pixel closed-form, so a DuckDB oracle predicts all three frames'
-    ahashes analytically; entropy alternates by doc parity, driving
-    BOTH coders' partition parse paths (Table 9-37 prefix tree,
-    sub_mb_types, partition-granular mvd contexts) and the temporal
-    direct derivation end to end."""
+    ahashes analytically, driving the partition parse paths
+    (sub_mb_types, partition-granular mvd prediction) and the
+    temporal direct derivation end to end."""
     from .operators import media_codecs as mc
     from .operators import h264 as hh
 
@@ -2981,11 +2939,10 @@ def _synth_h264_part_gop_udf():
             return off
 
         def one(d):
-            ent = "cabac" if d % 2 else "cavlc"
             mxg, myg = np.meshgrid(np.arange(4), np.arange(2))
             v0 = 20 + (d * 7 + mxg * 13 + myg * 29) % 200
             idr = hh.h264_encode_flat_mbs(flat_offsets(v0), qp=36,
-                                          entropy=ent, poc_lsb=0)
+                                          poc_lsb=0)
             p_specs, col = [], {}
             for my in range(2):
                 for mx in range(4):
@@ -3011,11 +2968,10 @@ def _synth_h264_part_gop_udf():
                         pm.fill(2, 2, 2, 2, (-64, -64))
                     col[(mx, my)] = pm
             p = hh.h264_encode_p_frame(p_specs, 4, 2, qp=36,
-                                       frame_num=1, poc_lsb=4,
-                                       entropy=ent)
+                                       frame_num=1, poc_lsb=4)
             b = hh.h264_encode_b_frame([None] * 8, 4, 2, poc_lsb=2,
                                        qp=36, frame_num=2,
-                                       entropy=ent, col_mvs=col,
+                                       col_mvs=col,
                                        temporal=(2, 4))
             cfg = mc._box(b"avcC", hh.h264_avcc_config(idr))
             samples = [hh.h264_to_avcc_sample(s) for s in (idr, p, b)]
@@ -3034,8 +2990,7 @@ def q_media_h264_part_stats(spark, sf_dir):
     """Partitioned-P + temporal-direct H.264 decode value-checked end
     to end (r8): every macroblock of the P frame is partitioned
     (16x8 / 8x16 / P_8x8), the B frame derives its motion from the
-    partitioned colocated MBs through the temporal scaling, under
-    BOTH entropy coders (CAVLC even docs, CABAC odd docs) — against
+    partitioned colocated MBs through the temporal scaling — against
     a pure-SQL oracle that predicts each presentation frame's pixels
     from the cell-aligned shift construction."""
     from .operators.multimodal import video_frame_stats
@@ -3061,9 +3016,8 @@ def _synth_h264_wp_gop_udf():
     defaults) so every pixel is ((v0*w + 2) >> 2) + o exactly, and
     an all-B_Skip frame (POC 2) whose zero-MV bipred uses IMPLICIT
     weights from the POC distances (tb=2, td=8 -> w0=48, w1=16:
-    (v0*48 + vp*16 + 32) >> 6, unclipped by construction). Entropy
-    alternates by doc parity; a DuckDB oracle predicts all three
-    frames' ahashes analytically."""
+    (v0*48 + vp*16 + 32) >> 6, unclipped by construction). A DuckDB
+    oracle predicts all three frames' ahashes analytically."""
     from .operators import media_codecs as mc
     from .operators import h264 as hh
 
@@ -3085,24 +3039,23 @@ def _synth_h264_wp_gop_udf():
             return off
 
         def one(d):
-            ent = "cabac" if d % 2 else "cavlc"
             mxg, myg = np.meshgrid(np.arange(4), np.arange(2))
             v0 = 20 + (d * 7 + mxg * 13 + myg * 29) % 200
             w, o = 2 + d % 3, d % 11 - 5
             idr = hh.h264_encode_flat_mbs(flat_offsets(v0), qp=36,
-                                          entropy=ent, poc_lsb=0,
+                                          poc_lsb=0,
                                           weighted_pred=True,
                                           weighted_bipred=2)
             wts = {"ly": 2, "lc": 0,
                    "l0": ((w, o), (1, 0), (1, 0)), "l1": None}
             p = hh.h264_encode_p_frame([(0, 0)] * 8, 4, 2, qp=36,
                                        frame_num=1, poc_lsb=8,
-                                       entropy=ent, weights=wts)
+                                       weights=wts)
             col = {(mx, my): (0, 0)
                    for mx in range(4) for my in range(2)}
             b = hh.h264_encode_b_frame([None] * 8, 4, 2, poc_lsb=2,
                                        qp=36, frame_num=2,
-                                       entropy=ent, col_mvs=col)
+                                       col_mvs=col)
             cfg = mc._box(b"avcC", hh.h264_avcc_config(idr))
             samples = [hh.h264_to_avcc_sample(s) for s in (idr, p, b)]
             return mc.mp4_mux(samples, frame_ms=500, fourcc=b"avc1",
@@ -3117,8 +3070,7 @@ def _synth_h264_wp_gop_udf():
 def q_media_h264_wp_stats(spark, sf_dir):
     """Weighted-prediction H.264 decode value-checked end to end
     (r8): the explicit pred_weight_table over a zero-MV P frame and
-    the implicit POC-derived biprediction over an all-B_Skip frame,
-    under BOTH entropy coders (CAVLC even docs, CABAC odd docs) —
+    the implicit POC-derived biprediction over an all-B_Skip frame —
     against a pure-SQL oracle that predicts every frame's pixels
     from the closed-form weighting."""
     from .operators.multimodal import video_frame_stats
@@ -3139,10 +3091,9 @@ def q_media_h264_b_stats(spark, sf_dir):
     """B-frame H.264 decode value-checked end to end (r8): ctts
     composition reordering, the two-reference DPB, B_L0/B_L1/B_Bi
     motion compensation with the default bipred average, and a
-    fully-B_Skip frame through the spatial-direct derivation, under
-    BOTH entropy coders (CAVLC even docs, CABAC odd docs) — against
-    a pure-SQL oracle that predicts each presentation frame's pixels
-    from the flat-macroblock construction."""
+    fully-B_Skip frame through the spatial-direct derivation —
+    against a pure-SQL oracle that predicts each presentation
+    frame's pixels from the flat-macroblock construction."""
     from .operators.multimodal import video_frame_stats
     from .operators.spread import spread as _sp
     # widen before the synth UDF (the expensive stage; a small
@@ -3580,7 +3531,6 @@ QUERIES.update({
     "doc_trigram_lm_frozen": q_doc_trigram_lm_frozen,
     "media_frame_ahash": q_media_frame_ahash,
     "media_h264_stats": q_media_h264_stats,
-    "media_h264_cabac_stats": q_media_h264_cabac_stats,
     "media_h264_pcm_stats": q_media_h264_pcm_stats,
     "media_h264_b_stats": q_media_h264_b_stats,
     "media_h264_part_stats": q_media_h264_part_stats,
@@ -3602,7 +3552,6 @@ ORACLES.update({
     "doc_trigram_lm_frozen": _TRIGRAM_LM_FROZEN_SQL,
     "media_frame_ahash": _MEDIA_FRAMES_SQL,
     "media_h264_stats": _MEDIA_H264_SQL,  # exact flat-MB H.264 family
-    "media_h264_cabac_stats": _MEDIA_H264_SQL,  # same pixels, CABAC
     "media_h264_pcm_stats": _MEDIA_H264_PCM_SQL,  # lossless I_PCM
     "media_h264_b_stats": _MEDIA_H264_B_SQL,  # exact I/P/B GOP family
     "media_h264_part_stats": _MEDIA_H264_PART_SQL,  # partitions +
@@ -3862,100 +3811,42 @@ _EXTRA_NAMES = [
     "event_type_pivot",        # kept: event_type_rates_1h (same rates
                                #       machinery, unpivoted) +
                                #       stream_event_rates_1h in-window
-    # r7 rotation: stream_dedup_exact (the last of 68 registered
-    # queries with no driver-grade evidence, VERDICT r6 missing #2)
-    # moves INTO the window; compaction_inventory — driver-green five
-    # consecutive rounds r2-r6 — takes its slot:
     "compaction_inventory",    # kept: block_inventory in-window
                                #       exercises the same per-series
-                               #       inventory path, and the
-                               #       checkpoint/compaction sweep
-                               #       stays pytest-asserted
-    # r7 second rotation: media_h264_stats (NEW — real avc1/avcC +
-    # CAVLC intra H.264 decode, closing the r6 verdict's stub item)
-    # moves IN for first driver evidence; the longest-green media
-    # sibling moves out:
-    "media_image_stats",       # kept: media_png_stats in-window
-                               #       decodes to the IDENTICAL pixels
-                               #       and shares _MEDIA_IMAGE_SQL;
-                               #       driver-green r4-r6
-    # r7 third rotation: embedding_near_dup_sparse (NEW — the
-    # production-threshold near-dup: planner-sized banding + the
-    # segmented mapInArrow verify) moves IN for first driver
-    # evidence; the longest-green ANN sibling moves out:
-    # r8 rotation (VERDICT r7 #3): media_jpeg_prog_stats — the only
-    # registered query never in a CORRECTNESS window — moves IN for
-    # first driver evidence; lang_id (driver-green r3-r7, and the
-    # textstats family keeps doc_stats / doc_fingerprint /
-    # doc_trigram_lm in-window) takes its EXTRA slot:
-    "lang_id",
-    # r8 second rotation: media_h264_cabac_stats (NEW — the §9.3
-    # CABAC entropy layer over the same exact flat-MB family, closing
-    # the r7 verdict ask #4) moves IN for first driver evidence; the
-    # longest-green video sibling moves out:
-    "media_frame_ahash",       # kept: media_mp4_stats and both
-                               #       media_h264* queries exercise
-                               #       the video_frame_stats/ahash
-                               #       machinery in-window; the GSV1
-                               #       decode path stays EXTRA-oracled
-                               #       + pytest-fuzzed; driver-green
-                               #       r5-r7
-    # r8: the 128-bit simhash scale configuration registers straight
-    # to EXTRA (pytest extra-oracle gate + the committed sf1 sweep):
-    # the 64-bit twin holds the in-window slot, and both share the
-    # banded-join plan — only the fingerprint width/band size differ
-    "simhash128_hamming_pairs",
-    # r8: lossless I_PCM H.264 family, EXTRA for the same reason —
-    # the in-window H.264 slots go to the round's NEW entropy/B work
-    "media_h264_pcm_stats",
-    # r8 third rotation: media_h264_b_stats (NEW — B slices under
-    # both entropy coders, ctts reordering, two-list DPB) moves IN
-    # for first driver evidence; media_h264_stats (driver-green r7,
-    # and its CAVLC intra decode chain is a strict subset of what
-    # media_h264_b_stats and media_h264_cabac_stats exercise
-    # in-window) takes its EXTRA slot:
-    "media_h264_stats",
-    # r8 fourth rotation: media_h264_part_stats (NEW — P macroblock
-    # partitions 16x8/8x16/P_8x8 + temporal direct, both coders)
-    # moves IN for first driver evidence; media_h264_cabac_stats
-    # (driver-green r8 windows, and part/b both alternate entropy by
-    # doc parity, keeping the CABAC layer in-window) takes its slot:
-    "media_h264_cabac_stats",
-    # r8 fifth rotation: media_h264_wp_stats (NEW — explicit +
-    # implicit weighted prediction) moves IN for first driver
-    # evidence; media_audio_stats (driver-green r5-r8, and FLAC —
-    # lossless, SHARING the WAV analytic oracle — keeps the audio
-    # decode path in-window) takes its EXTRA slot:
-    "media_audio_stats",
-    # r8 sixth rotation: media_h264_i8_stats (NEW — High-profile
-    # Intra_8x8 transform chain) moves IN; doc_fingerprint
-    # (driver-green r3-r8; doc_stats + the trigram families keep the
-    # textstats surface in-window) takes its EXTRA slot:
-    "doc_fingerprint",
-    # r8 seventh rotation: media_h265_stats (NEW — the from-scratch
-    # HEVC Main-profile intra codec: hvc1/hvcC MP4 tracks, lossless
-    # transquant-bypass decode) moves IN for first driver evidence;
-    # media_mp4_stats (driver-green r5-r8) takes its EXTRA slot — the
-    # MP4 demux machinery stays in-window via the avc1 H.264 and
-    # hvc1 HEVC GOP families, and the MJPEG sample decode shares
-    # jpeg_decode with the two in-window JPEG queries:
-    "media_mp4_stats",
-    # r8 eighth rotation: media_h265_p_stats (NEW — HEVC P slices:
-    # cu_skip/merge/AMVP, DCT-IF MC, single-pic DPB TRAIL chain)
-    # moves IN for first driver evidence; media_jpeg_stats (baseline
-    # JPEG, driver-green r5-r8) takes its EXTRA slot — the baseline
-    # huffman/dequant chain stays in-window via
-    # media_jpeg_prog_stats (same exact block-constant family,
-    # progressive scans) and stays EXTRA-oracled + fuzz-pinned:
-    "media_jpeg_stats",
-    # r8 ninth rotation: media_h265_b_stats (NEW — HEVC B pictures:
-    # two-list DPB, bi-prediction, combined merge candidates, ctts
-    # POC reordering) moves IN for first driver evidence;
-    # media_png_stats (driver-green r6-r8) takes its EXTRA slot —
-    # the still-image surface stays in-window via
-    # media_jpeg_prog_stats, and the full PNG matrix stays
-    # EXTRA-oracled + fuzz-pinned:
-    "media_png_stats",
+                               #       inventory path
+    "media_image_stats",       # kept: media_png_stats decodes to the
+                               #       IDENTICAL pixels and shares
+                               #       _MEDIA_IMAGE_SQL
+    "lang_id",                 # kept: doc_stats / doc_trigram_lm
+                               #       keep the textstats family
+                               #       in-window
+    "media_frame_ahash",       # kept: the media_h264*/media_h265*
+                               #       queries exercise the
+                               #       video_frame_stats/ahash
+                               #       machinery in-window
+    "simhash128_hamming_pairs",  # kept: simhash_hamming_pairs (same
+                               #       banded-join plan, 64-bit
+                               #       fingerprint)
+    "media_h264_pcm_stats",    # kept: the CAVLC I-slice parse runs
+                               #       in-window in media_h264_b_stats
+    "media_h264_stats",        # kept: its CAVLC intra decode chain is
+                               #       a strict subset of
+                               #       media_h264_b_stats
+    "media_audio_stats",       # kept: media_flac_stats shares the WAV
+                               #       analytic oracle in-window
+    "doc_fingerprint",         # kept: doc_stats + the trigram
+                               #       families keep the textstats
+                               #       surface in-window
+    "media_mp4_stats",         # kept: the avc1/hvc1 GOP families
+                               #       demux MP4 in-window; MJPEG
+                               #       samples share jpeg_decode with
+                               #       media_jpeg_prog_stats
+    "media_jpeg_stats",        # kept: media_jpeg_prog_stats decodes
+                               #       the same exact block-constant
+                               #       family in-window
+    "media_png_stats",         # kept: media_jpeg_prog_stats keeps the
+                               #       still-image surface in-window;
+                               #       the PNG matrix is fuzz-pinned
     "ann_topk",                # kept: ann_topk_lsh in-window is
                                #       oracled against this exact
                                #       brute-force SQL (equality =

@@ -5,6 +5,7 @@ the scalar reference implementation, and property-based round trips.
 from __future__ import annotations
 
 import json
+import shutil
 from pathlib import Path
 
 import numpy as np
@@ -135,6 +136,18 @@ def test_property_roundtrip_and_scalar_equality(pairs):
     assert got.shape == want.shape and bool((got == want).all())
     dts, dvs = decode_v2(got)
     assert (dts == ts).all() and (dvs == vs).all()
+
+
+@pytest.mark.skipif(shutil.which("cc") is None,
+                    reason="no C compiler on PATH")
+def test_native_kernel_loads_when_compiler_present():
+    """With ``cc`` available the C kernel must build and bind. The
+    native tests skip when NATIVE is None, so without this a broken
+    gorilla.c or ctypes binding would silently drop every codec call
+    onto the numpy path (a 10x+ slowdown) with the suite green."""
+    from gorillaspark.codec import native
+
+    assert native.NATIVE is not None
 
 
 def test_native_dfcm_matches_scalar_and_golden():

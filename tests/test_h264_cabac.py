@@ -1,15 +1,12 @@
-"""CABAC entropy layer (gorillaspark.operators.h264_cabac).
+"""CABAC arithmetic engine (gorillaspark.operators.h264_cabac), shared
+by the HEVC codec, and the CAVLC-only H.264 decoder's refusal of CABAC
+streams.
 
-Three levels of pinning:
-1. the arithmetic engine round-trips arbitrary bin sequences
-   (regular bins over every context, bypass, interleaved non-final
-   terminate bins) — the §9.3 M-coder state machine itself;
-2. full-stream round-trips: h264_encode(entropy='cabac') decodes to
-   EXACTLY the pixels of the CAVLC stream built from the same MB
-   plans (the entropy layer must be pixel-transparent);
-3. the flat-macroblock analytic oracle family decodes exactly, and
-   foreign/truncated CABAC is rejected loudly (the interop honesty
-   contract — see h264_cabac's module docstring).
+1. the engine round-trips arbitrary bin sequences (regular bins over
+   every context, bypass, interleaved non-final terminate bins) — the
+   §9.3 M-coder state machine itself;
+2. an H.264 stream whose PPS sets entropy_coding_mode_flag is
+   rejected loudly, never decoded wrong.
 """
 
 import numpy as np
@@ -84,457 +81,17 @@ def test_skewed_bin_sequences_compress_and_roundtrip():
     assert dec.terminate() == 1
 
 
-def _rand_planes(rng, h, w, smooth=False):
-    if smooth:
-        base = rng.integers(40, 200, size=(h // 8, w // 8))
-        y = np.repeat(np.repeat(base, 8, 0), 8, 1)
-        y = (y + rng.integers(-6, 7, size=(h, w))).clip(0, 255)
-    else:
-        y = rng.integers(0, 256, size=(h, w))
-    cb = rng.integers(0, 256, size=(h // 2, w // 2))
-    cr = rng.integers(0, 256, size=(h // 2, w // 2))
-    return (y.astype(np.uint8), cb.astype(np.uint8),
-            cr.astype(np.uint8))
-
-
-@pytest.mark.parametrize("mode", ["i16", "i4"])
-@pytest.mark.parametrize("qp", [22, 30, 38])
-def test_cabac_stream_matches_cavlc_pixels(mode, qp):
-    rng = np.random.default_rng(qp * 7 + (mode == "i4"))
-    y, cb, cr = _rand_planes(rng, 48, 64, smooth=(qp == 30))
-    cavlc = hh.h264_encode(y, qp=qp, cb=cb, cr=cr, mb_mode=mode)
-    cabac = hh.h264_encode(y, qp=qp, cb=cb, cr=cr, mb_mode=mode,
-                           entropy="cabac")
-    np.testing.assert_array_equal(hh.h264_decode(cavlc),
-                                  hh.h264_decode(cabac))
-    # and both equal the encoder's own reconstruction (luma)
-    Y, _, _, _ = hh.h264_decode_planes(cabac)
-    np.testing.assert_array_equal(
-        Y, hh.h264_encoder_reconstruction(y, qp=qp, cb=cb, cr=cr,
-                                          mb_mode=mode))
-
-
-def test_flat_mbs_cabac_exact():
-    # the analytic oracle family, CABAC-coded: decode must land the
-    # closed-form macroblock values exactly
-    rng = np.random.default_rng(11)
-    off = rng.integers(-10, 11, size=(2, 4))
-    off[0, 0] = abs(off[0, 0])
-    stream = hh.h264_encode_flat_mbs(off, qp=36, entropy="cabac")
-    Y, Cb, Cr, crop = hh.h264_decode_planes(stream)
-    v = np.zeros((2, 4), dtype=np.int64)
-    for my in range(2):
-        for mx in range(4):
-            if mx == 0 and my == 0:
-                pred = 128
-            elif my == 0:
-                pred = v[my, mx - 1]
-            elif mx == 0:
-                pred = v[my - 1, mx]
-            else:
-                pred = (v[my, mx - 1] + v[my - 1, mx] + 1) >> 1
-            v[my, mx] = pred + off[my, mx]
-    for my in range(2):
-        for mx in range(4):
-            blk = Y[my * 16:(my + 1) * 16, mx * 16:(mx + 1) * 16]
-            assert (blk == v[my, mx]).all()
-    assert (Cb == 128).all() and (Cr == 128).all()
-    # identical pixels to the CAVLC twin of the same family
-    cavlc = hh.h264_encode_flat_mbs(off, qp=36)
-    np.testing.assert_array_equal(hh.h264_decode(cavlc),
-                                  hh.h264_decode(stream))
-
-
 def test_foreign_cabac_rejected_loudly():
-    # strip the gorillaspark SEI marker: the stream must be REFUSED,
-    # not misdecoded (our tables are regenerated, not the spec's)
+    # a valid CAVLC stream whose PPS flips entropy_coding_mode_flag
+    # (the bit after the two single-bit ue(0) ids) must be REFUSED
     off = np.full((1, 2), 5, dtype=np.int64)
-    stream = hh.h264_encode_flat_mbs(off, qp=36, entropy="cabac")
+    stream = hh.h264_encode_flat_mbs(off, qp=36)
+    pps = bytearray(hh._write_pps())
+    assert pps[0] & 0xE0 == 0xC0
+    pps[0] |= 0x20
     sc = b"\x00\x00\x00\x01"
-    nals = [sc + n for n in hh._split_annexb_raw(stream)
-            if (n[0] & 0x1F) != 6]
-    foreign = b"".join(nals)
-    with pytest.raises(NotImplementedError, match="third-party"):
-        hh.h264_decode(foreign)
-
-
-def test_cabac_p_gop_matches_cavlc_pixels():
-    """The r8 P-slice CABAC layer: an IDR + three P frames (skips,
-    mixed integer/fractional MVs, inter residual levels, intra-in-P)
-    built from the SAME mb_specs in both entropy coders must decode
-    to identical pixel planes, frame for frame."""
-    rng = np.random.default_rng(17)
-    y = rng.integers(0, 256, (32, 64), dtype=np.uint8)
-    lv = np.zeros((16, 16), dtype=np.int64)
-    lv[0, 0], lv[0, 1], lv[5, 0], lv[9, 3] = 3, -1, 2, -4
-    p_specs = [
-        [None] * 8,                                      # all skip
-        [(8, 4), None, (-4, 0), (5, 7), None, (4, -4), (12, 12),
-         (0, 0)],                                        # MVs + skip
-        [(0, 0, lv), ("i16dc", 13)] + [None] * 6,        # resid+intra
-    ]
-    streams = {}
-    for entropy in ("cavlc", "cabac"):
-        gop = hh.h264_encode(y, qp=26, mb_mode="i4", entropy=entropy)
-        for k, specs in enumerate(p_specs):
-            gop += hh.h264_encode_p_frame(
-                specs, 4, 2, qp=28, frame_num=k + 1,
-                ref_idc=0 if k == len(p_specs) - 1 else 2,
-                entropy=entropy)
-        streams[entropy] = gop
-    fa, crop_a = hh.h264_decode_gop_planes(streams["cavlc"])
-    fb, crop_b = hh.h264_decode_gop_planes(streams["cabac"])
-    assert crop_a == crop_b and len(fa) == len(fb) == 4
-    for k, (pa, pb) in enumerate(zip(fa, fb)):
-        for plane_a, plane_b in zip(pa, pb):
-            np.testing.assert_array_equal(plane_a, plane_b, err_msg=str(k))
-
-
-def test_cabac_p_gop_skip_repeats_frame():
-    off = np.zeros((2, 4), dtype=np.int64)
-    off[0, 1] = 25
-    idr = hh.h264_encode_flat_mbs(off, qp=36, entropy="cabac")
-    p = hh.h264_encode_p_frame([None] * 8, 4, 2, entropy="cabac")
-    frames = hh.h264_decode_gop(idr + p)
-    assert len(frames) == 2
-    np.testing.assert_array_equal(frames[0], frames[1])
-
-
-def test_truncated_cabac_raises():
-    rng = np.random.default_rng(3)
-    y, cb, cr = _rand_planes(rng, 32, 32)
-    stream = hh.h264_encode(y, qp=26, cb=cb, cr=cr, entropy="cabac")
-    with pytest.raises((ValueError, NotImplementedError)):
-        hh.h264_decode(stream[:len(stream) // 2])
-
-
-def test_cabac_stream_parses_as_main_profile():
-    y = np.full((16, 32), 77, np.uint8)
-    stream = hh.h264_encode(y, qp=30, entropy="cabac")
-    for nal_type, _ref, rbsp in hh._split_annexb(stream):
-        if nal_type == 7:
-            assert rbsp[0] == 77  # Main (CABAC is not Baseline)
-        if nal_type == 8:
-            assert hh._parse_pps(hh._Bits(rbsp))["cabac"]
-
-
-def test_cabac_b_gop_matches_cavlc_pixels():
-    """r8 CABAC B slices: the CAVLC B GOP (IDR + P ref + B with
-    L0/L1/Bi/intra MBs, residuals, POC reordering) re-coded with the
-    CABAC writer decodes to EXACTLY the same planes — the entropy
-    layer is pixel-transparent for every B macroblock kind."""
-    rng = np.random.default_rng(31)
-    y = rng.integers(0, 256, (32, 64), dtype=np.uint8)
-    lv = np.zeros((16, 16), dtype=np.int64)
-    lv[0, 0], lv[3, 2] = 4, -2
-    specs = [("l0", 0, 0), ("l1", 0, 0), ("bi", 0, 0, 0, 0),
-             ("i16dc", 11), ("l0", 8, 4), ("l1", -4, 8),
-             ("bi", 4, 0, 0, 4), ("l0", 0, 0, lv)]
-    frames = {}
-    for ent in ("cavlc", "cabac"):
-        idr = hh.h264_encode(y, qp=24, mb_mode="i4", poc_lsb=0,
-                             entropy=ent)
-        p = hh.h264_encode_p_frame([(4, 0)] * 8, 4, 2, qp=30,
-                                   frame_num=1, poc_lsb=4,
-                                   entropy=ent)
-        b = hh.h264_encode_b_frame(specs, 4, 2, poc_lsb=2, qp=28,
-                                   frame_num=2, entropy=ent)
-        fr, crop = hh.h264_decode_gop_planes(idr + p + b)
-        assert len(fr) == 3          # output order: POC order
-        frames[ent] = fr
-    for k in range(3):
-        for pa, pb in zip(frames["cavlc"][k], frames["cabac"][k]):
-            np.testing.assert_array_equal(pa, pb, err_msg=str(k))
-    # and the B frame really reordered: frame 1 is the POC-2 B whose
-    # first MB is the zero-MV L0 copy of the IDR
-    Yi, Yb = frames["cabac"][0][0], frames["cabac"][1][0]
-    np.testing.assert_array_equal(Yb[:16, :16], Yi[:16, :16])
-
-
-def _cabac_b_header(frame_num=2, poc_lsb=2, qp=28):
-    bw = hh._BitW()
-    bw.ue(0)                         # first_mb_in_slice
-    bw.ue(1)                         # slice_type: B
-    bw.ue(0)                         # pps_id
-    bw.u(frame_num & 15, 4)
-    bw.u(poc_lsb & 63, 6)
-    bw.u(1, 1)                       # direct_spatial_mv_pred
-    bw.u(0, 1)                       # num_ref_idx_override
-    bw.u(0, 1)                       # ref_pic_list_mod_l0
-    bw.u(0, 1)                       # ref_pic_list_mod_l1
-    bw.ue(0)                         # cabac_init_idc
-    bw.se(qp - 26)                   # slice_qp_delta
-    bw.ue(1)                         # disable_deblocking
-    return bw
-
-
-def _cabac_b_gop_prefix():
-    y = np.full((16, 16), 80, np.uint8)
-    idr = hh.h264_encode(y, qp=30, poc_lsb=0, entropy="cabac")
-    p = hh.h264_encode_p_frame([(0, 0)], 1, 1, frame_num=1,
-                               poc_lsb=4, entropy="cabac")
-    return idr + p
-
-
-def test_cabac_b_skip_decodes_as_spatial_direct():
-    """mb_skip_flag = 1 in a CABAC B slice (r8: B_Skip, spatial
-    direct): a whole-frame skip with no inter neighbours is the
-    zero-MV bipred average of the two references."""
-    bw = _cabac_b_header()
-    while len(bw.bits) % 8:
-        bw.u(1, 1)                   # cabac_alignment_one_bit
-    enc = hc._CabacEnc()
-    ctx = hc._Ctx()
-    enc.bit(ctx, hc._SKIP_B, 1)      # first MB: no neighbours, inc 0
-    enc.terminate(1)
-    nal = b"\x00\x00\x00\x01\x01" + hh._escape(bw.bytes()
-                                               + enc.bytes())
-    frames, _ = hh.h264_decode_gop_planes(_cabac_b_gop_prefix() + nal)
-    assert len(frames) == 3
-    Yi, Yb, Yp = frames[0][0], frames[1][0], frames[2][0]
-    np.testing.assert_array_equal(Yb, (Yi + Yp + 1) >> 1)
-
-
-def test_cabac_b_8x8_truncated_stream_is_loud():
-    """A B_8x8 mb_type ('111111') followed by a truncated/garbage
-    sub_mb_type stream fails loudly (the full decode path is
-    exercised positively in test_cabac_b8x8_matches_cavlc)."""
-    bins = (1, 1, 1, 1, 1, 1)        # '11' + FL4 1111 = B_8x8
-    bw = _cabac_b_header()
-    while len(bw.bits) % 8:
-        bw.u(1, 1)
-    enc = hc._CabacEnc()
-    ctx = hc._Ctx()
-    enc.bit(ctx, hc._SKIP_B, 0)
-    ctxs = [hc._MB_TYPE_B, hc._MB_TYPE_B + 3, hc._MB_TYPE_B + 4,
-            hc._MB_TYPE_B + 5, hc._MB_TYPE_B + 5,
-            hc._MB_TYPE_B + 5]
-    for i, b in enumerate(bins):
-        enc.bit(ctx, ctxs[i], b)
-    enc.terminate(1)
-    nal = b"\x00\x00\x00\x01\x01" + hh._escape(bw.bytes()
-                                               + enc.bytes())
-    with pytest.raises((ValueError, NotImplementedError)):
-        hh.h264_decode_gop_planes(_cabac_b_gop_prefix() + nal)
-
-
-def test_cabac_b_encoder_rejects_unknown_spec_kind():
-    with pytest.raises(ValueError, match="unknown B mb_spec"):
-        hh.h264_encode_b_frame([("b4x4", 0, 0)], 1, 1, poc_lsb=2,
-                               frame_num=2, entropy="cabac")
-
-
-@pytest.mark.parametrize("shape", [(16, 16), (32, 48), (64, 64)])
-def test_cabac_pcm_lossless_and_matches_cavlc(shape):
-    # I_PCM under CABAC (§9.3.1): pcm_flag terminate bin, codeword
-    # flush, byte-aligned raw samples, engine restart — the decode is
-    # LOSSLESS and byte-identical to the CAVLC I_PCM decode
-    h, w = shape
-    rng = np.random.default_rng(h * 100 + w)
-    y, cb, cr = _rand_planes(rng, h, w)
-    cavlc = hh.h264_encode(y, cb=cb, cr=cr, mb_mode="pcm")
-    cabac = hh.h264_encode(y, cb=cb, cr=cr, mb_mode="pcm",
-                           entropy="cabac")
-    a = hh.h264_decode(cavlc)
-    b = hh.h264_decode(cabac)
-    np.testing.assert_array_equal(a, b)
-    Y, Cb, Cr, _ = hh.h264_decode_planes(cabac)
-    np.testing.assert_array_equal(Y, y)
-    np.testing.assert_array_equal(Cb, cb)
-    np.testing.assert_array_equal(Cr, cr)
-
-
-def test_cabac_pcm_flush_resync_is_exact_per_macroblock():
-    # many consecutive per-MB engine restarts: any drift in the
-    # 7-bit flush re-sync constant would corrupt the NEXT MB, so a
-    # long multi-row frame pins the handshake
-    rng = np.random.default_rng(99)
-    y, cb, cr = _rand_planes(rng, 80, 96)   # 30 macroblocks
-    cabac = hh.h264_encode(y, cb=cb, cr=cr, mb_mode="pcm",
-                           entropy="cabac")
-    Y, Cb, Cr, _ = hh.h264_decode_planes(cabac)
-    np.testing.assert_array_equal(Y, y)
-    np.testing.assert_array_equal(Cb, cb)
-    np.testing.assert_array_equal(Cr, cr)
-
-
-def test_cabac_pcm_corrupt_stop_bit_raises():
-    # zeroing the flush stop bit must be a loud ValueError, not a
-    # silent misdecode of the raw samples
-    rng = np.random.default_rng(3)
-    y, cb, cr = _rand_planes(rng, 16, 16)
-    good = hh.h264_encode(y, cb=cb, cr=cr, mb_mode="pcm",
-                          entropy="cabac")
-    Y, _, _, _ = hh.h264_decode_planes(good)
-    np.testing.assert_array_equal(Y, y)
-    sample_at = good.find(bytes(y[0, :8]))
-    assert sample_at > 0            # raw luma row is in the stream
-    bad = bytearray(good)
-    # the stop bit is the last '1' before the byte-aligned samples;
-    # clear the whole preceding byte to guarantee we hit it
-    bad[sample_at - 1] = 0
-    with pytest.raises(ValueError):
-        hh.h264_decode_planes(bytes(bad))
-
-
-def test_cabac_p_partitions_match_cavlc_and_oracle():
-    """P macroblock partitions under CABAC (r8): the same partitioned
-    mb_specs serialize through the Table 9-37 prefix tree +
-    Table 9-38 sub_mb_types + partition-granular mvd contexts, and
-    decode byte-identically to the CAVLC pixels; integer-MV
-    partitions also match the clamped-shift oracle directly."""
-    rng = np.random.default_rng(41)
-    y = rng.integers(0, 256, (32, 64), dtype=np.uint8)
-    lv = np.zeros((16, 16), dtype=np.int64)
-    lv[1, 0], lv[14, 2] = 5, -3
-    specs = [("p16x8", (8, 0), (-8, 4), lv),
-             ("p8x16", (4, 8), (0, -12)),
-             ("p8x8", [("8x8", (5, 7)), ("8x4", (8, 0), (0, 8)),
-                       ("4x8", (-3, 2), (2, -3)),
-                       ("4x4", (1, 1), (2, 2), (3, 3), (4, 4))]),
-             None,
-             (8, 8),
-             ("p16x8", (0, 0), (16, 16)),
-             ("p8x8", [("8x8", (0, 0))] * 4),
-             ("p8x16", (-4, -4), (12, 0))]
-    streams = {}
-    for entropy in ("cavlc", "cabac"):
-        gop = hh.h264_encode(y, qp=24, mb_mode="i4", entropy=entropy)
-        gop += hh.h264_encode_p_frame(specs, 4, 2, qp=28,
-                                      frame_num=1, entropy=entropy)
-        streams[entropy] = gop
-    fa, _ = hh.h264_decode_gop_planes(streams["cavlc"])
-    fb, _ = hh.h264_decode_gop_planes(streams["cabac"])
-    assert len(fa) == len(fb) == 2
-    for pa, pb in zip(fa, fb):
-        for plane_a, plane_b in zip(pa, pb):
-            np.testing.assert_array_equal(plane_a, plane_b)
-    # integer-MV spot check: MB5 top 16x8 is the unmoved reference,
-    # bottom 16x8 shifts by (4, 4) integer pels
-    Y0, Y1 = fa[0][0], fb[1][0]
-    np.testing.assert_array_equal(Y1[16:24, 16:32], Y0[16:24, 16:32])
-    ys = np.clip(np.arange(24, 32) + 4, 0, 31)
-    xs = np.clip(np.arange(16, 32) + 4, 0, 63)
-    np.testing.assert_array_equal(Y1[24:32, 16:32],
-                                  Y0[np.ix_(ys, xs)])
-
-
-def test_cabac_b_direct_after_partitioned_p_matches_cavlc():
-    """A B frame whose spatial-direct derivation sees a PARTITIONED
-    colocated P MB (per-quadrant colZeroFlag) decodes identically
-    under both entropy coders, and the encoder-replicated derivation
-    agrees with the decoder (any drift desyncs CABAC loudly)."""
-    rng = np.random.default_rng(42)
-    y = rng.integers(0, 256, (32, 64), dtype=np.uint8)
-    # colocated P: each MB mixes a still and a moving partition
-    p_specs = [("p16x8", (0, 0), (24, 8))] * 8
-    col = {}
-    for addr in range(8):
-        pm = hh._PartMvs()
-        pm.fill(0, 0, 4, 2, (0, 0))
-        pm.fill(0, 2, 4, 2, (24, 8))
-        col[(addr % 4, addr // 4)] = pm
-    b_specs = [None, ("direct",), ("l0", 4, 0), None,
-               ("bi", 0, 4, 4, 0), None, ("direct",), None]
-    streams = {}
-    for entropy in ("cavlc", "cabac"):
-        gop = hh.h264_encode(y, qp=24, mb_mode="i4", poc_lsb=0,
-                             entropy=entropy)
-        gop += hh.h264_encode_p_frame(p_specs, 4, 2, qp=28,
-                                      frame_num=1, poc_lsb=4,
-                                      entropy=entropy)
-        gop += hh.h264_encode_b_frame(b_specs, 4, 2, poc_lsb=2,
-                                      qp=28, frame_num=2,
-                                      entropy=entropy, col_mvs=col)
-        streams[entropy] = gop
-    fa, _ = hh.h264_decode_gop_planes(streams["cavlc"])
-    fb, _ = hh.h264_decode_gop_planes(streams["cabac"])
-    assert len(fa) == len(fb) == 3     # output order: I, B, P
-    for k, (pa, pb) in enumerate(zip(fa, fb)):
-        for plane_a, plane_b in zip(pa, pb):
-            np.testing.assert_array_equal(plane_a, plane_b,
-                                          err_msg=str(k))
-
-
-def test_cabac_b_partitions_match_cavlc():
-    """B two-partition macroblocks under CABAC (r8): every mode pair
-    region of the Table 9-37 suffix — FL4 values 0..7 (types 3..10),
-    14 (type 11) and the five-bin 12..21 range — serializes and
-    decodes to the CAVLC pixels, with per-list partition-granular
-    mvd contexts."""
-    rng = np.random.default_rng(63)
-    y = rng.integers(0, 256, (32, 64), dtype=np.uint8)
-    lv = np.zeros((16, 16), dtype=np.int64)
-    lv[2, 0] = 6
-    b_specs = [("b16x8", ("l0", 8, 0), ("l0", -8, 4)),   # type 4
-               ("b8x16", ("l1", 0, -4), ("l1", 4, 0)),   # type 7
-               ("b16x8", ("l0", 5, 7), ("l1", -3, 2)),   # type 8
-               ("b8x16", ("l1", 1, 2), ("l0", 3, 4)),    # type 11
-               ("b16x8", ("l0", 2, 2), ("bi", 0, 0, 4, 4), lv),  # 12
-               ("b8x16", ("bi", 1, 0, 0, 1), ("l1", 2, 2)),      # 19
-               ("b16x8", ("bi", 0, 4, 4, 0),
-                ("bi", 2, 2, 2, 2)),                     # type 20
-               None]
-    streams = {}
-    for entropy in ("cavlc", "cabac"):
-        gop = hh.h264_encode(y, qp=24, mb_mode="i4", poc_lsb=0,
-                             entropy=entropy)
-        gop += hh.h264_encode_p_frame([(4, 0)] * 8, 4, 2, qp=28,
-                                      frame_num=1, poc_lsb=8,
-                                      entropy=entropy)
-        gop += hh.h264_encode_b_frame(b_specs, 4, 2, poc_lsb=4,
-                                      qp=28, frame_num=2,
-                                      entropy=entropy)
-        streams[entropy] = gop
-    fa, _ = hh.h264_decode_gop_planes(streams["cavlc"])
-    fb, _ = hh.h264_decode_gop_planes(streams["cabac"])
-    assert len(fa) == len(fb) == 3
-    for k, (pa, pb) in enumerate(zip(fa, fb)):
-        for plane_a, plane_b in zip(pa, pb):
-            np.testing.assert_array_equal(plane_a, plane_b,
-                                          err_msg=str(k))
-
-
-def test_cabac_b8x8_matches_cavlc():
-    """B_8x8 macroblocks under CABAC (r8): the Table 9-38
-    sub_mb_type tree (direct / single-list / bi over all four
-    sub-shapes) serializes and decodes to the CAVLC pixels, under
-    both spatial and temporal direct for the B_Direct_8x8
-    quadrants."""
-    rng = np.random.default_rng(73)
-    y = rng.integers(0, 256, (32, 64), dtype=np.uint8)
-    col = {(x, yy): (4, 0) for x in range(4) for yy in range(2)}
-    b_specs = [("b8x8", [("l0", "8x8", (5, 7)),
-                         ("l1", "8x4", (8, 0), (0, 8)),
-                         ("bi", "4x8", (1, 1, 2, 2), (3, 3, 4, 4)),
-                         ("l0", "4x4", (1, 0), (0, 1), (2, 2),
-                          (-1, -1))]),
-               ("b8x8", [("direct",), ("l0", "8x8", (4, 4)),
-                         ("direct",), ("bi", "8x8", (0, 0, 4, 4))]),
-               ("b8x8", [("l1", "4x4", (0, 0), (4, 4), (-4, 0),
-                          (0, -4)),
-                         ("bi", "8x4", (2, 0, 0, 2), (0, 2, 2, 0)),
-                         ("l0", "4x8", (6, 2), (2, 6)),
-                         ("direct",)]),
-               None] + [None] * 4
-    for temporal in (None, (4, 8)):
-        streams = {}
-        for entropy in ("cavlc", "cabac"):
-            gop = hh.h264_encode(y, qp=24, mb_mode="i4", poc_lsb=0,
-                                 entropy=entropy)
-            gop += hh.h264_encode_p_frame([(4, 0)] * 8, 4, 2, qp=28,
-                                          frame_num=1, poc_lsb=8,
-                                          entropy=entropy)
-            gop += hh.h264_encode_b_frame(b_specs, 4, 2, poc_lsb=4,
-                                          qp=28, frame_num=2,
-                                          entropy=entropy,
-                                          col_mvs=col,
-                                          temporal=temporal)
-            streams[entropy] = gop
-        fa, _ = hh.h264_decode_gop_planes(streams["cavlc"])
-        fb, _ = hh.h264_decode_gop_planes(streams["cabac"])
-        assert len(fa) == len(fb) == 3
-        for k, (pa, pb) in enumerate(zip(fa, fb)):
-            for plane_a, plane_b in zip(pa, pb):
-                np.testing.assert_array_equal(
-                    plane_a, plane_b, err_msg=f"{temporal} {k}")
+    nals = [sc + (b"\x68" + hh._escape(bytes(pps))
+                  if (n[0] & 0x1F) == 8 else n)
+            for n in hh._split_annexb_raw(stream)]
+    with pytest.raises(NotImplementedError, match="CABAC"):
+        hh.h264_decode(b"".join(nals))

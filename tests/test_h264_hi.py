@@ -1,12 +1,11 @@
 """High-profile 8x8 transform layer (operators/h264_hi.py + the
-Intra_8x8 MB paths in h264.py / h264_cabac.py).
+Intra_8x8 and inter 8x8-transform MB paths in h264.py, CAVLC).
 
 No conformance vectors exist in this sandbox (see h264_hi's honesty
 contract — foreign High-profile streams are refused), so validation
 is: (1) mathematical self-consistency of the transform/quant chain
 incl. a float-DCT cross-check; (2) decoder == encoder reconstruction
-(the Rec. 8.5 conformance property) over qps/shapes/coders;
-(3) CAVLC/CABAC pixel equality from the same plans; (4) loud
+(the Rec. 8.5 conformance property) over qps/shapes; (3) loud
 rejection of everything out of scope."""
 
 import numpy as np
@@ -81,31 +80,22 @@ def test_idct8_matches_float_dct_basis():
         assert np.abs(r - x).max() <= 1
 
 
-@pytest.mark.parametrize("entropy", ["cavlc", "cabac"])
-@pytest.mark.parametrize("qp", [8, 22, 30, 40])
-def test_i8_decoder_matches_encoder_reconstruction(entropy, qp):
-    rng = np.random.default_rng(qp * 3 + (entropy == "cabac"))
+@pytest.mark.parametrize("qp", [8, 22, 30, 40],
+                         ids=lambda qp: f"{qp}-cavlc")
+def test_i8_decoder_matches_encoder_reconstruction(qp):
+    rng = np.random.default_rng(qp * 3)
     for shape in ((16, 16), (32, 48), (64, 32)):
         y = rng.integers(0, 256, shape, dtype=np.uint8)
         cb = rng.integers(0, 256, (shape[0] // 2, shape[1] // 2),
                           dtype=np.uint8)
         cr = rng.integers(0, 256, (shape[0] // 2, shape[1] // 2),
                           dtype=np.uint8)
-        s = h.h264_encode(y, qp=qp, cb=cb, cr=cr, mb_mode="i8",
-                          entropy=entropy)
+        s = h.h264_encode(y, qp=qp, cb=cb, cr=cr, mb_mode="i8")
         Yd, Cbd, Crd, crop = h.h264_decode_planes(s)
         Yr = h.h264_encoder_reconstruction(y, qp=qp, cb=cb, cr=cr,
                                            mb_mode="i8")
         np.testing.assert_array_equal(Yd, Yr)
         assert list(crop) == [0, 0, 0, 0]
-
-
-def test_i8_cabac_matches_cavlc_pixels():
-    rng = np.random.default_rng(11)
-    y = rng.integers(0, 256, (48, 64), dtype=np.uint8)
-    a = h.h264_encode(y, qp=26, mb_mode="i8")
-    b = h.h264_encode(y, qp=26, mb_mode="i8", entropy="cabac")
-    np.testing.assert_array_equal(h.h264_decode(a), h.h264_decode(b))
 
 
 def test_i8_quality_monotone_and_beats_nothing_weird():
@@ -134,13 +124,13 @@ def test_foreign_high_profile_stream_rejected_loudly():
         h.h264_decode(b"".join(nals))
 
 
-def test_inter_transform_8x8_gop_both_coders():
+def test_inter_transform_8x8_gop():
     """Inter MBs under a transform_8x8 PPS (r8): the per-MB
     transform_size_8x8_flag switches the residual to the 8x8 chain —
     (4, 64)-shaped levels in the P/B mb_specs — while (16, 16)
     levels still ride the 4x4 path with the flag coded 0; checked
-    against per-quadrant dequant8+idct8 pixel expectations under
-    BOTH entropy coders (an i8 IDR anchors the GOP)."""
+    against per-quadrant dequant8+idct8 pixel expectations (an i8
+    IDR anchors the GOP)."""
     from gorillaspark.operators import h264_hi as hi8
     rng = np.random.default_rng(96)
     y = rng.integers(0, 256, (32, 64), dtype=np.uint8)
@@ -148,39 +138,35 @@ def test_inter_transform_8x8_gop_both_coders():
     lv8[0, 0], lv8[0, 5], lv8[2, 1], lv8[3, 10] = 12, -3, 7, 2
     lv4 = np.zeros((16, 16), dtype=np.int64)
     lv4[0, 0], lv4[9, 2] = 4, -2
-    for ent in ("cavlc", "cabac"):
-        idr = h.h264_encode(y, qp=24, mb_mode="i8", entropy=ent,
-                            poc_lsb=0)
-        Y0 = h.h264_decode_gop_planes(idr)[0][0][0]
-        specs = [(0, 0, lv8), None, (8, 4, lv4),
-                 ("p16x8", (0, 0), (4, 4), lv8), (0, 0),
-                 ("p8x8", [("8x8", (0, 0))] * 4, lv8), None, (4, 0)]
-        p = h.h264_encode_p_frame(specs, 4, 2, qp=28, frame_num=1,
-                                  poc_lsb=8, entropy=ent,
-                                  ts8_stream=True)
-        b = h.h264_encode_b_frame(
-            [("l0", 0, 0, lv8), None, ("bi", 0, 0, 0, 0, lv8)]
-            + [None] * 5, 4, 2, poc_lsb=4, qp=28, frame_num=2,
-            entropy=ent, ts8_stream=True)
-        frames, _ = h.h264_decode_gop_planes(idr + p + b)
-        assert len(frames) == 3
-        Y1, Yb = frames[2][0], frames[1][0]
-        for bq in (0, 2):            # MB0 zero-MV 8x8 residual quads
-            d = np.zeros(64, dtype=np.int64)
-            d[hi8.ZZ8] = lv8[bq]
-            r = (hi8.idct8(hi8.dequant8(d.reshape(8, 8), 28))
-                 + 32) >> 6
-            ox, oy = (bq & 1) * 8, (bq >> 1) * 8
-            want = np.clip(Y0[oy:oy + 8, ox:ox + 8] + r, 0, 255)
-            np.testing.assert_array_equal(
-                Y1[oy:oy + 8, ox:ox + 8], want, err_msg=f"{ent} {bq}")
-            # B MB0 (L0 zero MV off Y0): same residual over Y0
-            np.testing.assert_array_equal(
-                Yb[oy:oy + 8, ox:ox + 8], want,
-                err_msg=f"{ent} B {bq}")
-        # uncoded quadrant untouched; the 4x4-levels MB decodes via
-        # the 4x4 chain (flag 0) — block (0,0) of MB2 with MV (8,4)
-        assert np.array_equal(Y1[0:8, 8:16], Y0[0:8, 8:16])
+    idr = h.h264_encode(y, qp=24, mb_mode="i8", poc_lsb=0)
+    Y0 = h.h264_decode_gop_planes(idr)[0][0][0]
+    specs = [(0, 0, lv8), None, (8, 4, lv4),
+             ("p16x8", (0, 0), (4, 4), lv8), (0, 0),
+             ("p8x8", [("8x8", (0, 0))] * 4, lv8), None, (4, 0)]
+    p = h.h264_encode_p_frame(specs, 4, 2, qp=28, frame_num=1,
+                              poc_lsb=8, ts8_stream=True)
+    b = h.h264_encode_b_frame(
+        [("l0", 0, 0, lv8), None, ("bi", 0, 0, 0, 0, lv8)]
+        + [None] * 5, 4, 2, poc_lsb=4, qp=28, frame_num=2,
+        ts8_stream=True)
+    frames, _ = h.h264_decode_gop_planes(idr + p + b)
+    assert len(frames) == 3
+    Y1, Yb = frames[2][0], frames[1][0]
+    for bq in (0, 2):            # MB0 zero-MV 8x8 residual quads
+        d = np.zeros(64, dtype=np.int64)
+        d[hi8.ZZ8] = lv8[bq]
+        r = (hi8.idct8(hi8.dequant8(d.reshape(8, 8), 28))
+             + 32) >> 6
+        ox, oy = (bq & 1) * 8, (bq >> 1) * 8
+        want = np.clip(Y0[oy:oy + 8, ox:ox + 8] + r, 0, 255)
+        np.testing.assert_array_equal(
+            Y1[oy:oy + 8, ox:ox + 8], want, err_msg=str(bq))
+        # B MB0 (L0 zero MV off Y0): same residual over Y0
+        np.testing.assert_array_equal(
+            Yb[oy:oy + 8, ox:ox + 8], want, err_msg=f"B {bq}")
+    # uncoded quadrant untouched; the 4x4-levels MB decodes via
+    # the 4x4 chain (flag 0) — block (0,0) of MB2 with MV (8,4)
+    assert np.array_equal(Y1[0:8, 8:16], Y0[0:8, 8:16])
     # 8x8 levels without a transform_8x8 stream reject loudly
     with pytest.raises(ValueError, match="8x8-transform levels"):
         h.h264_encode_p_frame([(0, 0, lv8)], 1, 1, frame_num=1)
@@ -229,18 +215,17 @@ def test_i8_prediction_modes_all_exercised():
     assert len(seen) >= 4
 
 
-def test_flat_i8_oracle_family_exact_both_coders():
+def test_flat_i8_oracle_family_exact():
     """The Intra_8x8 oracle family reconstructs its 8x8-block
     targets exactly (DC-only qp-0 chain; generator-replicated
-    filtered-reference DC prediction) under both entropy coders."""
+    filtered-reference DC prediction)."""
     rng = np.random.default_rng(17)
-    for ent in ("cavlc", "cabac"):
-        for _ in range(8):
-            v = rng.integers(20, 220, (4, 8)).astype(np.int64)
-            s = h.h264_encode_flat_i8(v, entropy=ent)
-            Y, Cb, Cr, _ = h.h264_decode_planes(s)
-            want = np.kron(v, np.ones((8, 8), dtype=np.int64))
-            np.testing.assert_array_equal(Y, want, err_msg=ent)
-            assert (Cb == 128).all() and (Cr == 128).all()
+    for _ in range(8):
+        v = rng.integers(20, 220, (4, 8)).astype(np.int64)
+        s = h.h264_encode_flat_i8(v)
+        Y, Cb, Cr, _ = h.h264_decode_planes(s)
+        want = np.kron(v, np.ones((8, 8), dtype=np.int64))
+        np.testing.assert_array_equal(Y, want)
+        assert (Cb == 128).all() and (Cr == 128).all()
     with pytest.raises(ValueError, match="clip"):
         h.h264_encode_flat_i8(np.full((2, 2), 300))

@@ -601,6 +601,27 @@ def test_ann_ivfpq_gappy_codebook_raises(spark):
                 residual=residual).collect()
 
 
+def test_ivfpq_rejects_duplicate_query_ids(spark):
+    """Every IVF-PQ join keys on query_id, so a repeated id would
+    multiply that query's joined rows; it must raise instead."""
+    import numpy as np
+
+    from gorillaspark.operators.similarity import ivfpq_topk_fixed_codebook
+
+    rng = np.random.default_rng(12)
+    dim, n = 16, 40
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in rng.normal(0, 1, dim)])
+         for i in range(n)],
+        "vec_id long, embedding array<double>")
+    q = emb.where(F.col("vec_id") < 2)
+    with pytest.raises(ValueError, match="duplicate query_id"):
+        ivfpq_topk_fixed_codebook(
+            emb, q.unionAll(q.where(F.col("vec_id") == 1)), k=3,
+            n_centroids=4, nprobe=2, n_sub=4, n_codes=8, dim=dim,
+            refine=10).collect()
+
+
 def test_png_roundtrip_and_filters():
     """Real PNG decode: our encoder round-trips grey/RGB/RGBA, and a
     hand-built IDAT exercising ALL FIVE row filters (None/Sub/Up/

@@ -28,11 +28,15 @@ script, not in the operator's hands):
     different level silently poisoned by hypervisor steal;
   * pairs reported: 2 → 8 (the north-rule pair: bandwidth
     unsaturated, measures the engine) and 8 → 32 (measures the box —
-    the single VM's memory bandwidth; quantified by the embedded
-    STREAM-triad probe);
-  * the kernel-level (pure codec, P pinned processes) section and the
-    memory-bandwidth section are produced by the same run via
-    tools/kernel_scaling.py and tools/membw_probe.py.
+    the single VM's memory bandwidth);
+  * the kernel-level (pure codec, P pinned processes) section is
+    produced by the same run via tools/kernel_scaling.py.
+
+The committed BASELINE.md also holds sections measured by probe tools
+that have since been retired (rollup/encode decompositions, the
+decode-cliff and memory-bandwidth probes, split-executor emulation,
+IVF-PQ ADC bytes). A rerun rewrites the file without them, so carry
+them over from git history.
 
 Efficiency = (T_N / T_4N) / 4; 1.0 is perfect linear scaling; the
 north rule requires ≥ 0.8.
@@ -210,15 +214,6 @@ def main() -> None:
                 (lo[f"{k}_s"] / hi[f"{k}_s"]) / r, 3)
 
     kern = _probe("kernel_scaling.py")
-    membw = _probe("membw_probe.py")
-    decomp = _probe("rollup_decomp.py")
-    encdec = _probe("encode_decomp.py")
-    cliff = _probe("decode_cliff_probe.py")
-    # the r5 cluster-shaped probes are part of the regenerated
-    # artifact too — hand-pasted sections would be lost on rerun
-    os.environ.setdefault("SPLIT_N_CONV", "20000")  # fits probe budget
-    split = _probe("split_exec_probe.py")
-    adc = _probe("ivfpq_adc_probe.py")
 
     n_pts = results[LEVELS[0]]["n_points"]
     md = [
@@ -308,58 +303,6 @@ def main() -> None:
         "lower bound on cluster scaling, not an estimate of it.",
         "",
     ]
-    if decomp:
-        dl = decomp["levels"]
-        lo_c, hi_c = sorted(int(k) for k in dl)[:2]
-        md += [
-            "## Rollup-gap decomposition (tools/rollup_decomp.py, "
-            f"{dl[str(lo_c)]['n_points']:,} points)", "",
-            "Hypothesis tested: F.percentile makes the rollup an "
-            "ObjectHashAggregate whose default sort-based fallback "
-            "(threshold 128 groups) silently turns the hash aggregate "
-            "into an external sort — suspected as the non-bandwidth "
-            "scaling loss. Variants isolate each mechanism:", "",
-            f"| variant | {lo_c}-core min s | {hi_c}-core min s | "
-            f"{lo_c}→{hi_c} efficiency |", "|---|---|---|---|"]
-        for k in ("scan_only", "shuffle_only", "no_p95", "p95_fb128",
-                  "p95_fb2m"):
-            md.append("| {} | {:.2f} | {:.2f} | **{}** |".format(
-                k, dl[str(lo_c)][k]["min_s"], dl[str(hi_c)][k]["min_s"],
-                decomp["efficiency_2to8"][k]))
-        md += [
-            "",
-            "Verdict: the fallback hypothesis is REFUTED as the "
-            "scaling culprit — raising the threshold to 2M changes "
-            "absolute time only marginally here, and the "
-            "percentile-free codegen aggregate (no_p95) and the pure "
-            "shuffle+count (shuffle_only) scale no better than the "
-            "full rollup; even the SHUFFLE-FREE cached scan "
-            "(scan_only) tops out well below 0.8 on this box. "
-            "The ceiling sits below every aggregation plan: shared "
-            "L3/allocator plus the single local-mode JVM "
-            "(one BlockManager, one scheduler) — resources that are "
-            "per-executor on a real cluster. The threshold is still "
-            "raised in plans/session.py because at executor scale the "
-            "sort fallback is an O(n log n)+spill cliff the plan "
-            "should never hit; the local decomposition simply shows "
-            "it is not what limits this box.", ""]
-    if encdec:
-        dl = encdec["levels"]
-        lo_c, hi_c = sorted(int(k) for k in dl)[:2]
-        md += [
-            "## Encode-gap decomposition (tools/encode_decomp.py, "
-            f"{dl[str(lo_c)]['n_points']:,} points)", "",
-            "The codec kernel scales ~0.93 over this pair "
-            "(kernel table below), so the end-to-end encode gap must "
-            "live in the JVM/transport layers. Each variant adds one "
-            "layer:", "",
-            f"| variant | {lo_c}-core min s | {hi_c}-core min s | "
-            f"{lo_c}→{hi_c} efficiency |", "|---|---|---|---|"]
-        for k in ("shuffle_sort", "arrow_identity", "full_encode"):
-            md.append("| {} | {:.2f} | {:.2f} | **{}** |".format(
-                k, dl[str(lo_c)][k]["min_s"], dl[str(hi_c)][k]["min_s"],
-                encdec["efficiency_2to8"][k]))
-        md.append("")
     if kern:
         md += ["## Kernel-level scaling (P pinned processes, fixed "
                "work each — the per-executor view)", "",
@@ -370,159 +313,8 @@ def main() -> None:
                       f"{row['decode_Mpts_s']} |")
         md += ["", "Efficiency per 4× step: "
                + json.dumps(kern["efficiency"]), ""]
-    if cliff:
-        lv = cliff["levels"]
-        lo_p, hi_p = sorted(lv, key=int)[:2]
-        md += [
-            "## Decode-cliff probe (tools/decode_cliff_probe.py, "
-            f"{lo_p} vs {hi_p} pinned procs)", "",
-            "The kernel table's 8→32 decode drop is dissected into "
-            "variants: `fresh` = single-shot decode into cold buffers "
-            "(what the kernel table measures), `prefault` = min of "
-            "reps with mallopt-recycled already-faulted buffers "
-            "(decode compute alone), `fault_only` = allocate+memset "
-            "the same output footprint with no decode (the suspected "
-            "artifact in isolation):", "",
-            f"| variant | {lo_p}-proc M pts/s | {hi_p}-proc M pts/s | "
-            "efficiency |", "|---|---|---|---|"]
-        # variant keys are 'decode:fresh', 'encode:prefault', … —
-        # report whatever the probe measured, in its own order
-        for v in lv[lo_p]:
-            md.append(f"| {v} | {lv[lo_p][v]['Mpts_s']} | "
-                      f"{lv[hi_p][v]['Mpts_s']} | "
-                      f"**{cliff['efficiency'][v]}** |")
-        md += ["", f"Attribution: {json.dumps(cliff['attribution'])}",
-               ""]
-    if membw:
-        bw = membw["triad_GBps_by_procs"]
-        md += [
-            "## Why the 8→32 pair degrades on one VM "
-            "(and why a cluster doesn't)", "",
-            "Measured in this same run (tools/membw_probe.py, "
-            "STREAM-triad style, barrier-synchronized pinned "
-            "processes):", "",
-            "| procs | aggregate memory bandwidth |", "|---|---|",
-        ]
-        for p, gbps in bw.items():
-            md.append(f"| {p} | {gbps} GB/s |")
-        e832 = (round(bw["32"] / bw["8"] / 4, 2)
-                if "8" in bw and "32" in bw else None)
-        md += [
-            "",
-            f"Beyond 8 cores this single VM adds only "
-            f"{round(bw.get('32', 0) / max(bw.get('8', 1), 1e-9), 1)}× "
-            f"bandwidth for 4× cores (efficiency {e832} for *pure "
-            "memory streaming*, before any engine code runs), and "
-            "32-way simultaneous allocation adds kernel "
-            "page-fault/zone contention. The codec is a "
-            "memory-streaming workload (~1.5 GB/s per core at kernel "
-            "speed), so the 8→32 numbers above measure the box, not "
-            "the engine: every resource that flattens here — memory "
-            "controllers, page-fault locks, the single JVM's "
-            "BlockManager and scheduler, one disk — is per-node on a "
-            "real cluster and therefore scales with N→4N executors. "
-            "The representative pair for the north-rule criterion on "
-            "this sandbox is 2→8.",
-            "",
-        ]
-    if split:
-        se = split["efficiency"]
-        md += [
-            "## Split-executor emulation (tools/split_exec_probe.py — "
-            "the cluster-shaped datapoints)", "",
-            "Pinned worker PROCESSES on disjoint cpusets with "
-            "separate /dev/shm shuffle dirs run row-hash-balanced "
-            "corpus slices concurrently (barrier-aligned timed "
-            "sections, min of reps). Row-level hashing is the "
-            "cluster's input-split shape — whole-conversation splits "
-            "cannot balance this corpus, whose skew design routes "
-            "~20% of all turns into one mega-conversation. Two "
-            "grids: 2×4-core on halves (vs one 8-core JVM on the "
-            "full corpus) and the north rule's literal N→4N executor "
-            "shape, 1×2-core on a quarter vs 4×2-core on all "
-            "quarters (solo reference pinned to the same cores as "
-            "the first worker, so IRQ affinity cancels).", "",
-            "| stage | solo4 half | split 2x4 agg | solo8 full | "
-            "split /2x solo4 | solo8 /2x solo4 | solo2 quarter | "
-            "split 4x2 agg | eff 1→4 executors |",
-            "|---|---|---|---|---|---|---|---|---|"]
-        for st, v in se.items():
-            md.append(
-                "| {} | {} | {} | {} | {} | {} | {} | {} | **{}** | "
-                .format(st, v["solo4_half_mpts_s"],
-                        v["split_2x4_mpts_s"], v["solo8_full_mpts_s"],
-                        v["split_vs_2x_solo4"], v["solo8_vs_2x_solo4"],
-                        v["solo2_quarter_mpts_s"],
-                        v["split_4x2_mpts_s"],
-                        v["eff_1_to_4_executors"]) + "(M pts/s)")
-        sr = split.get("runs", {})
-        cals = {k[:-10]: v for k, v in sr.items()
-                if k.endswith("_worst_cal")}
-        md += [
-            "",
-            f"Contention sentinel for THIS run: quiet ref "
-            f"{sr.get('cal_ref', '?')}s, gate 1.25x; worst bracketing "
-            f"calibration per group (after retries): "
-            + ", ".join(f"{k}={v}" for k, v in cals.items())
-            + ". Groups whose worst cal exceeds the gate were measured "
-            "under co-tenant load — prefer sentinel-clean runs (the "
-            "r6 table of record keeps medians of three such runs).",
-            "",
-            "Sentinel protocol (r6): cal0 runs BEFORE the child's JVM "
-            "exists and cal1 after spark.stop() behind a group-wide "
-            "completion barrier, staggered 0.25 s and min-of-3 — a "
-            "sentinel taken beside the child's own freshly-active JVM "
-            "on a 2-4 core cpuset reads 5-7x inflated for ~one sample "
-            "(measured settle experiment in BENCH/BASELINE.md), so "
-            "the pre-r6 single-sample form flagged our own JVM as "
-            "co-tenant load.",
-            "",
-            "Reading: co-located executor processes compose "
-            "~linearly — each child runs at its solo speed — so the "
-            "1→4-executor pair is the direct north-rule evidence "
-            "(r6 sentinel-clean medians: encode 0.854 / rollup 0.822 "
-            "at 40k convs); the in-process single-JVM pairs above "
-            "are the lower bound, with the deficit bracketed to the "
-            "JVM/transport by the encode decomposition. "
-            "Shared-tenant noise swings child wall times ±15% "
-            "run-to-run; every child's reps are in the raw JSON "
-            "below.", ""]
-    if adc:
-        md += [
-            "## IVF-PQ ADC scoring bytes (tools/ivfpq_adc_probe.py)",
-            "",
-            "Scoring-stage-only A/B (index pieces pre-materialized "
-            "to parquet; job-level stage metrics from the UI REST "
-            "API; survivor sets identical across variants):", "",
-            "| scoring form | cand-side parquet B | job input B | "
-            "job shuffle r/w B |", "|---|---|---|---|",
-            "| r4 recon-join (floats) | {} | {} | {} |".format(
-                adc["candidate_side_bytes_old"],
-                adc["job_old_recon"]["input_bytes"],
-                adc["job_old_recon"]["shuffle_read_bytes"]),
-            "| exploded (vid,m,code)+groupBy — rejected | {} | {} | "
-            "{} |".format(
-                adc["parquet_bytes"]["codes"],
-                adc["job_adc_exploded"]["input_bytes"],
-                adc["job_adc_exploded"]["shuffle_read_bytes"]),
-            "| packed ADC (shipped) | {} | {} | {} |".format(
-                adc["candidate_side_bytes_packed"],
-                adc["job_adc_packed"]["input_bytes"],
-                adc["job_adc_packed"]["shuffle_read_bytes"]),
-            "",
-            "The naive exploded ADC form shuffles an order of "
-            "magnitude more than the recon join (the ×n_sub row "
-            "blow-up swamps the smaller payload); the shipped plan "
-            "packs all subspace codes into one BIGINT per vector and "
-            "scores with a static expression, eliminating both the "
-            "explosion and the groupBy exchange. Logically the "
-            "candidate payload is 8 B packed codes vs 512 B "
-            "reconstructed doubles (64×) — what the join carries at "
-            "100 TB.", ""]
     raw = {"levels": {str(c): results[c] for c in LEVELS},
-           "efficiency": eff, "kernel": kern, "membw": membw,
-           "rollup_decomp": decomp, "encode_decomp": encdec,
-           "decode_cliff": cliff, "split_exec": split, "adc": adc,
+           "efficiency": eff, "kernel": kern,
            "protocol": {"n_conv": N_CONV, "mean_turns": MEAN_TURNS,
                         "reps": REPS, "tries": TRIES,
                         "statistic": "min",

@@ -2,10 +2,18 @@
 """Local mimic of the driver's correctness gate: run every
 __spark_entry__ query against its DuckDB oracle at a given SF and
 compare row count + order-insensitive values (columns sorted by name).
+
+Each checked query also prints the sha256 of its normalized Spark
+result, so two trees can be diffed query by query:
+
+    python tools/check_oracles.py --extra > before.txt   # old tree
+    python tools/check_oracles.py --extra > after.txt    # new tree
+    diff <(grep -v ^ALL before.txt) <(grep -v ^ALL after.txt)
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 
@@ -30,6 +38,12 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
+def result_hash(df: pd.DataFrame) -> str:
+    """sha256 of a normalized result: dtypes plus the CSV of its rows."""
+    text = repr(list(df.dtypes.astype(str))) + df.to_csv(index=False)
+    return hashlib.sha256(text.encode()).hexdigest()
+
+
 def main() -> int:
     import __spark_entry__ as e
     from gorillaspark.plans.session import build_session
@@ -37,7 +51,8 @@ def main() -> int:
     argv = sys.argv[1:]
     with_extra = "--extra" in argv
     only = [a for a in argv if a != "--extra"] or None
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
     spark = build_session(app="oracle-check", master=f"local[{cpus}]",
                           shuffle_partitions=max(cpus, 8))
     con = duckdb.connect()
@@ -58,11 +73,11 @@ def main() -> int:
             print(f"FAIL {name}: spark error {ex}")
             failed.append(name)
             continue
+        a = normalize(sdf)
         if name not in oracles:
-            print(f"ROWS-ONLY {name}: {len(sdf)} rows")
+            print(f"ROWS-ONLY {name}: {len(a)} rows {result_hash(a)}")
             continue
-        odf = con.execute(oracles[name]).fetchdf()
-        a, b = normalize(sdf), normalize(odf)
+        b = normalize(con.execute(oracles[name]).fetchdf())
         if len(a) != len(b):
             print(f"FAIL {name}: rows {len(a)} vs {len(b)}")
             failed.append(name)
@@ -99,7 +114,7 @@ def main() -> int:
                 print("  duck :", b[m].head(3).to_dict("records"))
             failed.append(name)
         else:
-            print(f"OK   {name}: {len(a)} rows")
+            print(f"OK   {name}: {len(a)} rows {result_hash(a)}")
     spark.stop()
     print("FAILED:" if failed else "ALL OK", failed or "")
     return 1 if failed else 0
