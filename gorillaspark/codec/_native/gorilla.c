@@ -1,17 +1,17 @@
-/* Native Gorilla v2 block codec (optional fast path).
+/* Native Gorilla v2 block codec: the production path, built on demand.
  *
  * A from-scratch C implementation of the same stream format as
- * gorillaspark.codec.scalar / .vector — bit-exact vs the reference
+ * gorillaspark.codec.scalar — bit-exact vs the reference
  * gorilla-tsc v2 (GorillaCompressor + LongArrayOutput semantics:
  * MSB-first 64-bit words, 27-bit first delta, zigzag delta-of-delta
  * size buckets incl. the bitsRequired==0 -> 36-bit quirk, XOR value
  * packing with leading/trailing-zero window reuse, '1111'+0xFFFFFFFF
  * close marker, trailing-word snapshot).
  *
- * Compiled on demand by codec/native.py (cc -O3 -shared -fPIC); every
- * caller falls back to the numpy/Python implementations when no
- * compiler is present, and the pytest suite runs both paths against
- * the reference-generated goldens.
+ * Compiled on demand by codec/native.py (cc -O3 -shared -fPIC). The
+ * codec entry (codec/vector.py) runs the scalar Python codec instead
+ * when no compiler is present; the pytest suite runs both against the
+ * reference-generated goldens.
  */
 
 #include <stdint.h>
@@ -150,6 +150,7 @@ typedef struct {
     int64_t wi;
     uint64_t cur;
     int bits_left;
+    int over;           /* a read went past the block's last word */
 } rbuf;
 
 static inline uint64_t rbits(rbuf *r, int bits) {
@@ -166,7 +167,12 @@ static inline uint64_t rbits(rbuf *r, int bits) {
         int rem = bits - r->bits_left;
         v = r->cur & ((r->bits_left == 64) ? ~(uint64_t)0
                       : (((uint64_t)1 << r->bits_left) - 1));
-        r->cur = (r->wi < r->nwords) ? r->words[r->wi++] : 0;
+        if (r->wi < r->nwords) {
+            r->cur = r->words[r->wi++];
+        } else {
+            r->cur = 0;
+            r->over = 1;
+        }
         r->bits_left = 64;
         v = (v << rem) | (r->cur >> (64 - rem));
         r->bits_left -= rem;
@@ -175,7 +181,11 @@ static inline uint64_t rbits(rbuf *r, int bits) {
 }
 
 /* Decode S blocks; out arrays sized cap points. out_offsets[S+1].
- * Returns total points, or -1 on capacity overflow, -2 on corrupt. */
+ * Returns total points, or -1 on capacity overflow, -2 on corrupt: a
+ * read past the block's last word (checked once per point, so a
+ * truncated block cannot decode as an endless run of zero bits) or a
+ * value window wider than 64 bits. Every point after the first takes
+ * at least 2 bits, so cap = 32 * total words always suffices. */
 int64_t gs_decode_blocks(const uint64_t *words, const int64_t *wc,
                          int64_t S, int64_t *out_ts, uint64_t *out_vals,
                          int64_t *out_offsets, int64_t cap)
@@ -184,13 +194,14 @@ int64_t gs_decode_blocks(const uint64_t *words, const int64_t *wc,
     int64_t wbase = 0;
     out_offsets[0] = 0;
     for (int64_t s = 0; s < S; s++) {
-        rbuf r = { words + wbase, wc[s], 1, 0, 64 };
+        rbuf r = { words + wbase, wc[s], 1, 0, 64, 0 };
         if (wc[s] <= 0) return -2;
         r.cur = r.words[0];
         wbase += wc[s];
 
         int64_t block_ts = (int64_t)rbits(&r, 64);
         uint64_t first_delta = rbits(&r, FIRST_DELTA_BITS);
+        if (r.over) return -2;
         if (first_delta == EMPTY_SENTINEL) {
             out_offsets[s + 1] = total;
             continue;
@@ -229,8 +240,11 @@ int64_t gs_decode_blocks(const uint64_t *words, const int64_t *wc,
                 } else {
                     sig = 64 - slz - stz;
                 }
+                /* slz + sig > 64, or a reuse before any window */
+                if (stz < 0 || sig < 1) return -2;
                 val ^= rbits(&r, sig) << stz;
             }
+            if (r.over) return -2;
             if (total >= cap) return -1;
             out_ts[total] = cur_ts;
             out_vals[total] = val;
@@ -372,7 +386,7 @@ int64_t gs_decode_blocks_dfcm(const uint64_t *words, const int64_t *wc,
     dfcm p;
     out_offsets[0] = 0;
     for (int64_t s = 0; s < S; s++) {
-        rbuf r = { words + wbase, wc[s], 1, 0, 64 };
+        rbuf r = { words + wbase, wc[s], 1, 0, 64, 0 };
         if (wc[s] <= 0) return -2;
         r.cur = r.words[0];
         wbase += wc[s];
@@ -380,6 +394,7 @@ int64_t gs_decode_blocks_dfcm(const uint64_t *words, const int64_t *wc,
 
         int64_t block_ts = (int64_t)rbits(&r, 64);
         uint64_t first_delta = rbits(&r, FIRST_DELTA_BITS);
+        if (r.over) return -2;
         if (first_delta == EMPTY_SENTINEL) {
             out_offsets[s + 1] = total;
             continue;
@@ -417,11 +432,14 @@ int64_t gs_decode_blocks_dfcm(const uint64_t *words, const int64_t *wc,
                 } else {
                     sig = 64 - slz - stz;
                 }
+                /* slz + sig > 64, or a reuse before any window */
+                if (stz < 0 || sig < 1) return -2;
                 val = dfcm_predict(&p) ^ (rbits(&r, sig) << stz);
                 dfcm_update(&p, val);
             } else {
                 val = dfcm_predict(&p);   /* repeat: NO update */
             }
+            if (r.over) return -2;
             if (total >= cap) return -1;
             out_ts[total] = cur_ts;
             out_vals[total] = val;

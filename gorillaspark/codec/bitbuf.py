@@ -12,9 +12,11 @@ Semantics match the reference's word-oriented bit sink/source
   close (reference test "testCopyFlush", `EncodeGorillaTest.java:483-500`):
   flushed words plus the current partial word.
 
-This scalar implementation is the readable reference used by tests and
-by the scalar codec in :mod:`gorillaspark.codec.scalar`; the production
-path is the vectorized packer in :mod:`gorillaspark.codec.vector`.
+This scalar implementation is the readable reference behind
+:mod:`gorillaspark.codec.scalar`; production blocks are written and read
+by the C kernel that :mod:`gorillaspark.codec.vector` dispatches to.
+A read past the last word raises ``ValueError`` (a truncated or
+corrupt block).
 """
 
 from __future__ import annotations
@@ -96,6 +98,9 @@ class BitReader:
         self._bits_left = 64
 
     def _advance(self) -> None:
+        if self._pos >= len(self._words):
+            raise ValueError("Gorilla block ends mid-stream "
+                             "(truncated or corrupt)")
         self._cur = self._words[self._pos]
         self._pos += 1
         self._bits_left = 64

@@ -1,11 +1,14 @@
-"""ctypes loader for the optional C fast path (codec/_native/gorilla.c).
+"""ctypes loader for the C kernel (codec/_native/gorilla.c).
 
 Built lazily with the system compiler (``cc -O3 -shared -fPIC``) into
-the package directory; if no compiler is available or the build/load
-fails for any reason, ``NATIVE = None`` and callers use the
-numpy/Python implementations — correctness never depends on this
-module. The pytest suite exercises both paths against the
-reference-generated goldens.
+the package directory. If there is no compiler or the build or load
+fails, ``NATIVE = None`` and ``NATIVE_ERROR`` says why; the Gorilla
+codec entry (:mod:`gorillaspark.codec.vector`) then runs the scalar
+Python codec and warns once, and the media decoders use their Python
+paths — correctness never depends on this module.
+
+The Gorilla wrappers below raise instead of asking for a fallback: a
+corrupt block is a ``ValueError``, a missing kernel a ``RuntimeError``.
 """
 
 from __future__ import annotations
@@ -22,52 +25,45 @@ _DIR = Path(__file__).parent / "_native"
 _SRC = _DIR / "gorilla.c"
 
 
-def _so_path() -> Path | None:
+def _so_path() -> Path:
     """Shared-object name keyed by the source hash: a changed gorilla.c
     always gets a fresh build even when mtimes are unreliable (git
-    checkout / rsync preserving timestamps). None when the source is
-    not shipped at all (pruned install) — the silent-fallback contract
-    must hold even for the hash read."""
-    try:
-        digest = hashlib.sha256(_SRC.read_bytes()).hexdigest()[:12]
-    except OSError:
-        return None
+    checkout / rsync preserving timestamps). Raises OSError when the
+    source is not shipped at all (pruned install)."""
+    digest = hashlib.sha256(_SRC.read_bytes()).hexdigest()[:12]
     return _DIR / f"_gorilla_{digest}.so"
 
 
-_SO = _so_path()
-
-
-def _build() -> bool:
+def _build() -> Path:
+    so = _so_path()
+    if so.exists():
+        return so
+    # many executor Python workers may import concurrently: build to
+    # a unique temp name, then atomically rename into place
+    tmp = so.with_suffix(f".{os.getpid()}.tmp.so")
     try:
-        if _SO is None:
-            return False
-        if _SO.exists():
-            return True
-        # many executor Python workers may import concurrently: build to
-        # a unique temp name, then atomically rename into place
-        tmp = _SO.with_suffix(f".{os.getpid()}.tmp.so")
         subprocess.run(
             ["cc", "-O3", "-shared", "-fPIC", "-o", str(tmp), str(_SRC)],
             check=True, capture_output=True, timeout=120)
-        os.replace(tmp, _SO)
-        # best-effort sweep of builds of older source revisions
-        for old in _DIR.glob("_gorilla*.so"):
-            if old != _SO:
-                try:
-                    old.unlink()
-                except OSError:
-                    pass
-        return True
-    except Exception:
-        return False
+    except subprocess.CalledProcessError as e:
+        raise OSError("cc failed: "
+                      + e.stderr.decode(errors="replace")[-400:]) from e
+    os.replace(tmp, so)
+    # best-effort sweep of builds of older source revisions
+    for old in _DIR.glob("_gorilla*.so"):
+        if old != so:
+            try:
+                old.unlink()
+            except OSError:
+                pass
+    return so
 
 
 def _load():
-    if not _build():
-        return None
+    """(library, None) when the kernel builds and binds, else
+    (None, the cause)."""
     try:
-        lib = ctypes.CDLL(str(_SO))
+        lib = ctypes.CDLL(str(_build()))
         I64 = ctypes.POINTER(ctypes.c_int64)
         U64 = ctypes.POINTER(ctypes.c_uint64)
         lib.gs_encode_blocks.restype = ctypes.c_int64
@@ -104,12 +100,12 @@ def _load():
         lib.gs_jpeg_scan.argtypes = (
             [U8, ctypes.c_int64, ctypes.c_int64] + [ctypes.c_int] * 5
             + [I32] * 5 + [I64] + [I32] * 3 + [I32] * 3 + [U8] + [I32])
-        return lib
-    except Exception:
-        return None
+        return lib, None
+    except Exception as e:
+        return None, f"{type(e).__name__}: {e}"
 
 
-NATIVE = _load()
+NATIVE, NATIVE_ERROR = _load()
 
 
 def _malloc_prefault() -> bool:
@@ -143,123 +139,104 @@ def _pu64(a: np.ndarray):
     return a.ctypes.data_as(ctypes.POINTER(ctypes.c_uint64))
 
 
-def encode_blocks_native(block_ts: np.ndarray, offsets: np.ndarray,
-                         ts: np.ndarray, values: np.ndarray):
-    """C-kernel segmented encode; same contract as vector.encode_blocks.
-    Returns None when the native library is unavailable."""
+def _kernel(name: str):
     if NATIVE is None:
-        return None
+        raise RuntimeError(f"Gorilla C kernel unavailable ({NATIVE_ERROR})")
+    return getattr(NATIVE, name)
+
+
+def _encode(kernel, block_ts, offsets, ts, values, *table):
+    """One segmented encode call → (words, words per block). ``table``
+    is the DFCM kernels' (scratch table, size) pair."""
     block_ts = np.ascontiguousarray(block_ts, dtype=np.int64)
     offsets = np.ascontiguousarray(offsets, dtype=np.int64)
     ts = np.ascontiguousarray(ts, dtype=np.int64)
-    if values.dtype != np.uint64:
-        values = np.ascontiguousarray(values).view(np.uint64)
-    values = np.ascontiguousarray(values)
+    values = np.ascontiguousarray(values).view(np.uint64)
     S = block_ts.shape[0]
-    n = ts.shape[0]
-    cap = 2 * n + 6 * max(S, 1)
+    if offsets.shape != (S + 1,) or offsets.min() < 0 \
+            or offsets.max() > min(ts.shape[0], values.shape[0]):
+        raise ValueError("Gorilla block offsets do not fit the points")
+    # a point takes at most 114 bits and a block's header, first point
+    # and close marker at most 6 words, so this capacity always fits
+    cap = 2 * ts.shape[0] + 6 * max(S, 1)
     out_words = np.empty(cap, dtype=np.uint64)
     out_wc = np.empty(max(S, 1), dtype=np.int64)
-    total = NATIVE.gs_encode_blocks(_p64(block_ts), _p64(offsets), S,
-                                    _p64(ts), _pu64(values),
-                                    _pu64(out_words), cap, _p64(out_wc))
+    total = kernel(_p64(block_ts), _p64(offsets), S, _p64(ts),
+                   _pu64(values), _pu64(out_words), cap, _p64(out_wc),
+                   *table)
     if total < 0:
-        return None
+        raise RuntimeError(f"Gorilla encode overflowed {cap} words")
     return out_words[:total].copy(), out_wc[:S].copy()
 
 
-def _dfcm_table_n(size: int) -> int:
-    """Java table-size rounding, mirrored from predictors.DifferentialFCM:
-    next power of two of (size-1).bit_length(), with size==1 -> 1."""
+def _decode(kernel, words, word_counts, n_points_hint, *table):
+    """One segmented decode call → (offsets, ts, values); ValueError on
+    a corrupt block."""
+    words = np.ascontiguousarray(words, dtype=np.uint64)
+    wc = np.ascontiguousarray(word_counts, dtype=np.int64)
+    S = wc.shape[0]
+    if int(wc.sum()) > words.shape[0]:
+        raise ValueError("Gorilla word counts exceed the words given")
+    # every point after a block's first takes at least 2 bits and the
+    # kernel rejects reads past a block's last word: 32 points a word
+    bound = 32 * words.shape[0]
+    for cap in ([int(n_points_hint)] if n_points_hint else []) + [bound]:
+        out_ts = np.empty(cap, dtype=np.int64)
+        out_vals = np.empty(cap, dtype=np.uint64)
+        out_off = np.empty(S + 1, dtype=np.int64)
+        total = kernel(_pu64(words), _p64(wc), S, _p64(out_ts),
+                       _pu64(out_vals), _p64(out_off), cap, *table)
+        if total == -2:
+            raise ValueError("corrupt Gorilla block (truncated, or a "
+                             "value window wider than 64 bits)")
+        if total >= 0:
+            return out_off, out_ts[:total].copy(), out_vals[:total].copy()
+    raise RuntimeError(f"Gorilla decode overflowed {bound} points")
+
+
+def _dfcm_table(size: int) -> np.ndarray:
+    """Scratch table for the DFCM kernels, sized by the Java rounding
+    mirrored from predictors.DifferentialFCM: next power of two of
+    (size-1).bit_length(), with size==1 -> 1."""
     if size <= 0:
         raise ValueError("size must be positive")
     size -= 1
-    return 1 if size == 0 else 1 << size.bit_length()
+    return np.empty(1 if size == 0 else 1 << size.bit_length(),
+                    dtype=np.uint64)
+
+
+def encode_blocks_native(block_ts: np.ndarray, offsets: np.ndarray,
+                         ts: np.ndarray, values: np.ndarray):
+    """C-kernel segmented last-value encode → (words, words per block);
+    same contract as :func:`gorillaspark.codec.vector.encode_blocks_fast`."""
+    return _encode(_kernel("gs_encode_blocks"), block_ts, offsets, ts,
+                   values)
+
+
+def decode_blocks_native(words: np.ndarray, word_counts: np.ndarray,
+                         n_points_hint: int | None = None):
+    """C-kernel segmented last-value decode → (offsets, ts, values)."""
+    return _decode(_kernel("gs_decode_blocks"), words, word_counts,
+                   n_points_hint)
 
 
 def encode_blocks_dfcm_native(block_ts: np.ndarray, offsets: np.ndarray,
                               ts: np.ndarray, values: np.ndarray,
                               size: int = 1024):
     """C-kernel segmented encode with the DFCM value predictor
-    (bit-exact vs codec/scalar.py GorillaEncoder(predictor='dfcm:N'));
-    None when the native library is unavailable."""
-    if NATIVE is None:
-        return None
-    block_ts = np.ascontiguousarray(block_ts, dtype=np.int64)
-    offsets = np.ascontiguousarray(offsets, dtype=np.int64)
-    ts = np.ascontiguousarray(ts, dtype=np.int64)
-    if values.dtype != np.uint64:
-        values = np.ascontiguousarray(values).view(np.uint64)
-    values = np.ascontiguousarray(values)
-    S = block_ts.shape[0]
-    n = ts.shape[0]
-    cap = 2 * n + 6 * max(S, 1)
-    out_words = np.empty(cap, dtype=np.uint64)
-    out_wc = np.empty(max(S, 1), dtype=np.int64)
-    table_n = _dfcm_table_n(size)
-    table = np.empty(table_n, dtype=np.uint64)
-    total = NATIVE.gs_encode_blocks_dfcm(
-        _p64(block_ts), _p64(offsets), S, _p64(ts), _pu64(values),
-        _pu64(out_words), cap, _p64(out_wc), _pu64(table), table_n)
-    if total < 0:
-        return None
-    return out_words[:total].copy(), out_wc[:S].copy()
+    (bit-exact vs codec/scalar.py GorillaEncoder(predictor='dfcm:N'))."""
+    table = _dfcm_table(size)
+    return _encode(_kernel("gs_encode_blocks_dfcm"), block_ts, offsets,
+                   ts, values, _pu64(table), table.shape[0])
 
 
 def decode_blocks_dfcm_native(words: np.ndarray, word_counts: np.ndarray,
                               size: int = 1024,
                               n_points_hint: int | None = None):
-    """C-kernel segmented DFCM decode → (offsets, ts, values) or None."""
-    if NATIVE is None:
-        return None
-    words = np.ascontiguousarray(words, dtype=np.uint64)
-    wc = np.ascontiguousarray(word_counts, dtype=np.int64)
-    S = wc.shape[0]
-    cap = int(n_points_hint) if n_points_hint else int(words.shape[0]) * 32
-    table_n = _dfcm_table_n(size)
-    table = np.empty(table_n, dtype=np.uint64)
-    while True:
-        out_ts = np.empty(cap, dtype=np.int64)
-        out_vals = np.empty(cap, dtype=np.uint64)
-        out_off = np.empty(S + 1, dtype=np.int64)
-        total = NATIVE.gs_decode_blocks_dfcm(
-            _pu64(words), _p64(wc), S, _p64(out_ts), _pu64(out_vals),
-            _p64(out_off), cap, _pu64(table), table_n)
-        if total == -1:
-            cap = max(cap * 2, int(words.shape[0]) * 32)
-            n_points_hint = None
-            continue
-        if total < 0:
-            return None
-        return (out_off.copy(), out_ts[:total].copy(),
-                out_vals[:total].copy())
-
-
-def decode_blocks_native(words: np.ndarray, word_counts: np.ndarray,
-                         n_points_hint: int | None = None):
-    """C-kernel segmented decode → (offsets, ts, values) or None."""
-    if NATIVE is None:
-        return None
-    words = np.ascontiguousarray(words, dtype=np.uint64)
-    wc = np.ascontiguousarray(word_counts, dtype=np.int64)
-    S = wc.shape[0]
-    # capacity: each encoded point needs ≥ (1+1) bits ⇒ points < bits
-    cap = int(n_points_hint) if n_points_hint else int(words.shape[0]) * 32
-    while True:
-        out_ts = np.empty(cap, dtype=np.int64)
-        out_vals = np.empty(cap, dtype=np.uint64)
-        out_off = np.empty(S + 1, dtype=np.int64)
-        total = NATIVE.gs_decode_blocks(_pu64(words), _p64(wc), S,
-                                        _p64(out_ts), _pu64(out_vals),
-                                        _p64(out_off), cap)
-        if total == -1:          # undersized hint — grow and retry
-            cap = max(cap * 2, int(words.shape[0]) * 32)
-            n_points_hint = None
-            continue
-        if total < 0:
-            return None
-        return (out_off.copy(), out_ts[:total].copy(),
-                out_vals[:total].copy())
+    """C-kernel segmented DFCM decode → (offsets, ts, values)."""
+    table = _dfcm_table(size)
+    return _decode(_kernel("gs_decode_blocks_dfcm"), words, word_counts,
+                   n_points_hint, _pu64(table), table.shape[0])
 
 
 def rice_decode_native(data: bytes, start_bit: int, cnt: int,

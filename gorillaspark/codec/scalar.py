@@ -1,6 +1,7 @@
 """Scalar (pure-Python) Gorilla codec — the readable reference
-implementation used for tests, goldens cross-checks, and as the
-differential-testing oracle for the vectorized numpy codec.
+implementation: the differential-testing oracle for the C kernel, the
+``v1`` path, and the path the codec entry (codec/vector.py) takes when
+no compiler is present.
 
 Format parity (re-expressed from scratch, not translated):
 

@@ -1,583 +1,118 @@
-"""Vectorized (numpy) Gorilla v2 codec — the production encode path.
+"""Gorilla block codec entry: one encode and one decode function for
+every predictor.
 
-Same stream format as :mod:`gorillaspark.codec.scalar` (bit-exact vs
-the reference `GorillaCompressor` + `LongArrayOutput`,
-`GorillaCompressor.java:99-143`, `ValueCompressor.java:27-91`,
-`LongArrayOutput.java:115-145`), but computed as whole-array numpy
-operations so encoding a series costs O(n) vector ops instead of O(n)
-Python-object operations — this is what runs inside the Arrow/pandas
-UDFs on executors ("no per-row Python", BASELINE.json input_hint).
+Both take S blocks at once, laid out back to back: ``offsets`` (S+1)
+splits the points, ``word_counts`` (S) splits the words, and each
+block's words are an independent stream with its own header, close
+marker and the reference's trailing snapshot word
+(`LongArrayOutput.java:136-145`). Values are raw 64-bit patterns
+(float64 arrays are viewed as uint64, so NaN payloads, -0.0 and
+subnormals round-trip exactly).
 
-Pipeline:
+Which kernel runs:
 
-1. timestamps: wrap-exact int32 delta / delta-of-delta, zigzag,
-   size-bucket classification with ``np.select`` (including the
-   reference's ``bitsRequired == 0`` → 36-bit-form quirk);
-2. values: xor with the shifted array (last-value predictor),
-   leading/trailing-zero counts via exact float64 ``frexp`` exponents;
-3. the only data-dependent scan — the (leading, trailing) window-reuse
-   chain — is resolved by a run-finder that does one numpy comparison
-   per *window reset*, not per point (falls back gracefully: worst
-   case is one tiny chunk scan per reset);
-4. every (value, nbits) field is laid out with a cumulative-sum offset
-   and OR-reduced into 64-bit words with ``np.add.reduceat`` (fields
-   never share bits, so add == or), replicating LongArrayOutput's
-   trailing-word snapshot exactly.
+* ``last_value`` and ``dfcm[:N]`` — the C kernel (:mod:`.native`);
+* ``v1`` (the byte-oriented, go-tsz-interoperable format), and every
+  predictor when the C kernel could not be built or loaded — the scalar
+  codec (:mod:`.scalar`), one block at a time. The first fallback in a
+  process warns, naming the cause.
 
-Decode remains a sequential control-flow scan (each field's position
-depends on every previous control bit); :func:`decode_v2` is a tuned
-cursor loop over Python ints — still no per-row *object* churn at the
-Spark layer since whole blocks decode per call.
+Both kernels write the same words; tests/test_codec_vector.py checks
+each against every v2 golden and against the other. A corrupt block
+raises ``ValueError`` on either path.
 """
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 
-FIRST_DELTA_BITS = 27
-EMPTY_SENTINEL = (1 << FIRST_DELTA_BITS) - 1
+from . import native
+from .scalar import (
+    GorillaDecoder,
+    GorillaEncoder,
+    GorillaV1Decoder,
+    GorillaV1Encoder,
+)
 
-_U64 = np.uint64
-_MASKS = np.zeros(65, dtype=np.uint64)
-_MASKS[1:] = (~np.uint64(0)) >> np.arange(63, -1, -1).astype(np.uint64)
-
-# timestamp bucket tables, indexed by category 0..4
-# (cat 0: dd==0 1-bit; 1: '10'+7; 2: '110'+9; 3: '1110'+12; 4: '1111'+32)
-_TS_BITS = np.array([1, 9, 12, 16, 36], dtype=np.int64)
-_TS_OR = np.array([0, 0x02 << 7, 0x06 << 9, 0x0E << 12, 0xF << 32],
-                  dtype=np.uint64)
-# bit-length of (zigzag(dd) - 1) → category; length 0 hits the 36-bit
-# form (`GorillaCompressor.java:112-138` switch has no case 0)
-_TS_CAT = np.array([4] + [1] * 7 + [2] * 2 + [3] * 3 + [4] * 20,
-                   dtype=np.int64)
+_fallback_warned = False
 
 
-def _bitlen_u32(x: np.ndarray) -> np.ndarray:
-    """Exact bit length of uint32 values (frexp exponent is exact for
-    integers < 2^53)."""
-    return np.frexp(x.astype(np.float64))[1].astype(np.int64)
+def _use_c_kernel(predictor: str) -> bool:
+    """True when ``predictor`` runs on the C kernel; warns once per
+    process when it would but the kernel is missing."""
+    global _fallback_warned
+    if predictor == "v1":
+        return False
+    if native.NATIVE is not None:
+        return True
+    if not _fallback_warned:
+        _fallback_warned = True
+        cause = native.NATIVE_ERROR or "not loaded"
+        warnings.warn(
+            f"Gorilla C kernel unavailable ({cause}); the codec runs on "
+            "the scalar Python path, about 200x slower",
+            RuntimeWarning, stacklevel=3)
+    return False
 
 
-def _bitlen_u64(x: np.ndarray) -> np.ndarray:
-    hi = (x >> np.uint64(32)).astype(np.float64)
-    lo = (x & np.uint64(0xFFFFFFFF)).astype(np.float64)
-    ehi = np.frexp(hi)[1].astype(np.int64)
-    elo = np.frexp(lo)[1].astype(np.int64)
-    return np.where(ehi > 0, ehi + 32, elo)
-
-
-def _clz64(x: np.ndarray) -> np.ndarray:
-    return 64 - _bitlen_u64(x)
-
-
-def _ctz64(x: np.ndarray) -> np.ndarray:
-    """Trailing zeros of nonzero uint64 (garbage for zeros; callers mask)."""
-    low = x & (np.uint64(0) - x)  # isolate lowest set bit (two's complement)
-    return _bitlen_u64(low) - 1
-
-
-def _window_chain(lz: np.ndarray, tz: np.ndarray,
-                  limits: np.ndarray | None = None
-                  ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Resolve the value-window reuse chain over the nonzero-xor points.
-
-    State (slz, stz) starts "infinite" (reference inits storedLeadingZeros
-    to Integer.MAX_VALUE, `ValueCompressor.java:12`), resets to
-    (lz[i], tz[i]) whenever lz[i] < slz or tz[i] < stz, else reuses.
-
-    Returns (is_new, eff_lz, eff_tz) where eff_* is the window in effect
-    *for the payload width* at each point (the new window for resets,
-    the carried one for reuses).
-
-    ``limits`` (optional, int64[n]) caps each chain run: the state
-    started at i never extends past ``limits[i]`` — the segmented batch
-    kernel passes each point's block end so chains restart per block
-    (the position at the cap becomes the next reset automatically).
-
-    Cost: one bounded boolean scan per *window reset*, so O(total)
-    elementwise work for well-behaved data plus O(#resets) Python-level
-    iterations (including exactly one forced reset per block).
-    """
-    n = lz.shape[0]
-    is_new = np.zeros(n, dtype=bool)
-    eff_lz = np.empty(n, dtype=np.int64)
-    eff_tz = np.empty(n, dtype=np.int64)
-    # resets cluster (a new block's window tightens over its first few
-    # points), so scalar-scan a short prefix on plain Python ints before
-    # falling back to geometrically growing numpy chunk scans
-    lzl = lz.tolist()
-    tzl = tz.tolist()
-    liml = limits.tolist() if limits is not None else None
-    i = 0
-    while i < n:
-        slz = lzl[i]
-        stz = tzl[i]
-        is_new[i] = True
-        lim = n if liml is None else liml[i]
-        j = i + 1
-        end = lim
-        scalar_stop = min(lim, j + 8)
-        while j < scalar_stop:
-            if lzl[j] < slz or tzl[j] < stz:
-                break
-            j += 1
-        if j < scalar_stop or j >= lim:
-            end = j
-        else:
-            chunk = 64
-            while j < lim:
-                k = min(lim, j + chunk)
-                viol = (lz[j:k] < slz) | (tz[j:k] < stz)
-                hit = int(np.argmax(viol))
-                if viol[hit]:
-                    end = j + hit
-                    break
-                j = k
-                chunk = min(chunk * 8, 1 << 16)
-        eff_lz[i:end] = slz
-        eff_tz[i:end] = stz
-        i = end
-    return is_new, eff_lz, eff_tz
-
-
-def _pack_bits(vals: np.ndarray, bits: np.ndarray, closed: bool = True,
-               assume_clean: bool = True) -> np.ndarray:
-    """Concatenate variable-width big-endian bit fields into 64-bit words.
-
-    Replicates LongArrayOutput/getLongArray materialization: after a
-    close+flush the snapshot is always ``total_bits // 64 + 2`` words
-    (the flush pushes the partial word; the trailing element is the
-    fresh empty word — `LongArrayOutput.java:136-145`). With
-    ``closed=False`` it is ``total_bits // 64 + 1`` words, the last
-    holding the partial bits.
-
-    ``assume_clean``: callers in this module construct every field with
-    no bits above its declared width, so the writeBits-style masking
-    pass is skipped.
-    """
-    if not assume_clean:
-        vals = vals & _MASKS[bits]
-    ends = np.cumsum(bits)
-    total = int(ends[-1]) if len(ends) else 0
-    starts = ends - bits
-    nwords = total // 64 + (2 if closed else 1)
-    words = np.zeros(nwords, dtype=np.uint64)
-
-    w0 = starts >> 6
-    off = starts & 63
-    shift1 = 64 - off - bits
-    neg = shift1 < 0
-    # zero-width fields (absent payloads) carry value 0, so clipping the
-    # left-shift count to 63 keeps them harmless without a filter pass
-    lsh = np.minimum(shift1 * ~neg, 63).astype(np.uint64)
-    rsh = (-shift1 * neg).astype(np.uint64)
-    c0 = np.where(neg, vals >> rsh, vals << lsh)
-    # First word of each field: w0 is nondecreasing → reduceat segments.
-    # Fields never overlap bits inside a word, so sum == bitwise-or
-    # (carry-free) and np.add.reduceat gives a vectorized scatter-OR.
-    seg = np.flatnonzero(np.r_[True, w0[1:] != w0[:-1]])
-    sums = np.add.reduceat(c0, seg) if len(c0) else c0
-    words[w0[seg]] |= sums
-
-    if neg.any():
-        v1 = vals[neg]
-        s1 = (64 + shift1[neg]).astype(np.uint64)  # ∈ [1, 63]
-        c1 = v1 << s1
-        w1 = w0[neg] + 1
-        seg1 = np.flatnonzero(np.r_[True, w1[1:] != w1[:-1]])
-        words[w1[seg1]] |= np.add.reduceat(c1, seg1)
-    return words
-
-
-def encode_v2(block_ts: int, ts: np.ndarray, values: np.ndarray,
-              closed: bool = True) -> np.ndarray:
-    """Encode one series block; returns the uint64 word array.
-
-    ``ts``: int64 epoch-millis, strictly increasing, all within
-    [block_ts+1, block_ts + 2^27 - 2] for the first point (day-aligned
-    blocks satisfy this). ``values``: uint64 raw bit patterns (use
-    ``.view(np.uint64)`` on float64 for doubles — bit-transparent).
-    """
-    ts = np.asarray(ts, dtype=np.int64)
-    values = np.ascontiguousarray(values).view(np.uint64) \
-        if values.dtype != np.uint64 else values
-    n = ts.shape[0]
-    if n == 0:
-        # header + close marker only; the decoder's 27-bit first-delta
-        # read then lands on '1111'+ones = the empty sentinel
-        fv = np.array([block_ts & 0xFFFFFFFFFFFFFFFF,
-                       ((0xF << 32) | 0xFFFFFFFF) << 1], dtype=np.uint64)
-        fb = np.array([64, 37], dtype=np.int64)
-        if not closed:
-            fv, fb = fv[:1], fb[:1]
-        return _pack_bits(fv, fb, closed)
-
-    # ---- timestamp fields -------------------------------------------
-    with np.errstate(over="ignore"):
-        deltas = np.empty(n, dtype=np.int64)
-        deltas[0] = ts[0] - block_ts
-        deltas[1:] = ts[1:] - ts[:-1]
-        d32 = deltas.astype(np.int32).astype(np.int64)   # Java (int) cast
-        dd = (d32[1:] - d32[:-1]).astype(np.int32).astype(np.int64)
-        zz = (((dd << 1) ^ (dd >> 31)) & 0xFFFFFFFF).astype(np.uint64)
-        zzm1 = zz - np.uint64(1)                         # dd==0 rows unused
-    nb = _bitlen_u32((zzm1 & np.uint64(0xFFFFFFFF)).astype(np.uint32))
-    # bucket category per point via a 33-entry LUT on bit-length
-    # (index 0 → the 36-bit form: the reference's bitsRequired==0 quirk)
-    cat = _TS_CAT[nb]
-    cat[dd == 0] = 0
-    ts_bits = _TS_BITS[cat]
-    ts_val = (zzm1 | _TS_OR[cat]) * (cat > 0).astype(np.uint64)
-
-    # ---- value fields (last-value predictor) ------------------------
-    xor = values[1:] ^ values[:-1]
-    nz = xor != 0
-    idx_nz = np.flatnonzero(nz)
-    m = idx_nz.shape[0]
-    v1_val = np.zeros(n - 1, dtype=np.uint64)   # control(+meta) field
-    v1_bits = np.ones(n - 1, dtype=np.int64)    # xor==0 → single 0 bit
-    v2_val = np.zeros(n - 1, dtype=np.uint64)   # payload field
-    v2_bits = np.zeros(n - 1, dtype=np.int64)   # 0 = absent
-    if m:
-        xnz = xor[idx_nz]
-        lz = _clz64(xnz)
-        tz = _ctz64(xnz)
-        is_new, eff_lz, eff_tz = _window_chain(lz, tz)
-        sig = 64 - eff_lz - eff_tz
-        ctrl = np.where(
-            is_new,
-            (np.uint64(0b11) << np.uint64(12))
-            | (eff_lz.astype(np.uint64) << np.uint64(6))
-            | (sig - 1).astype(np.uint64),
-            np.uint64(0b10),
-        )
-        v1_val[idx_nz] = ctrl
-        v1_bits[idx_nz] = np.where(is_new, 14, 2)
-        v2_val[idx_nz] = xnz >> eff_tz.astype(np.uint64)
-        v2_bits[idx_nz] = sig
-
-    # ---- assemble field stream --------------------------------------
-    # Per point two fields: fA = ts field ‖ value control/meta (≤ 50
-    # bits, always fits one word-field) and fB = value payload (0–64
-    # bits; zero-width when xor == 0 — _pack_bits tolerates width 0).
-    vb_u = v1_bits.astype(np.uint64)
-    fa_val = (ts_val << vb_u) | v1_val
-    fa_bits = ts_bits + v1_bits
-    fields_v = np.empty(3 + 2 * (n - 1) + 1, dtype=np.uint64)
-    fields_b = np.empty(fields_v.shape[0], dtype=np.int64)
-    fields_v[0] = np.uint64(block_ts & 0xFFFFFFFFFFFFFFFF)
-    fields_b[0] = 64
-    fields_v[1] = np.uint64(int(d32[0]) & ((1 << FIRST_DELTA_BITS) - 1))
-    fields_b[1] = FIRST_DELTA_BITS
-    fields_v[2] = values[0]
-    fields_b[2] = 64
-    fields_v[3:-1:2] = fa_val
-    fields_b[3:-1:2] = fa_bits
-    fields_v[4:-1:2] = v2_val
-    fields_b[4:-1:2] = v2_bits
-    # close: '1111' + 0xFFFFFFFF + one 0 bit, fused into 37 bits
-    fields_v[-1] = np.uint64((((0xF << 32) | 0xFFFFFFFF) << 1))
-    fields_b[-1] = 37
-    if not closed:
-        fields_v = fields_v[:-1]
-        fields_b = fields_b[:-1]
-    return _pack_bits(fields_v, fields_b, closed)
-
-
-def decode_v2(words, n_hint: int = 0):
-    """Decode a v2 stream → (ts int64 array, values uint64 array).
-
-    Sequential by format construction (every field's offset depends on
-    all previous control bits); implemented as a tight cursor loop over
-    native Python ints — one call decodes a whole block, so the Spark
-    layer never touches rows individually.
-    """
-    wl = np.asarray(words, dtype=np.uint64).tolist()
-    nwords = len(wl)
-    # acc register: low `avail` bits of acc are unread stream bits.
-    # Refilled a whole word at a time; max field is 64 bits so keeping
-    # avail ≥ 64 before each point guarantees branch-free takes below.
-    acc = wl[0] if nwords else 0
-    avail = 64
-    wi = 1
-
-    def _take(bits):  # slow path, header only
-        nonlocal acc, avail, wi
-        while avail < bits:
-            acc = (acc << 64) | wl[wi]
-            wi += 1
-            avail += 64
-        avail -= bits
-        v = acc >> avail
-        acc &= (1 << avail) - 1
-        return v
-
-    block_ts = _take(64)
-    first_delta = _take(FIRST_DELTA_BITS)
-    if first_delta == EMPTY_SENTINEL:
-        return (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.uint64))
-    cur_v = _take(64)
-    cur_ts = block_ts + first_delta
-    out_ts = [cur_ts]
-    out_v = [cur_v]
-    delta = first_delta
-    slz = 1 << 30
-    stz = 0
-    append_ts = out_ts.append
-    append_v = out_v.append
-    U64 = 0xFFFFFFFFFFFFFFFF
-    while True:
-        # refill so the worst-case point (4+32+2+6+6+64 = 114 bits) fits
-        while avail < 114 and wi < nwords:
-            acc = (acc << 64) | wl[wi]
-            wi += 1
-            avail += 64
-        # --- timestamp control ('0'|'10'|'110'|'1110'|'1111') ---
-        avail -= 1
-        if (acc >> avail) & 1:
-            avail -= 1
-            if (acc >> avail) & 1:
-                avail -= 1
-                if (acc >> avail) & 1:
-                    avail -= 1
-                    if (acc >> avail) & 1:
-                        avail -= 32
-                        raw = (acc >> avail) & 0xFFFFFFFF
-                        if raw == 0xFFFFFFFF:
-                            break
-                    else:
-                        avail -= 12
-                        raw = (acc >> avail) & 0xFFF
-                else:
-                    avail -= 9
-                    raw = (acc >> avail) & 0x1FF
-            else:
-                avail -= 7
-                raw = (acc >> avail) & 0x7F
-            zz = (raw + 1) & 0xFFFFFFFF
-            delta += (zz >> 1) ^ -(zz & 1)
-        cur_ts += delta
-        # --- value control ('0'|'10'+payload|'11'+meta+payload) ---
-        avail -= 1
-        if (acc >> avail) & 1:
-            avail -= 1
-            if (acc >> avail) & 1:
-                avail -= 6
-                slz = (acc >> avail) & 0x3F
-                avail -= 6
-                sig = ((acc >> avail) & 0x3F) + 1
-                stz = 64 - sig - slz
-            else:
-                sig = 64 - slz - stz
-            avail -= sig
-            cur_v = (cur_v ^ (((acc >> avail) & ((1 << sig) - 1)) << stz)) & U64
-        append_ts(cur_ts)
-        append_v(cur_v)
-        acc &= (1 << avail) - 1
-    return (np.array(out_ts, dtype=np.int64),
-            np.array(out_v, dtype=np.uint64))
-
-
-def encode_blocks(block_ts: np.ndarray, offsets: np.ndarray,
-                  ts: np.ndarray, values: np.ndarray
-                  ) -> tuple[np.ndarray, np.ndarray]:
-    """Segmented batch encode: S blocks in one vectorized pass.
-
-    The per-call numpy overhead of :func:`encode_v2` (~0.2 ms) would
-    dominate for realistic block sizes (a conversation-day is often
-    50–500 points), so the Spark encode UDF hands an *entire Arrow
-    batch* of concatenated, per-block-sorted series here and every
-    stage runs once over the whole batch. Each block's stream is still
-    an independent, bit-exact v2 stream (own header, close marker, and
-    LongArrayOutput trailing-word shape) — blocks are laid out
-    back-to-back word-aligned and split by the returned counts.
-
-    Args:
-        block_ts: int64[S] — block reference timestamp per block.
-        offsets:  int64[S+1] — point ranges; block s owns
-                  ``ts[offsets[s]:offsets[s+1]]`` (sorted ascending).
-        ts:       int64[n] concatenated timestamps.
-        values:   uint64[n] raw bit patterns (float64 views welcome).
-
-    Returns:
-        (words, word_counts): uint64 concatenated streams and
-        int64[S] words per block.
-    """
-    block_ts = np.asarray(block_ts, dtype=np.int64)
-    offsets = np.asarray(offsets, dtype=np.int64)
-    ts = np.asarray(ts, dtype=np.int64)
-    values = np.ascontiguousarray(values).view(np.uint64) \
-        if values.dtype != np.uint64 else values
-    S = block_ts.shape[0]
-    n = ts.shape[0]
-    lens = offsets[1:] - offsets[:-1]
-    if n == 0 or S == 0:
-        if S == 0:
-            return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.int64)
-    firsts = offsets[:-1][lens > 0]          # index of first point per
-    g_pt = np.repeat(np.arange(S), lens)     # nonempty block; seg id/point
-
-    # ---- deltas with per-block restart ------------------------------
-    with np.errstate(over="ignore"):
-        d_raw = np.empty(n, dtype=np.int64)
-        if n:
-            d_raw[0] = 0
-            d_raw[1:] = ts[1:] - ts[:-1]
-            d_raw[firsts] = ts[firsts] - block_ts[g_pt[firsts]]
-        d32 = d_raw.astype(np.int32).astype(np.int64)
-        dd = np.zeros(n, dtype=np.int64)
-        if n > 1:
-            dd[1:] = (d32[1:] - d32[:-1]).astype(np.int32).astype(np.int64)
-        zz = (((dd << 1) ^ (dd >> 31)) & 0xFFFFFFFF).astype(np.uint64)
-        zzm1 = zz - np.uint64(1)
-    nb = _bitlen_u32((zzm1 & np.uint64(0xFFFFFFFF)).astype(np.uint32))
-    cat = _TS_CAT[nb]
-    cat[dd == 0] = 0
-    ts_bits = _TS_BITS[cat]
-    ts_val = (zzm1 | _TS_OR[cat]) * (cat > 0).astype(np.uint64)
-
-    # ---- values with per-block xor/window restart --------------------
-    is_first = np.zeros(n, dtype=bool)
-    is_first[firsts] = True
-    xor = np.zeros(n, dtype=np.uint64)
-    if n > 1:
-        xor[1:] = values[1:] ^ values[:-1]
-    xor[firsts] = 0                      # first point: raw 64-bit write
-    nz = xor != 0
-    idx_nz = np.flatnonzero(nz)
-    m = idx_nz.shape[0]
-    v1_val = np.zeros(n, dtype=np.uint64)
-    v1_bits = np.ones(n, dtype=np.int64)
-    v2_val = np.zeros(n, dtype=np.uint64)
-    v2_bits = np.zeros(n, dtype=np.int64)
-    if m:
-        xnz = xor[idx_nz]
-        lz = _clz64(xnz)
-        tz = _ctz64(xnz)
-        # chain restarts per block: each nz position's scan limit is the
-        # end of its block's run inside the nz subset
-        gnz = g_pt[idx_nz]
-        run_start = np.flatnonzero(np.r_[True, gnz[1:] != gnz[:-1]])
-        run_end = np.r_[run_start[1:], m]
-        limits = np.repeat(run_end, np.diff(np.r_[run_start, m]))
-        is_new, eff_lz, eff_tz = _window_chain(lz, tz, limits)
-        sig = 64 - eff_lz - eff_tz
-        ctrl = np.where(
-            is_new,
-            (np.uint64(0b11) << np.uint64(12))
-            | (eff_lz.astype(np.uint64) << np.uint64(6))
-            | (sig - 1).astype(np.uint64),
-            np.uint64(0b10),
-        )
-        v1_val[idx_nz] = ctrl
-        v1_bits[idx_nz] = np.where(is_new, 14, 2)
-        v2_val[idx_nz] = xnz >> eff_tz.astype(np.uint64)
-        v2_bits[idx_nz] = sig
-
-    # ---- per-point fused fields --------------------------------------
-    vb_u = v1_bits.astype(np.uint64)
-    fa_val = (ts_val << vb_u) | v1_val
-    fa_bits = ts_bits + v1_bits
-    # first points: slotA = 27-bit first delta, slotB = raw 64-bit value
-    fa_val[firsts] = (d32[firsts].astype(np.uint64)
-                      & np.uint64((1 << FIRST_DELTA_BITS) - 1))
-    fa_bits[firsts] = FIRST_DELTA_BITS
-    v2_val[firsts] = values[firsts]
-    v2_bits[firsts] = 64
-
-    # ---- field stream: [hdr][ptA ptB]*len[close] per block -----------
-    F = 2 * n + 2 * S
-    fields_v = np.zeros(F, dtype=np.uint64)
-    fields_b = np.zeros(F, dtype=np.int64)
-    pt_slot = 2 * np.arange(n) + 2 * g_pt + 1
-    hdr_slot = 2 * offsets[:-1] + 2 * np.arange(S)
-    close_slot = 2 * offsets[1:] + 2 * np.arange(S) + 1
-    fields_v[hdr_slot] = block_ts.astype(np.uint64)
-    fields_b[hdr_slot] = 64
-    fields_v[pt_slot] = fa_val
-    fields_b[pt_slot] = fa_bits
-    fields_v[pt_slot + 1] = v2_val
-    fields_b[pt_slot + 1] = v2_bits
-    fields_v[close_slot] = np.uint64(((0xF << 32) | 0xFFFFFFFF) << 1)
-    fields_b[close_slot] = 37
-
-    # ---- word-aligned segmented packing -------------------------------
-    g_field = np.repeat(np.arange(S), 2 * lens + 2)
-    ends = np.cumsum(fields_b)
-    seg_end_bits = ends[close_slot]                      # inclusive totals
-    seg_base_bits = np.empty(S, dtype=np.int64)
-    seg_base_bits[0] = 0
-    seg_base_bits[1:] = seg_end_bits[:-1]
-    seg_bits = seg_end_bits - seg_base_bits
-    wc = seg_bits // 64 + 2                              # closed snapshot
-    word_off = np.empty(S, dtype=np.int64)
-    word_off[0] = 0
-    word_off[1:] = np.cumsum(wc)[:-1]
-    starts = (ends - fields_b) - seg_base_bits[g_field] \
-        + 64 * word_off[g_field]
-
-    words = np.zeros(int(np.sum(wc)), dtype=np.uint64)
-    w0 = starts >> 6
-    off = starts & 63
-    shift1 = 64 - off - fields_b
-    neg = shift1 < 0
-    lsh = np.minimum(shift1 * ~neg, 63).astype(np.uint64)
-    rsh = (-shift1 * neg).astype(np.uint64)
-    c0 = np.where(neg, fields_v >> rsh, fields_v << lsh)
-    seg = np.flatnonzero(np.r_[True, w0[1:] != w0[:-1]])
-    words[w0[seg]] |= np.add.reduceat(c0, seg)
-    if neg.any():
-        v1 = fields_v[neg]
-        s1 = (64 + shift1[neg]).astype(np.uint64)
-        c1 = v1 << s1
-        w1 = w0[neg] + 1
-        seg1 = np.flatnonzero(np.r_[True, w1[1:] != w1[:-1]])
-        words[w1[seg1]] |= np.add.reduceat(c1, seg1)
-    return words, wc
+def _dfcm_size(predictor: str) -> int:
+    return int(predictor.split(":", 1)[1]) if ":" in predictor else 1024
 
 
 def encode_blocks_fast(block_ts: np.ndarray, offsets: np.ndarray,
-                       ts: np.ndarray, values: np.ndarray
+                       ts: np.ndarray, values: np.ndarray,
+                       predictor: str = "last_value"
                        ) -> tuple[np.ndarray, np.ndarray]:
-    """encode_blocks with the C kernel when available (bit-identical;
-    differential-tested), numpy otherwise."""
-    from .native import encode_blocks_native
-    out = encode_blocks_native(block_ts, offsets, ts, values)
-    if out is not None:
-        return out
-    return encode_blocks(block_ts, offsets, ts, values)
+    """Encode S blocks → (uint64 words, int64 words per block).
+
+    ``block_ts`` int64[S] is each block's header timestamp; block s owns
+    ``ts[offsets[s]:offsets[s+1]]`` (ascending int64 epoch-ms) and the
+    same slice of ``values``.
+    """
+    values = np.ascontiguousarray(values).view(np.uint64)
+    if _use_c_kernel(predictor):
+        if predictor == "last_value":
+            return native.encode_blocks_native(block_ts, offsets, ts,
+                                               values)
+        return native.encode_blocks_dfcm_native(
+            block_ts, offsets, ts, values, _dfcm_size(predictor))
+    words = []
+    for s, bt in enumerate(np.asarray(block_ts).tolist()):
+        a, b = offsets[s], offsets[s + 1]
+        enc = GorillaV1Encoder(bt) if predictor == "v1" \
+            else GorillaEncoder(bt, predictor=predictor)
+        for t, v in zip(ts[a:b].tolist(), values[a:b].tolist()):
+            enc.add(t, v)
+        out = enc.close()
+        words.append(np.frombuffer(out, dtype=">u8").astype(np.uint64)
+                     if predictor == "v1" else np.array(out, np.uint64))
+    return (np.concatenate(words) if words else np.empty(0, np.uint64),
+            np.array([len(w) for w in words], dtype=np.int64))
 
 
 def decode_blocks_fast(words: np.ndarray, word_counts: np.ndarray,
-                       n_points_hint: int | None = None):
-    """decode_blocks with the C kernel when available."""
-    from .native import decode_blocks_native
-    out = decode_blocks_native(words, word_counts, n_points_hint)
-    if out is not None:
-        return out
-    return decode_blocks(words, word_counts)
-
-
-def decode_blocks(words: np.ndarray, word_counts: np.ndarray):
-    """Decode S concatenated blocks → (offsets, ts, values).
-
-    Inverse of :func:`encode_blocks`; returns int64[S+1] point offsets
-    plus concatenated int64 timestamps and uint64 raw values.
-    """
-    word_counts = np.asarray(word_counts, dtype=np.int64)
+                       n_points_hint: int | None = None,
+                       predictor: str = "last_value"):
+    """Decode S blocks → (int64[S+1] point offsets, int64 ts, uint64
+    values). ``n_points_hint`` sizes the C kernel's output buffers."""
+    if _use_c_kernel(predictor):
+        if predictor == "last_value":
+            return native.decode_blocks_native(words, word_counts,
+                                               n_points_hint)
+        return native.decode_blocks_dfcm_native(
+            words, word_counts, _dfcm_size(predictor), n_points_hint)
     words = np.asarray(words, dtype=np.uint64)
-    S = word_counts.shape[0]
-    ts_parts = []
-    v_parts = []
-    offsets = np.zeros(S + 1, dtype=np.int64)
-    pos = 0
-    for s in range(S):
-        w = words[pos:pos + word_counts[s]]
-        pos += word_counts[s]
-        t, v = decode_v2(w)
-        offsets[s + 1] = offsets[s] + t.shape[0]
-        ts_parts.append(t)
-        v_parts.append(v)
-    if not ts_parts:
-        return offsets, np.empty(0, np.int64), np.empty(0, np.uint64)
-    return offsets, np.concatenate(ts_parts), np.concatenate(v_parts)
+    wc = np.asarray(word_counts, dtype=np.int64)
+    ends = np.cumsum(wc)
+    offsets = np.zeros(len(wc) + 1, dtype=np.int64)
+    pairs = []
+    for s, (a, b) in enumerate(zip((ends - wc).tolist(), ends.tolist())):
+        dec = GorillaV1Decoder(words[a:b].astype(">u8").tobytes()) \
+            if predictor == "v1" \
+            else GorillaDecoder(words[a:b].tolist(), predictor=predictor)
+        pairs += dec.read_all()
+        offsets[s + 1] = len(pairs)
+    pts = np.array(pairs, dtype=np.uint64).reshape(-1, 2)
+    return offsets, pts[:, 0].view(np.int64).copy(), pts[:, 1].copy()

@@ -8,16 +8,18 @@ Scale design (SURVEY.md §3.4/§4.3):
 * the encode UDF is ``mapInArrow`` — NOT per-group ``applyInPandas``
   (realistic blocks are 50–500 points and per-group UDF dispatch would
   dominate) and not pandas (string keys would materialize as Python
-  objects); each Arrow batch goes to the segmented kernel
-  (:func:`gorillaspark.codec.vector.encode_blocks_fast` — C fast path
-  with numpy fallback) in ONE call. A block whose points straddle two
-  Arrow batches is carried over between batches inside the same
-  partition iterator, so correctness never depends on batch boundaries;
+  objects); each Arrow batch goes to the codec entry
+  (:func:`gorillaspark.codec.vector.encode_blocks_fast`, which picks
+  the kernel for the predictor) in ONE call. A block whose points
+  straddle two Arrow batches is carried over between batches inside
+  the same partition iterator, so correctness never depends on batch
+  boundaries;
 * block size is naturally bounded: day-aligned ``block_ts`` caps a
   block at one conv-day, so no salting is needed here (hot conv_ids
   split across days); skew is handled at the rollup/aggregation stage;
-* decode is the mirror image: blocks → points via one kernel call per
-  batch, exploded back to rows JVM-side by the Arrow return.
+* decode is the mirror image: blocks → points via one entry call per
+  batch (per run of equal predictors, should a batch mix them),
+  exploded back to rows JVM-side by the Arrow return.
 
 Value transparency: double metrics travel as raw IEEE-754 bits through
 the codec (NaN payloads / -0.0 / subnormals round-trip bit-exactly,
@@ -65,39 +67,6 @@ POINT_SCHEMA_DOUBLE = StructType([
 ])
 
 
-def _scalar_encode(bts_firsts, offsets, ts, vals, predictor):
-    """Per-block scalar path for non-default codecs: DFCM predictors
-    ('dfcm' / 'dfcm:N') and the v1 wire format ('v1', byte-oriented,
-    go-tsz interoperable). Sequential by nature (DFCM's hash chain /
-    v1's byte stream), so this is the capability path, not the hot one
-    — the default last-value v2 codec takes the vectorized/C kernel."""
-    from ..codec.scalar import GorillaEncoder, GorillaV1Encoder
-
-    words_list = []
-    wc = np.empty(len(bts_firsts), dtype=np.int64)
-    for i in range(len(bts_firsts)):
-        a, b = offsets[i], offsets[i + 1]
-        if predictor == "v1":
-            enc = GorillaV1Encoder(int(bts_firsts[i]))
-            for t, v in zip(ts[a:b].tolist(), vals[a:b].tolist()):
-                enc.add(t, v)
-            w = np.frombuffer(enc.close(), dtype=">u8").astype(np.uint64)
-        else:
-            enc = GorillaEncoder(int(bts_firsts[i]), predictor=predictor)
-            for t, v in zip(ts[a:b].tolist(), vals[a:b].tolist()):
-                enc.add(t, v)
-            w = np.array(enc.close(), dtype=np.uint64)
-        words_list.append(w)
-        wc[i] = len(w)
-    words = np.concatenate(words_list) if words_list \
-        else np.empty(0, np.uint64)
-    return words, wc
-
-
-def _dfcm_size(predictor: str) -> int:
-    return int(predictor.split(":", 1)[1]) if ":" in predictor else 1024
-
-
 _DAY_MS = 86_400_000
 
 
@@ -112,7 +81,7 @@ def _day_align(ts: "np.ndarray") -> "np.ndarray":
 def _encode_table(tbl: "pa.Table", value_kind: str,
                   predictor: str = "last_value") -> "pa.RecordBatch":
     """Encode one already-sorted Arrow table: group boundaries from the
-    (series_key, day(ts)) change points, one segmented-kernel call.
+    (series_key, day(ts)) change points, one codec-entry call.
     Strings never materialize as Python objects; the words column is a
     zero-copy ListArray over the kernel's output buffer."""
     import pyarrow as pa
@@ -146,20 +115,7 @@ def _encode_table(tbl: "pa.Table", value_kind: str,
     offsets = np.empty(starts.shape[0] + 1, dtype=np.int64)
     offsets[:-1] = starts
     offsets[-1] = n
-    if predictor == "last_value":
-        words, wc = encode_blocks_fast(bts[starts], offsets, ts, vals)
-    elif predictor == "dfcm" or predictor.startswith("dfcm:"):
-        # r7: DFCM rides the C kernel too (the hash chain is a
-        # sequential int64 loop, same shape as the value-window chain)
-        # — the per-point Python scalar codec stays as the no-compiler
-        # fallback only
-        from ..codec.native import encode_blocks_dfcm_native
-        out = encode_blocks_dfcm_native(bts[starts], offsets, ts, vals,
-                                        _dfcm_size(predictor))
-        words, wc = out if out is not None else _scalar_encode(
-            bts[starts], offsets, ts, vals, predictor)
-    else:
-        words, wc = _scalar_encode(bts[starts], offsets, ts, vals,
+    words, wc = encode_blocks_fast(bts[starts], offsets, ts, vals,
                                    predictor)
     list_offsets = np.zeros(len(wc) + 1, dtype=np.int64)
     np.cumsum(wc, out=list_offsets[1:])
@@ -248,34 +204,29 @@ def encode_points(points: DataFrame, value_kind: str = "double",
         BLOCK_SCHEMA)
 
 
-def _scalar_decode(words, wc, predictors):
-    """Per-block scalar decode for non-default codecs (mirror of
-    :func:`_scalar_encode`)."""
-    import struct as _struct
-
-    from ..codec.scalar import GorillaDecoder, GorillaV1Decoder
-
-    ts_parts, v_parts = [], []
-    offsets = np.zeros(len(wc) + 1, dtype=np.int64)
-    pos = 0
-    for i, (c, pred) in enumerate(zip(wc, predictors)):
-        w = words[pos:pos + c]
-        pos += c
-        if pred == "v1":
-            data = b"".join(_struct.pack(">Q", int(x)) for x in w)
-            pairs = GorillaV1Decoder(data).read_all()
-        elif pred == "last_value":
-            from ..codec.vector import decode_v2
-            t, v = decode_v2(w)
-            pairs = list(zip(t.tolist(), v.tolist()))
-        else:
-            pairs = GorillaDecoder(w.tolist(), predictor=pred).read_all()
-        offsets[i + 1] = offsets[i] + len(pairs)
-        ts_parts.append(np.array([p[0] for p in pairs], dtype=np.int64))
-        v_parts.append(np.array([p[1] for p in pairs], dtype=np.uint64))
-    if not ts_parts:
-        return offsets, np.empty(0, np.int64), np.empty(0, np.uint64)
-    return offsets, np.concatenate(ts_parts), np.concatenate(v_parts)
+def _decode_batch(tbl: "pa.Table"):
+    """Decode one batch of blocks → (points per block, ts, values).
+    A batch that mixes predictors makes one entry call per run of equal
+    predictors, in block order; a uniform batch makes one call."""
+    words_col = tbl.column("words").chunk(0)
+    lo = words_col.offsets.to_numpy()
+    words = words_col.values.to_numpy().view(np.uint64)
+    n_points = tbl.column("n_points").chunk(0).to_numpy()
+    S = tbl.num_rows
+    col = tbl.column("predictor").chunk(0)
+    change = pc.not_equal(col.slice(1), col.slice(0, S - 1))
+    bounds = [0, *(np.flatnonzero(change.to_numpy(zero_copy_only=False))
+                   + 1).tolist(), S]
+    preds = [col[a].as_py() for a in bounds[:-1]]
+    parts = [decode_blocks_fast(words[lo[a]:lo[b]], np.diff(lo[a:b + 1]),
+                                n_points_hint=int(n_points[a:b].sum()),
+                                predictor=p)
+             for a, b, p in zip(bounds[:-1], bounds[1:], preds)]
+    if len(parts) == 1:
+        offsets, ts, vals = parts[0]
+        return np.diff(offsets), ts, vals
+    return tuple(np.concatenate(c) for c in zip(
+        *[(np.diff(o), t, v) for o, t, v in parts]))
 
 
 def _decode_partition(batches, as_double: bool):
@@ -285,32 +236,8 @@ def _decode_partition(batches, as_double: bool):
         if rb.num_rows == 0:
             continue
         tbl = pa.Table.from_batches([rb]).combine_chunks()
-        words_col = tbl.column("words").chunk(0)
-        list_offsets = words_col.offsets.to_numpy()
-        words = words_col.values.to_numpy().view(np.uint64)
-        wc = np.diff(list_offsets)
-        n_hint = int(pc.sum(tbl.column("n_points")).as_py() or 0)
-        preds = (tbl.column("predictor").chunk(0)
-                 if "predictor" in tbl.column_names else None)
-        if preds is None or pc.all(
-                pc.equal(preds, "last_value")).as_py():
-            offsets, ts, vals = decode_blocks_fast(words, wc,
-                                                   n_points_hint=n_hint)
-        else:
-            offsets = None
-            pl = preds.to_pylist()
-            first = pl[0]
-            if (first == "dfcm" or first.startswith("dfcm:")) \
-                    and all(p == first for p in pl):
-                from ..codec.native import decode_blocks_dfcm_native
-                out = decode_blocks_dfcm_native(
-                    words, wc, _dfcm_size(first), n_points_hint=n_hint)
-                if out is not None:
-                    offsets, ts, vals = out
-            if offsets is None:
-                offsets, ts, vals = _scalar_decode(words, wc, pl)
-        lens = offsets[1:] - offsets[:-1]
-        take_idx = np.repeat(np.arange(len(wc)), lens)
+        lens, ts, vals = _decode_batch(tbl)
+        take_idx = np.repeat(np.arange(tbl.num_rows), lens)
         keys = pc.take(tbl.column("series_key").chunk(0),
                        pa.array(take_idx))
         vcol = pa.array(vals.view(np.float64)) if as_double \

@@ -2160,10 +2160,6 @@ def _utf8_int_read(r: _MSBReader) -> int:
     return v
 
 
-_FIXED_COEFS = {0: [], 1: [1], 2: [2, -1], 3: [3, -3, 1],
-                4: [4, -6, 4, -1]}
-
-
 def _rice_decode_fast(r: _MSBReader, cnt: int, k: int) -> np.ndarray:
     """Decode ``cnt`` rice(k) codes with a set-bit pointer walk over a
     numpy-unpacked bit window instead of per-bit reader calls: the

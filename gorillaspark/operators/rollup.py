@@ -12,11 +12,6 @@ sketch tier (operators/sketch.py: DDSketch-style log-binned p95 with
 relative error ≤ 1%) — it cascades by summing bin counts and never
 re-reads raw above the fine tier.
 
-Skew: partial aggregation (map-side combine) is automatic in Spark's
-hash aggregate; for pathological hot series the optional salt stage
-splits a series' minute-buckets into ``n_salt`` shards that the final
-reduce recombines exactly (cnt/sum/min/max are associative).
-
 Percentile-at-scale policy: exact ``F.percentile`` buffers a group's
 values, which is safe exactly where this engine uses it — bucketed
 groups are time-bounded (a series-minute/hour/day holds at most the
@@ -130,42 +125,6 @@ def rollup_from_lower(lower: DataFrame, tier: str,
         up = up.withColumn("p95", F.lit(None).cast("double"))
     return up.select("series_key", "bucket", "cnt", "sum", "avg",
                      "min", "max", "p95").withColumn("tier", F.lit(tier))
-
-
-def rollup_salted(points: DataFrame, tier: str = "1m",
-                  n_salt: int = 8) -> DataFrame:
-    """Two-stage salted rollup for hot series keys.
-
-    Stage 1 aggregates (series_key, bucket, salt) shards — the shuffle
-    key carries the salt so one hot series spreads over ``n_salt``
-    reducers; stage 2 recombines shards exactly. p95 is attached from a
-    dedicated exact pass (percentile needs all values of a bucket; its
-    skew is bounded because a minute-bucket of one series is small).
-    """
-    span = TIERS[tier]
-    salted = (
-        _bucket(points, span)
-        .withColumn("salt", F.pmod(F.xxhash64("ts_ms"), F.lit(n_salt)))
-    )
-    partial = (
-        salted.groupBy("series_key", "bucket", "salt")
-        .agg(F.count("value").alias("cnt"), F.sum("value").alias("sum"),
-             F.min("value").alias("min"), F.max("value").alias("max"))
-    )
-    merged = (
-        partial.groupBy("series_key", "bucket")
-        .agg(F.sum("cnt").alias("cnt"), F.sum("sum").alias("sum"),
-             F.min("min").alias("min"), F.max("max").alias("max"))
-        .withColumn("avg", F.col("sum") / F.col("cnt"))
-    )
-    p95 = (
-        _bucket(points, span).groupBy("series_key", "bucket")
-        .agg(F.percentile("value", F.lit(0.95)).alias("p95"))
-    )
-    return (merged.join(p95, ["series_key", "bucket"], "left")
-            .select("series_key", "bucket", "cnt", "sum", "avg",
-                    "min", "max", "p95")
-            .withColumn("tier", F.lit(tier)))
 
 
 def role_rates(transcripts: DataFrame, span: str = "1 minute") -> DataFrame:

@@ -30,8 +30,8 @@ def build_session(app: str = "gorillaspark",
     b = (
         SparkSession.builder.appName(app)
         .master(master)
-        # AQE: runtime coalescing + skew-join splitting — the backstop
-        # for hot conv_id skew on top of our explicit salting
+        # AQE: runtime coalescing + skew-join splitting handle hot
+        # conv_id skew
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -8,7 +8,7 @@ columns; no driver-side data), so the same generator scales from the
 turns. Seeded and wall-clock-free (FIXTURES.md).
 
 Skew: conv_id ``conv000000`` receives ~50% of all turns (the hot-key
-fixture for salting/AQE tests).
+fixture for skew/AQE tests).
 """
 
 from __future__ import annotations

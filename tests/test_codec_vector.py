@@ -1,5 +1,7 @@
-"""Vectorized codec: golden bit-exactness, differential equality with
-the scalar reference implementation, and property-based round trips.
+"""The codec entry (codec/vector.py) — what production runs: golden
+bit-exactness, differential equality with the scalar reference codec,
+property-based round trips, the no-compiler fallback and corrupt
+blocks.
 """
 
 from __future__ import annotations
@@ -13,14 +15,10 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from gorillaspark.codec import native, vector
 from gorillaspark.codec.bitbuf import words_to_unsigned
-from gorillaspark.codec.scalar import GorillaEncoder
-from gorillaspark.codec.vector import (
-    decode_blocks,
-    decode_v2,
-    encode_blocks,
-    encode_v2,
-)
+from gorillaspark.codec.scalar import GorillaDecoder, GorillaEncoder
+from gorillaspark.codec.vector import decode_blocks_fast, encode_blocks_fast
 
 GOLDENS = Path(__file__).parent / "goldens"
 _U64 = (1 << 64) - 1
@@ -37,33 +35,40 @@ def _fixture_arrays(name):
     return fx["block_ts"], ts, vs, want
 
 
+def _encode_one(block_ts, ts, vs, predictor="last_value"):
+    words, wc = encode_blocks_fast(np.array([block_ts], np.int64),
+                                   np.array([0, len(ts)], np.int64),
+                                   ts, vs, predictor)
+    assert wc.tolist() == [len(words)]
+    return words
+
+
+def _scalar_words(block_ts, ts, vs, predictor="last_value"):
+    enc = GorillaEncoder(int(block_ts), predictor=predictor)
+    for t, v in zip(ts.tolist(), vs.tolist()):
+        enc.add(t, v)
+    return np.array(enc.close(), dtype=np.uint64)
+
+
 @pytest.mark.parametrize("name", V2_NAMES)
 def test_vector_encode_bit_exact(name):
     block_ts, ts, vs, want = _fixture_arrays(name)
-    got = encode_v2(block_ts, ts, vs)
+    got = _encode_one(block_ts, ts, vs)
     assert got.shape == want.shape and bool((got == want).all())
 
 
 @pytest.mark.parametrize("name", V2_NAMES)
 def test_vector_decode_reference_stream(name):
     block_ts, ts, vs, want = _fixture_arrays(name)
-    dts, dvs = decode_v2(want)
+    offs, dts, dvs = decode_blocks_fast(want, [len(want)])
+    assert offs.tolist() == [0, len(ts)]
     assert (dts == ts).all() and (dvs == vs).all()
 
 
-def test_copy_flush_snapshot_unclosed():
-    fx = json.loads((GOLDENS / "copy_flush.json").read_text())
-    ts = np.array([p[0] for p in fx["points"]], dtype=np.int64)
-    vs = np.array([p[1] & _U64 for p in fx["points"]], dtype=np.uint64)
-    got = encode_v2(fx["block_ts"], ts, vs, closed=False)
-    want = np.array(words_to_unsigned(fx["words"]), dtype=np.uint64)
-    assert got.shape == want.shape and bool((got == want).all())
-
-
 def test_segmented_equals_per_block():
-    """encode_blocks must produce, per block, the identical stream that
-    encode_v2 (and hence the reference) produces — including empty
-    blocks and repeated-value runs."""
+    """One segmented call must produce, per block, the identical stream
+    the scalar reference codec produces — including empty blocks and
+    repeated-value runs."""
     rng = np.random.default_rng(7)
     S = 120
     lens = rng.integers(0, 300, S)
@@ -75,22 +80,22 @@ def test_segmented_equals_per_block():
         v = rng.random(lens[s]).view(np.uint64)
         if lens[s] > 12:
             v[4:9] = v[3]  # xor == 0 run
-        tps.append(t)
+        tps.append(t.astype(np.int64))
         vps.append(v)
-    ts = (np.concatenate(tps) if S else np.empty(0)).astype(np.int64)
+    ts = np.concatenate(tps)
     vs = np.concatenate(vps)
     offsets = np.zeros(S + 1, dtype=np.int64)
     offsets[1:] = np.cumsum(lens)
 
-    words, wc = encode_blocks(block_ts, offsets, ts, vs)
+    words, wc = encode_blocks_fast(block_ts, offsets, ts, vs)
     pos = 0
     for s in range(S):
-        ref = encode_v2(int(block_ts[s]), tps[s].astype(np.int64), vps[s])
+        ref = _scalar_words(block_ts[s], tps[s], vps[s])
         got = words[pos:pos + wc[s]]
         pos += wc[s]
         assert got.shape == ref.shape and bool((got == ref).all()), s
 
-    offs2, dts, dvs = decode_blocks(words, wc)
+    offs2, dts, dvs = decode_blocks_fast(words, wc)
     assert (offs2 == offsets).all()
     assert (dts == ts).all() and (dvs == vs).all()
 
@@ -105,13 +110,10 @@ def test_vector_matches_scalar_on_adversarial_values():
          0x000FFFFFFFFFFFFF, 2, 1] * 5,
         dtype=np.uint64)
     ts = 1500400800000 + 7 * np.arange(1, len(patterns) + 1, dtype=np.int64)
-    got = encode_v2(1500400800000, ts, patterns)
-    enc = GorillaEncoder(1500400800000)
-    for t, v in zip(ts.tolist(), patterns.tolist()):
-        enc.add(t, v)
-    want = np.array(enc.close(), dtype=np.uint64)
+    got = _encode_one(1500400800000, ts, patterns)
+    want = _scalar_words(1500400800000, ts, patterns)
     assert got.shape == want.shape and bool((got == want).all())
-    dts, dvs = decode_v2(got)
+    _, dts, dvs = decode_blocks_fast(got, [len(got)])
     assert (dts == ts).all() and (dvs == patterns).all()
 
 
@@ -122,55 +124,38 @@ def test_vector_matches_scalar_on_adversarial_values():
     min_size=0, max_size=300))
 def test_property_roundtrip_and_scalar_equality(pairs):
     block_ts = 1_500_000_000_000
-    ts = np.cumsum(np.array([p[0] for p in pairs] or [0], dtype=np.int64))
-    if not pairs:
-        ts = np.empty(0, dtype=np.int64)
-    else:
-        ts = block_ts + ts
+    ts = block_ts + np.cumsum(np.array([p[0] for p in pairs], np.int64))
     vs = np.array([p[1] for p in pairs], dtype=np.uint64)
-    got = encode_v2(block_ts, ts, vs)
-    enc = GorillaEncoder(block_ts)
-    for t, v in zip(ts.tolist(), vs.tolist()):
-        enc.add(t, v)
-    want = np.array(enc.close(), dtype=np.uint64)
+    got = _encode_one(block_ts, ts, vs)
+    want = _scalar_words(block_ts, ts, vs)
     assert got.shape == want.shape and bool((got == want).all())
-    dts, dvs = decode_v2(got)
+    _, dts, dvs = decode_blocks_fast(got, [len(got)])
     assert (dts == ts).all() and (dvs == vs).all()
 
 
 @pytest.mark.skipif(shutil.which("cc") is None,
                     reason="no C compiler on PATH")
 def test_native_kernel_loads_when_compiler_present():
-    """With ``cc`` available the C kernel must build and bind. The
-    native tests skip when NATIVE is None, so without this a broken
-    gorilla.c or ctypes binding would silently drop every codec call
-    onto the numpy path (a 10x+ slowdown) with the suite green."""
-    from gorillaspark.codec import native
-
-    assert native.NATIVE is not None
+    """With ``cc`` available the C kernel must build and bind. Without
+    this a broken gorilla.c or ctypes binding would drop every codec
+    call onto the scalar path (two orders of magnitude slower) with
+    only a warning."""
+    assert native.NATIVE is not None, native.NATIVE_ERROR
 
 
 def test_native_dfcm_matches_scalar_and_golden():
-    """r7: the DFCM predictor rides the C kernel
+    """The DFCM predictor rides the C kernel
     (gs_encode_blocks_dfcm / gs_decode_blocks_dfcm). Word-for-word
     equality with the scalar codec across table sizes (including the
     size=1 and power-of-two-rounding edges), plus the
     reference-generated dfcm_roundtrip golden."""
-    from gorillaspark.codec.native import (
-        NATIVE,
-        decode_blocks_dfcm_native,
-        encode_blocks_dfcm_native,
-    )
-
-    if NATIVE is None:
+    if native.NATIVE is None:
         pytest.skip("no C compiler in environment")
 
     fx = json.loads((GOLDENS / "dfcm_roundtrip.json").read_text())
     g_ts = np.array([p[0] for p in fx["points"]], dtype=np.int64)
     g_vs = np.array([p[1] & _U64 for p in fx["points"]], dtype=np.uint64)
-    gw, gwc = encode_blocks_dfcm_native(
-        np.array([fx["block_ts"]], np.int64),
-        np.array([0, len(g_ts)], np.int64), g_ts, g_vs, 1024)
+    gw = _encode_one(fx["block_ts"], g_ts, g_vs, "dfcm:1024")
     assert gw.tolist() == words_to_unsigned(fx["words"])
 
     rng = np.random.default_rng(23)
@@ -190,18 +175,15 @@ def test_native_dfcm_matches_scalar_and_golden():
     all_ts = np.concatenate([b[1] for b in blocks])
     all_vs = np.concatenate([b[2] for b in blocks])
     for size in [1, 2, 100, 1024]:
-        words, wc = encode_blocks_dfcm_native(bts, offs, all_ts,
-                                              all_vs, size)
+        pred = f"dfcm:{size}"
+        words, wc = encode_blocks_fast(bts, offs, all_ts, all_vs, pred)
         pos = 0
         for i, (bt, t, v) in enumerate(blocks):
-            enc = GorillaEncoder(int(bt), predictor=f"dfcm:{size}")
-            for a, b in zip(t.tolist(), v.tolist()):
-                enc.add(a, b)
-            sw = np.array(enc.close(), dtype=np.uint64)
+            sw = _scalar_words(bt, t, v, pred)
             kw = words[pos:pos + wc[i]]
             pos += wc[i]
             assert (sw == kw).all(), (size, i)
-        off2, t2, v2 = decode_blocks_dfcm_native(words, wc, size)
+        off2, t2, v2 = decode_blocks_fast(words, wc, predictor=pred)
         assert (off2 == offs).all()
         assert (t2 == all_ts).all() and (v2 == all_vs).all()
 
@@ -216,29 +198,140 @@ def test_native_dfcm_repeat_asymmetry_parity():
     decode==input; this pins the C kernel to the scalar decoder on a
     stream that actually exercises the repeat path (none of the
     random-data cases above do)."""
-    from gorillaspark.codec.native import (
-        NATIVE,
-        decode_blocks_dfcm_native,
-        encode_blocks_dfcm_native,
-    )
-    from gorillaspark.codec.scalar import GorillaDecoder
-
-    if NATIVE is None:
+    if native.NATIVE is None:
         pytest.skip("no C compiler in environment")
 
     blen = 1000
     base = 1500400800000
     ts = base + 60000 * np.arange(blen, dtype=np.int64)
     vals = np.arange(blen, dtype=np.float64).view(np.uint64)
-    words, wc = encode_blocks_dfcm_native(
-        np.array([base], np.int64), np.array([0, blen], np.int64),
-        ts, vals, 1024)
+    words = _encode_one(base, ts, vals, "dfcm:1024")
     pairs = GorillaDecoder(words.tolist(), predictor="dfcm:1024").read_all()
     s_ts = np.array([p[0] for p in pairs], np.int64)
     s_vs = np.array([p[1] for p in pairs], np.uint64)
-    off2, t2, v2 = decode_blocks_dfcm_native(words, wc, 1024,
-                                             n_points_hint=blen)
+    off2, t2, v2 = decode_blocks_fast(words, [len(words)], blen,
+                                      "dfcm:1024")
     assert len(pairs) == blen and (off2 == [0, blen]).all()
     assert (t2 == s_ts).all() and (v2 == s_vs).all()
     # the quirk really fired: decode != input somewhere
     assert (v2 != vals).any()
+
+
+@pytest.fixture
+def scalar_only(monkeypatch):
+    """Run the entry as it runs without a compiler (warning silenced)."""
+    def on():
+        monkeypatch.setattr(native, "NATIVE", None)
+        monkeypatch.setattr(vector, "_fallback_warned", True)
+    return on
+
+
+def _ten_points():
+    rng = np.random.default_rng(5)
+    ts = 1500400800000 + np.cumsum(rng.integers(1, 100_000, 10))
+    return 1500400800000, ts.astype(np.int64), rng.random(10).view(np.uint64)
+
+
+@pytest.mark.parametrize("predictor", ["last_value", "dfcm:1024", "v1"])
+def test_scalar_fallback_equals_native(scalar_only, predictor):
+    """Without a C kernel the entry must write and read the same words:
+    every v2 golden plus a multi-block batch with empty blocks."""
+    rng = np.random.default_rng(11)
+    lens = np.array([0, 1, 37, 0, 250])
+    bts = (1500400800000 + np.arange(len(lens)) * 86_400_000
+           ).astype(np.int64)
+    ts = np.concatenate([b + np.cumsum(rng.integers(1, 240_000, n))
+                         for b, n in zip(bts, lens)]).astype(np.int64)
+    vs = rng.normal(100, 5, len(ts)).round(1).view(np.uint64)
+    batches = [(bts, np.r_[0, np.cumsum(lens)].astype(np.int64), ts, vs)]
+    for name in V2_NAMES:
+        bt, gts, gvs, _ = _fixture_arrays(name)
+        batches.append((np.array([bt], np.int64),
+                        np.array([0, len(gts)], np.int64), gts, gvs))
+    native_out = []
+    for b in batches:
+        words, wc = encode_blocks_fast(*b, predictor)
+        native_out.append((words, wc, decode_blocks_fast(
+            words, wc, predictor=predictor)))
+    scalar_only()
+    for b, (words, wc, (offs, dts, dvs)) in zip(batches, native_out):
+        s_words, s_wc = encode_blocks_fast(*b, predictor)
+        assert (s_words == words).all() and (s_wc == wc).all()
+        s_offs, s_ts, s_vs = decode_blocks_fast(words, wc,
+                                                predictor=predictor)
+        assert (s_offs == offs).all()
+        assert (s_ts == dts).all() and (s_vs == dvs).all()
+
+
+def test_codec_fallback_warns_once(monkeypatch):
+    monkeypatch.setattr(native, "NATIVE", None)
+    monkeypatch.setattr(vector, "_fallback_warned", False)
+    block_ts, ts, vs = _ten_points()
+    with pytest.warns(RuntimeWarning, match="C kernel unavailable") as rec:
+        words = _encode_one(block_ts, ts, vs)
+        decode_blocks_fast(words, [len(words)])
+    assert len(rec) == 1
+
+
+@pytest.mark.parametrize("predictor", ["last_value", "dfcm:1024"])
+def test_corrupt_block_raises(scalar_only, predictor):
+    """A block that lost its last two words, or a bit of its close
+    marker, used to read on into zero bits — one repeated point per two
+    bits, forever — and the C wrapper doubled its buffers until
+    allocation failed. Both kernels must raise ValueError, and on every
+    single-bit flip of the block they must agree."""
+    if native.NATIVE is None:
+        pytest.skip("no C compiler in environment")
+    words = _encode_one(*_ten_points(), predictor)
+    last = int(np.flatnonzero(words)[-1])
+    marker = words.copy()           # clear the close marker's last 1 bit
+    marker[last] &= words[last] - np.uint64(1)
+    flips = []
+    for bit in range(64 * len(words)):
+        f = words.copy()
+        f[bit // 64] ^= np.uint64(1 << (63 - bit % 64))
+        flips.append(f)
+
+    def run(w):
+        try:
+            offs, ts, vs = decode_blocks_fast(w, [len(w)],
+                                              predictor=predictor)
+        except ValueError:
+            return "ValueError"
+        return offs.tolist(), ts.tolist(), vs.tolist()
+
+    on_c = [run(w) for w in flips]
+    for bad in (words[:-2], marker):
+        with pytest.raises(ValueError):
+            decode_blocks_fast(bad, [len(bad)], predictor=predictor)
+    scalar_only()
+    for bad in (words[:-2], marker):
+        with pytest.raises(ValueError):
+            decode_blocks_fast(bad, [len(bad)], predictor=predictor)
+    assert [run(w) for w in flips] == on_c
+    assert "ValueError" in on_c
+
+
+def test_mixed_predictor_batch_keeps_block_order():
+    """The decode operator splits a batch that mixes predictors into runs
+    of equal predictors, one entry call each, and keeps block order."""
+    import pyarrow as pa
+
+    from gorillaspark.operators.encode import _decode_batch, _encode_table
+
+    rng = np.random.default_rng(3)
+    n = 400
+    pts = pa.table({
+        "series_key": pa.array(np.repeat(["a", "b", "c", "d"], n // 4)),
+        "ts_ms": pa.array(1500400800000 + np.tile(
+            np.cumsum(rng.integers(1, 60_000, n // 4)), 4)),
+        "value": pa.array(rng.normal(50, 3, n)),
+    })
+    order = ["v1", "dfcm:16", "dfcm:16", "last_value"]
+    batches = [_encode_table(pts.slice(i * 100, 100), "double", p)
+               for i, p in enumerate(order)]
+    tbl = pa.Table.from_batches(batches)
+    lens, ts, vals = _decode_batch(tbl.combine_chunks())
+    assert lens.tolist() == [100] * 4
+    assert (ts == pts.column("ts_ms").to_numpy()).all()
+    assert (vals.view(np.float64) == pts.column("value").to_numpy()).all()

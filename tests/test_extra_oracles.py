@@ -2,9 +2,9 @@
 50-row correctness window (near-duplicate variants of checked
 representatives — see the demotion table at the bottom of
 gorillaspark/queries.py) keep full DuckDB-oracle coverage here, at
-sf0.001 for speed. Same comparison discipline as the driver: columns
-sorted by name, rows sorted, exact for ints/strings, atol 1e-9 for
-floats.
+sf0.001 for speed, and so do the in-window codec round trips. Same
+comparison discipline as tools/check_oracles.py: columns sorted by
+name, rows sorted, exact for ints/strings, atol 1e-9 for floats.
 """
 
 from __future__ import annotations
@@ -43,18 +43,26 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
+# in-window queries whose values no other test compares: the three
+# codec round trips, one per kernel dispatch (last_value, v1, dfcm)
+_WINDOW_NAMES = ["codec_roundtrip", "codec_roundtrip_v1",
+                 "codec_roundtrip_dfcm"]
+
+
 def _extra_names():
     from gorillaspark.queries import EXTRA_ORACLES, EXTRA_QUERIES
     assert set(EXTRA_ORACLES) <= set(EXTRA_QUERIES)
     return sorted(EXTRA_QUERIES)
 
 
-@pytest.mark.parametrize("name", _extra_names())
+@pytest.mark.parametrize("name", _extra_names() + _WINDOW_NAMES)
 def test_extra_query_matches_oracle(spark, duck, name):
-    from gorillaspark.queries import EXTRA_ORACLES, EXTRA_QUERIES
-    sdf = EXTRA_QUERIES[name](spark, SF).toPandas()
-    assert name in EXTRA_ORACLES, f"{name} demoted without an oracle"
-    odf = duck.execute(EXTRA_ORACLES[name]).fetchdf()
+    from gorillaspark.queries import (EXTRA_ORACLES, EXTRA_QUERIES,
+                                      ORACLES, QUERIES)
+    oracles = {**ORACLES, **EXTRA_ORACLES}
+    sdf = {**QUERIES, **EXTRA_QUERIES}[name](spark, SF).toPandas()
+    assert name in oracles, f"{name} demoted without an oracle"
+    odf = duck.execute(oracles[name]).fetchdf()
     a, b = _normalize(sdf), _normalize(odf)
     assert len(a) == len(b), f"{name}: rows {len(a)} vs {len(b)}"
     assert list(a.columns) == list(b.columns), \

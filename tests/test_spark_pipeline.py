@@ -22,11 +22,7 @@ from gorillaspark.operators.normalize import (
     turn_latency_points,
     with_turn_latency,
 )
-from gorillaspark.operators.rollup import (
-    rollup_from_lower,
-    rollup_salted,
-    rollup_tier,
-)
+from gorillaspark.operators.rollup import rollup_from_lower, rollup_tier
 
 
 def test_generator_deterministic_and_skewed(spark):
@@ -189,18 +185,6 @@ def test_rollup_cascade_sketch_p95_within_bound(spark, transcripts):
     rel = np.abs(a["p95"].to_numpy() - nr["p95_nr"].to_numpy()) \
         / np.maximum(np.abs(nr["p95_nr"].to_numpy()), 1e-12)
     assert rel.max() <= 0.01 + 1e-9, rel.max()
-
-
-def test_rollup_salted_equals_plain(spark, transcripts):
-    pts = turn_latency_points(transcripts)
-    plain = rollup_tier(pts, "1m").drop("tier")
-    salted = rollup_salted(pts, "1m", n_salt=4).drop("tier")
-    a = plain.toPandas().set_index(["series_key", "bucket"]).sort_index()
-    b = salted.toPandas().set_index(["series_key", "bucket"]).sort_index()
-    assert len(a) == len(b)
-    for col in ["cnt", "sum", "avg", "min", "max", "p95"]:
-        assert np.allclose(a[col].to_numpy(dtype=float),
-                           b[col].to_numpy(dtype=float), rtol=1e-12), col
 
 
 def test_gapfill_ffill(spark):

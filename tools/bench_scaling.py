@@ -276,7 +276,7 @@ def main() -> None:
         "",
         "Reference single-thread baseline (BASELINE.md): 83.5 M pts/s "
         "v2 compression, 77.9 M pts/s decompression on a 2011 i7 core. "
-        "Our codec kernel (C fast path, numpy fallback) measures "
+        "Our codec kernel (C, scalar Python fallback) measures "
         "54–129 M pts/s/core encode and 42–96 M pts/s/core decode "
         "offline depending on box contention; inside Spark the "
         "pipeline is JVM-bound (shuffle/sort/Arrow feed — cumulative "
