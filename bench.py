@@ -110,8 +110,7 @@ def main() -> None:
     from gorillaspark.sources.transcripts import generate_transcripts
 
     spark = build_session(app="gorillaspark-bench",
-                          master=f"local[{cpus}]",
-                          shuffle_partitions=max(cpus, 32))
+                          master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 
     scratch = tempfile.mkdtemp(prefix="gsbench-", dir="/root/repo/.scratch"

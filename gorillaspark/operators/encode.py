@@ -174,7 +174,6 @@ def _encode_partition(batches, value_kind: str,
 
 
 def encode_points(points: DataFrame, value_kind: str = "double",
-                  partitions: int | None = None,
                   predictor: str = "last_value") -> DataFrame:
     """points(series_key, ts_ms, value) → Gorilla blocks.
 
@@ -192,8 +191,7 @@ def encode_points(points: DataFrame, value_kind: str = "double",
     # (key, ts) order == (key, day, ts) order. 8 fewer bytes per point
     # through the two most expensive layers of the encode plan.
     pts = points.select("series_key", "ts_ms", "value")
-    n_part = partitions or pts.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions")
+    n_part = pts.sparkSession.conf.get("spark.sql.shuffle.partitions")
     laid_out = (
         pts.repartition(int(n_part), F.col("series_key"),
                         block_key("ts_ms"))
@@ -270,9 +268,10 @@ def compact_blocks(blocks: DataFrame, value_kind: str = "double",
     decode → re-encode through the normal one-shuffle path, and the
     untouched majority passes through by anti-join — at 100 TB the
     decode/re-encode cost is proportional to the fragmented fraction,
-    not the table. The result is bit-identical to having encoded the
-    day's points in one pass (same sort, same kernel), which the tests
-    assert word-for-word. Assumes the uniform (value_kind, predictor)
+    not the table. Both sides then share one hash layout on the block
+    key, so the rewrite is byte-identical from run to run. The result
+    is bit-identical to having encoded the day's points in one pass
+    (same sort, same kernel), which the tests assert word-for-word. Assumes the uniform (value_kind, predictor)
     the engine writes; compact heterogenous tables per codec group.
     """
     keys = ["series_key", "block_ts"]
@@ -283,7 +282,14 @@ def compact_blocks(blocks: DataFrame, value_kind: str = "double",
     keep = blocks.join(frag_keys, keys, "left_anti")
     pts = decode_points(frag, as_double=(value_kind == "double"))
     recoded = encode_points(pts, value_kind, predictor=predictor)
-    return keep.unionByName(recoded)
+    # without the repartition the pass-through side keeps the scan's
+    # grouping, and the scan takes files of equal size in
+    # directory-listing order, which differs between copies of one
+    # table. One block per key, so the sort is total.
+    n_part = blocks.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    return (keep.unionByName(recoded)
+            .repartition(int(n_part), *keys)
+            .sortWithinPartitions(*keys))
 
 
 def roundtrip_check(points: DataFrame, value_kind: str = "double") -> DataFrame:

@@ -3,7 +3,8 @@
 Everything here is plain configuration — no custom Catalyst rules are
 needed anywhere in the engine (SURVEY.md §4.2): the codec is opaque to
 Catalyst inside pandas UDFs and every relational piece uses stock
-operators, so AQE + Arrow + sane shuffle sizing is the whole story.
+operators, so AQE + Arrow + a shuffle as wide as the host's CPU count
+is the whole story.
 """
 
 from __future__ import annotations
@@ -19,14 +20,18 @@ def build_session(app: str = "gorillaspark",
                   extra: dict[str, str] | None = None) -> SparkSession:
     """Create (or fetch) a session tuned for the engine.
 
-    Defaults are sized for the sandbox (local[N]); on a real cluster the
-    same code runs under spark-submit where master/shuffle come from the
-    cluster conf and AQE re-plans at runtime.
+    Defaults fit the host: local[N] with N = SPARK_GRAFT_CPUS, else the
+    CPUs this process may run on, and a shuffle N partitions wide, so a
+    shuffle runs one task per CPU (a wider one pays the per-task Python
+    worker and Arrow cost for nothing, and writes more, smaller files
+    per append). On a real cluster the same code runs under
+    spark-submit where master/shuffle come from the cluster conf and
+    AQE re-plans at runtime.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
                               len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
-    shuffle = shuffle_partitions or max(cpus, 32)
+    shuffle = shuffle_partitions or cpus
     b = (
         SparkSession.builder.appName(app)
         .master(master)

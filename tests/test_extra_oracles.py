@@ -2,9 +2,10 @@
 50-row correctness window (near-duplicate variants of checked
 representatives — see the demotion table at the bottom of
 gorillaspark/queries.py) keep full DuckDB-oracle coverage here, at
-sf0.001 for speed, and so do the in-window codec round trips. Same
-comparison discipline as tools/check_oracles.py: columns sorted by
-name, rows sorted, exact for ints/strings, atol 1e-9 for floats.
+sf0.001 for speed, and so do the in-window codec round trips and
+time-series queries. Same comparison discipline as
+tools/check_oracles.py: columns sorted by name, rows sorted, exact for
+ints/strings, atol 1e-9 for floats.
 """
 
 from __future__ import annotations
@@ -44,9 +45,17 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 
 # in-window queries whose values no other test compares: the three
-# codec round trips, one per kernel dispatch (last_value, v1, dfcm)
+# codec round trips, one per kernel dispatch (last_value, v1, dfcm),
+# and the time-series queries that run the encode, rollup, sketch and
+# streaming plans (their extra-list siblings compaction_inventory,
+# gapfill_1h_ffill and sessionize are checked above)
 _WINDOW_NAMES = ["codec_roundtrip", "codec_roundtrip_v1",
-                 "codec_roundtrip_dfcm"]
+                 "codec_roundtrip_dfcm", "rollup_1m", "rollup_1d",
+                 "rollup_1h_cascade", "rollup_1d_sketch_p95",
+                 "stream_rollup_1d_sketch_p95",
+                 "rollup_1d_sketch_quantiles", "latency_stats_per_series",
+                 "event_type_rates_1h", "stream_event_rates_1h",
+                 "block_inventory"]
 
 
 def _extra_names():

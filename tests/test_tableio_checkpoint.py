@@ -293,6 +293,62 @@ def test_compact_sweep_with_concurrent_append(spark, tmp_path):
     assert final.where(F.col("series_key") == "s2").count() == 1
 
 
+def test_compaction_rewrite_is_deterministic(spark, tmp_path):
+    """Copies of one fragmented table compact to the same files: file k
+    of one rewrite holds exactly the rows, in the same order, as file k
+    of another, so stored bytes per seed can be compared run to run.
+    Every append file here holds as many blocks of one size as the
+    others, so the files tie on size and the compaction scan takes them
+    in directory-listing order, which differs between copies."""
+    from gorillaspark.operators.encode import encode_points
+    from gorillaspark.operators.normalize import block_key
+    from gorillaspark.plans.maintenance import compact_sweep
+
+    day = 86_400_000
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    def part(d):  # the encode shuffle's partition of (key, day d)
+        return F.pmod(F.hash("series_key",
+                              block_key(F.lit(d * day).cast("long"))),
+                      F.lit(n_part))
+
+    cand = spark.createDataFrame([(f"s{i:03d}",) for i in range(400)],
+                                 "series_key string")
+    by_part: dict[int, list[str]] = {}
+    for r in cand.select("series_key", part(1).alias("p")) \
+            .where(part(2) == F.col("p")).collect():
+        by_part.setdefault(r.p, []).append(r.series_key)
+    keys = [k for p in range(n_part) for k in sorted(by_part[p])[:3]]
+    offs = range(0, day, 600_000)
+    pts = spark.createDataFrame(
+        [(k, d * day + o, float(i % 7)) for k in keys for d in (1, 2)
+         for i, o in enumerate(offs)],
+        "series_key string, ts_ms long, value double")
+    # day 1 is cut in two; day 2 arrives whole and passes through
+    cuts = [day, day + day // 2, 3 * day]
+
+    def rewritten(name: str) -> list:
+        io = ParquetTableIO(spark, str(tmp_path / name))
+        for i, (lo, hi) in enumerate(zip(cuts, cuts[1:])):
+            io.append("blocks", encode_points(
+                pts.where((F.col("ts_ms") >= lo) & (F.col("ts_ms") < hi))),
+                commit_key=f"mb/{i}")
+        assert compact_sweep(spark, io, "blocks", job_id="j") == len(keys)
+        [snap] = [s for s in io.snapshots("blocks")
+                  if s.commit_key.startswith("j/compact/")]
+        files = glob.glob(os.path.join(snap.files[0], "*.parquet"))
+        files.sort(key=lambda p: int(os.path.basename(p).split("-")[1]))
+        return [pq.read_table(p) for p in files]
+
+    first = rewritten("w0")
+    assert sum(t.num_rows for t in first) == 2 * len(keys)
+    for name in ("w1", "w2"):
+        other = rewritten(name)
+        assert len(other) == len(first)
+        for a, b in zip(first, other):
+            assert a.equals(b)
+
+
 def test_rewrite_time_travel_consistent_at_concurrent_snapshot(spark, io):
     """ADVICE r4: the rewrite snapshot is inserted at the anchor
     position, not the manifest tail — so a cumulative read pinned at a

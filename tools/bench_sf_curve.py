@@ -52,8 +52,7 @@ def main() -> None:
     from gorillaspark.queries import _synth_jpeg_udf
 
     spark = build_session(app="gorillaspark-sf-curve",
-                          master=f"local[{args.cpus}]",
-                          shuffle_partitions=max(args.cpus, 32))
+                          master=f"local[{args.cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 
     docs = spark.read.parquet(f"{args.sf_dir}/documents.parquet")

@@ -51,10 +51,7 @@ def main() -> int:
     argv = sys.argv[1:]
     with_extra = "--extra" in argv
     only = [a for a in argv if a != "--extra"] or None
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
-                              len(os.sched_getaffinity(0))))
-    spark = build_session(app="oracle-check", master=f"local[{cpus}]",
-                          shuffle_partitions=max(cpus, 8))
+    spark = build_session(app="oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
