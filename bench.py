@@ -13,8 +13,8 @@ may run on):
 
 Output: {"metric": ..., "value": <total sec>, "unit": "sec",
          "queries": {name: sec}, "sf": ..., plus codec throughput
-         fields}. Scaling evidence (local[8] vs local[32]) is produced
-by tools/bench_scaling.py → BENCH/BASELINE.md.
+         fields}. The local[32]-era scaling evidence (local[8] vs
+local[32]) is kept in BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -243,18 +243,6 @@ def main() -> None:
                        .alias("payload")))
     timed("media_decode_h264",
           lambda: video_frame_stats(media_h, every_ms=500).count())
-    # late r8: HEVC I-B-P ladder decode (hvcC + CABAC + intra +
-    # merge/AMVP/bi MC + POC reorder) on a tenth of the corpus —
-    # the per-doc GOP encode (motion search) dominates the synth,
-    # so the slice keeps the headline comparable; no budget pinned
-    # yet (first round with the entry establishes the baseline)
-    from gorillaspark.queries import _synth_hvc1_b_udf
-    media_h5 = (docs_w.where(F.col("doc_id") % 10 == 1)
-                .select(F.col("doc_id").alias("media_id"),
-                        _synth_hvc1_b_udf()(F.col("doc_id"))
-                        .alias("payload")))
-    timed("media_decode_h265",
-          lambda: video_frame_stats(media_h5, every_ms=500).count())
 
     line = build_output_line(queries, extras, sf_dir, cpus, n_turns)
     shutil.rmtree(scratch, ignore_errors=True)

@@ -691,158 +691,3 @@ int gs_flac_crc(const unsigned char *d, long long n, int mode) {
     }
     return (int)c;
 }
-
-/* HEVC encoder motion search (operators/h265.py _search_mv): integer
- * full search around deduplicated full-pel start vectors + two rounds
- * of quarter-pel 8-neighbour refinement, with the lexicographic
- * (sad, mvx, mvy) tie-break. Fractional prediction replicates
- * _mc_plane exactly: edge-clamped gathers, 8-tap DCT-IF horizontal
- * then vertical with the << 6 / >> 6 shift chain and the (+32) >> 6
- * clip finalization — all int64, bit-identical to the numpy path
- * (which remains the correctness reference / fallback). */
-
-static long long gs__cl(long long v, long long hi) {
-    return v < 0 ? 0 : (v > hi ? hi : v);
-}
-
-static const int gs__lumaf[4][8] = {
-    {0, 0, 0, 64, 0, 0, 0, 0},
-    {-1, 4, -10, 58, 17, -5, 1, 0},
-    {-1, 4, -11, 40, 40, -11, 4, -1},
-    {0, 1, -5, 17, 58, -10, 4, -1},
-};
-
-static long long gs__mc_sad(const long long *ref, long long H,
-                            long long W, const long long *src,
-                            long long x0, long long y0, long long w,
-                            long long h, long long mvx, long long mvy) {
-    long long ix = x0 + (mvx >> 2), iy = y0 + (mvy >> 2);
-    int fx = (int)(mvx & 3), fy = (int)(mvy & 3);
-    long long sad = 0;
-    if (!fx && !fy) {
-        for (long long j = 0; j < h; j++) {
-            const long long *rrow = ref + gs__cl(iy + j, H - 1) * W;
-            const long long *srow = src + j * w;
-            for (long long i = 0; i < w; i++) {
-                long long d = rrow[gs__cl(ix + i, W - 1)] - srow[i];
-                sad += d < 0 ? -d : d;
-            }
-        }
-        return sad;
-    }
-    long long hbuf[23 * 16];             /* (h + 7) x w, both <= 16 */
-    if (fx) {
-        const int *f = gs__lumaf[fx];
-        for (long long j = 0; j < h + 7; j++) {
-            const long long *rrow =
-                ref + gs__cl(iy - 3 + j, H - 1) * W;
-            for (long long i = 0; i < w; i++) {
-                long long acc = 0;
-                for (int t = 0; t < 8; t++)
-                    acc += (long long)f[t] *
-                        rrow[gs__cl(ix - 3 + i + t, W - 1)];
-                hbuf[j * w + i] = acc;
-            }
-        }
-    } else {
-        for (long long j = 0; j < h + 7; j++) {
-            const long long *rrow =
-                ref + gs__cl(iy - 3 + j, H - 1) * W;
-            for (long long i = 0; i < w; i++)
-                hbuf[j * w + i] = rrow[gs__cl(ix + i, W - 1)] << 6;
-        }
-    }
-    for (long long j = 0; j < h; j++) {
-        const long long *srow = src + j * w;
-        for (long long i = 0; i < w; i++) {
-            long long p;
-            if (fy) {
-                const int *f = gs__lumaf[fy];
-                long long acc = 0;
-                for (int t = 0; t < 8; t++)
-                    acc += (long long)f[t] * hbuf[(j + t) * w + i];
-                p = acc >> 6;
-            } else {
-                p = hbuf[(j + 3) * w + i];
-            }
-            p = (p + 32) >> 6;
-            if (p < 0) p = 0; else if (p > 255) p = 255;
-            long long d = p - srow[i];
-            sad += d < 0 ? -d : d;
-        }
-    }
-    return sad;
-}
-
-int gs_h265_search_mv(const long long *ref, long long H, long long W,
-                      const long long *src, long long x0, long long y0,
-                      long long w, long long h, const long long *starts,
-                      long long n_starts, long long rng,
-                      long long *out) {
-    long long bs = -1, bx = 0, by = 0;
-    for (long long s = 0; s <= n_starts; s++) {
-        long long sx = 0, sy = 0;
-        if (s < n_starts) {
-            sx = (starts[2 * s] >> 2) << 2;
-            sy = (starts[2 * s + 1] >> 2) << 2;
-        }
-        int dup = 0;
-        for (long long t = 0; t < s && !dup; t++) {
-            long long tx = 0, ty = 0;
-            if (t < n_starts) {
-                tx = (starts[2 * t] >> 2) << 2;
-                ty = (starts[2 * t + 1] >> 2) << 2;
-            }
-            if (tx == sx && ty == sy) dup = 1;
-        }
-        if (dup) continue;
-        for (long long dx = -rng; dx <= rng; dx++) {
-            for (long long dy = -rng; dy <= rng; dy++) {
-                long long mvx = sx + 4 * dx, mvy = sy + 4 * dy;
-                long long ix = x0 + (mvx >> 2), iy = y0 + (mvy >> 2);
-                long long sad = 0;
-                for (long long j = 0; j < h; j++) {
-                    const long long *rrow =
-                        ref + gs__cl(iy + j, H - 1) * W;
-                    const long long *srow = src + j * w;
-                    for (long long i = 0; i < w; i++) {
-                        long long d =
-                            rrow[gs__cl(ix + i, W - 1)] - srow[i];
-                        sad += d < 0 ? -d : d;
-                    }
-                }
-                if (bs < 0 || sad < bs ||
-                    (sad == bs &&
-                     (mvx < bx || (mvx == bx && mvy < by)))) {
-                    bs = sad; bx = mvx; by = mvy;
-                }
-            }
-        }
-    }
-    long long seenx[32], seeny[32];
-    int nseen = 0;
-    for (int round = 0; round < 2; round++) {
-        long long cx = bx, cy = by;
-        for (int dy = -1; dy <= 1; dy++) {
-            for (int dx = -1; dx <= 1; dx++) {
-                if (!dx && !dy) continue;
-                long long mvx = cx + dx, mvy = cy + dy;
-                int dup = 0;
-                for (int t = 0; t < nseen && !dup; t++)
-                    if (seenx[t] == mvx && seeny[t] == mvy) dup = 1;
-                if (dup) continue;
-                seenx[nseen] = mvx; seeny[nseen] = mvy; nseen++;
-                long long sad = gs__mc_sad(ref, H, W, src, x0, y0,
-                                           w, h, mvx, mvy);
-                if (sad < bs ||
-                    (sad == bs &&
-                     (mvx < bx || (mvx == bx && mvy < by)))) {
-                    bs = sad; bx = mvx; by = mvy;
-                }
-            }
-        }
-        if (bx == cx && by == cy) break;
-    }
-    out[0] = bs; out[1] = bx; out[2] = by;
-    return 0;
-}

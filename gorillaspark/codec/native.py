@@ -90,11 +90,6 @@ def _load():
                                         ctypes.c_int64, ctypes.c_int, U8]
         lib.gs_flac_crc.restype = ctypes.c_int
         lib.gs_flac_crc.argtypes = [U8, ctypes.c_int64, ctypes.c_int]
-        lib.gs_h265_search_mv.restype = ctypes.c_int
-        lib.gs_h265_search_mv.argtypes = [
-            I64, ctypes.c_int64, ctypes.c_int64, I64, ctypes.c_int64,
-            ctypes.c_int64, ctypes.c_int64, ctypes.c_int64, I64,
-            ctypes.c_int64, ctypes.c_int64, I64]
         I32 = ctypes.POINTER(ctypes.c_int32)
         lib.gs_jpeg_scan.restype = ctypes.c_int
         lib.gs_jpeg_scan.argtypes = (
@@ -320,29 +315,6 @@ def jpeg_scan_native(data: bytes, start: int, mcux: int, mcuy: int,
     if rc != 0:
         raise ValueError(f"JPEG entropy decode failed ({rc})")
     return out.reshape(total_blocks, 64)
-
-
-def h265_search_mv_native(refY: np.ndarray, src_blk: np.ndarray,
-                          x0: int, y0: int, w: int, h: int,
-                          starts, rng: int):
-    """C fast path for the HEVC encoder motion search — same
-    (sad, (mvx, mvy)) as operators/h265._search_mv's numpy form
-    (which stays as the correctness reference / fallback); None when
-    the kernel is unavailable."""
-    if NATIVE is None:
-        return None
-    ref = np.ascontiguousarray(refY, dtype=np.int64)
-    src = np.ascontiguousarray(src_blk, dtype=np.int64)
-    n_starts = len(starts)
-    st = np.zeros(max(1, 2 * n_starts), dtype=np.int64)
-    for i, (sx, sy) in enumerate(starts):
-        st[2 * i] = sx
-        st[2 * i + 1] = sy
-    out = np.empty(3, dtype=np.int64)
-    NATIVE.gs_h265_search_mv(_p64(ref), ref.shape[0], ref.shape[1],
-                             _p64(src), x0, y0, w, h, _p64(st),
-                             n_starts, rng, _p64(out))
-    return int(out[0]), (int(out[1]), int(out[2]))
 
 
 def flac_crc_native(data: bytes, mode: int):

@@ -2,7 +2,7 @@
 formerly the last named media stub on the multimodal surface
 (hev1/hvc1 MP4 tracks demuxed fine but their frame decode raised).
 
-Scope (r8): Main profile, 4:2:0, 8-bit, I and P slices —
+Scope (r8): Main profile, 4:2:0, 8-bit, I slices —
 * NAL layer: Annex-B start codes, the 2-byte H.265 NAL header
   (§7.3.1.2: nal_unit_type(6) / nuh_layer_id(6) / temporal_id(3)),
   emulation-prevention handling shared with h264.py.
@@ -40,31 +40,17 @@ Scope (r8): Main profile, 4:2:0, 8-bit, I and P slices —
   every structural piece (engine, binarizations, syntax order,
   scans, transforms, prediction) is already here.
 
-P and B slices (late r8): TRAIL_R pictures over a POC-keyed DPB
-(slice-local short-term RPS: one negative pic for P, one negative
-+ one positive for B), cu_skip / merge / AMVP motion derivation
-(§8.5.3.2 spatial candidates incl. the second-PU split exclusions
-and the §8.5.3.2.4 combined bi-predictive candidates; no TMVP —
-SPS flag 0; cross-list AMVP scaled by the exact §8.5.3.2.8
-POC-distance formula), inter part modes 2Nx2N / 2NxN / Nx2N + the four
-AMP quarter-splits at CB16 (amp_enabled_flag, Table 9-34 bypass
-bins),
-inter_pred_idc L0/L1/BI with the §8.5.4.2.3.2 bi combiner over
-unfinalized 14-bit planes, quarter-pel luma 8-tap + eighth-pel
-chroma 4-tap DCT-IF interpolation (§8.5.4.2.2, exact shift chain),
-mvd_coding (EG1 bypass) and TU == CU inter residuals under
-max_transform_hierarchy_depth_inter = 1 (split_transform_flag
-coded 0 — inter TUs legally span PU boundaries, avoiding the
-forced §7.4.9.8 RQT split). Decode returns display (POC) order;
-the encoder's ``b_frames=True`` codes an I-B-P ladder.
+Intra only: every picture is an IDR I slice, and a stream carrying
+inter (TRAIL P/B) pictures raises ``NotImplementedError``. The SPS
+signals AMP off and an inter transform depth of 0.
 
-In-loop filters (late r8): deblocking (§8.7.2 — 8-grid edges, bS
-from per-cell CU/PU identity + cbf metadata, Table 8-12 beta/tC,
+In-loop filters (late r8): deblocking (§8.7.2 — CU edges on the
+8-sample grid, all bS 2 since every CU is intra, Table 8-12 beta/tC,
 strong/weak luma + bS-2 chroma; PPS signals on/off, lossless keeps
 it off) runs first, then SAO (per-CTB band/edge offsets with
 merge-left/up, §8.7.3 classification on the deblocked recon); the
-filtered picture is the output AND the reference. Lossless slices
-opt out of both (they would perturb transquant-bypass exactness).
+filtered picture is the output. Lossless slices opt out of both
+(they would perturb transquant-bypass exactness).
 
 Deliberately out of scope (reject loudly): PCM, scaling lists,
 tiles, WPP, long-term refs, 4:2:2/4:4:4, >8-bit.
@@ -84,7 +70,6 @@ import numpy as np
 
 from .h264 import _Bits, _BitW, _escape, _unescape
 from .h264_cabac import _CabacDec, _CabacEnc
-from ..codec.native import h265_search_mv_native
 
 # gorillaspark HEVC marker (prefix SEI, user_data_unregistered):
 # gates CABAC decode to own streams — see module docstring
@@ -269,14 +254,10 @@ def _write_sps(bw: _BitW, w: int, h: int, crop=(0, 0, 0, 0)):
     bw.ue(1)                     # log2_diff_max_min_luma_coding_block_size
     bw.ue(0)                     # log2_min_luma_transform_block_size_minus2
     bw.ue(2)                     # log2_diff_max_min_luma_transform_block_size
-    # depth_inter = 1 so split_transform_flag is CODED (always 0) on
-    # inter CUs — TU == CU even for partitioned PUs (legal: inter TUs
-    # may span PU boundaries), avoiding the forced interSplitFlag
-    # quad-split of §7.4.9.8 that depth 0 would impose
-    bw.ue(1)                     # max_transform_hierarchy_depth_inter
+    bw.ue(0)                     # max_transform_hierarchy_depth_inter
     bw.ue(0)                     # max_transform_hierarchy_depth_intra
     bw.u(0, 1)                   # scaling_list_enabled_flag
-    bw.u(1, 1)                   # amp_enabled_flag (late r8: AMP)
+    bw.u(0, 1)                   # amp_enabled_flag
     bw.u(1, 1)          # sample_adaptive_offset_enabled_flag (late r8)
     bw.u(0, 1)                   # pcm_enabled_flag
     bw.ue(0)                     # num_short_term_ref_pic_sets
@@ -310,16 +291,9 @@ def _parse_sps(br: _Bits) -> dict:
     sps.update(w=w, h=h, crop=crop)
     if br.ue() or br.ue():
         raise NotImplementedError("bit depths beyond 8 unsupported")
-    sps["log2_max_poc"] = br.ue() + 4
-    if sps["log2_max_poc"] > 16:
+    # log2_max_pic_order_cnt_lsb: IDR slice headers carry no POC lsb
+    if br.ue() + 4 > 16:
         raise ValueError("log2_max_pic_order_cnt_lsb out of range")
-    if sps["log2_max_poc"] != 8:
-        # _parse_slice_header reads slice_pic_order_cnt_lsb as a fixed
-        # u(8) (the width our SPS writer always emits); any other
-        # width would misparse the rest of the header — reject loudly
-        # at the known unsupported field instead (ADVICE r8)
-        raise NotImplementedError(
-            "only log2_max_pic_order_cnt_lsb == 8 is supported")
     if br.u(1):                  # sub_layer_ordering_info_present
         br.ue(), br.ue(), br.ue()
     min_cb = br.ue() + 3
@@ -335,13 +309,12 @@ def _parse_sps(br: _Bits) -> dict:
                log2_min_tb=min_tb, log2_max_tb=max_tb)
     if w % (1 << ctb) or h % (1 << ctb):
         raise NotImplementedError("pic size not a CTB multiple")
-    sps["max_trafo_depth_inter"] = br.ue()
-    sps["max_trafo_depth_intra"] = br.ue()
-    if sps["max_trafo_depth_intra"] != 0:
+    br.ue()                      # max_transform_hierarchy_depth_inter
+    if br.ue() != 0:             # max_transform_hierarchy_depth_intra
         raise NotImplementedError("residual quadtree depth unsupported")
     if br.u(1):
         raise NotImplementedError("scaling lists unsupported")
-    sps["amp"] = br.u(1)         # asymmetric motion partitions
+    br.u(1)                      # amp_enabled_flag (inter-only)
     sps["sao"] = br.u(1)         # sample-adaptive offset
     if br.u(1):
         raise NotImplementedError("PCM unsupported")
@@ -460,98 +433,42 @@ def _parse_pps(br: _Bits) -> dict:
 
 
 def _write_slice_header(bw: _BitW, qp_delta: int = 0,
-                        slice_type: int = 2, poc_lsb: int = 0,
-                        d0: int = 1, d1: int = 1,
                         sao: bool = False):
-    """slice_segment_header (§7.3.6.1) for a one-segment slice under
-    this codec's fixed SPS/PPS. slice_type 2 = IDR I (byte-identical
-    to the r8 intra-only form); slice_type 1 = TRAIL P referencing
-    poc - d0; slice_type 0 = TRAIL B referencing poc - d0 (L0) and
-    poc + d1 (L1) — both via a slice-local short-term RPS with
-    every pic used_by_curr."""
+    """slice_segment_header (§7.3.6.1) of a one-segment IDR I slice
+    under this codec's fixed SPS/PPS."""
     bw.u(1, 1)                   # first_slice_segment_in_pic_flag
-    if slice_type == 2:
-        bw.u(0, 1)               # no_output_of_prior_pics_flag (IDR)
+    bw.u(0, 1)                   # no_output_of_prior_pics_flag (IDR)
     bw.ue(0)                     # slice_pic_parameter_set_id
-    bw.ue(slice_type)            # slice_type
-    if slice_type != 2:
-        bw.u(poc_lsb & 0xFF, 8)  # slice_pic_order_cnt_lsb (log2 = 8)
-        bw.u(0, 1)               # short_term_ref_pic_set_sps_flag
-        # st_ref_pic_set(0): sps holds none, so no inter-RPS pred flag
-        bw.ue(1)                 # num_negative_pics
-        bw.ue(1 if slice_type == 0 else 0)   # num_positive_pics
-        bw.ue(d0 - 1)            # delta_poc_s0_minus1[0]
-        bw.u(1, 1)               # used_by_curr_pic_s0_flag[0]
-        if slice_type == 0:
-            bw.ue(d1 - 1)        # delta_poc_s1_minus1[0]
-            bw.u(1, 1)           # used_by_curr_pic_s1_flag[0]
-        # long_term off; sps_temporal_mvp off -> no slice TMVP flag
+    bw.ue(2)                     # slice_type = I
     # SPS sample_adaptive_offset_enabled_flag is 1 (late r8), so the
     # per-slice opt-in flags are always present; lossless slices
     # write 0 (SAO would perturb the transquant-bypass exactness)
     bw.u(1 if sao else 0, 1)     # slice_sao_luma_flag
     bw.u(1 if sao else 0, 1)     # slice_sao_chroma_flag
-    if slice_type in (0, 1):
-        bw.u(0, 1)               # num_ref_idx_active_override_flag
-        # lists_modification absent (flag off, NumPicTotalCurr small);
-        # cabac_init absent; no collocated (TMVP off); no weight table
-        if slice_type == 0:
-            bw.u(0, 1)           # mvd_l1_zero_flag
-        bw.ue(0)                 # five_minus_max_num_merge_cand -> 5
     bw.se(qp_delta)              # slice_qp_delta
-    # (pps deblocking: disabled, not overridable; SAO: off)
     bw.trailing()                # byte_alignment before slice data
 
 
-def _parse_slice_header(br: _Bits, pps: dict, is_idr: bool = True,
+def _parse_slice_header(br: _Bits, pps: dict,
                         sao_present: bool = True) -> dict:
+    """Parse the header of an IDR slice segment (the only picture
+    type this codec decodes)."""
     if not br.u(1):
         raise NotImplementedError("multi-segment slices unsupported")
-    if is_idr:
-        br.u(1)                  # no_output_of_prior_pics_flag
+    br.u(1)                      # no_output_of_prior_pics_flag
     if br.ue() != 0:
         raise NotImplementedError("non-zero slice PPS id unsupported")
     st = br.ue()
     if st not in (0, 1, 2):
         raise ValueError(f"illegal slice_type {st}")
-    if is_idr and st != 2:
+    if st != 2:
         raise ValueError("IDR access unit with a non-I slice")
-    sh = {"type": st, "poc_lsb": 0, "max_merge": 5,
-          "d0": 0, "d1": 0}
-    if not is_idr:
-        sh["poc_lsb"] = br.u(8)  # log2_max_poc fixed at 8 by our SPS
-        if br.u(1):
-            raise NotImplementedError("SPS-indexed short-term RPS "
-                                      "unsupported")
-        n_neg, n_pos = br.ue(), br.ue()
-        if n_neg != 1 or n_pos > 1:
-            raise NotImplementedError(
-                "DPB shapes beyond one negative + at most one "
-                "positive reference unsupported")
-        sh["d0"] = br.ue() + 1
-        if not br.u(1):
-            raise NotImplementedError("unused reference pic in RPS")
-        if n_pos:
-            sh["d1"] = br.ue() + 1
-            if not br.u(1):
-                raise NotImplementedError("unused reference pic in RPS")
-        if st == 0 and not n_pos:
-            raise ValueError("B slice without a positive reference")
+    sh = {}
     if sao_present:
         sh["sao_luma"] = br.u(1)
         sh["sao_chroma"] = br.u(1)
     else:
         sh["sao_luma"] = sh["sao_chroma"] = 0
-    if st in (0, 1):
-        if br.u(1):
-            raise NotImplementedError(
-                "num_ref_idx_active_override unsupported")
-        if st == 0 and br.u(1):
-            raise NotImplementedError("mvd_l1_zero unsupported")
-        five = br.ue()
-        if five > 4:
-            raise ValueError("five_minus_max_num_merge_cand out of range")
-        sh["max_merge"] = 5 - five
     qp = pps["qp"] + br.se()
     if not 0 <= qp <= 51:
         raise ValueError("slice QP out of range")
@@ -630,29 +547,6 @@ def hevc_to_hvc1_sample(annexb: bytes) -> bytes:
     return bytes(out)
 
 
-def hevc_gop_to_hvc1_samples(annexb: bytes):
-    """Split a GOP Annex-B stream into per-access-unit hvc1 sample
-    payloads plus the shared hvcC record body: parameter sets go to
-    the record, non-slice NALs (SEI) attach to the following slice,
-    and each slice NAL closes one sample."""
-    hvcc = hevc_hvcc_config(annexb)
-    samples = []
-    pending = bytearray()
-    for nal_type, _lid, tid, rbsp in _split_annexb_h265(annexb):
-        if nal_type in (_NAL_VPS, _NAL_SPS, _NAL_PPS):
-            continue
-        nal = _raw_nal(nal_type, rbsp, tid)
-        pending += len(nal).to_bytes(4, "big") + nal
-        if nal_type < 32:                      # VCL NAL ends the AU
-            samples.append(bytes(pending))
-            pending.clear()
-    if pending:
-        raise ValueError("trailing non-VCL NALs after the last slice")
-    if not samples:
-        raise ValueError("stream has no coded slices")
-    return samples, hvcc
-
-
 def hevc_sample_to_annexb(sample: bytes, hvcc: bytes) -> bytes:
     """Rebuild a decodable Annex-B access unit from a
     length-prefixed hvc1 sample plus its track's hvcC record."""
@@ -707,21 +601,9 @@ _CSBF = 47          # 4: (chroma ? 2 : 0) + min(csbf_right+csbf_below, 1)
 _SIG = 51           # 19: luma 0..10, chroma 11..18 (see _sig_ctx)
 _GT1 = 70           # 24: luma sets 0..3, chroma sets 4..5, x4 each
 _GT2 = 94           # 6: one per ctxSet
-# inter (P slices, r8):
-_CU_SKIP = 100      # 3: + left_skip + above_skip (§9.3.4.2.2)
-_PRED_MODE = 103    # 1: pred_mode_flag
-_PART_INTER = 104   # 2: inter part_mode bins 0/1 ("1"/"01"/"00")
-_MERGE_FLAG = 106   # 1
-_MERGE_IDX = 107    # 1: bin0 (rest bypass, TR cMax = MaxMerge-1)
-_MVD_GR0 = 108      # 1: abs_mvd_greater0_flag (shared across comps)
-_MVD_GR1 = 109      # 1: abs_mvd_greater1_flag
-_MVP_FLAG = 110     # 1: mvp_l0_flag
-_RQT_ROOT = 111     # 1: rqt_root_cbf
-_SPLIT_TF = 112     # 3: split_transform_flag, ctxInc 5 - log2TrafoSize
-_INTER_DIR = 115    # 2: inter_pred_idc bins ("1"=BI / "0x"=L0|L1)
-_SAO_MERGE = 117    # 1: sao_merge_left/up_flag (shared, §9.3.4.2.2)
-_SAO_TYPE = 118     # 1: sao_type_idx bin0 (bin1 bypass)
-N_CTX5 = 119
+_SAO_MERGE = 100    # 1: sao_merge_left/up_flag (shared, §9.3.4.2.2)
+_SAO_TYPE = 101     # 1: sao_type_idx bin0 (bin1 bypass)
+N_CTX5 = 102
 
 
 class _Ctx5:
@@ -821,8 +703,8 @@ _LEVEL_SCALE = [40, 45, 51, 57, 64, 72]       # dequant (§8.6.3)
 _QUANT_SCALE = [26214, 23302, 20560, 18396, 16384, 14564]
 
 
-def _tb_matrix(n: int, is_luma: bool, intra: bool = True) -> np.ndarray:
-    if n == 4 and is_luma and intra:
+def _tb_matrix(n: int, is_luma: bool) -> np.ndarray:
+    if n == 4 and is_luma:
         return _DST4
     return _DCT[n]
 
@@ -1365,8 +1247,8 @@ def _dec_residual5(dec: _CabacDec, ctx: _Ctx5, log2_tb: int,
 # coding units, quadtree, slice codec
 # ---------------------------------------------------------------------------
 # Deblocking filter (§8.7.2) — vertical edges then horizontal, on the
-# 8-sample luma grid (16 for chroma); the filtered picture feeds SAO
-# and becomes the reference. Within a pass the filters of adjacent
+# 8-sample luma grid (16 for chroma); the filtered picture feeds SAO.
+# Within a pass the filters of adjacent
 # edges never overlap (3-sample reach + 4-sample reads on an 8 grid),
 # so in-place application matches the spec's parallel definition.
 # ---------------------------------------------------------------------------
@@ -1385,46 +1267,13 @@ _DBF_TC = (
     6, 6, 7, 8, 9, 10, 11, 13, 14, 16, 18, 20, 22, 24)
 
 
-def _bs_for_cells(fr, pby, pbx, qby, qbx, ref_pocs):
-    """Boundary strength (§8.7.2.4) between the 4x4 cells p and q
-    across a PU/TU boundary. With one reference per list, the
-    spec's motion compare reduces to comparing the per-picture
-    vectors of the (unique-POC) picture sets."""
-    p_intra = not fr.pdir[pby, pbx]
-    q_intra = not fr.pdir[qby, qbx]
-    if p_intra or q_intra:
-        return 2
-    cu_edge = fr.cu_id[pby, pbx] != fr.cu_id[qby, qbx]
-    if cu_edge and (fr.cbf[pby, pbx] or fr.cbf[qby, qbx]):
-        return 1
-
-    def motion(by, bx):
-        d = int(fr.pdir[by, bx])
-        out = {}
-        if d & 1:
-            out[ref_pocs[0]] = (int(fr.mvs[by, bx, 0, 0]),
-                                int(fr.mvs[by, bx, 0, 1]))
-        if d & 2:
-            out[ref_pocs[1]] = (int(fr.mvs[by, bx, 1, 0]),
-                                int(fr.mvs[by, bx, 1, 1]))
-        return out
-
-    mp, mq = motion(pby, pbx), motion(qby, qbx)
-    if set(mp) != set(mq):
-        return 1
-    for poc, mv in mp.items():
-        ov = mq[poc]
-        if abs(mv[0] - ov[0]) >= 4 or abs(mv[1] - ov[1]) >= 4:
-            return 1
-    return 0
-
-
-def _dbf_luma_seg(win: np.ndarray, qp: int, bs: int) -> bool:
-    """Filter one 4-line luma segment in place. ``win`` is the
-    (4, 8) window [p3 p2 p1 p0 | q0 q1 q2 q3] sharing memory with
-    the plane. Returns whether anything changed."""
+def _dbf_luma_seg(win: np.ndarray, qp: int) -> bool:
+    """Filter one 4-line luma segment in place at boundary strength
+    2 (an intra edge). ``win`` is the (4, 8) window
+    [p3 p2 p1 p0 | q0 q1 q2 q3] sharing memory with the plane.
+    Returns whether anything changed."""
     beta = _DBF_BETA[min(max(qp, 0), 51)]
-    tc = _DBF_TC[min(max(qp + 2 * (bs - 1), 0), 53)]
+    tc = _DBF_TC[min(max(qp + 2, 0), 53)]
     if beta == 0:
         return False
     p0, p1, p2, p3 = (win[:, 3], win[:, 2], win[:, 1], win[:, 0])
@@ -1497,10 +1346,12 @@ def _dbf_chroma_seg(win: np.ndarray, qpc: int) -> None:
     win[:, 2] = np.clip(o_q0 - dlt, 0, 255)
 
 
-def _deblock(fr, qp: int, ref_pocs=(None, None)) -> None:
+def _deblock(fr, qp: int) -> None:
     """Whole-picture deblocking: luma + chroma, vertical pass then
     horizontal pass (the horizontal decisions read vertically
-    filtered samples, §8.7.2)."""
+    filtered samples, §8.7.2). Every picture is intra, so each CU
+    edge on the 8-sample grid has boundary strength 2 (§8.7.2.4)
+    and the chroma edges on the 16-sample grid are filtered too."""
     qpc = _chroma_qp(qp)
     H, W = fr.Y.shape
     for vertical in (True, False):
@@ -1514,17 +1365,14 @@ def _deblock(fr, qp: int, ref_pocs=(None, None)) -> None:
                     pby, pbx, qby, qbx = sb, eb - 1, sb, eb
                 else:
                     pby, pbx, qby, qbx = eb - 1, sb, eb, sb
-                if fr.pu_id[pby, pbx] == fr.pu_id[qby, qbx]:
-                    continue                      # not a PU/TU edge
-                bs = _bs_for_cells(fr, pby, pbx, qby, qbx, ref_pocs)
-                if bs == 0:
-                    continue
+                if fr.cu_id[pby, pbx] == fr.cu_id[qby, qbx]:
+                    continue                      # not a CU edge
                 if vertical:
                     win = fr.Y[s0:s0 + 4, e - 4:e + 4]
                 else:
                     win = fr.Y[e - 4:e + 4, s0:s0 + 4].T
-                _dbf_luma_seg(win, qp, bs)
-                if bs == 2 and e % 16 == 0:
+                _dbf_luma_seg(win, qp)
+                if e % 16 == 0:
                     ce, cs = e // 2, s0 // 2
                     for plane in (fr.Cb, fr.Cr):
                         if vertical:
@@ -1714,8 +1562,7 @@ def _sao_apply_region(dst: np.ndarray, src: np.ndarray, x0: int,
 
 def _apply_sao(fr, all_params: dict, ctbs_w: int, ctbs_h: int):
     """Frame-level SAO pass: classification reads the pre-SAO recon
-    of every plane; the filtered planes replace the frame's (they
-    are both the output and the reference for later pictures)."""
+    of every plane; the filtered planes replace the frame's."""
     srcY = fr.Y.copy()
     srcCb = fr.Cb.copy()
     srcCr = fr.Cr.copy()
@@ -1803,48 +1650,29 @@ def _sao_choose_comp(src: np.ndarray, rec: np.ndarray, x0: int,
 class _Frame5:
     """Per-frame decode/encode state: recon planes plus the
     4x4-luma-granular availability / intra-mode / CU-depth grids the
-    context and prediction derivations need. P/B slices (r8) add
-    the 4x4-granular motion field: ``mvs`` (quarter-luma-pel
-    vectors, indexed [y, x, list, comp]), ``pdir`` (0 = intra/none,
-    1 = L0, 2 = L1, 3 = bi), and ``skip`` (cu_skip_flag of the
-    covering CU, for the skip context)."""
+    context and prediction derivations need, and the CU identity per
+    4x4 cell that deblocking reads to find CU edges."""
 
-    __slots__ = ("Y", "Cb", "Cr", "avail", "modes", "depths",
-                 "mvs", "pdir", "skip", "W", "H", "poc",
-                 "cu_id", "pu_id", "cbf", "next_id")
+    __slots__ = ("Y", "Cb", "Cr", "avail", "modes", "depths", "cu_id",
+                 "next_id")
 
     def __init__(self, W: int, H: int):
-        self.W, self.H = W, H
-        self.poc = 0
         self.Y = np.zeros((H, W), dtype=np.int64)
         self.Cb = np.full((H // 2, W // 2), 128, dtype=np.int64)
         self.Cr = np.full((H // 2, W // 2), 128, dtype=np.int64)
         self.avail = np.zeros((H // 4, W // 4), dtype=bool)
         self.modes = np.full((H // 4, W // 4), -1, dtype=np.int16)
         self.depths = np.zeros((H // 4, W // 4), dtype=np.int8)
-        self.mvs = np.zeros((H // 4, W // 4, 2, 2), dtype=np.int32)
-        self.pdir = np.zeros((H // 4, W // 4), dtype=np.uint8)
-        self.skip = np.zeros((H // 4, W // 4), dtype=bool)
-        # deblocking metadata (late r8): CU / PU identity per 4x4
-        # cell (boundary detection on the 8-sample grid) and the
-        # luma coded-residual flag of the covering TU
         self.cu_id = np.full((H // 4, W // 4), -1, dtype=np.int32)
-        self.pu_id = np.full((H // 4, W // 4), -1, dtype=np.int32)
-        self.cbf = np.zeros((H // 4, W // 4), dtype=bool)
         self.next_id = 0
 
     def new_id(self) -> int:
         self.next_id += 1
         return self.next_id - 1
 
-    def mark_ids(self, x0: int, y0: int, w: int, h: int,
-                 cu: int, pu: int, cbf=None):
-        bx, by = x0 // 4, y0 // 4
-        bw_, bh_ = w // 4, h // 4
-        self.cu_id[by:by + bh_, bx:bx + bw_] = cu
-        self.pu_id[by:by + bh_, bx:bx + bw_] = pu
-        if cbf is not None:
-            self.cbf[by:by + bh_, bx:bx + bw_] = cbf
+    def mark_cu(self, x0: int, y0: int, size: int, cu: int):
+        bx, by, bs = x0 // 4, y0 // 4, size // 4
+        self.cu_id[by:by + bs, bx:bx + bs] = cu
 
 
 def _split_ctx(fr: _Frame5, x0: int, y0: int, depth: int) -> int:
@@ -1915,18 +1743,16 @@ def _predict_tb(fr: _Frame5, plane: np.ndarray, x0: int, y0: int,
 
 
 def _recon_tb(pred: np.ndarray, levels, qp: int, log2_tb: int,
-              is_luma: bool, bypass: bool,
-              intra: bool = True) -> np.ndarray:
-    """pred + inverse-scaled residual, clipped to 8-bit. ``intra``
-    picks DST-VII for 4x4 luma (§8.6.4.2 applies it to intra only —
-    inter residuals always use DCT-II)."""
+              is_luma: bool, bypass: bool) -> np.ndarray:
+    """pred + inverse-scaled residual, clipped to 8-bit (DST-VII for
+    4x4 intra luma, §8.6.4.2)."""
     if levels is None:
         return np.clip(pred, 0, 255)
     if bypass:
         res = levels
     else:
         d = _dequant(levels, qp, log2_tb)
-        res = _inv_transform(d, _tb_matrix(1 << log2_tb, is_luma, intra))
+        res = _inv_transform(d, _tb_matrix(1 << log2_tb, is_luma))
     return np.clip(pred + res, 0, 255)
 
 
@@ -1940,597 +1766,12 @@ def _mark(fr: _Frame5, x0: int, y0: int, size: int, depth: int,
         fr.modes[by:by + bs, bx:bx + bs] = mode
 
 
-# ---------------------------------------------------------------------------
-# inter prediction — P slices (r8)
-# ---------------------------------------------------------------------------
-
-# §8.5.4.2.2.1 Table 8-12: 8-tap DCT-IF luma filters (quarter-pel)
-_LUMA_FILT = {
-    1: (-1, 4, -10, 58, 17, -5, 1, 0),
-    2: (-1, 4, -11, 40, 40, -11, 4, -1),
-    3: (0, 1, -5, 17, 58, -10, 4, -1),
-}
-# §8.5.4.2.2.2 Table 8-13: 4-tap chroma filters (eighth-pel)
-_CHROMA_FILT = {
-    1: (-2, 58, 10, -2),
-    2: (-4, 54, 16, -2),
-    3: (-6, 46, 28, -4),
-    4: (-4, 36, 36, -4),
-    5: (-4, 28, 46, -6),
-    6: (-2, 16, 54, -4),
-    7: (-2, 10, 58, -2),
-}
-
-_FILT_VECS: dict = {}
-
-
-def _win1(a: np.ndarray, n: int, axis: int) -> np.ndarray:
-    """Length-``n`` sliding windows of 2-D ``a`` along ``axis`` as a
-    read-only strided view (sliding_window_view without its ~30 µs of
-    per-call Python argument normalization — these run in the motion
-    search inner loop)."""
-    s0, s1 = a.strides
-    if axis:
-        return np.lib.stride_tricks.as_strided(
-            a, (a.shape[0], a.shape[1] - n + 1, n), (s0, s1, s1),
-            writeable=False)
-    return np.lib.stride_tricks.as_strided(
-        a, (a.shape[0] - n + 1, a.shape[1], n), (s0, s1, s0),
-        writeable=False)
-
-
-def _win2(a: np.ndarray, h: int, w: int) -> np.ndarray:
-    """All (h, w) sliding windows of 2-D ``a`` as a strided view of
-    shape (rows-h+1, cols-w+1, h, w)."""
-    s0, s1 = a.strides
-    return np.lib.stride_tricks.as_strided(
-        a, (a.shape[0] - h + 1, a.shape[1] - w + 1, h, w),
-        (s0, s1, s0, s1), writeable=False)
-
-
-def _filt_vec(filt: dict, frac: int) -> np.ndarray:
-    """Filter taps as a cached int64 vector for the matmul form of
-    _mc_plane (keyed by table identity + fraction)."""
-    key = (id(filt), frac)
-    v = _FILT_VECS.get(key)
-    if v is None:
-        v = np.array(filt[frac], dtype=np.int64)
-        _FILT_VECS[key] = v
-    return v
-
-
-def _mc_plane(ref: np.ndarray, x0: int, y0: int, w: int, h: int,
-              mvx: int, mvy: int, taps: int, filt: dict,
-              frac_bits: int, finalize: bool = True) -> np.ndarray:
-    """Fractional-sample motion compensation for one plane
-    (§8.5.4.2.2): separable DCT-IF, horizontal then vertical, with
-    the 8-bit shift chain shift1=0 / shift2=6 / shift3=6 and the
-    uni-prediction finalization (+32) >> 6 of §8.5.4.2.3.2 (or the
-    raw 14-bit plane when ``finalize`` is False — the bi-prediction
-    combiner needs both lists unfinalized, §8.5.4.2.3.2's
-    (L0 + L1 + 64) >> 7 chain). Out-of-picture positions clamp to
-    the frame edge (the spec's coordinate Clip3). ``frac_bits`` is
-    2 for luma quarter-pel MVs, 3 for chroma (luma MV reused at
-    eighth-chroma-pel precision).
-
-    The full-pel fast path (ref << 6, +32 >> 6) is an exact copy; the
-    mixed-fraction chains are exact too: the pre-shifted << 6
-    intermediate is a multiple of 64, so the later >> 6 loses no
-    bits (matching the spec's unshifted single-stage forms)."""
-    H, W = ref.shape
-    ix = x0 + (mvx >> frac_bits)
-    iy = y0 + (mvy >> frac_bits)
-    fx = mvx & ((1 << frac_bits) - 1)
-    fy = mvy & ((1 << frac_bits) - 1)
-    if not fx and not fy:
-        xs = np.arange(ix, ix + w).clip(0, W - 1)
-        ys = np.arange(iy, iy + h).clip(0, H - 1)
-        p14 = ref[ys[:, None], xs].astype(np.int64) << 6
-    else:
-        lo = taps // 2 - 1                       # taps at -lo .. +lo+1
-        hi = taps - lo
-        xs = np.arange(ix - lo, ix + w + hi - 1).clip(0, W - 1)
-        ys = np.arange(iy - lo, iy + h + hi - 1).clip(0, H - 1)
-        win = np.ascontiguousarray(
-            ref[ys[:, None], xs].astype(np.int64))
-        # tap application as one integer matmul over a sliding view —
-        # integer addition is associative and exact, so any summation
-        # order matches the spec's left-to-right sum bit for bit
-        if fx:
-            hbuf = _win1(win, taps, 1) @ _filt_vec(filt, fx)
-        else:
-            hbuf = win[:, lo:lo + w] << 6
-        if fy:
-            p14 = (_win1(np.ascontiguousarray(hbuf), taps, 0)
-                   @ _filt_vec(filt, fy)) >> 6
-        else:
-            p14 = hbuf[lo:lo + h, :]
-    if not finalize:
-        return p14
-    return ((p14 + 32) >> 6).clip(0, 255)
-
-
-def _mc_luma(ref: np.ndarray, x0, y0, w, h, mv,
-             finalize: bool = True) -> np.ndarray:
-    return _mc_plane(ref, x0, y0, w, h, int(mv[0]), int(mv[1]),
-                     8, _LUMA_FILT, 2, finalize)
-
-
-def _mc_chroma(ref: np.ndarray, cx0, cy0, w, h, mv,
-               finalize: bool = True) -> np.ndarray:
-    return _mc_plane(ref, cx0, cy0, w, h, int(mv[0]), int(mv[1]),
-                     4, _CHROMA_FILT, 3, finalize)
-
-
-def _mot_at(fr: _Frame5, bx: int, by: int):
-    """Motion record (dir, mvL0, mvL1) of the 4x4 cell (bx, by), or
-    None when the cell is outside the picture, not yet decoded, or
-    intra-coded."""
-    if bx < 0 or by < 0 or bx >= fr.W // 4 or by >= fr.H // 4:
-        return None
-    if not fr.avail[by, bx] or not fr.pdir[by, bx]:
-        return None
-    return (int(fr.pdir[by, bx]),
-            (int(fr.mvs[by, bx, 0, 0]), int(fr.mvs[by, bx, 0, 1])),
-            (int(fr.mvs[by, bx, 1, 0]), int(fr.mvs[by, bx, 1, 1])))
-
-
-def _merge_candidates(fr: _Frame5, x0: int, y0: int, nw: int, nh: int,
-                      max_cand: int, no_a1: bool = False,
-                      no_b1: bool = False,
-                      slice_type: int = 1) -> list:
-    """§8.5.3.2.3 spatial merge list (single L0 reference, no TMVP —
-    sps_temporal_mvp_enabled_flag is 0 in our SPS): A1 B1 B0 A0 (B2
-    when fewer than 4), spec pruning pairs, zero-MV fill. With one
-    reference picture the spec's full motion compare reduces to an
-    MV compare. ``no_a1``/``no_b1`` implement the second-PU
-    exclusions of a vertical/horizontal split (the excluded position
-    lies in the sibling PU — merging with it would replicate
-    2Nx2N). B slices (``slice_type`` 0) append the §8.5.3.2.4
-    combined bi-predictive candidates before the zero fill, whose
-    direction is bi for B and L0 for P. Candidates are full motion
-    records (dir, mvL0, mvL1)."""
-    bx0, by0 = x0 // 4, y0 // 4
-    bw_, bh_ = nw // 4, nh // 4
-    a1 = None if no_a1 else _mot_at(fr, bx0 - 1, by0 + bh_ - 1)
-    b1 = None if no_b1 else _mot_at(fr, bx0 + bw_ - 1, by0 - 1)
-    b0 = _mot_at(fr, bx0 + bw_, by0 - 1)
-    a0 = _mot_at(fr, bx0 - 1, by0 + bh_)
-    b2 = _mot_at(fr, bx0 - 1, by0 - 1)
-    cands = []
-    if a1 is not None:
-        cands.append(a1)
-    if b1 is not None and b1 != a1:
-        cands.append(b1)
-    if b0 is not None and b0 != b1:
-        cands.append(b0)
-    if a0 is not None and a0 != a1:
-        cands.append(a0)
-    if len(cands) < 4 and b2 is not None and b2 != a1 and b2 != b1:
-        cands.append(b2)
-    if slice_type == 0 and len(cands) > 1:
-        # combined bi-predictive candidates: L0 of cand i + L1 of
-        # cand j over the spec's fixed index pair order
-        n0 = len(cands)
-        for i, j in ((0, 1), (1, 0), (0, 2), (2, 0), (1, 2), (2, 1),
-                     (0, 3), (3, 0), (1, 3), (3, 1), (2, 3), (3, 2)):
-            if len(cands) >= max_cand:
-                break
-            if i >= n0 or j >= n0:
-                continue
-            ca, cb = cands[i], cands[j]
-            if not (ca[0] & 1) or not (cb[0] & 2):
-                continue
-            comb = (3, ca[1], cb[2])
-            if comb != ca and comb != cb:
-                cands.append(comb)
-    zero_dir = 3 if slice_type == 0 else 1
-    while len(cands) < max_cand:
-        cands.append((zero_dir, (0, 0), (0, 0)))
-    cands = cands[:max_cand]
-    if nw + nh == 12:
-        # §8.5.3.2.2: 8x4/4x8 PUs cannot bi-predict — bi candidates
-        # convert to L0-only (predFlagL1 = 0) on the final list
-        cands = [(1, c[1], (0, 0)) if c[0] == 3 else c
-                 for c in cands]
-    return cands
-
-
-def _c_div(a: int, b: int) -> int:
-    """C-style integer division (truncation toward zero)."""
-    q = abs(a) // abs(b)
-    return -q if (a < 0) != (b < 0) else q
-
-
-def _mv_scale(mv, tb: int, td: int):
-    """§8.5.3.2.8 POC-distance motion scaling."""
-    if tb == td:
-        return mv
-    tx = _c_div(16384 + (abs(td) >> 1), td)
-    dsf = min(max((tb * tx + 32) >> 6, -4096), 4095)
-    out = []
-    for c in mv:
-        v = dsf * c
-        v = (abs(v) + 127) >> 8
-        if dsf * c < 0:
-            v = -v
-        out.append(min(max(v, -32768), 32767))
-    return (out[0], out[1])
-
-
-def _amvp_candidates(fr: _Frame5, x0: int, y0: int, nw: int, nh: int,
-                     lst: int = 0, poc: int = 0,
-                     ref_pocs=(None, None)) -> list:
-    """§8.5.3.2.5-7 AMVP for list ``lst``: first available of
-    {A0, A1}, first available of {B0, B1, B2} (pruned against A),
-    zero fill to 2. A neighbour holding the target list contributes
-    directly (one reference per list — same picture by
-    construction); a neighbour holding only the other list
-    contributes its vector scaled by the §8.5.3.2.8 POC-distance
-    formula (identity in P slices, where there is no other list)."""
-
-    def from_mot(mot):
-        if mot is None:
-            return None
-        d = mot[0]
-        if d & (1 << lst):
-            return mot[1 + lst]
-        oth = 1 - lst
-        if d & (1 << oth) and ref_pocs[oth] is not None:
-            return _mv_scale(mot[1 + oth], poc - ref_pocs[lst],
-                             poc - ref_pocs[oth])
-        return None
-
-    bx0, by0 = x0 // 4, y0 // 4
-    bw_, bh_ = nw // 4, nh // 4
-    a = from_mot(_mot_at(fr, bx0 - 1, by0 + bh_))          # A0
-    if a is None:
-        a = from_mot(_mot_at(fr, bx0 - 1, by0 + bh_ - 1))  # A1
-    b = from_mot(_mot_at(fr, bx0 + bw_, by0 - 1))          # B0
-    if b is None:
-        b = from_mot(_mot_at(fr, bx0 + bw_ - 1, by0 - 1))  # B1
-    if b is None:
-        b = from_mot(_mot_at(fr, bx0 - 1, by0 - 1))        # B2
-    out = []
-    if a is not None:
-        out.append(a)
-    if b is not None and b != a:
-        out.append(b)
-    while len(out) < 2:
-        out.append((0, 0))
-    return out[:2]
-
-
-def _skip_ctx(fr: _Frame5, x0: int, y0: int) -> int:
-    """cu_skip_flag ctxInc (§9.3.4.2.2): + left skip + above skip."""
-    bx, by = x0 // 4, y0 // 4
-    inc = 0
-    if x0 > 0 and fr.avail[by, bx - 1] and fr.skip[by, bx - 1]:
-        inc += 1
-    if y0 > 0 and fr.avail[by - 1, bx] and fr.skip[by - 1, bx]:
-        inc += 1
-    return _CU_SKIP + inc
-
-
-def _code_merge_idx(x, ctx, max_merge: int, v=None) -> int:
-    """merge_idx: TR, cMax = MaxNumMergeCand - 1; bin 0 context-coded,
-    the rest bypass (§9.3.3.2, Table 9-32)."""
-    cmax = max_merge - 1
-    if cmax == 0:
-        return 0
-    if v is not None:
-        x.bit(ctx, _MERGE_IDX, 1 if v > 0 else 0)
-        for i in range(1, v):
-            x.bypass(1)
-        if 0 < v < cmax:
-            x.bypass(0)
-        return v
-    if not x.bit(ctx, _MERGE_IDX):
-        return 0
-    v = 1
-    while v < cmax and x.bypass():
-        v += 1
-    return v
-
-
-def _code_mvd_pair(x, ctx, mv=None):
-    """mvd_coding(x0, y0, 0) (§7.3.8.9): abs_mvd_greater0_flag for
-    both components, abs_mvd_greater1_flag for both (where coded),
-    then per-component abs_mvd_minus2 (EG1, bypass) + sign."""
-    if mv is not None:
-        ax, ay = abs(mv[0]), abs(mv[1])
-        x.bit(ctx, _MVD_GR0, 1 if ax else 0)
-        x.bit(ctx, _MVD_GR0, 1 if ay else 0)
-        if ax:
-            x.bit(ctx, _MVD_GR1, 1 if ax > 1 else 0)
-        if ay:
-            x.bit(ctx, _MVD_GR1, 1 if ay > 1 else 0)
-        for a, v in ((ax, mv[0]), (ay, mv[1])):
-            if a:
-                if a > 1:
-                    _eg_bypass(x, 1, a - 2)
-                x.bypass(1 if v < 0 else 0)
-        return mv
-    g0x = x.bit(ctx, _MVD_GR0)
-    g0y = x.bit(ctx, _MVD_GR0)
-    g1x = x.bit(ctx, _MVD_GR1) if g0x else 0
-    g1y = x.bit(ctx, _MVD_GR1) if g0y else 0
-    out = []
-    for g0, g1 in ((g0x, g1x), (g0y, g1y)):
-        if not g0:
-            out.append(0)
-            continue
-        a = (_eg_bypass(x, 1) + 2) if g1 else 1
-        out.append(-a if x.bypass() else a)
-    return tuple(out)
-
-
-def _eg_bypass(x, k: int, v=None) -> int:
-    """Exp-Golomb order-k bypass bins (§9.3.3.5, EGk)."""
-    if v is not None:
-        while v >= (1 << k):
-            x.bypass(1)
-            v -= 1 << k
-            k += 1
-        x.bypass(0)
-        for i in range(k - 1, -1, -1):
-            x.bypass((v >> i) & 1)
-        return v
-    v = 0
-    while x.bypass():
-        v += 1 << k
-        k += 1
-        if k > 30:
-            raise ValueError("exp-Golomb bypass overflow")
-    suf = 0
-    for _ in range(k):
-        suf = (suf << 1) | x.bypass()
-    return v + suf
-
-
-def _mark_inter(fr: _Frame5, x0: int, y0: int, nw: int, nh: int,
-                depth: int, mot, skip: bool):
-    bw_, bh_ = nw // 4, nh // 4
-    bx, by = x0 // 4, y0 // 4
-    fr.avail[by:by + bh_, bx:bx + bw_] = True
-    fr.depths[by:by + bh_, bx:bx + bw_] = depth
-    # inter cells read as INTRA_DC in intra MPM derivation (§8.4.2)
-    fr.modes[by:by + bh_, bx:bx + bw_] = 1
-    fr.pdir[by:by + bh_, bx:bx + bw_] = mot[0]
-    fr.skip[by:by + bh_, bx:bx + bw_] = skip
-    for l in (0, 1):
-        fr.mvs[by:by + bh_, bx:bx + bw_, l, 0] = mot[1 + l][0]
-        fr.mvs[by:by + bh_, bx:bx + bw_, l, 1] = mot[1 + l][1]
-
-
-def _pu_geometry(part: str, x0: int, y0: int, n: int) -> list:
-    """(px, py, pw, ph) per prediction unit for the supported inter
-    part modes (the four AMP shapes split at n/4)."""
-    q = n // 4
-    if part == "2Nx2N":
-        return [(x0, y0, n, n)]
-    if part == "2NxN":
-        return [(x0, y0, n, n // 2), (x0, y0 + n // 2, n, n // 2)]
-    if part == "Nx2N":
-        return [(x0, y0, n // 2, n), (x0 + n // 2, y0, n // 2, n)]
-    if part == "2NxnU":
-        return [(x0, y0, n, q), (x0, y0 + q, n, n - q)]
-    if part == "2NxnD":
-        return [(x0, y0, n, n - q), (x0, y0 + n - q, n, q)]
-    if part == "nLx2N":
-        return [(x0, y0, q, n), (x0 + q, y0, n - q, n)]
-    if part == "nRx2N":
-        return [(x0, y0, n - q, n), (x0 + n - q, y0, q, n)]
-    raise ValueError(part)
-
-
-_HORIZ_PARTS = ("2NxN", "2NxnU", "2NxnD")
-_VERT_PARTS = ("Nx2N", "nLx2N", "nRx2N")
-
-
-def _pu_pred(refs, px: int, py: int, pw: int, ph: int, mot):
-    """One PU's (Y, Cb, Cr) prediction. ``refs`` is (refL0, refL1)
-    _Frame5s; uni-prediction finalizes per §8.5.4.2.3.2's
-    (p14 + 32) >> 6, bi-prediction combines the two unfinalized
-    14-bit planes as (L0 + L1 + 64) >> 7."""
-    d = mot[0]
-    cpx, cpy, cpw, cph = px // 2, py // 2, pw // 2, ph // 2
-    if d != 3:
-        l = 0 if d == 1 else 1
-        ref = refs[l]
-        mv = mot[1 + l]
-        return (_mc_luma(ref.Y, px, py, pw, ph, mv),
-                _mc_chroma(ref.Cb, cpx, cpy, cpw, cph, mv),
-                _mc_chroma(ref.Cr, cpx, cpy, cpw, cph, mv))
-    out = []
-    for plane, gx, gy, gw, gh, mc in (
-            ("Y", px, py, pw, ph, _mc_luma),
-            ("Cb", cpx, cpy, cpw, cph, _mc_chroma),
-            ("Cr", cpx, cpy, cpw, cph, _mc_chroma)):
-        p0 = mc(getattr(refs[0], plane), gx, gy, gw, gh, mot[1],
-                finalize=False)
-        p1 = mc(getattr(refs[1], plane), gx, gy, gw, gh, mot[2],
-                finalize=False)
-        out.append(np.clip((p0 + p1 + 64) >> 7, 0, 255))
-    return tuple(out)
-
-
-def _inter_pred_planes(refs, x0: int, y0: int, n: int,
-                       pu_mvs: list):
-    """Assemble the CU's motion-compensated prediction from per-PU
-    motion records (quarter-luma-pel; chroma reuses the luma MV at
-    eighth-chroma-pel precision, §8.5.4.2.2.2)."""
-    predY = np.empty((n, n), dtype=np.int64)
-    nc = n // 2
-    predCb = np.empty((nc, nc), dtype=np.int64)
-    predCr = np.empty((nc, nc), dtype=np.int64)
-    for px, py, pw, ph, mot in pu_mvs:
-        pY, pCb, pCr = _pu_pred(refs, px, py, pw, ph, mot)
-        ry, rx = py - y0, px - x0
-        predY[ry:ry + ph, rx:rx + pw] = pY
-        cry, crx = py // 2 - y0 // 2, px // 2 - x0 // 2
-        predCb[cry:cry + ph // 2, crx:crx + pw // 2] = pCb
-        predCr[cry:cry + ph // 2, crx:crx + pw // 2] = pCr
-    return predY, predCb, predCr
-
-
-def _recon_inter_cu(fr: _Frame5, x0: int, y0: int, n: int,
-                    preds, lv_y, lv_cb, lv_cr, qp: int, bypass: bool):
-    predY, predCb, predCr = preds
-    log2_cb = n.bit_length() - 1
-    fr.Y[y0:y0 + n, x0:x0 + n] = _recon_tb(
-        predY, lv_y, qp, log2_cb, True, bypass, intra=False)
-    qpc = _chroma_qp(qp)
-    nc = n // 2
-    cx, cy = x0 // 2, y0 // 2
-    fr.Cb[cy:cy + nc, cx:cx + nc] = _recon_tb(
-        predCb, lv_cb, qpc, log2_cb - 1, False, bypass, intra=False)
-    fr.Cr[cy:cy + nc, cx:cx + nc] = _recon_tb(
-        predCr, lv_cr, qpc, log2_cb - 1, False, bypass, intra=False)
-
-
-def _dec_pu_motion(dec: _CabacDec, ctx: _Ctx5, fr: _Frame5, sh: dict,
-                   part: str, pi: int, px, py, pw, ph):
-    """Parse one prediction_unit's syntax (§7.3.8.6) and derive its
-    motion record. The second PU of a split excludes the in-CU
-    spatial merge candidate (§8.5.3.2.3: B1 for horizontal splits,
-    A1 for vertical). B slices add inter_pred_idc and a second
-    mvd/mvp pair for L1 (one reference per list, so no ref_idx
-    syntax is ever present). inter_pred_idc always uses the 2-bin
-    "1"/"0x" form — the spec's 1-bin special case for 8x4/4x8 PUs
-    is a simplified-but-documented deviation under the module's
-    marker-gate contract (both sides of this codec agree; the
-    §8.5.3.2.2 no-bi RULE itself is honoured by the encoder and the
-    merge-candidate conversion)."""
-    st = sh["type"]
-    no_a1 = part in _VERT_PARTS and pi == 1
-    no_b1 = part in _HORIZ_PARTS and pi == 1
-    if dec.bit(ctx, _MERGE_FLAG):
-        midx = _code_merge_idx(dec, ctx, sh["max_merge"])
-        cands = _merge_candidates(fr, px, py, pw, ph, sh["max_merge"],
-                                  no_a1=no_a1, no_b1=no_b1,
-                                  slice_type=st)
-        return ("merge", midx), cands[midx]
-    if st == 0:
-        if dec.bit(ctx, _INTER_DIR + 0):
-            d = 3                                 # PRED_BI
-        else:
-            d = 2 if dec.bit(ctx, _INTER_DIR + 1) else 1
-    else:
-        d = 1                                     # P: L0 implicit
-    mvs, syn = [(0, 0), (0, 0)], []
-    for l in (0, 1):
-        if not (d & (1 << l)):
-            continue
-        mvd = _code_mvd_pair(dec, ctx)
-        mvp = dec.bit(ctx, _MVP_FLAG)
-        pred = _amvp_candidates(fr, px, py, pw, ph, lst=l,
-                                poc=sh.get("poc", 0),
-                                ref_pocs=sh.get("ref_pocs",
-                                                (None, None)))[mvp]
-        mvs[l] = (pred[0] + mvd[0], pred[1] + mvd[1])
-        syn.append((mvd, mvp))
-    return ("amvp", d, syn), (d, mvs[0], mvs[1])
-
-
-def _dec_inter_residual(dec: _CabacDec, ctx: _Ctx5, log2_cb: int):
-    """transform_tree at trafoDepth 0 for an inter CU under our
-    fixed SPS (max_trafo_depth_inter = 1, so split_transform_flag is
-    coded; only the unsplit TU == CU form is supported)."""
-    if dec.bit(ctx, _SPLIT_TF + 5 - log2_cb):
-        raise NotImplementedError("inter transform split unsupported")
-    cbf_cb = dec.bit(ctx, _CBF_CHROMA + 0)
-    cbf_cr = dec.bit(ctx, _CBF_CHROMA + 0)
-    if cbf_cb or cbf_cr:
-        cbf_l = dec.bit(ctx, _CBF_LUMA + 1)
-    else:
-        cbf_l = 1                # §7.3.8.8: inferred at inter depth 0
-    lv_y = lv_cb = lv_cr = None
-    if cbf_l:
-        lv_y = _dec_residual5(dec, ctx, log2_cb, True, 0)
-    if cbf_cb:
-        lv_cb = _dec_residual5(dec, ctx, log2_cb - 1, False, 0)
-    if cbf_cr:
-        lv_cr = _dec_residual5(dec, ctx, log2_cb - 1, False, 0)
-    return lv_y, lv_cb, lv_cr
-
-
-def _dec_cu_inter(dec: _CabacDec, ctx: _Ctx5, fr: _Frame5,
-                  refs, pps: dict, qp: int, x0: int, y0: int,
-                  log2_cb: int, depth: int, sh: dict, bypass: bool):
-    """Non-skip inter coding_unit body (P/B slices). part_mode
-    follows Table 9-34: at CB16 (> min CB) with AMP enabled, bin2
-    (bypass) picks symmetric vs asymmetric and bin3 (bypass) the
-    asymmetric variant; at the minimum CB size the 2-bin form
-    applies and AMP shapes are not available."""
-    n = 1 << log2_cb
-    if dec.bit(ctx, _PART_INTER + 0):
-        part = "2Nx2N"
-    else:
-        horiz = dec.bit(ctx, _PART_INTER + 1)
-        if log2_cb == 4 and sh.get("amp"):
-            if dec.bypass():
-                part = "2NxN" if horiz else "Nx2N"
-            elif dec.bypass():
-                part = "2NxnD" if horiz else "nRx2N"
-            else:
-                part = "2NxnU" if horiz else "nLx2N"
-        else:
-            part = "2NxN" if horiz else "Nx2N"
-    pu_mvs = []
-    merge_first = False
-    cuid = fr.new_id()
-    for pi, (px, py, pw, ph) in enumerate(_pu_geometry(part, x0, y0, n)):
-        syn, mot = _dec_pu_motion(dec, ctx, fr, sh, part, pi,
-                                  px, py, pw, ph)
-        if pi == 0 and syn[0] == "merge":
-            merge_first = True
-        pu_mvs.append((px, py, pw, ph, mot))
-        _mark_inter(fr, px, py, pw, ph, depth, mot, False)
-        fr.mark_ids(px, py, pw, ph, cuid, fr.new_id())
-    if part == "2Nx2N" and merge_first:
-        rqt = 1                  # §7.3.8.5: inferred (else it'd be skip)
-    else:
-        rqt = dec.bit(ctx, _RQT_ROOT)
-    lv_y = lv_cb = lv_cr = None
-    if rqt:
-        lv_y, lv_cb, lv_cr = _dec_inter_residual(dec, ctx, log2_cb)
-    # luma cbf of the TU (== CU, spanning the PUs)
-    fr.cbf[y0 // 4:(y0 + n) // 4, x0 // 4:(x0 + n) // 4] = \
-        lv_y is not None
-    preds = _inter_pred_planes(refs, x0, y0, n, pu_mvs)
-    _recon_inter_cu(fr, x0, y0, n, preds, lv_y, lv_cb, lv_cr,
-                    qp, bypass)
-
-
 def _dec_cu(dec: _CabacDec, ctx: _Ctx5, fr: _Frame5, pps: dict,
-            qp: int, x0: int, y0: int, log2_cb: int, depth: int,
-            sh: dict | None = None, refs=None):
-    """coding_unit (§7.3.8.5): intra, plus the P/B-slice inter forms
-    (cu_skip / merge / AMVP / bi-prediction, part modes
-    2Nx2N / 2NxN / Nx2N)."""
+            qp: int, x0: int, y0: int, log2_cb: int, depth: int):
+    """Intra coding_unit (§7.3.8.5): part modes 2Nx2N and NxN."""
     bypass = False
     if pps["tq_bypass"]:
         bypass = bool(dec.bit(ctx, _TQ_BYPASS))
-    if sh is not None and sh["type"] in (0, 1):
-        n = 1 << log2_cb
-        if dec.bit(ctx, _skip_ctx(fr, x0, y0)):
-            midx = _code_merge_idx(dec, ctx, sh["max_merge"])
-            mot = _merge_candidates(fr, x0, y0, n, n,
-                                    sh["max_merge"],
-                                    slice_type=sh["type"])[midx]
-            preds = _inter_pred_planes(refs, x0, y0, n,
-                                       [(x0, y0, n, n, mot)])
-            _recon_inter_cu(fr, x0, y0, n, preds, None, None, None,
-                            qp, bypass)
-            _mark_inter(fr, x0, y0, n, n, depth, mot, True)
-            cuid = fr.new_id()
-            fr.mark_ids(x0, y0, n, n, cuid, cuid, cbf=False)
-            return
-        if not dec.bit(ctx, _PRED_MODE):
-            _dec_cu_inter(dec, ctx, fr, refs, pps, qp, x0, y0,
-                          log2_cb, depth, sh, bypass)
-            return
     nxn = False
     if log2_cb == 3:
         nxn = not dec.bit(ctx, _PART_MODE)     # bin 1 -> PART_2Nx2N
@@ -2567,7 +1808,7 @@ def _dec_cu(dec: _CabacDec, ctx: _Ctx5, fr: _Frame5, pps: dict,
         fr.Y[y0:y0 + n, x0:x0 + n] = _recon_tb(
             pred, lv, qp, log2_cb, True, bypass)
         _mark(fr, x0, y0, n, depth, modes[0])
-        fr.mark_ids(x0, y0, n, n, cuid, cuid, cbf=lv is not None)
+        fr.mark_cu(x0, y0, n, cuid)
     else:
         for i, (px, py) in enumerate(pu_xy):
             cbf_l = dec.bit(ctx, _CBF_LUMA + 0)
@@ -2579,8 +1820,7 @@ def _dec_cu(dec: _CabacDec, ctx: _Ctx5, fr: _Frame5, pps: dict,
             fr.Y[py:py + 4, px:px + 4] = _recon_tb(
                 pred, lv, qp, 2, True, bypass)
             _mark(fr, px, py, 4, depth, modes[i])
-            fr.mark_ids(px, py, 4, 4, cuid, cuid,
-                        cbf=lv is not None)
+            fr.mark_cu(px, py, 4, cuid)
     # chroma TB (log2_cb - 1; 4x4 when CB is 8)
     log2_c = log2_cb - 1
     nc = 1 << log2_c
@@ -2595,8 +1835,7 @@ def _dec_cu(dec: _CabacDec, ctx: _Ctx5, fr: _Frame5, pps: dict,
             pred, lv, qpc, log2_c, False, bypass)
 
 
-def _dec_quadtree(dec, ctx, fr, pps, qp, x0, y0, log2_cb, depth,
-                  sh=None, refs=None):
+def _dec_quadtree(dec, ctx, fr, pps, qp, x0, y0, log2_cb, depth):
     if log2_cb > 3:
         if dec.bit(ctx, _split_ctx(fr, x0, y0, depth)):
             h = 1 << (log2_cb - 1)
@@ -2604,41 +1843,16 @@ def _dec_quadtree(dec, ctx, fr, pps, qp, x0, y0, log2_cb, depth,
                 for dx in (0, 1):
                     _dec_quadtree(dec, ctx, fr, pps, qp,
                                   x0 + dx * h, y0 + dy * h,
-                                  log2_cb - 1, depth + 1, sh, refs)
+                                  log2_cb - 1, depth + 1)
             return
-    _dec_cu(dec, ctx, fr, pps, qp, x0, y0, log2_cb, depth, sh, refs)
+    _dec_cu(dec, ctx, fr, pps, qp, x0, y0, log2_cb, depth)
 
 
-def _decode_slice(rbsp: bytes, sps: dict, pps: dict,
-                  is_idr: bool = True,
-                  dpb: dict | None = None) -> _Frame5:
-    """Decode one slice segment. ``dpb`` maps POC -> decoded
-    _Frame5 for the pictures still referenced; the slice's RPS
-    deltas select L0 (poc - d0) and, for B, L1 (poc + d1)."""
+def _decode_slice(rbsp: bytes, sps: dict, pps: dict) -> _Frame5:
+    """Decode one IDR slice segment to its reconstructed picture."""
     br = _Bits(rbsp)
-    sh = _parse_slice_header(br, pps, is_idr=is_idr,
+    sh = _parse_slice_header(br, pps,
                              sao_present=bool(sps.get("sao", 0)))
-    sh["amp"] = sps.get("amp", 0)
-    refs = None
-    if sh["type"] in (0, 1):
-        if sps.get("max_trafo_depth_inter", 0) != 1:
-            raise NotImplementedError(
-                "P/B slices need max_transform_hierarchy_depth_inter "
-                "1 (this codec's SPS; depth-0 forced inter RQT "
-                "splits are unsupported)")
-        poc = sh["poc_lsb"]
-        sh["poc"] = poc
-        l0_poc = poc - sh["d0"]
-        l1_poc = poc + sh["d1"] if sh["type"] == 0 else None
-        dpb = dpb or {}
-        if l0_poc not in dpb or (l1_poc is not None
-                                 and l1_poc not in dpb):
-            raise ValueError(
-                "inter slice references a picture missing from the "
-                "decoded-picture buffer")
-        refs = (dpb[l0_poc],
-                dpb[l1_poc] if l1_poc is not None else None)
-        sh["ref_pocs"] = (l0_poc, l1_poc)
     dec = _CabacDec(br)
     ctx = _Ctx5()
     fr = _Frame5(sps["w"], sps["h"])
@@ -2652,17 +1866,15 @@ def _decode_slice(rbsp: bytes, sps: dict, pps: dict,
                 sao_params[(cx, cy)] = _dec_sao(dec, ctx, cx, cy,
                                                 sao_params, sh)
             _dec_quadtree(dec, ctx, fr, pps, sh["qp"],
-                          cx * 16, cy * 16, 4, 0, sh, refs)
+                          cx * 16, cy * 16, 4, 0)
             eos = dec.terminate()
             last = (cy == ctbs_h - 1) and (cx == ctbs_w - 1)
             if bool(eos) != last:
                 raise ValueError("end_of_slice_segment_flag mismatch")
     if pps.get("deblock"):
-        _deblock(fr, sh["qp"], sh.get("ref_pocs", (None, None)))
+        _deblock(fr, sh["qp"])
     if sao_on:
         _apply_sao(fr, sao_params, ctbs_w, ctbs_h)
-    fr_poc = 0 if is_idr else sh["poc_lsb"]
-    fr.poc = fr_poc
     return fr
 
 
@@ -2699,8 +1911,7 @@ def _best_mode(fr: _Frame5, plane, src, x0, y0, n, is_luma, cands):
     return best
 
 
-def _tb_levels(pred, src_blk, qp, log2_tb, is_luma, bypass,
-               intra=True):
+def _tb_levels(pred, src_blk, qp, log2_tb, is_luma, bypass):
     """Residual -> coded levels (or None when all-zero) plus the
     reconstruction the decoder will produce."""
     res = src_blk - pred
@@ -2708,12 +1919,12 @@ def _tb_levels(pred, src_blk, qp, log2_tb, is_luma, bypass,
         lv = res.astype(np.int64)
     else:
         coef = _fwd_transform(res,
-                              _tb_matrix(1 << log2_tb, is_luma, intra),
+                              _tb_matrix(1 << log2_tb, is_luma),
                               log2_tb)
         lv = _quant(coef, qp, log2_tb)
     if not lv.any():
         return None, np.clip(pred, 0, 255)
-    return lv, _recon_tb(pred, lv, qp, log2_tb, is_luma, bypass, intra)
+    return lv, _recon_tb(pred, lv, qp, log2_tb, is_luma, bypass)
 
 
 def _commit_cu(fr: _Frame5, srcY, srcCb, srcCr, pps: dict, qp: int,
@@ -2757,7 +1968,7 @@ def _commit_cu(fr: _Frame5, srcY, srcCb, srcCr, pps: dict, qp: int,
         plan["luma"].append((lv, _scan_idx(m, log2_tb, True), log2_tb))
         fr.Y[py:py + pu, px:px + pu] = rec
         _mark(fr, px, py, pu, depth, m)
-        fr.mark_ids(px, py, pu, pu, cuid, cuid, cbf=lv is not None)
+        fr.mark_cu(px, py, pu, cuid)
     # chroma: best of DM + the 4 candidates (replacement rule applied)
     luma0 = plan["pu"][0][2]
     qpc = _chroma_qp(qp)
@@ -2790,295 +2001,9 @@ def _commit_cu(fr: _Frame5, srcY, srcCb, srcCr, pps: dict, qp: int,
     return plan
 
 
-def _search_mv(refY: np.ndarray, src_blk: np.ndarray, x0: int,
-               y0: int, w: int, h: int, starts, rng: int) -> tuple:
-    """Deterministic motion search: integer full search in a
-    ±``rng`` window around each (deduplicated, integer-rounded)
-    start vector, then two rounds of quarter-pel 8-neighbour
-    refinement. Ties break lexicographically on (SAD, mv).
-
-    The C kernel (gs_h265_search_mv) runs the identical integer
-    search + DCT-IF refinement when available; the numpy path below
-    is the correctness reference and silent fallback — parity is
-    pinned by tests/test_h265_search_native.py."""
-    r = h265_search_mv_native(refY, src_blk, x0, y0, w, h,
-                              list(starts), rng)
-    if r is not None:
-        return r
-    # Integer stage, vectorized: a full-pel prediction is exactly an
-    # edge-clamped window of the reference (the << 6 / (+32) >> 6
-    # chain of _mc_plane is the identity on 0..255), and clipping an
-    # arange commutes with taking a contiguous slice — so the union
-    # window of one search centre, edge-clamped once, contains every
-    # candidate's clamped window as a direct sub-view. One
-    # sliding_window_view + SAD reduction replaces (2*rng+1)^2
-    # _mc_luma calls; argmin over a dx-major ravel is the same
-    # lexicographic (sad, mvx, mvy) winner as the scalar loop, and
-    # min-per-window over min-across-windows equals the min over the
-    # deduplicated candidate union, so results are bit-identical.
-    H, W = refY.shape
-    src16 = src_blk.astype(np.int16)
-    side = 2 * rng + 1
-    best = None
-    done = set()
-    for sx, sy in list(starts) + [(0, 0)]:
-        sx, sy = (sx >> 2) << 2, (sy >> 2) << 2
-        if (sx, sy) in done:
-            continue
-        done.add((sx, sy))
-        cx, cy = sx >> 2, sy >> 2
-        ys = np.arange(y0 + cy - rng, y0 + cy + rng + h).clip(0, H - 1)
-        xs = np.arange(x0 + cx - rng, x0 + cx + rng + w).clip(0, W - 1)
-        win = refY[ys[:, None], xs].astype(np.int16)
-        sads = np.abs(_win2(win, h, w) - src16).sum(
-            axis=(2, 3), dtype=np.int64)           # [dy, dx]
-        flat = sads.T.ravel()                      # dx-major order
-        i = int(flat.argmin())
-        mv = (sx + 4 * (i // side - rng), sy + 4 * (i % side - rng))
-        cand = (int(flat[i]), mv)
-        if best is None or cand < best:
-            best = cand
-    # quarter-pel refinement: skipping an already-evaluated candidate
-    # is exact (its equal (s, mv) never wins the strict <), and a
-    # round that does not move the best makes the next round a
-    # no-op — break instead of re-evaluating the same 8 neighbours
-    seen = set()
-    for _ in range(2):
-        s0, (mx, my) = best
-        for dy in (-1, 0, 1):
-            for dx in (-1, 0, 1):
-                if not dx and not dy:
-                    continue
-                mv = (mx + dx, my + dy)
-                if mv in seen:
-                    continue
-                seen.add(mv)
-                pred = _mc_luma(refY, x0, y0, w, h, mv)
-                s = _sad(pred, src_blk)
-                if (s, mv) < best:
-                    best = (s, mv)
-        if best[1] == (mx, my):
-            break
-    return best
-
-
-def _pu_repr(fr: _Frame5, part: str, pi: int, px, py, pw, ph,
-             mot, sh: dict):
-    """Choose the cheapest syntax that yields motion ``mot`` for
-    this PU: lowest-index merge candidate, else AMVP (per active
-    list) with the smaller-|mvd| predictor. Returns the syntax
-    tuple ``_serialize_cu_inter`` replays."""
-    no_a1 = part in _VERT_PARTS and pi == 1
-    no_b1 = part in _HORIZ_PARTS and pi == 1
-    cands = _merge_candidates(fr, px, py, pw, ph, sh["max_merge"],
-                              no_a1=no_a1, no_b1=no_b1,
-                              slice_type=sh["type"])
-    if mot in cands:
-        return ("merge", cands.index(mot))
-    d = mot[0]
-    syn = []
-    for l in (0, 1):
-        if not (d & (1 << l)):
-            continue
-        preds = _amvp_candidates(fr, px, py, pw, ph, lst=l,
-                                 poc=sh.get("poc", 0),
-                                 ref_pocs=sh.get("ref_pocs",
-                                                 (None, None)))
-        mv = mot[1 + l]
-        costs = []
-        for flag, pr in enumerate(preds):
-            mvd = (mv[0] - pr[0], mv[1] - pr[1])
-            costs.append((abs(mvd[0]) + abs(mvd[1]), flag, mvd))
-        _, flag, mvd = min(costs)
-        syn.append((mvd, flag))
-    return ("amvp", d, syn)
-
-
-def _search_pu(fr: _Frame5, refs, sh: dict, srcY, px, py, pw, ph,
-               search: int, starts):
-    """Best motion record for one PU: searched L0 (and for B: L1,
-    plus the bi combination of the two winners), against the merge
-    candidates' implied predictions. Returns (sad, mot) with the
-    deterministic lexicographic tie-break."""
-    src_blk = srcY[py:py + ph, px:px + pw]
-    s0, mv0 = _search_mv(refs[0].Y, src_blk, px, py, pw, ph,
-                         [m[1] for m in starts if m[0] & 1], search)
-    best = (s0, (1, mv0, (0, 0)))
-    if sh["type"] == 0:
-        s1, mv1 = _search_mv(refs[1].Y, src_blk, px, py, pw, ph,
-                             [m[2] for m in starts if m[0] & 2],
-                             search)
-        if (s1, 1) < (best[0], 0):
-            best = (s1, (2, (0, 0), mv1))
-        if pw + ph != 12:        # no 8x4/4x8 bi (§8.5.3.2.2)
-            p0 = _mc_luma(refs[0].Y, px, py, pw, ph, mv0,
-                          finalize=False)
-            p1 = _mc_luma(refs[1].Y, px, py, pw, ph, mv1,
-                          finalize=False)
-            sbi = _sad(np.clip((p0 + p1 + 64) >> 7, 0, 255), src_blk)
-            if sbi < best[0]:
-                best = (sbi, (3, mv0, mv1))
-    return best
-
-
-def _commit_cu_p(fr: _Frame5, refs, srcY, srcCb, srcCr,
-                 pps: dict, qp: int, x0: int, y0: int, log2_cb: int,
-                 depth: int, sh: dict, cands, search: int):
-    """P/B-slice CU decision: try inter (2Nx2N, and the two-PU
-    splits when they clearly win), fall back to the intra path when
-    intra predicts better. Commit-then-serialize like the intra
-    path: all grid state a later syntax element's context or
-    candidate derivation reads is updated here, and
-    ``_serialize_cu`` merely replays the recorded plan."""
-    bypass = bool(pps["tq_bypass"])
-    n = 1 << log2_cb
-    src_blk = srcY[y0:y0 + n, x0:x0 + n]
-    merge0 = _merge_candidates(fr, x0, y0, n, n, sh["max_merge"],
-                               slice_type=sh["type"])
-    starts = list(dict.fromkeys(merge0))
-    # merge candidates evaluated as full motion records (their
-    # bi/uni prediction may beat any searched uni vector)
-    best_merge = None
-    for mot in starts:
-        pY = _pu_pred(refs, x0, y0, n, n, mot)[0]
-        s = _sad(pY, src_blk)
-        if best_merge is None or (s, mot) < best_merge:
-            best_merge = (s, mot)
-    sad2n, mot2n = _search_pu(fr, refs, sh, srcY, x0, y0, n, n,
-                              search, starts)
-    if best_merge is not None and best_merge[0] <= sad2n:
-        sad2n, mot2n = best_merge
-    # two-PU splits: independent searches per half; a fixed
-    # lexicographic penalty keeps the decision deterministic and
-    # biased to the simpler mode on ties
-    part, pu_mvs, sad_inter = "2Nx2N", [(x0, y0, n, n, mot2n)], sad2n
-    trial_parts = ("2NxN", "Nx2N")
-    if log2_cb == 4 and sh.get("amp"):
-        trial_parts += ("2NxnU", "2NxnD", "nLx2N", "nRx2N")
-    for cand_part in trial_parts:
-        geo = _pu_geometry(cand_part, x0, y0, n)
-        tot, mvs = 0, []
-        for px, py, pw, ph in geo:
-            s, mot = _search_pu(fr, refs, sh, srcY, px, py, pw, ph,
-                                search, starts)
-            tot += s
-            mvs.append((px, py, pw, ph, mot))
-        if tot + 64 < sad_inter:
-            part, pu_mvs, sad_inter = cand_part, mvs, tot
-    skip_ctx = _skip_ctx(fr, x0, y0)
-    # intra estimate on luma (same greedy cost as the intra path);
-    # ties go to inter — skip/merge is the cheaper representation
-    sad_intra = _best_mode(fr, fr.Y, srcY, x0, y0, n, True, cands)[0]
-    if sad_intra < sad_inter:
-        plan = _commit_cu(fr, srcY, srcCb, srcCr, pps, qp,
-                          x0, y0, log2_cb, depth, cands)
-        plan["skip_ctx"] = skip_ctx
-        return plan
-    preds = _inter_pred_planes(refs, x0, y0, n, pu_mvs)
-    plan = {"inter": True, "bypass": bypass, "log2_cb": log2_cb,
-            "part": part, "pus": [], "skip": False,
-            "skip_ctx": skip_ctx, "slice_type": sh["type"],
-            "amp": sh.get("amp", 0)}
-    cuid = fr.new_id()
-    for pi, (px, py, pw, ph, mot) in enumerate(pu_mvs):
-        plan["pus"].append(_pu_repr(fr, part, pi, px, py, pw, ph,
-                                    mot, sh))
-        _mark_inter(fr, px, py, pw, ph, depth, mot, False)
-        fr.mark_ids(px, py, pw, ph, cuid, fr.new_id())
-    lv_y, rec_y = _tb_levels(preds[0], src_blk, qp, log2_cb, True,
-                             bypass, intra=False)
-    qpc = _chroma_qp(qp)
-    nc = n // 2
-    cx, cy = x0 // 2, y0 // 2
-    lv_cb, rec_cb = _tb_levels(preds[1], srcCb[cy:cy + nc, cx:cx + nc],
-                               qpc, log2_cb - 1, False, bypass,
-                               intra=False)
-    lv_cr, rec_cr = _tb_levels(preds[2], srcCr[cy:cy + nc, cx:cx + nc],
-                               qpc, log2_cb - 1, False, bypass,
-                               intra=False)
-    all_zero = lv_y is None and lv_cb is None and lv_cr is None
-    merge_first = plan["pus"][0][0] == "merge"
-    if part == "2Nx2N" and merge_first and all_zero:
-        # a zero-residual 2Nx2N merge MUST be coded as cu_skip
-        # (rqt_root_cbf is inferred 1 for non-skip 2Nx2N merge)
-        plan["skip"] = True
-        plan["pus"] = [plan["pus"][0]]
-        fr.skip[y0 // 4:(y0 + n) // 4, x0 // 4:(x0 + n) // 4] = True
-    plan.update(lv_y=lv_y, lv_cb=lv_cb, lv_cr=lv_cr,
-                rqt=0 if all_zero else 1, merge_first=merge_first)
-    fr.cbf[y0 // 4:(y0 + n) // 4, x0 // 4:(x0 + n) // 4] = \
-        lv_y is not None
-    fr.Y[y0:y0 + n, x0:x0 + n] = rec_y
-    fr.Cb[cy:cy + nc, cx:cx + nc] = rec_cb
-    fr.Cr[cy:cy + nc, cx:cx + nc] = rec_cr
-    return plan
-
-
-def _serialize_cu_inter(enc: _CabacEnc, ctx: _Ctx5, pps: dict,
-                        plan: dict):
+def _serialize_cu(enc: _CabacEnc, ctx: _Ctx5, pps: dict, plan: dict):
     if pps["tq_bypass"]:
         enc.bit(ctx, _TQ_BYPASS, int(plan["bypass"]))
-    max_merge = plan["max_merge"]
-    if plan["skip"]:
-        enc.bit(ctx, plan["skip_ctx"], 1)
-        _code_merge_idx(enc, ctx, max_merge, v=plan["pus"][0][1])
-        return
-    enc.bit(ctx, plan["skip_ctx"], 0)
-    enc.bit(ctx, _PRED_MODE, 0)
-    part = plan["part"]
-    enc.bit(ctx, _PART_INTER + 0, 1 if part == "2Nx2N" else 0)
-    if part != "2Nx2N":
-        enc.bit(ctx, _PART_INTER + 1,
-                1 if part in _HORIZ_PARTS else 0)
-        if plan["log2_cb"] == 4 and plan.get("amp"):
-            sym = part in ("2NxN", "Nx2N")
-            enc.bypass(1 if sym else 0)
-            if not sym:
-                enc.bypass(1 if part in ("2NxnD", "nRx2N") else 0)
-    for syn in plan["pus"]:
-        if syn[0] == "merge":
-            enc.bit(ctx, _MERGE_FLAG, 1)
-            _code_merge_idx(enc, ctx, max_merge, v=syn[1])
-        else:
-            enc.bit(ctx, _MERGE_FLAG, 0)
-            _syn, d, lists = syn
-            if plan.get("slice_type", 1) == 0:
-                enc.bit(ctx, _INTER_DIR + 0, 1 if d == 3 else 0)
-                if d != 3:
-                    enc.bit(ctx, _INTER_DIR + 1, 1 if d == 2 else 0)
-            for mvd, flag in lists:
-                _code_mvd_pair(enc, ctx, mv=mvd)
-                enc.bit(ctx, _MVP_FLAG, flag)
-    if not (part == "2Nx2N" and plan["merge_first"]):
-        enc.bit(ctx, _RQT_ROOT, plan["rqt"])
-    if plan["rqt"]:
-        log2_cb = plan["log2_cb"]
-        enc.bit(ctx, _SPLIT_TF + 5 - log2_cb, 0)
-        enc.bit(ctx, _CBF_CHROMA + 0, int(plan["lv_cb"] is not None))
-        enc.bit(ctx, _CBF_CHROMA + 0, int(plan["lv_cr"] is not None))
-        if plan["lv_cb"] is not None or plan["lv_cr"] is not None:
-            enc.bit(ctx, _CBF_LUMA + 1, int(plan["lv_y"] is not None))
-        elif plan["lv_y"] is None:
-            raise AssertionError("all-zero inter residual with rqt set")
-        if plan["lv_y"] is not None:
-            _enc_residual5(enc, ctx, plan["lv_y"], log2_cb, True, 0)
-        for lv in (plan["lv_cb"], plan["lv_cr"]):
-            if lv is not None:
-                _enc_residual5(enc, ctx, lv, log2_cb - 1, False, 0)
-
-
-def _serialize_cu(enc: _CabacEnc, ctx: _Ctx5, pps: dict, plan: dict,
-                  sh: dict | None = None):
-    if plan.get("inter"):
-        plan["max_merge"] = sh["max_merge"]
-        _serialize_cu_inter(enc, ctx, pps, plan)
-        return
-    if pps["tq_bypass"]:
-        enc.bit(ctx, _TQ_BYPASS, int(plan["bypass"]))
-    if sh is not None and sh["type"] in (0, 1):
-        # intra CU inside a P/B slice: cu_skip 0 + pred_mode 1
-        enc.bit(ctx, plan["skip_ctx"], 0)
-        enc.bit(ctx, _PRED_MODE, 1)
     if plan["log2_cb"] == 3:
         enc.bit(ctx, _PART_MODE, 0 if plan["nxn"] else 1)
     for prev, _mpm, _m in plan["pu"]:
@@ -3106,8 +2031,7 @@ def _serialize_cu(enc: _CabacEnc, ctx: _Ctx5, pps: dict, plan: dict,
 
 
 def _enc_quadtree(ops, fr, srcY, srcCb, srcCr, pps, qp,
-                  x0, y0, log2_cb, depth, cands, force_split,
-                  sh=None, refs=None, search=4):
+                  x0, y0, log2_cb, depth, cands, force_split):
     """Commit pass over one quadtree: reconstructs + updates grids
     and appends the serialization ops (split bits with their
     ctxInc, CU plans) to ``ops``. Serialization is REPLAYED after
@@ -3133,15 +2057,10 @@ def _enc_quadtree(ops, fr, srcY, srcCb, srcCr, pps, qp,
                     _enc_quadtree(ops, fr, srcY, srcCb, srcCr,
                                   pps, qp, x0 + dx * h, y0 + dy * h,
                                   log2_cb - 1, depth + 1, cands,
-                                  force_split, sh, refs, search)
+                                  force_split)
             return
-    if sh is not None and sh["type"] in (0, 1):
-        plan = _commit_cu_p(fr, refs, srcY, srcCb, srcCr, pps, qp,
-                            x0, y0, log2_cb, depth, sh, cands, search)
-    else:
-        plan = _commit_cu(fr, srcY, srcCb, srcCr, pps, qp, x0, y0,
-                          log2_cb, depth, cands)
-    ops.append(("cu", plan))
+    ops.append(("cu", _commit_cu(fr, srcY, srcCb, srcCr, pps, qp, x0, y0,
+                                 log2_cb, depth, cands)))
 
 
 _ALL_MODES = tuple(range(35))
@@ -3149,35 +2068,15 @@ _ALL_MODES = tuple(range(35))
 
 def _encode_frame(srcY, srcCb, srcCr, sps_w, sps_h, pps, qp,
                   cands=_ALL_MODES, force_split=None,
-                  refs=None, poc: int = 0, search: int = 4,
                   sao: bool = False):
-    """Encode one frame's slice NAL (header + CABAC data); returns
-    (nal_bytes, reconstruction _Frame5). ``refs is None`` emits an
-    IDR I slice; ``(refL0, None)`` a TRAIL_R P slice; ``(refL0,
-    refL1)`` with a non-None second element a TRAIL_R B slice
-    (L0 = past, L1 = future, POC distances from the frames'
-    ``poc`` fields)."""
+    """Encode one frame's IDR slice NAL (header + CABAC data);
+    returns (nal_bytes, reconstruction _Frame5)."""
     fr = _Frame5(sps_w, sps_h)
-    fr.poc = poc
     # SAO never pairs with transquant bypass here: it would perturb
     # the lossless exactness the bypass families are built on
     sao_on = bool(sao) and not pps["tq_bypass"]
     bw = _BitW()
-    if refs is None:
-        sh = None
-        _write_slice_header(bw, qp_delta=qp - pps["qp"], sao=sao_on)
-    else:
-        st = 0 if refs[1] is not None else 1
-        d0 = poc - refs[0].poc
-        d1 = refs[1].poc - poc if st == 0 else 0
-        if d0 <= 0 or (st == 0 and d1 <= 0):
-            raise ValueError("reference POCs must bracket the frame")
-        sh = {"type": st, "poc": poc, "max_merge": 5, "amp": 1,
-              "ref_pocs": (refs[0].poc,
-                           refs[1].poc if st == 0 else None)}
-        _write_slice_header(bw, qp_delta=qp - pps["qp"],
-                            slice_type=st, poc_lsb=poc,
-                            d0=d0, d1=max(d1, 1), sao=sao_on)
+    _write_slice_header(bw, qp_delta=qp - pps["qp"], sao=sao_on)
     sao_sh = {"sao_luma": int(sao_on), "sao_chroma": int(sao_on)}
     enc = _CabacEnc()
     ctx = _Ctx5()
@@ -3187,8 +2086,7 @@ def _encode_frame(srcY, srcCb, srcCr, sps_w, sps_h, pps, qp,
         for cx in range(ctbs_w):
             ops: list = []
             _enc_quadtree(ops, fr, srcY, srcCb, srcCr, pps, qp,
-                          cx * 16, cy * 16, 4, 0, cands, force_split,
-                          sh, refs, search)
+                          cx * 16, cy * 16, 4, 0, cands, force_split)
             if sao_on:
                 params = (
                     _sao_choose_comp(srcY, fr.Y, cx * 16, cy * 16,
@@ -3204,16 +2102,15 @@ def _encode_frame(srcY, srcCb, srcCr, sps_w, sps_h, pps, qp,
                 if op[0] == "split":
                     enc.bit(ctx, op[1], op[2])
                 else:
-                    _serialize_cu(enc, ctx, pps, op[1], sh)
+                    _serialize_cu(enc, ctx, pps, op[1])
             last = (cy == ctbs_h - 1) and (cx == ctbs_w - 1)
             enc.terminate(int(last))
     if pps.get("deblock"):
-        _deblock(fr, qp, sh["ref_pocs"] if sh else (None, None))
+        _deblock(fr, qp)
     if sao_on:
         _apply_sao(fr, sao_params, ctbs_w, ctbs_h)
     rbsp = bw.bytes() + enc.bytes()
-    nal_type = _NAL_IDR_W_RADL if refs is None else _NAL_TRAIL_R
-    return _nal(nal_type, rbsp), fr
+    return _nal(_NAL_IDR_W_RADL, rbsp), fr
 
 
 # ---------------------------------------------------------------------------
@@ -3271,133 +2168,6 @@ def h265_encode_planes(Y, Cb, Cr, qp: int = 32, lossless: bool = False,
     return out + nal
 
 
-def _b_coding_order(n: int) -> list:
-    """(display_idx, slice_type, l0_idx, l1_idx) in coding order for
-    an I-B-P ladder: even frames are P pictures referencing the
-    previous even frame; each odd frame is a B picture referencing
-    its display neighbours (decoded out of display order — the
-    future P first)."""
-    order = [(0, 2, None, None)]
-    i = 2
-    while i < n:
-        order.append((i, 1, i - 2, None))
-        order.append((i - 1, 0, i - 2, i))
-        i += 2
-    if n >= 2 and n % 2 == 0:
-        order.append((n - 1, 1, n - 2, None))
-    return order
-
-
-def h265_encode_gop_planes(frames: list, qp: int = 32,
-                           lossless: bool = False, cands=_ALL_MODES,
-                           force_split=None, search: int = 4,
-                           recon_out: list | None = None,
-                           b_frames: bool = False,
-                           sao: bool = True,
-                           deblock: bool = True):
-    """Encode a GOP of 4:2:0 plane triples (Y, Cb, Cr) to one
-    Annex-B HEVC stream. Default: frame 0 is an IDR I picture,
-    every later frame a TRAIL_R P picture referencing its
-    predecessor. ``b_frames=True`` codes the I-B-P ladder of
-    :func:`_b_coding_order` instead — odd display positions become
-    B pictures (bi-prediction over both display neighbours), and
-    the NALs are emitted in CODING order (the stream carries POCs;
-    decode returns display order). ``search`` bounds the integer
-    motion-search window per start vector. ``recon_out`` (when a
-    list) receives the per-frame encoder reconstructions in DISPLAY
-    order after the call. Returns the Annex-B bytes; with
-    ``b_frames`` the display-order-index list of each emitted NAL
-    is available via the POCs themselves."""
-    if not frames:
-        raise ValueError("empty GOP")
-    if len(frames) > 255:
-        raise ValueError("GOP too long for 8-bit POC lsb")
-    h, w = np.asarray(frames[0][0]).shape
-    planes = []
-    for Y, Cb, Cr in frames:
-        Y = np.asarray(Y, dtype=np.int64)
-        Cb = np.asarray(Cb, dtype=np.int64)
-        Cr = np.asarray(Cr, dtype=np.int64)
-        if Y.shape != (h, w):
-            raise ValueError("GOP frames must share dimensions")
-        if h % 2 or w % 2 or h == 0 or w == 0:
-            raise ValueError("4:2:0 frame dimensions must be even")
-        if Cb.shape != (h // 2, w // 2) or Cb.shape != Cr.shape:
-            raise ValueError("chroma planes must be half-resolution "
-                             "4:2:0")
-        planes.append((_pad_plane(Y, 16), _pad_plane(Cb, 8),
-                       _pad_plane(Cr, 8)))
-    H, W = planes[0][0].shape
-    crop = (0, W - w, 0, H - h)
-    bw = _BitW()
-    _write_vps(bw)
-    out = _nal(_NAL_VPS, bw.bytes())
-    bw = _BitW()
-    _write_sps(bw, W, H, crop=crop)
-    out += _nal(_NAL_SPS, bw.bytes())
-    dbf = bool(deblock) and not lossless
-    bw = _BitW()
-    _write_pps(bw, qp, transquant_bypass=lossless, deblock=dbf)
-    out += _nal(_NAL_PPS, bw.bytes())
-    out += _marker_sei()
-    pps = {"qp": qp, "tq_bypass": 1 if lossless else 0,
-           "deblock": 1 if dbf else 0}
-    if b_frames:
-        order = _b_coding_order(len(frames))
-    else:
-        order = [(i, 2 if i == 0 else 1, i - 1 if i else None, None)
-                 for i in range(len(frames))]
-    recons: dict[int, _Frame5] = {}
-    for disp, st, l0, l1 in order:
-        pY, pCb, pCr = planes[disp]
-        refs = None
-        if st != 2:
-            refs = (recons[l0],
-                    recons[l1] if l1 is not None else None)
-        nal, fr = _encode_frame(pY, pCb, pCr, W, H, pps, qp,
-                                cands=cands, force_split=force_split,
-                                refs=refs, poc=disp, search=search,
-                                sao=sao)
-        out += nal
-        recons[disp] = fr
-    if recon_out is not None:
-        # what a conformant decode must produce (uncropped), in
-        # display order — the pixel-parity anchor for the tests
-        for i in range(len(frames)):
-            fr = recons[i]
-            recon_out.append((fr.Y.copy(), fr.Cb.copy(),
-                              fr.Cr.copy()))
-    return out
-
-
-def h265_encode_gop(frames: list, qp: int = 32, lossless: bool = False,
-                    cands=_ALL_MODES, force_split=None,
-                    search: int = 4, recon_out: list | None = None,
-                    b_frames: bool = False,
-                    sao: bool = True,
-                    deblock: bool = True) -> bytes:
-    """GOP form of :func:`h265_encode`: a list of 2-D luma arrays
-    (neutral chroma) or (Y, Cb, Cr) triples."""
-    trips = []
-    for f in frames:
-        if isinstance(f, (tuple, list)):
-            trips.append(tuple(np.asarray(p) for p in f))
-        else:
-            y = np.asarray(f)
-            if y.ndim != 2:
-                raise ValueError("GOP frames must be 2-D luma arrays "
-                                 "or (Y, Cb, Cr) triples")
-            h, w = y.shape
-            ch, cw = (h + 1) // 2, (w + 1) // 2
-            trips.append((y, np.full((ch, cw), 128, dtype=np.uint8),
-                          np.full((ch, cw), 128, dtype=np.uint8)))
-    return h265_encode_gop_planes(trips, qp=qp, lossless=lossless,
-                                  cands=cands, force_split=force_split,
-                                  search=search, recon_out=recon_out,
-                                  b_frames=b_frames, sao=sao,
-                                  deblock=deblock)
-
-
 def h265_encode(y: np.ndarray, qp: int = 32, cb=None, cr=None,
                 lossless: bool = False, cands=_ALL_MODES,
                 force_split=None, sao: bool = True,
@@ -3432,11 +2202,10 @@ def h265_encoder_reconstruction(y, qp: int = 32, cb=None, cr=None,
 
 
 def h265_decode_gop_planes(payload: bytes):
-    """Decode an Annex-B HEVC stream (VPS/SPS/PPS + IDR and TRAIL
-    P/B access units) to a list of uncropped (Y, Cb, Cr) int64 frame
-    planes (display/POC order) plus the SPS conformance-window crop.
-    Inter slices reference pictures from a POC-keyed multi-picture
-    DPB (two lists for B); an IDR resets the chain."""
+    """Decode an Annex-B HEVC stream (VPS/SPS/PPS + IDR access
+    units) to a list of uncropped (Y, Cb, Cr) int64 frame planes in
+    stream order plus the SPS conformance-window crop. Inter (TRAIL
+    P/B) pictures raise ``NotImplementedError``."""
     sps = pps = None
     slices = []                  # (is_idr, rbsp) in decode order
     marker = False
@@ -3457,8 +2226,8 @@ def h265_decode_gop_planes(payload: bytes):
             marker = marker or _GS_HEVC_UUID in rbsp
         elif nal_type < 32:
             raise NotImplementedError(
-                f"HEVC NAL type {nal_type} unsupported (IDR + TRAIL "
-                "only; CRA/RASL/BLA random-access structures are not "
+                f"HEVC NAL type {nal_type} unsupported (IDR only; "
+                "CRA/RASL/BLA random-access structures are not "
                 "modelled by this codec)")
         # AUD(35)/EOS(36)/EOB(37)/filler(38): ignored
     if sps is None or pps is None or not slices:
@@ -3473,6 +2242,10 @@ def h265_decode_gop_planes(payload: bytes):
             "rather than risk a silent misdecode (see module "
             "docstring; substituting the spec's initValue tables "
             "restores interop)")
+    if not all(is_idr for is_idr, _rbsp in slices):
+        raise NotImplementedError(
+            "HEVC inter (TRAIL P/B) pictures unsupported: this codec "
+            "decodes IDR intra pictures only")
     n_ctbs = (sps["w"] // 16) * (sps["h"] // 16)
     if n_ctbs > 1 << 20:
         raise ValueError("implausible frame dimensions")
@@ -3480,23 +2253,11 @@ def h265_decode_gop_planes(payload: bytes):
         raise ValueError("frame dimensions implausible for payload size")
     if n_ctbs * len(slices) > 1 << 22:
         raise ValueError("implausible stream size for frame dimensions")
-    frames = []                  # (segment, poc, planes) for ordering
-    seg = -1
-    dpb: dict = {}
-    for is_idr, rbsp in slices:
-        if is_idr:
-            seg += 1
-            dpb = {}
-        fr = _decode_slice(rbsp, sps, pps, is_idr=is_idr, dpb=dpb)
-        if fr.poc in dpb:
-            raise ValueError("duplicate POC within a coded video "
-                             "sequence")
-        dpb[fr.poc] = fr
-        frames.append((seg, fr.poc, (fr.Y, fr.Cb, fr.Cr)))
-    # output order: stream order of IDR segments, POC order within
-    # (B pictures decode after their future reference)
-    frames.sort(key=lambda t: (t[0], t[1]))
-    return [planes for _seg, _poc, planes in frames], sps["crop"]
+    frames = []
+    for _is_idr, rbsp in slices:
+        fr = _decode_slice(rbsp, sps, pps)
+        frames.append((fr.Y, fr.Cb, fr.Cr))
+    return frames, sps["crop"]
 
 
 def h265_decode_planes(payload: bytes):
@@ -3520,8 +2281,8 @@ def h265_decode(payload: bytes) -> np.ndarray:
 
 
 def h265_decode_gop(payload: bytes) -> list:
-    """Decode an HEVC stream (IDR + TRAIL P/B pictures) to a list of
-    RGB frames in display (POC) order."""
+    """Decode an HEVC stream of IDR pictures to a list of RGB frames
+    in stream order."""
     from .h264 import _planes_to_rgb
     frames, crop = h265_decode_gop_planes(payload)
     crop2 = tuple(c // 2 for c in crop)

@@ -19,9 +19,9 @@ h264_decode_gop). The r8 rounds closed most of that module's old
 stub list (B slices, every inter partition shape, weighted
 prediction, High-profile Intra_8x8), and late r8 added HEVC
 Main-profile intra (h265.py — hvc1/hvcC MP4 tracks, lossless
-transquant-bypass). Out of scope, honestly: H.264 CABAC (rejected
-with NotImplementedError), H.264/HEVC inter features beyond those,
-deblocking/SAO in-loop filters.
+transquant-bypass). Out of scope, honestly: H.264 CABAC and HEVC
+inter (P/B) pictures, both rejected with NotImplementedError, H.264
+inter features beyond those, and the H.264 deblocking filter.
 
 Also defines GSV1, a minimal documented frame container (magic +
 frame interval + length-prefixed BMP frames) so video frame-sampling
@@ -1970,13 +1970,9 @@ def mp4_sample_frame_features(payload: bytes, every_ms: int):
         frames = _h265.h265_decode_gop(b"".join(d["samples"]))
         if len(frames) != len(d["samples"]):
             raise ValueError("hvc1 sample count != decoded frame count")
-        # h265_decode_gop returns DISPLAY (POC) order; pair with the
-        # sorted presentation timeline — ctts composition times when
-        # the track carries B reordering, decode times otherwise
-        # (identical timelines for I/P-only tracks)
-        pres = sorted(d["composition_ts"] or d["sample_ts"])
+        # intra-only pictures: decode order is presentation order
         next_ts = 0
-        for i, (ts_, px) in enumerate(zip(pres, frames)):
+        for i, (ts_, px) in enumerate(zip(d["sample_ts"], frames)):
             if ts_ >= next_ts:
                 yield i, ts_, pixel_features(px)
                 next_ts = (ts_ // every_ms + 1) * every_ms

@@ -264,10 +264,9 @@ def video_frame_stats(media: DataFrame, every_ms: int = 1000,
     avc1 H.264 tracks (r8: sample sequences decode as GOPs via
     h264_decode_gop, so P-frame samples predict from their references
     instead of failing standalone); and hvc1/hev1 HEVC tracks (late
-    r8: IDR + TRAIL P/B sample sequences via h265_decode_gop over a
-    POC-keyed DPB; B-reordered tracks pair the display-order decode
-    with the sorted ctts presentation timeline, like avc1).
-    Unsupported fourccs raise at frame decode.
+    r8: IDR sample sequences via h265_decode_gop; inter P/B samples
+    raise ``NotImplementedError``). Unsupported fourccs raise at frame
+    decode.
     """
     cols = media.select(F.col(id_col).alias("media_id"),
                         F.col(payload_col).alias("payload"))

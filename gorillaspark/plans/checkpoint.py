@@ -57,10 +57,6 @@ def completed_units(spark: SparkSession, io, job_id: str) -> set[str]:
     return {r.unit for r in rows}
 
 
-def pending_units(all_units: list[str], done: set[str]) -> list[str]:
-    return [u for u in all_units if u not in done]
-
-
 def record_unit(spark: SparkSession, io, job_id: str, unit: str,
                 rows_out: int | None, out_partitions: int | None,
                 out_bytes_est: int | None,
@@ -84,25 +80,6 @@ def unit_metrics(spark: SparkSession, io, job_id: str):
             .withColumn("rows_per_sec",
                         F.col("rows_out")
                         / F.greatest(F.col("wall_ms"), F.lit(1)) * 1000))
-
-
-def run_resumable(spark: SparkSession, io, job_id: str,
-                  units: list[str],
-                  unit_fn,
-                  out_table: str) -> dict[str, int]:
-    """Drive a unit-at-a-time resumable job.
-
-    ``unit_fn(unit) -> DataFrame`` produces a unit's output; completed
-    units are skipped on re-run. Each unit commits one lineage+metrics
-    row (rows, files, parquet bytes, snapshot id, wall time).
-    Returns {unit: rows_out} for the units executed in THIS invocation.
-    """
-    done = completed_units(spark, io, job_id)
-    ran: dict[str, int] = {}
-    for unit in pending_units(units, done):
-        ran[unit] = _commit_unit(spark, io, job_id, unit,
-                                 unit_fn(unit), out_table)
-    return ran
 
 
 def _commit_unit(spark: SparkSession, io, job_id: str, unit: str,
@@ -132,10 +109,11 @@ def run_resumable_shared(spark: SparkSession, io,
     the unit's shared input (e.g. the day's latency points), which is
     persisted once and fed to every stage still pending for that unit.
     Each stage keeps its OWN ``_meta`` ledger and idempotent commit
-    key, so resumability semantics are identical to running
-    :func:`run_resumable` per stage — but the expensive source scan
-    happens once per unit instead of once per stage per unit (at
-    100 TB the difference between 1x and len(stages)x ingest cost).
+    key, so a stage resumes on its own: completed units are skipped on
+    re-run. The expensive source scan happens once per unit instead of
+    once per stage per unit (at 100 TB the difference between 1x and
+    len(stages)x ingest cost). A single stage with an identity
+    ``stage_fn`` is the plain one-table resumable job.
 
     Returns {job_id: {unit: rows_out}} for units executed this
     invocation.

@@ -21,8 +21,8 @@ block counts. ``compact_sweep`` repairs the table in place:
   BETWEEN the rewrite commit and the lineage commit is repaired on
   the next sweep: committed ``{job_id}/compact/*`` keys with no
   matching ``_meta`` row are backfilled from their entries (wall_ms 0
-  marks a backfill), mirroring run_resumable's crash-between-commits
-  contract.
+  marks a backfill), mirroring run_resumable_shared's
+  crash-between-commits contract.
 """
 
 from __future__ import annotations

@@ -102,17 +102,6 @@ def q_rollup_1m(spark, sf_dir):
     return _rollup(spark, sf_dir, "1m")
 
 
-def q_rollup_1m_hashed(spark, sf_dir):
-    """Integer-hashed group keys (the throughput path) must produce
-    byte-identical values to the string-keyed rollup — same oracle."""
-    out = rollup_tier(_event_points(spark, sf_dir), "1m",
-                      hashed_keys=True)
-    out = out.select(
-        "series_key", F.unix_millis("bucket").alias("bucket_ms"),
-        "cnt", "sum", "avg", "min", "max", "p95")
-    return _round6(out, ["sum", "avg", "p95"])
-
-
 def q_rollup_1h(spark, sf_dir):
     return _rollup(spark, sf_dir, "1h")
 
@@ -586,7 +575,6 @@ _TOP_CUSTOMERS_SQL = """
 
 QUERIES = {
     "rollup_1m": q_rollup_1m,
-    "rollup_1m_hashed": q_rollup_1m_hashed,
     "rollup_1h": q_rollup_1h,
     "rollup_1d": q_rollup_1d,
     "rollup_1h_cascade": q_rollup_1h_cascade,
@@ -607,7 +595,6 @@ QUERIES = {
 
 ORACLES = {
     "rollup_1m": _rollup_sql("1m"),
-    "rollup_1m_hashed": _rollup_sql("1m"),
     "rollup_1h": _rollup_sql("1h"),
     "rollup_1d": _rollup_sql("1d"),
     "rollup_1h_cascade": _rollup_sql("1h"),
@@ -2182,7 +2169,7 @@ def q_media_flac_stats(spark, sf_dir):
     from .operators.multimodal import audio_stats
     from .operators.spread import spread as _sp
     # widen before the synth UDF (the expensive stage; a small
-    # corpus is one parquet split - see the h265 families)
+    # corpus is one parquet split - see operators/spread.py)
     docs = _sp(_docs(spark, sf_dir))
     fl = docs.select(F.col("doc_id").cast("long").alias("media_id"),
                      _synth_flac_udf()(F.col("text")).alias("payload"))
@@ -2198,7 +2185,7 @@ def q_media_audio_stats(spark, sf_dir):
     from .operators.multimodal import audio_stats
     from .operators.spread import spread as _sp
     # widen before the synth UDF (the expensive stage; a small
-    # corpus is one parquet split - see the h265 families)
+    # corpus is one parquet split - see operators/spread.py)
     docs = _sp(_docs(spark, sf_dir))
     wav = docs.select(F.col("doc_id").cast("long").alias("media_id"),
                       _synth_wav_udf()(F.col("text")).alias("payload"))
@@ -2272,7 +2259,7 @@ def q_media_png_stats(spark, sf_dir):
     from .operators.multimodal import image_stats
     from .operators.spread import spread as _sp
     # widen before the synth UDF (the expensive stage; a small
-    # corpus is one parquet split - see the h265 families)
+    # corpus is one parquet split - see operators/spread.py)
     docs = _sp(_docs(spark, sf_dir))
     png = docs.select(F.col("doc_id").cast("long").alias("media_id"),
                       _synth_png_udf()(F.col("doc_id")).alias("payload"))
@@ -2324,7 +2311,7 @@ def q_media_jpeg_stats(spark, sf_dir):
     from .operators.multimodal import image_stats
     from .operators.spread import spread as _sp
     # widen before the synth UDF (the expensive stage; a small
-    # corpus is one parquet split - see the h265 families)
+    # corpus is one parquet split - see operators/spread.py)
     docs = _sp(_docs(spark, sf_dir))
     jpg = docs.select(F.col("doc_id").cast("long").alias("media_id"),
                       _synth_jpeg_udf()(F.col("doc_id")).alias("payload"))
@@ -2397,7 +2384,7 @@ def q_media_mp4_stats(spark, sf_dir):
     from .operators.multimodal import video_frame_stats
     from .operators.spread import spread as _sp
     # widen before the synth UDF (the expensive stage; a small
-    # corpus is one parquet split - see the h265 families)
+    # corpus is one parquet split - see operators/spread.py)
     docs = _sp(_docs(spark, sf_dir))
     vid = docs.select(F.col("doc_id").cast("long").alias("media_id"),
                       _synth_mp4_udf()(F.col("doc_id")).alias("payload"))
@@ -2444,7 +2431,7 @@ def q_media_image_stats(spark, sf_dir):
     from .operators.multimodal import image_stats
     from .operators.spread import spread as _sp
     # widen before the synth UDF (the expensive stage; a small
-    # corpus is one parquet split - see the h265 families)
+    # corpus is one parquet split - see operators/spread.py)
     docs = _sp(_docs(spark, sf_dir))
     bmp = docs.select(F.col("doc_id").cast("long").alias("media_id"),
                       _synth_bmp_udf()(F.col("doc_id")).alias("payload"))
@@ -2514,7 +2501,7 @@ def q_media_frame_ahash(spark, sf_dir):
     from .operators.multimodal import video_frame_stats
     from .operators.spread import spread as _sp
     # widen before the synth UDF (the expensive stage; a small
-    # corpus is one parquet split - see the h265 families)
+    # corpus is one parquet split - see operators/spread.py)
     docs = _sp(_docs(spark, sf_dir))
     vid = docs.select(F.col("doc_id").cast("long").alias("media_id"),
                       _synth_gsv1_udf()(F.col("doc_id")).alias("payload"))
@@ -2623,7 +2610,7 @@ def q_media_h264_pcm_stats(spark, sf_dir):
     from .operators.multimodal import image_stats
     from .operators.spread import spread as _sp
     # widen before the synth UDF (the expensive stage; a small
-    # corpus is one parquet split - see the h265 families)
+    # corpus is one parquet split - see operators/spread.py)
     docs = _sp(_docs(spark, sf_dir))
     img = docs.select(F.col("doc_id").cast("long").alias("media_id"),
                       _synth_h264_pcm_udf()(F.col("doc_id"))
@@ -2698,7 +2685,7 @@ def q_media_h264_i8_stats(spark, sf_dir):
     from .operators.multimodal import image_stats
     from .operators.spread import spread as _sp
     # widen before the synth UDF (the expensive stage; a small
-    # corpus is one parquet split - see the h265 families)
+    # corpus is one parquet split - see operators/spread.py)
     docs = _sp(_docs(spark, sf_dir))
     img = docs.select(F.col("doc_id").cast("long").alias("media_id"),
                       _synth_h264_i8_udf()(F.col("doc_id"))
@@ -2755,7 +2742,7 @@ def q_media_jpeg_prog_stats(spark, sf_dir):
     from .operators.multimodal import image_stats
     from .operators.spread import spread as _sp
     # widen before the synth UDF (the expensive stage; a small
-    # corpus is one parquet split - see the h265 families)
+    # corpus is one parquet split - see operators/spread.py)
     docs = _sp(_docs(spark, sf_dir))
     jpg = docs.select(F.col("doc_id").cast("long").alias("media_id"),
                       _synth_jpeg_udf(progressive=True)(F.col("doc_id"))
@@ -2776,7 +2763,7 @@ def q_media_h264_stats(spark, sf_dir):
     from .operators.multimodal import video_frame_stats
     from .operators.spread import spread as _sp
     # widen before the synth UDF (the expensive stage; a small
-    # corpus is one parquet split - see the h265 families)
+    # corpus is one parquet split - see operators/spread.py)
     docs = _sp(_docs(spark, sf_dir))
     vid = docs.select(F.col("doc_id").cast("long").alias("media_id"),
                       _synth_avc1_udf()(F.col("doc_id")).alias("payload"))
@@ -2996,7 +2983,7 @@ def q_media_h264_part_stats(spark, sf_dir):
     from .operators.multimodal import video_frame_stats
     from .operators.spread import spread as _sp
     # widen before the synth UDF (the expensive stage; a small
-    # corpus is one parquet split - see the h265 families)
+    # corpus is one parquet split - see operators/spread.py)
     docs = _sp(_docs(spark, sf_dir))
     vid = docs.select(F.col("doc_id").cast("long").alias("media_id"),
                       _synth_h264_part_gop_udf()(F.col("doc_id"))
@@ -3076,7 +3063,7 @@ def q_media_h264_wp_stats(spark, sf_dir):
     from .operators.multimodal import video_frame_stats
     from .operators.spread import spread as _sp
     # widen before the synth UDF (the expensive stage; a small
-    # corpus is one parquet split - see the h265 families)
+    # corpus is one parquet split - see operators/spread.py)
     docs = _sp(_docs(spark, sf_dir))
     vid = docs.select(F.col("doc_id").cast("long").alias("media_id"),
                       _synth_h264_wp_gop_udf()(F.col("doc_id"))
@@ -3097,7 +3084,7 @@ def q_media_h264_b_stats(spark, sf_dir):
     from .operators.multimodal import video_frame_stats
     from .operators.spread import spread as _sp
     # widen before the synth UDF (the expensive stage; a small
-    # corpus is one parquet split - see the h265 families)
+    # corpus is one parquet split - see operators/spread.py)
     docs = _sp(_docs(spark, sf_dir))
     vid = docs.select(F.col("doc_id").cast("long").alias("media_id"),
                       _synth_h264_b_gop_udf()(F.col("doc_id"))
@@ -3329,126 +3316,6 @@ def q_media_h265_stats(spark, sf_dir):
                      "frame_ts_ms", "ahash")
 
 
-def _synth_hvc1_p_udf():
-    """Per-doc hvc1 MP4 carrying a REAL HEVC P GOP (r8 inter work):
-    frame 0 is a lossless IDR of the grey field
-    v = (doc*7 + x*3 + y*5) % 256, and frame k is that field rolled
-    by (2k, 3k) pixels — inside the encoder's ±3-px motion-search
-    window (search=3), so the GOP codes skip/merge/AMVP motion-compensated CUs
-    (wrap-around seams fall back to intra-in-P / residuals; every
-    path is transquant-bypass lossless, keeping the pixels exactly
-    SQL-predictable regardless of the encoder's CU decisions). The
-    track is one hvcC record + per-access-unit samples
-    (hevc_gop_to_hvc1_samples), so the Spark decode exercises the
-    single-pic-DPB TRAIL chain end to end."""
-    from .operators import media_codecs as mc
-    from .operators import h265 as h5
-
-    @pandas_udf("binary")
-    def to_hvc1_p(ids: pd.Series) -> pd.Series:
-        def one(d):
-            xg, yg = np.meshgrid(np.arange(16), np.arange(16))
-            f0 = ((d * 7 + xg * 3 + yg * 5) % 256).astype(np.uint8)
-            frames = [np.roll(f0, (2 * k, 3 * k), axis=(0, 1))
-                      for k in range(2 + d % 3)]
-            # search=3 still reaches the (3,2)-px roll; the pixels
-            # are search-independent (lossless), this is pure cost
-            ab = h5.h265_encode_gop(frames, lossless=True,
-                                    cands=(0, 1, 10, 26), search=3)
-            samples, hvcc = h5.hevc_gop_to_hvc1_samples(ab)
-            return mc.mp4_mux(samples, frame_ms=500, fourcc=b"hvc1",
-                              width=16, height=16,
-                              config=mc._box(b"hvcC", hvcc))
-
-        return ids.map(one)
-
-    return to_hvc1_p
-
-
-def _synth_hvc1_b_udf():
-    """B-picture twin of :func:`_synth_hvc1_p_udf`: the same rolled
-    grey field per DISPLAY index, coded as the I-B-P ladder
-    (b_frames=True — odd display positions are bi-predicted TRAIL B
-    pictures decoded out of display order), muxed with version-1
-    ctts composition offsets so the MP4 presentation timeline is the
-    display order. Lossless, so the pixels per display frame — and
-    therefore the oracle — are IDENTICAL to the P family's
-    (_MEDIA_H265_P_SQL is shared verbatim); what changes is the
-    decode machinery under test: two-list DPB, inter_pred_idc,
-    combined bi merge candidates, POC output reordering."""
-    from .operators import media_codecs as mc
-    from .operators import h265 as h5
-
-    @pandas_udf("binary")
-    def to_hvc1_b(ids: pd.Series) -> pd.Series:
-        def one(d):
-            xg, yg = np.meshgrid(np.arange(16), np.arange(16))
-            f0 = ((d * 7 + xg * 3 + yg * 5) % 256).astype(np.uint8)
-            n = 2 + d % 3
-            frames = [np.roll(f0, (2 * k, 3 * k), axis=(0, 1))
-                      for k in range(n)]
-            ab = h5.h265_encode_gop(frames, lossless=True,
-                                    cands=(0, 1, 10, 26), search=3,
-                                    b_frames=True)
-            samples, hvcc = h5.hevc_gop_to_hvc1_samples(ab)
-            order = h5._b_coding_order(n)
-            ctts = [(disp - i) * 500
-                    for i, (disp, *_rest) in enumerate(order)]
-            return mc.mp4_mux(samples, frame_ms=500, fourcc=b"hvc1",
-                              width=16, height=16,
-                              config=mc._box(b"hvcC", hvcc),
-                              ctts_offsets=ctts)
-
-        return ids.map(one)
-
-    return to_hvc1_b
-
-
-def q_media_h265_b_stats(spark, sf_dir):
-    """HEVC B decode end to end (r8): hvc1 demux with ctts
-    reordering, TRAIL B slices — two-list DPB, bi-prediction,
-    combined merge candidates, POC-ordered output — reconstructed
-    losslessly and value-checked against the same pure-SQL
-    shifted-field oracle as the P family (pixels per display index
-    are identical by construction)."""
-    from .operators.multimodal import video_frame_stats
-    from .operators.spread import spread as _sp
-    # widen BEFORE the synth UDF: the per-doc GOP encode is the
-    # expensive stage, and a small corpus is one parquet split —
-    # without this the synthesis serializes on the scan partitions
-    docs = _sp(_docs(spark, sf_dir))
-    vid = docs.select(F.col("doc_id").cast("long").alias("media_id"),
-                      _synth_hvc1_b_udf()(F.col("doc_id"))
-                      .alias("payload"))
-    st = video_frame_stats(vid, every_ms=1000)
-    return st.select(F.col("media_id").alias("doc_id"),
-                     F.col("frame_index").cast("long")
-                     .alias("frame_index"),
-                     "frame_ts_ms", "ahash")
-
-
-def q_media_h265_p_stats(spark, sf_dir):
-    """HEVC inter decode end to end (r8): hvc1 demux, hvcC parse,
-    per-sample Annex-B rebuild, TRAIL P slices — cu_skip / merge /
-    AMVP motion derivation and quarter-pel-capable MC against the
-    previous picture — reconstructed losslessly and value-checked
-    against a pure-SQL shifted-field oracle."""
-    from .operators.multimodal import video_frame_stats
-    from .operators.spread import spread as _sp
-    # widen BEFORE the synth UDF: the per-doc GOP encode is the
-    # expensive stage, and a small corpus is one parquet split —
-    # without this the synthesis serializes on the scan partitions
-    docs = _sp(_docs(spark, sf_dir))
-    vid = docs.select(F.col("doc_id").cast("long").alias("media_id"),
-                      _synth_hvc1_p_udf()(F.col("doc_id"))
-                      .alias("payload"))
-    st = video_frame_stats(vid, every_ms=1000)
-    return st.select(F.col("media_id").alias("doc_id"),
-                     F.col("frame_index").cast("long")
-                     .alias("frame_index"),
-                     "frame_ts_ms", "ahash")
-
-
 # 16x16 grey lossless frames sampled at k % 2 == 0; ahash cell (i,j)
 # spans 2x2 px (area 4 of 256): block-mean > frame-mean reduces
 # exactly to 64*cellsum > total — the same reduction as the I_PCM
@@ -3461,42 +3328,6 @@ _MEDIA_H265_SQL = """
     px AS (
       SELECT s.doc_id, s.k, x.x, y.y,
              (s.doc_id*7 + s.k*37 + x.x*3 + y.y*5) % 256 AS v
-      FROM sampled s
-      CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS x) x
-      CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS y) y
-    ),
-    tot AS (SELECT doc_id, k, sum(v) AS t FROM px GROUP BY 1, 2),
-    cell AS (
-      SELECT doc_id, k, (y // 2) * 8 + (x // 2) AS bit, sum(v) AS cs
-      FROM px GROUP BY 1, 2, 3
-    ),
-    ah AS (SELECT c.doc_id, c.k,
-                  sum(CASE WHEN c.cs * 64 > t.t
-                           THEN (1::HUGEINT << CAST(c.bit AS INTEGER))
-                           ELSE 0::HUGEINT END) AS ahash_u
-           FROM cell c JOIN tot t USING (doc_id, k) GROUP BY 1, 2)
-    SELECT doc_id, CAST(k AS BIGINT) AS frame_index,
-           CAST(k * 500 AS BIGINT) AS frame_ts_ms,
-           CAST(CASE WHEN ahash_u >= 9223372036854775808::HUGEINT
-                     THEN ahash_u - 18446744073709551616::HUGEINT
-                     ELSE ahash_u END AS BIGINT) AS ahash
-    FROM ah
-"""
-
-# P-GOP twin: frame k is the base field rolled by (2k, 3k), so
-# v(x, y, k) = base((x-3k) mod 16, (y-2k) mod 16); the double-mod
-# keeps DuckDB's dividend-signed % non-negative. Downstream ahash
-# reduction identical to _MEDIA_H265_SQL.
-_MEDIA_H265_P_SQL = """
-    WITH f AS (
-      SELECT doc_id, unnest(generate_series(0, 1 + doc_id % 3)) AS k
-      FROM documents
-    ), sampled AS (SELECT doc_id, k FROM f WHERE k % 2 = 0),
-    px AS (
-      SELECT s.doc_id, s.k, x.x, y.y,
-             (s.doc_id*7
-              + ((x.x - 3*s.k) % 16 + 16) % 16 * 3
-              + ((y.y - 2*s.k) % 16 + 16) % 16 * 5) % 256 AS v
       FROM sampled s
       CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS x) x
       CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS y) y
@@ -3538,8 +3369,6 @@ QUERIES.update({
     "media_h264_i8_stats": q_media_h264_i8_stats,
     "media_jpeg_prog_stats": q_media_jpeg_prog_stats,
     "media_h265_stats": q_media_h265_stats,
-    "media_h265_p_stats": q_media_h265_p_stats,
-    "media_h265_b_stats": q_media_h265_b_stats,
 })
 ORACLES.update({
     "media_audio_stats": _MEDIA_AUDIO_SQL,
@@ -3562,10 +3391,6 @@ ORACLES.update({
     #                          Intra_8x8 transform chain (r8)
     "media_jpeg_prog_stats": _MEDIA_JPEG_SQL,  # same exact family, SOF2
     "media_h265_stats": _MEDIA_H265_SQL,  # lossless HEVC intra (r8)
-    "media_h265_p_stats": _MEDIA_H265_P_SQL,  # lossless HEVC P GOP (r8)
-    # B ladder: same display-order pixels as the P family by
-    # construction (lossless + ctts reordering), so the SQL is shared
-    "media_h265_b_stats": _MEDIA_H265_P_SQL,
 })
 
 
@@ -3759,8 +3584,6 @@ ORACLES.update({
 # every one green in the r4 driver run (and most since r1), each with
 # an in-window or rotating-in sibling — sit out this round.
 _EXTRA_NAMES = [
-    "rollup_1m_hashed",        # kept: rollup_1m (same tier; hashed
-                               #       shuffle variant, pytest-equal)
     "rollup_1h",               # kept: rollup_1h_cascade + rollup_1d
                                #       (rotating in)
     "sessionize",              # kept: sessionize_native (same output,
@@ -3820,8 +3643,8 @@ _EXTRA_NAMES = [
     "lang_id",                 # kept: doc_stats / doc_trigram_lm
                                #       keep the textstats family
                                #       in-window
-    "media_frame_ahash",       # kept: the media_h264*/media_h265*
-                               #       queries exercise the
+    "media_frame_ahash",       # kept: the media_h264* queries
+                               #       exercise the
                                #       video_frame_stats/ahash
                                #       machinery in-window
     "simhash128_hamming_pairs",  # kept: simhash_hamming_pairs (same
@@ -3837,16 +3660,9 @@ _EXTRA_NAMES = [
     "doc_fingerprint",         # kept: doc_stats + the trigram
                                #       families keep the textstats
                                #       surface in-window
-    "media_mp4_stats",         # kept: the avc1/hvc1 GOP families
-                               #       demux MP4 in-window; MJPEG
-                               #       samples share jpeg_decode with
-                               #       media_jpeg_prog_stats
     "media_jpeg_stats",        # kept: media_jpeg_prog_stats decodes
                                #       the same exact block-constant
                                #       family in-window
-    "media_png_stats",         # kept: media_jpeg_prog_stats keeps the
-                               #       still-image surface in-window;
-                               #       the PNG matrix is fuzz-pinned
     "ann_topk",                # kept: ann_topk_lsh in-window is
                                #       oracled against this exact
                                #       brute-force SQL (equality =

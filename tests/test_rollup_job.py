@@ -129,7 +129,7 @@ def test_job_sketch_tier_merges_to_batch(spark, job_env, transcripts):
         dd_sketch_cascade,
         dd_sketch_tier,
     )
-    from gorillaspark.plans.checkpoint import run_resumable
+    from gorillaspark.plans.checkpoint import run_resumable_shared
 
     tpath, wh = job_env
     io = ParquetTableIO(spark, wh)
@@ -142,8 +142,9 @@ def test_job_sketch_tier_merges_to_batch(spark, job_env, transcripts):
         return dd_sketch_tier(
             validate_points(turn_latency_points(tday)), "1m")
 
-    ran = run_resumable(spark, io, "jt-sketch", units, day_sketch,
-                        out_table="sketch_1m")
+    stages = [("jt-sketch", lambda df: df, "sketch_1m")]
+    ran = run_resumable_shared(spark, io, stages, units,
+                               day_sketch)["jt-sketch"]
     assert set(ran) == set(units)
     pts = validate_points(turn_latency_points(ts))
     stored = dd_sketch_cascade(io.read("sketch_1m"), "1d").toPandas()
@@ -156,8 +157,8 @@ def test_job_sketch_tier_merges_to_batch(spark, job_env, transcripts):
         s.astype({"cnt": "int64"}), d.astype({"cnt": "int64"}))
     # resume: no duplicate sketch rows
     n1 = io.read("sketch_1m").count()
-    ran2 = run_resumable(spark, io, "jt-sketch", units, day_sketch,
-                         out_table="sketch_1m")
+    ran2 = run_resumable_shared(spark, io, stages, units,
+                                day_sketch)["jt-sketch"]
     assert ran2 == {}
     assert io.read("sketch_1m").count() == n1
 

@@ -17,7 +17,7 @@ from gorillaspark.operators.retention import (
 )
 from gorillaspark.plans.checkpoint import (
     completed_units,
-    run_resumable,
+    run_resumable_shared,
     unit_metrics,
 )
 from gorillaspark.sources.tableio import ParquetTableIO
@@ -66,14 +66,14 @@ def test_resumable_job_skips_done_units(spark, io):
         calls.append(u)
         return spark.range(2).withColumn("unit", F.lit(u))
 
-    ran1 = run_resumable(spark, io, "job1", ["d1", "d2", "d3"], unit_fn,
-                         out_table="out")
+    ran1 = run_resumable_shared(spark, io, [("job1", lambda df: df, "out")],
+                                ["d1", "d2", "d3"], unit_fn)["job1"]
     assert set(ran1) == {"d1", "d2", "d3"}
     assert io.read("out").count() == 6
     # simulate restart: only new unit runs, outputs not duplicated
     calls.clear()
-    ran2 = run_resumable(spark, io, "job1", ["d1", "d2", "d3", "d4"],
-                         unit_fn, out_table="out")
+    ran2 = run_resumable_shared(spark, io, [("job1", lambda df: df, "out")],
+                                ["d1", "d2", "d3", "d4"], unit_fn)["job1"]
     assert set(ran2) == {"d4"} and calls == ["d4"]
     assert io.read("out").count() == 8
     assert completed_units(spark, io, "job1") == {"d1", "d2", "d3", "d4"}
@@ -86,10 +86,10 @@ def test_crash_between_output_and_meta_is_exactly_once(spark, io):
     df = spark.range(3).withColumn("unit", F.lit("d1"))
     io.append("out", df, commit_key="job2/d1")   # output committed…
     # …crash before meta; restart:
-    ran = run_resumable(spark, io, "job2", ["d1"],
-                        lambda u: spark.range(3).withColumn(
-                            "unit", F.lit(u)),
-                        out_table="out")
+    ran = run_resumable_shared(spark, io, [("job2", lambda df: df, "out")],
+                               ["d1"],
+                               lambda u: spark.range(3).withColumn(
+                                   "unit", F.lit(u)))["job2"]
     assert ran == {"d1": 3}
     assert io.read("out").count() == 3           # not 6
 
@@ -108,7 +108,8 @@ def test_replay_does_not_rerun_committed_unit(spark, io):
 
     with pytest.raises(Exception, match="replayed unit was executed"):
         unit_fn("d1").collect()
-    ran = run_resumable(spark, io, "job3", ["d1"], unit_fn, out_table="out")
+    ran = run_resumable_shared(spark, io, [("job3", lambda df: df, "out")],
+                               ["d1"], unit_fn)["job3"]
     assert ran == {"d1": 3}
     m = unit_metrics(spark, io, "job3").toPandas()
     assert m["snapshot_id"].tolist() == [snap.snapshot_id]
@@ -125,8 +126,8 @@ def test_replay_of_entry_without_counts_records_null(spark, io):
                   for e in json.load(f)]
     with open(path, "w") as f:
         json.dump(legacy, f)
-    ran = run_resumable(spark, io, "job4", ["d1"],
-                        lambda u: spark.range(3), out_table="out")
+    ran = run_resumable_shared(spark, io, [("job4", lambda df: df, "out")],
+                               ["d1"], lambda u: spark.range(3))["job4"]
     assert ran == {"d1": None}
     m = unit_metrics(spark, io, "job4").toPandas()
     assert m["rows_out"].isna().all() and m["out_bytes_est"].isna().all()
@@ -168,9 +169,10 @@ def test_retention_filter_and_sweep(spark, io):
 
 
 def test_unit_metrics_rows(spark, io):
-    run_resumable(spark, io, "jm", ["u1", "u2"],
-                  lambda u: spark.range(10).withColumn("unit", F.lit(u)),
-                  out_table="out")
+    run_resumable_shared(spark, io, [("jm", lambda df: df, "out")],
+                         ["u1", "u2"],
+                         lambda u: spark.range(10).withColumn("unit",
+                                                              F.lit(u)))
     m = unit_metrics(spark, io, "jm").toPandas()
     assert len(m) == 2
     assert (m["rows_out"] == 10).all()
