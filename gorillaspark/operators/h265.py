@@ -15,11 +15,14 @@ Scope (r8): Main profile, 4:2:0, 8-bit, I slices —
   = 0; the NxN intra split forces 4x4 TUs per §7.4.9.8).
 * Intra prediction (§8.4.4.2): planar / DC / the 33 angular modes,
   reference-sample substitution and the [1 2 1] smoothing filter.
-* Transforms: 4x4 DST-VII for intra luma, DCT-II otherwise
-  (§8.6.4), spec dequant chain (levelScale = [40,45,51,57,64,72],
-  bdShift = log2TbSize + 3 for 8-bit); cu_transquant_bypass lossless
-  CUs (PPS transquant_bypass_enabled_flag) for the exact oracle
-  family.
+* Lossless only: every CU is coded with cu_transquant_bypass (PPS
+  transquant_bypass_enabled_flag 1), so the coded residual IS the
+  sample difference and decode reproduces the source bit for bit.
+  There is no transform, quantization or in-loop filter: the PPS
+  disables deblocking and the slice header writes both SAO flags 0.
+  A stream that would need any of them (bypass off in the PPS or in
+  a CU, deblocking enabled, a slice SAO flag set) raises
+  ``NotImplementedError``.
 * Entropy: CABAC only (HEVC has no CAVLC slice data). The binary
   arithmetic engine is SHARED with h264_cabac.py — H.265 §9.3.4 is
   the same M-coder — and so is its honesty contract: the
@@ -38,19 +41,11 @@ Scope (r8): Main profile, 4:2:0, 8-bit, I slices —
   than misdecode it. Substituting the spec's literal initValue /
   ctxIdxMap data is a pure data swap that would restore interop;
   every structural piece (engine, binarizations, syntax order,
-  scans, transforms, prediction) is already here.
+  scans, prediction) is already here.
 
 Intra only: every picture is an IDR I slice, and a stream carrying
 inter (TRAIL P/B) pictures raises ``NotImplementedError``. The SPS
 signals AMP off and an inter transform depth of 0.
-
-In-loop filters (late r8): deblocking (§8.7.2 — CU edges on the
-8-sample grid, all bS 2 since every CU is intra, Table 8-12 beta/tC,
-strong/weak luma + bS-2 chroma; PPS signals on/off, lossless keeps
-it off) runs first, then SAO (per-CTB band/edge offsets with
-merge-left/up, §8.7.3 classification on the deblocked recon); the
-filtered picture is the output. Lossless slices opt out of both
-(they would perturb transquant-bypass exactness).
 
 Deliberately out of scope (reject loudly): PCM, scaling lists,
 tiles, WPP, long-term refs, 4:2:2/4:4:4, >8-bit.
@@ -84,6 +79,9 @@ _NAL_VPS = 32
 _NAL_SPS = 33
 _NAL_PPS = 34
 _NAL_PREFIX_SEI = 39
+
+# init_qp of the PPS: a fixed syntax value, unused by bypass CUs
+_INIT_QP = 32
 
 
 # ---------------------------------------------------------------------------
@@ -221,7 +219,9 @@ def _parse_vps(br: _Bits) -> dict:
 def _write_sps(bw: _BitW, w: int, h: int, crop=(0, 0, 0, 0)):
     """seq_parameter_set_rbsp (§7.3.2.2) for this codec's fixed
     coding structure: CTB 16, min CB 8, TB 4..16, rqt depth 0,
-    4:2:0, 8-bit, no SAO/PCM/scaling lists/VUI. ``crop`` is the
+    4:2:0, 8-bit, no PCM/scaling lists/VUI. SAO is enabled here, so
+    every slice header carries the two slice SAO flags (always 0).
+    ``crop`` is the
     conformance window (left, right, top, bottom) in luma samples —
     pic_width/height must already be CTB-multiples."""
     if w % 16 or h % 16 or w == 0 or h == 0:
@@ -258,7 +258,7 @@ def _write_sps(bw: _BitW, w: int, h: int, crop=(0, 0, 0, 0)):
     bw.ue(0)                     # max_transform_hierarchy_depth_intra
     bw.u(0, 1)                   # scaling_list_enabled_flag
     bw.u(0, 1)                   # amp_enabled_flag
-    bw.u(1, 1)          # sample_adaptive_offset_enabled_flag (late r8)
+    bw.u(1, 1)                   # sample_adaptive_offset_enabled_flag
     bw.u(0, 1)                   # pcm_enabled_flag
     bw.ue(0)                     # num_short_term_ref_pic_sets
     bw.u(0, 1)                   # long_term_ref_pics_present_flag
@@ -331,16 +331,10 @@ def _parse_sps(br: _Bits) -> dict:
     return sps
 
 
-def _write_pps(bw: _BitW, qp: int, transquant_bypass: bool = False,
-               deblock: bool = False):
-    """pic_parameter_set_rbsp (§7.3.2.3): no tiles/WPP, fixed
-    chroma QP offsets 0. ``deblock`` enables the in-loop deblocking
-    filter by OMITTING the control block (control_present 0 ->
-    disabled_flag inferred 0, offsets inferred 0); otherwise the
-    r8 disabled form (control present, disabled 1) is kept
-    byte-identical."""
-    if not 0 <= qp <= 51:
-        raise ValueError("qp out of range")
+def _write_pps(bw: _BitW):
+    """pic_parameter_set_rbsp (§7.3.2.3): no tiles/WPP, chroma QP
+    offsets 0, transquant bypass enabled and deblocking disabled.
+    init_qp is written but never used: bypass CUs are not scaled."""
     bw.ue(0)                     # pps_pic_parameter_set_id
     bw.ue(0)                     # pps_seq_parameter_set_id
     bw.u(0, 1)                   # dependent_slice_segments_enabled_flag
@@ -350,7 +344,7 @@ def _write_pps(bw: _BitW, qp: int, transquant_bypass: bool = False,
     bw.u(0, 1)                   # cabac_init_present_flag
     bw.ue(0)                     # num_ref_idx_l0_default_active_minus1
     bw.ue(0)                     # num_ref_idx_l1_default_active_minus1
-    bw.se(qp - 26)               # init_qp_minus26
+    bw.se(_INIT_QP - 26)         # init_qp_minus26
     bw.u(0, 1)                   # constrained_intra_pred_flag
     bw.u(0, 1)                   # transform_skip_enabled_flag
     bw.u(0, 1)                   # cu_qp_delta_enabled_flag
@@ -359,18 +353,13 @@ def _write_pps(bw: _BitW, qp: int, transquant_bypass: bool = False,
     bw.u(0, 1)                   # pps_slice_chroma_qp_offsets_present_flag
     bw.u(0, 1)                   # weighted_pred_flag
     bw.u(0, 1)                   # weighted_bipred_flag
-    bw.u(1 if transquant_bypass else 0, 1)  # transquant_bypass_enabled_flag
+    bw.u(1, 1)                   # transquant_bypass_enabled_flag
     bw.u(0, 1)                   # tiles_enabled_flag
     bw.u(0, 1)                   # entropy_coding_sync_enabled_flag
     bw.u(0, 1)                   # pps_loop_filter_across_slices_enabled_flag
-    if deblock:
-        bw.u(0, 1)               # deblocking_filter_control_present_flag
-        # -> pps_deblocking_filter_disabled_flag inferred 0 (ON),
-        #    beta/tc offsets inferred 0
-    else:
-        bw.u(1, 1)               # deblocking_filter_control_present_flag
-        bw.u(0, 1)               # deblocking_filter_override_enabled_flag
-        bw.u(1, 1)               # pps_deblocking_filter_disabled_flag
+    bw.u(1, 1)                   # deblocking_filter_control_present_flag
+    bw.u(0, 1)                   # deblocking_filter_override_enabled_flag
+    bw.u(1, 1)                   # pps_deblocking_filter_disabled_flag
     bw.u(0, 1)                   # pps_scaling_list_data_present_flag
     bw.u(0, 1)                   # lists_modification_present_flag
     bw.ue(0)                     # log2_parallel_merge_level_minus2
@@ -405,24 +394,22 @@ def _parse_pps(br: _Bits) -> dict:
     if br.u(1):
         raise NotImplementedError("slice chroma QP offsets unsupported")
     br.u(1), br.u(1)             # weighted pred flags (inter-only)
-    pps["tq_bypass"] = br.u(1)
+    if not br.u(1):
+        raise NotImplementedError(
+            "lossy HEVC unsupported: transquant_bypass_enabled_flag is "
+            "0, and this codec has no transform or quantization")
     if br.u(1):
         raise NotImplementedError("tiles unsupported")
     if br.u(1):
         raise NotImplementedError("wavefront (WPP) unsupported")
     br.u(1)                      # loop_filter_across_slices
-    if br.u(1):                  # deblocking_filter_control_present
-        if br.u(1):
-            raise NotImplementedError("deblocking override unsupported")
-        pps["deblock"] = 0 if br.u(1) else None
-        if pps["deblock"] is None:
-            # disabled_flag 0 with explicit offsets would follow
-            raise NotImplementedError(
-                "explicit deblocking offsets unsupported (this "
-                "codec signals filter-on by omitting the control "
-                "block: offsets inferred 0)")
-    else:
-        pps["deblock"] = 1       # disabled_flag inferred 0: filter ON
+    # control_present 0 infers pps_deblocking_filter_disabled_flag 0
+    # (filter on); an override lets a slice header turn it on
+    present = br.u(1)
+    if not present or br.u(1) or not br.u(1):
+        raise NotImplementedError(
+            "HEVC deblocking filter unsupported: the PPS must set "
+            "pps_deblocking_filter_disabled_flag (no override)")
     if br.u(1):
         raise NotImplementedError("PPS scaling lists unsupported")
     br.u(1)                      # lists_modification (inter-only)
@@ -432,27 +419,26 @@ def _parse_pps(br: _Bits) -> dict:
     return pps
 
 
-def _write_slice_header(bw: _BitW, qp_delta: int = 0,
-                        sao: bool = False):
+def _write_slice_header(bw: _BitW):
     """slice_segment_header (§7.3.6.1) of a one-segment IDR I slice
     under this codec's fixed SPS/PPS."""
     bw.u(1, 1)                   # first_slice_segment_in_pic_flag
     bw.u(0, 1)                   # no_output_of_prior_pics_flag (IDR)
     bw.ue(0)                     # slice_pic_parameter_set_id
     bw.ue(2)                     # slice_type = I
-    # SPS sample_adaptive_offset_enabled_flag is 1 (late r8), so the
-    # per-slice opt-in flags are always present; lossless slices
-    # write 0 (SAO would perturb the transquant-bypass exactness)
-    bw.u(1 if sao else 0, 1)     # slice_sao_luma_flag
-    bw.u(1 if sao else 0, 1)     # slice_sao_chroma_flag
-    bw.se(qp_delta)              # slice_qp_delta
+    # SPS sample_adaptive_offset_enabled_flag is 1, so the per-slice
+    # flags are present; both stay 0 (SAO would break losslessness)
+    bw.u(0, 1)                   # slice_sao_luma_flag
+    bw.u(0, 1)                   # slice_sao_chroma_flag
+    bw.se(0)                     # slice_qp_delta
     bw.trailing()                # byte_alignment before slice data
 
 
 def _parse_slice_header(br: _Bits, pps: dict,
-                        sao_present: bool = True) -> dict:
+                        sao_present: bool = True) -> int:
     """Parse the header of an IDR slice segment (the only picture
-    type this codec decodes)."""
+    type this codec decodes); returns the range-checked slice QP,
+    which bypass CUs never use."""
     if not br.u(1):
         raise NotImplementedError("multi-segment slices unsupported")
     br.u(1)                      # no_output_of_prior_pics_flag
@@ -463,23 +449,20 @@ def _parse_slice_header(br: _Bits, pps: dict,
         raise ValueError(f"illegal slice_type {st}")
     if st != 2:
         raise ValueError("IDR access unit with a non-I slice")
-    sh = {}
-    if sao_present:
-        sh["sao_luma"] = br.u(1)
-        sh["sao_chroma"] = br.u(1)
-    else:
-        sh["sao_luma"] = sh["sao_chroma"] = 0
+    if sao_present and br.u(1) + br.u(1):
+        raise NotImplementedError(
+            "HEVC sample-adaptive offset unsupported: a slice SAO flag "
+            "is set, and this codec decodes lossless streams only")
     qp = pps["qp"] + br.se()
     if not 0 <= qp <= 51:
         raise ValueError("slice QP out of range")
-    sh["qp"] = qp
     # byte_alignment: alignment_bit_equal_to_one + zeros
     if br.u(1) != 1:
         raise ValueError("slice header alignment bit missing")
     while br.pos % 8:
         if br.u(1):
             raise ValueError("slice header alignment padding not zero")
-    return sh
+    return qp
 
 
 # ---------------------------------------------------------------------------
@@ -601,9 +584,7 @@ _CSBF = 47          # 4: (chroma ? 2 : 0) + min(csbf_right+csbf_below, 1)
 _SIG = 51           # 19: luma 0..10, chroma 11..18 (see _sig_ctx)
 _GT1 = 70           # 24: luma sets 0..3, chroma sets 4..5, x4 each
 _GT2 = 94           # 6: one per ctxSet
-_SAO_MERGE = 100    # 1: sao_merge_left/up_flag (shared, §9.3.4.2.2)
-_SAO_TYPE = 101     # 1: sao_type_idx bin0 (bin1 bypass)
-N_CTX5 = 102
+N_CTX5 = 100
 
 
 class _Ctx5:
@@ -654,102 +635,6 @@ def _scan_idx(intra_mode: int, log2_tb: int, is_luma: bool) -> int:
     if 22 <= intra_mode <= 30:
         return 1
     return 0
-
-
-# ---------------------------------------------------------------------------
-# transforms (§8.6.4) and quantization (§8.6.3)
-# ---------------------------------------------------------------------------
-# DCT-II basis: even rows fold recursively from the half-size matrix
-# (exact cosine identity — no data); odd rows take the spec's
-# published integer vectors g4/g8/g16 (Rec. H.265 §8.6.4.2, the same
-# public-table transcription contract as h264.py's VLC tables).
-
-_G = {4: [83, 36], 8: [89, 75, 50, 18],
-      16: [90, 87, 80, 70, 57, 43, 25, 9]}
-
-
-def _dct_matrix(n: int) -> np.ndarray:
-    if n == 2:
-        return np.array([[64, 64], [64, -64]], dtype=np.int64)
-    half = _dct_matrix(n // 2)
-    m = np.zeros((n, n), dtype=np.int64)
-    for k in range(n // 2):
-        m[2 * k, :n // 2] = half[k]
-        m[2 * k, n // 2:] = half[k][::-1]
-    g = _G[n]
-    for k in range(n // 2):
-        r = 2 * k + 1
-        for c in range(n):
-            # angle as odd multiples of pi/(2n): cos((2c+1)r * pi/2n)
-            a = ((2 * c + 1) * r) % (4 * n)
-            if a > 2 * n:
-                a = 4 * n - a
-            s = 1
-            if a > n:
-                a = 2 * n - a
-                s = -1
-            m[r, c] = s * g[(a - 1) // 2]
-    return m
-
-
-_DCT = {n: _dct_matrix(n) for n in (4, 8, 16)}
-# DST-VII for 4x4 intra luma (§8.6.4.1, published integer matrix)
-_DST4 = np.array([[29, 55, 74, 84],
-                  [74, 74, 0, -74],
-                  [84, -29, -74, 55],
-                  [55, -84, 74, -29]], dtype=np.int64)
-
-_LEVEL_SCALE = [40, 45, 51, 57, 64, 72]       # dequant (§8.6.3)
-_QUANT_SCALE = [26214, 23302, 20560, 18396, 16384, 14564]
-
-
-def _tb_matrix(n: int, is_luma: bool) -> np.ndarray:
-    if n == 4 and is_luma:
-        return _DST4
-    return _DCT[n]
-
-
-def _dequant(levels: np.ndarray, qp: int, log2_tb: int) -> np.ndarray:
-    """§8.6.3 scaling (no scaling lists: m = 16 flat)."""
-    bd_shift = log2_tb + 3                     # bitDepth 8: 8 + log2 - 5
-    scale = _LEVEL_SCALE[qp % 6] << (qp // 6)
-    d = (levels * scale * 16 + (1 << (bd_shift - 1))) >> bd_shift
-    return np.clip(d, -32768, 32767)
-
-
-def _inv_transform(coefs: np.ndarray, m: np.ndarray) -> np.ndarray:
-    """Two-stage inverse (§8.6.4.2): vertical then horizontal,
-    shifts 7 and 12 (8-bit), 16-bit clamp between stages."""
-    e = (m.T @ coefs + 64) >> 7
-    e = np.clip(e, -32768, 32767)
-    r = (e @ m + 2048) >> 12
-    return np.clip(r, -32768, 32767)
-
-
-def _fwd_transform(res: np.ndarray, m: np.ndarray, log2_tb: int) -> np.ndarray:
-    """Encoder forward transform (HM-style shifts: log2N-1, log2N+6)."""
-    s1 = log2_tb - 1
-    s2 = log2_tb + 6
-    t = (m @ res + (1 << (s1 - 1))) >> s1
-    return (t @ m.T + (1 << (s2 - 1))) >> s2
-
-
-def _quant(coefs: np.ndarray, qp: int, log2_tb: int) -> np.ndarray:
-    """Encoder quantization (intra rounding offset 1/3)."""
-    qbits = 21 + qp // 6 - log2_tb
-    f = _QUANT_SCALE[qp % 6]
-    off = (1 << qbits) // 3
-    mag = (np.abs(coefs) * f + off) >> qbits
-    return np.where(coefs < 0, -mag, mag)
-
-
-def _chroma_qp(qp: int) -> int:
-    """Luma-to-chroma QP map (§8.6.1 Table 8-10, 4:2:0)."""
-    if qp < 30:
-        return qp
-    if qp > 43:
-        return qp - 6
-    return [29, 30, 31, 32, 33, 33, 34, 34, 35, 35, 36, 36, 37, 37][qp - 30]
 
 
 # ---------------------------------------------------------------------------
@@ -1246,415 +1131,14 @@ def _dec_residual5(dec: _CabacDec, ctx: _Ctx5, log2_tb: int,
 # ---------------------------------------------------------------------------
 # coding units, quadtree, slice codec
 # ---------------------------------------------------------------------------
-# Deblocking filter (§8.7.2) — vertical edges then horizontal, on the
-# 8-sample luma grid (16 for chroma); the filtered picture feeds SAO.
-# Within a pass the filters of adjacent
-# edges never overlap (3-sample reach + 4-sample reads on an 8 grid),
-# so in-place application matches the spec's parallel definition.
-# ---------------------------------------------------------------------------
-
-# Rec. ITU-T H.265 Table 8-12 (8-bit): beta' indexed by Q = clip(qp),
-# tC' indexed by Q = clip(qp + 2*(bS-1)) — spec-literal data, same
-# provenance class as the pinned DCT matrices (also published in
-# Norkin et al., "HEVC Deblocking Filter", IEEE TCSVT 2012).
-_DBF_BETA = (
-    0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 6, 7, 8, 9,
-    10, 11, 12, 13, 14, 15, 16, 17, 18, 20, 22, 24, 26, 28, 30, 32,
-    34, 36, 38, 40, 42, 44, 46, 48, 50, 52, 54, 56, 58, 60, 62, 64)
-_DBF_TC = (
-    0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 1, 1,
-    1, 1, 1, 1, 1, 1, 1, 2, 2, 2, 2, 3, 3, 3, 3, 4, 4, 4, 5, 5,
-    6, 6, 7, 8, 9, 10, 11, 13, 14, 16, 18, 20, 22, 24)
-
-
-def _dbf_luma_seg(win: np.ndarray, qp: int) -> bool:
-    """Filter one 4-line luma segment in place at boundary strength
-    2 (an intra edge). ``win`` is the (4, 8) window
-    [p3 p2 p1 p0 | q0 q1 q2 q3] sharing memory with the plane.
-    Returns whether anything changed."""
-    beta = _DBF_BETA[min(max(qp, 0), 51)]
-    tc = _DBF_TC[min(max(qp + 2, 0), 53)]
-    if beta == 0:
-        return False
-    p0, p1, p2, p3 = (win[:, 3], win[:, 2], win[:, 1], win[:, 0])
-    q0, q1, q2, q3 = (win[:, 4], win[:, 5], win[:, 6], win[:, 7])
-    dp_l = np.abs(p2 - 2 * p1 + p0)
-    dq_l = np.abs(q2 - 2 * q1 + q0)
-    dpq0 = int(dp_l[0] + dq_l[0])
-    dpq3 = int(dp_l[3] + dq_l[3])
-    if dpq0 + dpq3 >= beta:
-        return False
-    dp = int(dp_l[0] + dp_l[3])
-    dq = int(dq_l[0] + dq_l[3])
-
-    def strong_line(k):
-        return (2 * (dp_l[k] + dq_l[k]) < (beta >> 2)
-                and abs(int(p3[k]) - int(p0[k]))
-                + abs(int(q0[k]) - int(q3[k])) < (beta >> 3)
-                and abs(int(p0[k]) - int(q0[k]))
-                < ((5 * tc + 1) >> 1))
-
-    if strong_line(0) and strong_line(3):
-        o = win.copy()
-        P0, P1, P2, P3 = (o[:, 3], o[:, 2], o[:, 1], o[:, 0])
-        Q0, Q1, Q2, Q3 = (o[:, 4], o[:, 5], o[:, 6], o[:, 7])
-        c = 2 * tc
-        win[:, 3] = np.clip((P2 + 2 * P1 + 2 * P0 + 2 * Q0 + Q1 + 4)
-                            >> 3, P0 - c, P0 + c)
-        win[:, 2] = np.clip((P2 + P1 + P0 + Q0 + 2) >> 2,
-                            P1 - c, P1 + c)
-        win[:, 1] = np.clip((2 * P3 + 3 * P2 + P1 + P0 + Q0 + 4)
-                            >> 3, P2 - c, P2 + c)
-        win[:, 4] = np.clip((Q2 + 2 * Q1 + 2 * Q0 + 2 * P0 + P1 + 4)
-                            >> 3, Q0 - c, Q0 + c)
-        win[:, 5] = np.clip((Q2 + Q1 + Q0 + P0 + 2) >> 2,
-                            Q1 - c, Q1 + c)
-        win[:, 6] = np.clip((2 * Q3 + 3 * Q2 + Q1 + Q0 + P0 + 4)
-                            >> 3, Q2 - c, Q2 + c)
-        return True
-    if tc == 0:
-        return False
-    delta = (9 * (q0 - p0) - 3 * (q1 - p1) + 8) >> 4
-    act = np.abs(delta) < 10 * tc
-    dlt = np.clip(delta, -tc, tc)
-    o_p0, o_p1, o_p2 = p0.copy(), p1.copy(), p2.copy()
-    o_q0, o_q1, o_q2 = q0.copy(), q1.copy(), q2.copy()
-    win[:, 3] = np.where(act, np.clip(o_p0 + dlt, 0, 255), o_p0)
-    win[:, 4] = np.where(act, np.clip(o_q0 - dlt, 0, 255), o_q0)
-    half = tc >> 1
-    if dp < ((beta + (beta >> 1)) >> 3):
-        dp1 = np.clip((((o_p2 + o_p0 + 1) >> 1) - o_p1 + dlt) >> 1,
-                      -half, half)
-        win[:, 2] = np.where(act, np.clip(o_p1 + dp1, 0, 255), o_p1)
-    if dq < ((beta + (beta >> 1)) >> 3):
-        dq1 = np.clip((((o_q2 + o_q0 + 1) >> 1) - o_q1 - dlt) >> 1,
-                      -half, half)
-        win[:, 5] = np.where(act, np.clip(o_q1 + dq1, 0, 255), o_q1)
-    return True
-
-
-def _dbf_chroma_seg(win: np.ndarray, qpc: int) -> None:
-    """Filter one chroma segment in place (bS 2 only): ``win`` is
-    (rows, 4) = [p1 p0 | q0 q1]."""
-    tc = _DBF_TC[min(max(qpc + 2, 0), 53)]
-    if tc == 0:
-        return
-    p1, p0, q0, q1 = win[:, 0], win[:, 1], win[:, 2], win[:, 3]
-    dlt = np.clip((((q0 - p0) << 2) + p1 - q1 + 4) >> 3, -tc, tc)
-    o_p0, o_q0 = p0.copy(), q0.copy()
-    win[:, 1] = np.clip(o_p0 + dlt, 0, 255)
-    win[:, 2] = np.clip(o_q0 - dlt, 0, 255)
-
-
-def _deblock(fr, qp: int) -> None:
-    """Whole-picture deblocking: luma + chroma, vertical pass then
-    horizontal pass (the horizontal decisions read vertically
-    filtered samples, §8.7.2). Every picture is intra, so each CU
-    edge on the 8-sample grid has boundary strength 2 (§8.7.2.4)
-    and the chroma edges on the 16-sample grid are filtered too."""
-    qpc = _chroma_qp(qp)
-    H, W = fr.Y.shape
-    for vertical in (True, False):
-        length = H if vertical else W
-        span = W if vertical else H
-        for e in range(8, span, 8):
-            eb = e // 4
-            for s0 in range(0, length, 4):
-                sb = s0 // 4
-                if vertical:
-                    pby, pbx, qby, qbx = sb, eb - 1, sb, eb
-                else:
-                    pby, pbx, qby, qbx = eb - 1, sb, eb, sb
-                if fr.cu_id[pby, pbx] == fr.cu_id[qby, qbx]:
-                    continue                      # not a CU edge
-                if vertical:
-                    win = fr.Y[s0:s0 + 4, e - 4:e + 4]
-                else:
-                    win = fr.Y[e - 4:e + 4, s0:s0 + 4].T
-                _dbf_luma_seg(win, qp)
-                if e % 16 == 0:
-                    ce, cs = e // 2, s0 // 2
-                    for plane in (fr.Cb, fr.Cr):
-                        if vertical:
-                            cw = plane[cs:cs + 2, ce - 2:ce + 2]
-                        else:
-                            cw = plane[ce - 2:ce + 2, cs:cs + 2].T
-                        _dbf_chroma_seg(cw, qpc)
-
-
-# ---------------------------------------------------------------------------
-# SAO — sample-adaptive offset (§7.3.8.3 syntax, §8.7.3 filtering)
-# ---------------------------------------------------------------------------
-
-# edge-offset class -> the two neighbour (dy, dx) offsets
-_SAO_EO_NB = {0: ((0, -1), (0, 1)),      # horizontal
-              1: ((-1, 0), (1, 0)),      # vertical
-              2: ((-1, -1), (1, 1)),     # 135 degrees
-              3: ((1, -1), (-1, 1))}     # 45 degrees
-
-
-def _code_sao_type(x, ctx, v=None) -> int:
-    """sao_type_idx_luma/chroma: TR cMax 2, bin0 context-coded,
-    bin1 bypass ("0" off, "10" band, "11" edge)."""
-    if v is not None:
-        x.bit(ctx, _SAO_TYPE, 1 if v else 0)
-        if v:
-            x.bypass(1 if v == 2 else 0)
-        return v
-    if not x.bit(ctx, _SAO_TYPE):
-        return 0
-    return 2 if x.bypass() else 1
-
-
-def _code_sao_abs(x, v=None) -> int:
-    """sao_offset_abs: TR cMax 7 (8-bit), all bypass."""
-    if v is not None:
-        for _ in range(v):
-            x.bypass(1)
-        if v < 7:
-            x.bypass(0)
-        return v
-    v = 0
-    while v < 7 and x.bypass():
-        v += 1
-    return v
-
-
-def _ser_sao_comp(enc, ctx, cidx: int, p):
-    """Serialize one component's sao() body after the merge flags:
-    type (luma codes its own, chroma once at cIdx 1, cIdx 2
-    inherits), four offset magnitudes, then band signs + position or
-    the EO class. ``p`` is None (off) | ("bo", pos, offs) |
-    ("eo", cls, offs) with offs the four SIGNED applied offsets
-    (EO signs are inferred by the spec: the first two non-negative,
-    the last two non-positive)."""
-    typ = 0 if p is None else (1 if p[0] == "bo" else 2)
-    if cidx != 2:
-        _code_sao_type(enc, ctx, v=typ)
-    if typ == 0:
-        return
-    offs = p[2]
-    for o in offs:
-        _code_sao_abs(enc, v=abs(o))
-    if typ == 1:
-        for o in offs:
-            if o:
-                enc.bypass(1 if o < 0 else 0)
-        for i in range(4, -1, -1):
-            enc.bypass((p[1] >> i) & 1)
-    elif cidx != 2:
-        enc.bypass((p[1] >> 1) & 1)
-        enc.bypass(p[1] & 1)
-
-
-def _dec_sao_comp(dec, ctx, cidx: int, inherit_typ, inherit_cls):
-    """Decode twin of :func:`_ser_sao_comp`; returns
-    (params, typ, eo_cls) so cIdx 2 can inherit chroma's type and
-    class while decoding its own offsets."""
-    typ = _code_sao_type(dec, ctx) if cidx != 2 else inherit_typ
-    if typ == 0:
-        return None, typ, inherit_cls
-    absv = [_code_sao_abs(dec) for _ in range(4)]
-    if typ == 1:
-        offs = []
-        for a in absv:
-            if a and dec.bypass():
-                offs.append(-a)
-            else:
-                offs.append(a)
-        pos = 0
-        for _ in range(5):
-            pos = (pos << 1) | dec.bypass()
-        return ("bo", pos, tuple(offs)), typ, inherit_cls
-    if cidx != 2:
-        cls = (dec.bypass() << 1) | dec.bypass()
-    else:
-        cls = inherit_cls
-    offs = (absv[0], absv[1], -absv[2], -absv[3])
-    return ("eo", cls, offs), typ, cls
-
-
-def _dec_sao(dec, ctx, cx: int, cy: int, all_params: dict,
-             sh: dict):
-    """sao() for one CTB: merge-left/up flags then per-component
-    params."""
-    if cx > 0 and dec.bit(ctx, _SAO_MERGE):
-        return all_params[(cx - 1, cy)]
-    if cy > 0 and dec.bit(ctx, _SAO_MERGE):
-        return all_params[(cx, cy - 1)]
-    out = []
-    typ = cls = 0
-    for cidx in range(3):
-        if (cidx == 0 and not sh["sao_luma"]) or \
-                (cidx > 0 and not sh["sao_chroma"]):
-            out.append(None)
-            continue
-        p, typ, cls = _dec_sao_comp(dec, ctx, cidx, typ, cls)
-        out.append(p)
-    return tuple(out)
-
-
-def _ser_sao(enc, ctx, cx: int, cy: int, params, all_params: dict,
-             sh: dict):
-    """Encoder twin of :func:`_dec_sao` — merges with the left/up
-    CTB when the chosen params are identical (exercising the merge
-    syntax naturally on uniform content)."""
-    if cx > 0:
-        left = all_params[(cx - 1, cy)]
-        enc.bit(ctx, _SAO_MERGE, 1 if params == left else 0)
-        if params == left:
-            return
-    if cy > 0:
-        up = all_params[(cx, cy - 1)]
-        enc.bit(ctx, _SAO_MERGE, 1 if params == up else 0)
-        if params == up:
-            return
-    for cidx in range(3):
-        if (cidx == 0 and not sh["sao_luma"]) or \
-                (cidx > 0 and not sh["sao_chroma"]):
-            continue
-        _ser_sao_comp(enc, ctx, cidx, params[cidx])
-
-
-def _sao_apply_region(dst: np.ndarray, src: np.ndarray, x0: int,
-                      y0: int, n: int, p):
-    """Apply one CTB-component's SAO params: classify on the pre-SAO
-    plane ``src``, write into ``dst`` (§8.7.3: SAO reads the
-    unfiltered reconstruction everywhere, including across CTB
-    boundaries)."""
-    if p is None:
-        return
-    H, W = src.shape
-    n_y = min(n, H - y0)
-    n_x = min(n, W - x0)
-    if n_y <= 0 or n_x <= 0:
-        return
-    blk = src[y0:y0 + n_y, x0:x0 + n_x]
-    if p[0] == "bo":
-        pos, offs = p[1], p[2]
-        band = blk >> 3
-        delta = np.zeros_like(blk)
-        for k in range(4):
-            delta[band == ((pos + k) & 31)] = offs[k]
-        dst[y0:y0 + n_y, x0:x0 + n_x] = np.clip(blk + delta, 0, 255)
-        return
-    cls, offs = p[1], p[2]
-    (ay, ax), (by, bx) = _SAO_EO_NB[cls]
-    ys = np.arange(y0, y0 + n_y)
-    xs = np.arange(x0, x0 + n_x)
-    # picture-boundary pixels whose neighbour falls outside stay
-    # unmodified (the spec skips them)
-    ok_y = (ys + ay >= 0) & (ys + ay < H) & (ys + by >= 0) & \
-        (ys + by < H)
-    ok_x = (xs + ax >= 0) & (xs + ax < W) & (xs + bx >= 0) & \
-        (xs + bx < W)
-    na = src[np.ix_(np.clip(ys + ay, 0, H - 1),
-                    np.clip(xs + ax, 0, W - 1))]
-    nb = src[np.ix_(np.clip(ys + by, 0, H - 1),
-                    np.clip(xs + bx, 0, W - 1))]
-    edge = 2 + np.sign(blk - na) + np.sign(blk - nb)
-    lut = np.array([offs[0], offs[1], 0, offs[2], offs[3]],
-                   dtype=np.int64)
-    delta = lut[edge.astype(np.int64)]
-    delta[~np.outer(ok_y, ok_x)] = 0
-    dst[y0:y0 + n_y, x0:x0 + n_x] = np.clip(blk + delta, 0, 255)
-
-
-def _apply_sao(fr, all_params: dict, ctbs_w: int, ctbs_h: int):
-    """Frame-level SAO pass: classification reads the pre-SAO recon
-    of every plane; the filtered planes replace the frame's."""
-    srcY = fr.Y.copy()
-    srcCb = fr.Cb.copy()
-    srcCr = fr.Cr.copy()
-    for cy in range(ctbs_h):
-        for cx in range(ctbs_w):
-            p = all_params[(cx, cy)]
-            _sao_apply_region(fr.Y, srcY, cx * 16, cy * 16, 16, p[0])
-            _sao_apply_region(fr.Cb, srcCb, cx * 8, cy * 8, 8, p[1])
-            _sao_apply_region(fr.Cr, srcCr, cx * 8, cy * 8, 8, p[2])
-
-
-def _sao_choose_comp(src: np.ndarray, rec: np.ndarray, x0: int,
-                     y0: int, n: int):
-    """Deterministic encoder-side SAO decision for one
-    CTB-component: evaluate off / band offset / the four EO classes
-    by exact integer SSE delta and pick the strict best (ties keep
-    off). EO classification is restricted to pixels whose
-    neighbours lie inside the CTB — the full-frame recon is not
-    final until the frame completes, and any parameter choice is
-    conformant; this only affects optimality at CTB seams."""
-    H, W = src.shape
-    n_y = min(n, H - y0)
-    n_x = min(n, W - x0)
-    if n_y <= 0 or n_x <= 0:
-        return None
-    s = src[y0:y0 + n_y, x0:x0 + n_x].astype(np.int64)
-    r = rec[y0:y0 + n_y, x0:x0 + n_x].astype(np.int64)
-    diff = s - r
-    best_d, best = 0, None
-
-    def offset_for(ssum, cnt, lo, hi):
-        if cnt == 0:
-            return 0
-        o = int(np.round(ssum / cnt))
-        return min(max(o, lo), hi)
-
-    # band offset: per-band ideal offsets, best 4-band window
-    band = r >> 3
-    sums = np.zeros(32, dtype=np.int64)
-    cnts = np.zeros(32, dtype=np.int64)
-    np.add.at(sums, band.ravel(), diff.ravel())
-    np.add.at(cnts, band.ravel(), 1)
-    obs = [offset_for(int(sums[b]), int(cnts[b]), -7, 7)
-           for b in range(32)]
-    deltas = [obs[b] * obs[b] * int(cnts[b]) - 2 * obs[b] * int(sums[b])
-              for b in range(32)]
-    for pos in range(32):
-        bands = [(pos + k) & 31 for k in range(4)]
-        d = sum(deltas[b] for b in bands)
-        offs = tuple(obs[b] for b in bands)
-        if any(offs) and d < best_d:
-            best_d, best = d, ("bo", pos, offs)
-    # edge offset classes
-    for cls in range(4):
-        (ay, ax), (by, bx) = _SAO_EO_NB[cls]
-        y_lo = max(0, -min(ay, by))
-        y_hi = n_y - max(0, max(ay, by))
-        x_lo = max(0, -min(ax, bx))
-        x_hi = n_x - max(0, max(ax, bx))
-        if y_hi - y_lo <= 0 or x_hi - x_lo <= 0:
-            continue
-        c = r[y_lo:y_hi, x_lo:x_hi]
-        na = r[y_lo + ay:y_hi + ay, x_lo + ax:x_hi + ax]
-        nb = r[y_lo + by:y_hi + by, x_lo + bx:x_hi + bx]
-        edge = 2 + np.sign(c - na) + np.sign(c - nb)
-        dd = diff[y_lo:y_hi, x_lo:x_hi]
-        offs = []
-        d_tot = 0
-        for k, (lo, hi) in zip((0, 1, 3, 4),
-                               ((0, 7), (0, 7), (-7, 0), (-7, 0))):
-            m = edge == k
-            cnt = int(m.sum())
-            ssum = int(dd[m].sum())
-            o = offset_for(ssum, cnt, lo, hi)
-            offs.append(o)
-            d_tot += o * o * cnt - 2 * o * ssum
-        if any(offs) and d_tot < best_d:
-            best_d, best = d_tot, ("eo", cls, tuple(offs))
-    return best
-
-
-# ---------------------------------------------------------------------------
 
 
 class _Frame5:
     """Per-frame decode/encode state: recon planes plus the
     4x4-luma-granular availability / intra-mode / CU-depth grids the
-    context and prediction derivations need, and the CU identity per
-    4x4 cell that deblocking reads to find CU edges."""
+    context and prediction derivations need."""
 
-    __slots__ = ("Y", "Cb", "Cr", "avail", "modes", "depths", "cu_id",
-                 "next_id")
+    __slots__ = ("Y", "Cb", "Cr", "avail", "modes", "depths")
 
     def __init__(self, W: int, H: int):
         self.Y = np.zeros((H, W), dtype=np.int64)
@@ -1663,16 +1147,6 @@ class _Frame5:
         self.avail = np.zeros((H // 4, W // 4), dtype=bool)
         self.modes = np.full((H // 4, W // 4), -1, dtype=np.int16)
         self.depths = np.zeros((H // 4, W // 4), dtype=np.int8)
-        self.cu_id = np.full((H // 4, W // 4), -1, dtype=np.int32)
-        self.next_id = 0
-
-    def new_id(self) -> int:
-        self.next_id += 1
-        return self.next_id - 1
-
-    def mark_cu(self, x0: int, y0: int, size: int, cu: int):
-        bx, by, bs = x0 // 4, y0 // 4, size // 4
-        self.cu_id[by:by + bs, bx:bx + bs] = cu
 
 
 def _split_ctx(fr: _Frame5, x0: int, y0: int, depth: int) -> int:
@@ -1742,18 +1216,11 @@ def _predict_tb(fr: _Frame5, plane: np.ndarray, x0: int, y0: int,
     return _pred_intra(left, top, mode, n, is_luma)
 
 
-def _recon_tb(pred: np.ndarray, levels, qp: int, log2_tb: int,
-              is_luma: bool, bypass: bool) -> np.ndarray:
-    """pred + inverse-scaled residual, clipped to 8-bit (DST-VII for
-    4x4 intra luma, §8.6.4.2)."""
+def _recon_tb(pred: np.ndarray, levels) -> np.ndarray:
+    """pred + the bypass-coded residual, clipped to 8-bit."""
     if levels is None:
         return np.clip(pred, 0, 255)
-    if bypass:
-        res = levels
-    else:
-        d = _dequant(levels, qp, log2_tb)
-        res = _inv_transform(d, _tb_matrix(1 << log2_tb, is_luma))
-    return np.clip(pred + res, 0, 255)
+    return np.clip(pred + levels, 0, 255)
 
 
 def _mark(fr: _Frame5, x0: int, y0: int, size: int, depth: int,
@@ -1766,12 +1233,13 @@ def _mark(fr: _Frame5, x0: int, y0: int, size: int, depth: int,
         fr.modes[by:by + bs, bx:bx + bs] = mode
 
 
-def _dec_cu(dec: _CabacDec, ctx: _Ctx5, fr: _Frame5, pps: dict,
-            qp: int, x0: int, y0: int, log2_cb: int, depth: int):
+def _dec_cu(dec: _CabacDec, ctx: _Ctx5, fr: _Frame5, x0: int, y0: int,
+            log2_cb: int, depth: int):
     """Intra coding_unit (§7.3.8.5): part modes 2Nx2N and NxN."""
-    bypass = False
-    if pps["tq_bypass"]:
-        bypass = bool(dec.bit(ctx, _TQ_BYPASS))
+    if not dec.bit(ctx, _TQ_BYPASS):
+        raise NotImplementedError(
+            "lossy HEVC CU unsupported: cu_transquant_bypass_flag is 0, "
+            "and this codec has no transform or quantization")
     nxn = False
     if log2_cb == 3:
         nxn = not dec.bit(ctx, _PART_MODE)     # bin 1 -> PART_2Nx2N
@@ -1791,12 +1259,10 @@ def _dec_cu(dec: _CabacDec, ctx: _Ctx5, fr: _Frame5, pps: dict,
     else:
         ci = 4
     cmode = _chroma_mode_from_idx(ci, modes[0])
-    qpc = _chroma_qp(qp)
     # transform_tree: cbf_cb / cbf_cr first (log2TrafoSize > 2 at
     # trafoDepth 0 always holds for CB >= 8)
     cbf_cb = dec.bit(ctx, _CBF_CHROMA + 0)
     cbf_cr = dec.bit(ctx, _CBF_CHROMA + 0)
-    cuid = fr.new_id()
     if not nxn:
         n = 1 << log2_cb
         cbf_l = dec.bit(ctx, _CBF_LUMA + 1)
@@ -1805,10 +1271,8 @@ def _dec_cu(dec: _CabacDec, ctx: _Ctx5, fr: _Frame5, pps: dict,
         if cbf_l:
             lv = _dec_residual5(dec, ctx, log2_cb, True,
                                 _scan_idx(modes[0], log2_cb, True))
-        fr.Y[y0:y0 + n, x0:x0 + n] = _recon_tb(
-            pred, lv, qp, log2_cb, True, bypass)
+        fr.Y[y0:y0 + n, x0:x0 + n] = _recon_tb(pred, lv)
         _mark(fr, x0, y0, n, depth, modes[0])
-        fr.mark_cu(x0, y0, n, cuid)
     else:
         for i, (px, py) in enumerate(pu_xy):
             cbf_l = dec.bit(ctx, _CBF_LUMA + 0)
@@ -1817,10 +1281,8 @@ def _dec_cu(dec: _CabacDec, ctx: _Ctx5, fr: _Frame5, pps: dict,
             if cbf_l:
                 lv = _dec_residual5(dec, ctx, 2, True,
                                     _scan_idx(modes[i], 2, True))
-            fr.Y[py:py + 4, px:px + 4] = _recon_tb(
-                pred, lv, qp, 2, True, bypass)
+            fr.Y[py:py + 4, px:px + 4] = _recon_tb(pred, lv)
             _mark(fr, px, py, 4, depth, modes[i])
-            fr.mark_cu(px, py, 4, cuid)
     # chroma TB (log2_cb - 1; 4x4 when CB is 8)
     log2_c = log2_cb - 1
     nc = 1 << log2_c
@@ -1831,50 +1293,37 @@ def _dec_cu(dec: _CabacDec, ctx: _Ctx5, fr: _Frame5, pps: dict,
         if cbf:
             lv = _dec_residual5(dec, ctx, log2_c, False,
                                 _scan_idx(cmode, log2_c, False))
-        plane[cy:cy + nc, cx:cx + nc] = _recon_tb(
-            pred, lv, qpc, log2_c, False, bypass)
+        plane[cy:cy + nc, cx:cx + nc] = _recon_tb(pred, lv)
 
 
-def _dec_quadtree(dec, ctx, fr, pps, qp, x0, y0, log2_cb, depth):
+def _dec_quadtree(dec, ctx, fr, x0, y0, log2_cb, depth):
     if log2_cb > 3:
         if dec.bit(ctx, _split_ctx(fr, x0, y0, depth)):
             h = 1 << (log2_cb - 1)
             for dy in (0, 1):
                 for dx in (0, 1):
-                    _dec_quadtree(dec, ctx, fr, pps, qp,
-                                  x0 + dx * h, y0 + dy * h,
+                    _dec_quadtree(dec, ctx, fr, x0 + dx * h, y0 + dy * h,
                                   log2_cb - 1, depth + 1)
             return
-    _dec_cu(dec, ctx, fr, pps, qp, x0, y0, log2_cb, depth)
+    _dec_cu(dec, ctx, fr, x0, y0, log2_cb, depth)
 
 
 def _decode_slice(rbsp: bytes, sps: dict, pps: dict) -> _Frame5:
     """Decode one IDR slice segment to its reconstructed picture."""
     br = _Bits(rbsp)
-    sh = _parse_slice_header(br, pps,
-                             sao_present=bool(sps.get("sao", 0)))
+    _parse_slice_header(br, pps, sao_present=bool(sps["sao"]))
     dec = _CabacDec(br)
     ctx = _Ctx5()
     fr = _Frame5(sps["w"], sps["h"])
     ctbs_w = sps["w"] // 16
     ctbs_h = sps["h"] // 16
-    sao_on = sh["sao_luma"] or sh["sao_chroma"]
-    sao_params: dict = {}
     for cy in range(ctbs_h):
         for cx in range(ctbs_w):
-            if sao_on:
-                sao_params[(cx, cy)] = _dec_sao(dec, ctx, cx, cy,
-                                                sao_params, sh)
-            _dec_quadtree(dec, ctx, fr, pps, sh["qp"],
-                          cx * 16, cy * 16, 4, 0)
+            _dec_quadtree(dec, ctx, fr, cx * 16, cy * 16, 4, 0)
             eos = dec.terminate()
             last = (cy == ctbs_h - 1) and (cx == ctbs_w - 1)
             if bool(eos) != last:
                 raise ValueError("end_of_slice_segment_flag mismatch")
-    if pps.get("deblock"):
-        _deblock(fr, sh["qp"])
-    if sao_on:
-        _apply_sao(fr, sao_params, ctbs_w, ctbs_h)
     return fr
 
 
@@ -1911,29 +1360,18 @@ def _best_mode(fr: _Frame5, plane, src, x0, y0, n, is_luma, cands):
     return best
 
 
-def _tb_levels(pred, src_blk, qp, log2_tb, is_luma, bypass):
-    """Residual -> coded levels (or None when all-zero) plus the
-    reconstruction the decoder will produce."""
+def _residual(pred, src_blk):
+    """The bypass-coded levels of a TB (the sample difference), or
+    None when all-zero. The decoder reconstructs ``src_blk``."""
     res = src_blk - pred
-    if bypass:
-        lv = res.astype(np.int64)
-    else:
-        coef = _fwd_transform(res,
-                              _tb_matrix(1 << log2_tb, is_luma),
-                              log2_tb)
-        lv = _quant(coef, qp, log2_tb)
-    if not lv.any():
-        return None, np.clip(pred, 0, 255)
-    return lv, _recon_tb(pred, lv, qp, log2_tb, is_luma, bypass)
+    return res if res.any() else None
 
 
-def _commit_cu(fr: _Frame5, srcY, srcCb, srcCr, pps: dict, qp: int,
-               x0: int, y0: int, log2_cb: int, depth: int,
-               cands) -> dict:
+def _commit_cu(fr: _Frame5, srcY, srcCb, srcCr, x0: int, y0: int,
+               log2_cb: int, depth: int, cands) -> dict:
     """Decide modes, reconstruct, update grids; return the syntax
-    plan ``_serialize_cu`` replays. Greedy SAD mode decision (ties
+    plan ``_serialize_cu`` writes. Greedy SAD mode decision (ties
     to the lowest mode index — deterministic)."""
-    bypass = bool(pps["tq_bypass"])
     n = 1 << log2_cb
     nxn = False
     if log2_cb == 3:
@@ -1953,25 +1391,21 @@ def _commit_cu(fr: _Frame5, srcY, srcCb, srcCr, pps: dict, qp: int,
     n_pu = 4 if nxn else 1
     pu = n // (2 if nxn else 1)
     pu_xy = [(x0 + (i & 1) * pu, y0 + (i >> 1) * pu) for i in range(n_pu)]
-    plan = {"bypass": bypass, "nxn": nxn, "log2_cb": log2_cb,
-            "pu": [], "luma": []}
+    plan = {"nxn": nxn, "log2_cb": log2_cb, "pu": [], "luma": []}
     log2_tb = log2_cb - (1 if nxn else 0)
-    cuid = fr.new_id()
     for i, (px, py) in enumerate(pu_xy):
         mpm = _mpm_list(fr.modes, px // 4, py // 4, 4)
         _, m, pred = _best_mode(fr, fr.Y, srcY, px, py, pu, True, cands)
         plan["pu"].append((int(m in mpm), list(mpm), m))
         bs = pu // 4
         fr.modes[py // 4:py // 4 + bs, px // 4:px // 4 + bs] = m
-        lv, rec = _tb_levels(pred, srcY[py:py + pu, px:px + pu], qp,
-                             log2_tb, True, bypass)
-        plan["luma"].append((lv, _scan_idx(m, log2_tb, True), log2_tb))
-        fr.Y[py:py + pu, px:px + pu] = rec
+        src_blk = srcY[py:py + pu, px:px + pu]
+        plan["luma"].append((_residual(pred, src_blk),
+                             _scan_idx(m, log2_tb, True), log2_tb))
+        fr.Y[py:py + pu, px:px + pu] = src_blk
         _mark(fr, px, py, pu, depth, m)
-        fr.mark_cu(px, py, pu, cuid)
     # chroma: best of DM + the 4 candidates (replacement rule applied)
     luma0 = plan["pu"][0][2]
-    qpc = _chroma_qp(qp)
     log2_c = log2_cb - 1
     nc = 1 << log2_c
     cx, cy = x0 // 2, y0 // 2
@@ -1990,20 +1424,18 @@ def _commit_cu(fr: _Frame5, srcY, srcCb, srcCr, pps: dict, qp: int,
             best = (s, idx, pb, pr)
     _, ci, pb, pr = best
     cm = _chroma_mode_from_idx(ci, luma0)
-    lv_cb, rec_cb = _tb_levels(pb, srcCb[cy:cy + nc, cx:cx + nc],
-                               qpc, log2_c, False, bypass)
-    lv_cr, rec_cr = _tb_levels(pr, srcCr[cy:cy + nc, cx:cx + nc],
-                               qpc, log2_c, False, bypass)
-    fr.Cb[cy:cy + nc, cx:cx + nc] = rec_cb
-    fr.Cr[cy:cy + nc, cx:cx + nc] = rec_cr
-    plan.update(chroma_idx=ci, lv_cb=lv_cb, lv_cr=lv_cr,
+    src_cb = srcCb[cy:cy + nc, cx:cx + nc]
+    src_cr = srcCr[cy:cy + nc, cx:cx + nc]
+    fr.Cb[cy:cy + nc, cx:cx + nc] = src_cb
+    fr.Cr[cy:cy + nc, cx:cx + nc] = src_cr
+    plan.update(chroma_idx=ci, lv_cb=_residual(pb, src_cb),
+                lv_cr=_residual(pr, src_cr),
                 scan_c=_scan_idx(cm, log2_c, False), log2_c=log2_c)
     return plan
 
 
-def _serialize_cu(enc: _CabacEnc, ctx: _Ctx5, pps: dict, plan: dict):
-    if pps["tq_bypass"]:
-        enc.bit(ctx, _TQ_BYPASS, int(plan["bypass"]))
+def _serialize_cu(enc: _CabacEnc, ctx: _Ctx5, plan: dict):
+    enc.bit(ctx, _TQ_BYPASS, 1)
     if plan["log2_cb"] == 3:
         enc.bit(ctx, _PART_MODE, 0 if plan["nxn"] else 1)
     for prev, _mpm, _m in plan["pu"]:
@@ -2030,15 +1462,10 @@ def _serialize_cu(enc: _CabacEnc, ctx: _Ctx5, pps: dict, plan: dict):
                            plan["scan_c"])
 
 
-def _enc_quadtree(ops, fr, srcY, srcCb, srcCr, pps, qp,
-                  x0, y0, log2_cb, depth, cands, force_split):
-    """Commit pass over one quadtree: reconstructs + updates grids
-    and appends the serialization ops (split bits with their
-    ctxInc, CU plans) to ``ops``. Serialization is REPLAYED after
-    the CTB's sao() syntax is chosen — legal because every
-    grid-dependent ctxInc is computed here, at the same walk
-    position where the decoder derives it (sao params depend on the
-    CTB's reconstruction, which only exists after this pass)."""
+def _enc_quadtree(enc, ctx, fr, srcY, srcCb, srcCr, x0, y0, log2_cb,
+                  depth, cands, force_split):
+    """Code one quadtree: each split flag with the ctxInc of the grid
+    state the decoder sees when it parses it, then each CU's plan."""
     if log2_cb > 3:
         if force_split is not None:
             split = bool(force_split)
@@ -2048,69 +1475,39 @@ def _enc_quadtree(ops, fr, srcY, srcCb, srcCr, pps, qp,
                                                    n // 2)
             means = q.mean(axis=(1, 3))
             split = float(means.max() - means.min()) > 24.0
-        ops.append(("split", _split_ctx(fr, x0, y0, depth),
-                    int(split)))
+        enc.bit(ctx, _split_ctx(fr, x0, y0, depth), int(split))
         if split:
             h = 1 << (log2_cb - 1)
             for dy in (0, 1):
                 for dx in (0, 1):
-                    _enc_quadtree(ops, fr, srcY, srcCb, srcCr,
-                                  pps, qp, x0 + dx * h, y0 + dy * h,
-                                  log2_cb - 1, depth + 1, cands,
-                                  force_split)
+                    _enc_quadtree(enc, ctx, fr, srcY, srcCb, srcCr,
+                                  x0 + dx * h, y0 + dy * h, log2_cb - 1,
+                                  depth + 1, cands, force_split)
             return
-    ops.append(("cu", _commit_cu(fr, srcY, srcCb, srcCr, pps, qp, x0, y0,
-                                 log2_cb, depth, cands)))
+    _serialize_cu(enc, ctx, _commit_cu(fr, srcY, srcCb, srcCr, x0, y0,
+                                       log2_cb, depth, cands))
 
 
 _ALL_MODES = tuple(range(35))
 
 
-def _encode_frame(srcY, srcCb, srcCr, sps_w, sps_h, pps, qp,
-                  cands=_ALL_MODES, force_split=None,
-                  sao: bool = False):
-    """Encode one frame's IDR slice NAL (header + CABAC data);
-    returns (nal_bytes, reconstruction _Frame5)."""
+def _encode_frame(srcY, srcCb, srcCr, sps_w, sps_h, cands=_ALL_MODES,
+                  force_split=None) -> bytes:
+    """Encode one frame's IDR slice NAL (header + CABAC data)."""
     fr = _Frame5(sps_w, sps_h)
-    # SAO never pairs with transquant bypass here: it would perturb
-    # the lossless exactness the bypass families are built on
-    sao_on = bool(sao) and not pps["tq_bypass"]
     bw = _BitW()
-    _write_slice_header(bw, qp_delta=qp - pps["qp"], sao=sao_on)
-    sao_sh = {"sao_luma": int(sao_on), "sao_chroma": int(sao_on)}
+    _write_slice_header(bw)
     enc = _CabacEnc()
     ctx = _Ctx5()
     ctbs_w, ctbs_h = sps_w // 16, sps_h // 16
-    sao_params: dict = {}
     for cy in range(ctbs_h):
         for cx in range(ctbs_w):
-            ops: list = []
-            _enc_quadtree(ops, fr, srcY, srcCb, srcCr, pps, qp,
-                          cx * 16, cy * 16, 4, 0, cands, force_split)
-            if sao_on:
-                params = (
-                    _sao_choose_comp(srcY, fr.Y, cx * 16, cy * 16,
-                                     16),
-                    _sao_choose_comp(srcCb, fr.Cb, cx * 8, cy * 8,
-                                     8),
-                    _sao_choose_comp(srcCr, fr.Cr, cx * 8, cy * 8,
-                                     8))
-                _ser_sao(enc, ctx, cx, cy, params, sao_params,
-                         sao_sh)
-                sao_params[(cx, cy)] = params
-            for op in ops:
-                if op[0] == "split":
-                    enc.bit(ctx, op[1], op[2])
-                else:
-                    _serialize_cu(enc, ctx, pps, op[1])
+            _enc_quadtree(enc, ctx, fr, srcY, srcCb, srcCr, cx * 16,
+                          cy * 16, 4, 0, cands, force_split)
             last = (cy == ctbs_h - 1) and (cx == ctbs_w - 1)
             enc.terminate(int(last))
-    if pps.get("deblock"):
-        _deblock(fr, qp)
-    if sao_on:
-        _apply_sao(fr, sao_params, ctbs_w, ctbs_h)
     rbsp = bw.bytes() + enc.bytes()
-    return _nal(_NAL_IDR_W_RADL, rbsp), fr
+    return _nal(_NAL_IDR_W_RADL, rbsp)
 
 
 # ---------------------------------------------------------------------------
@@ -2127,14 +1524,14 @@ def _pad_plane(p: np.ndarray, mult: int) -> np.ndarray:
     return p
 
 
-def h265_encode_planes(Y, Cb, Cr, qp: int = 32, lossless: bool = False,
-                       cands=_ALL_MODES, force_split=None,
-                       sao: bool = True,
-                       deblock: bool = True) -> bytes:
-    """Encode 4:2:0 planes (uint8; Cb/Cr at half resolution) to an
-    Annex-B HEVC stream: VPS + SPS + PPS + gorillaspark marker SEI +
-    one IDR access unit. Non-CTB-multiple sizes are edge-padded and
-    signalled via the SPS conformance window."""
+def h265_encode_planes(Y, Cb, Cr, cands=_ALL_MODES,
+                       force_split=None) -> bytes:
+    """Encode 4:2:0 planes (uint8; Cb/Cr at half resolution) to a
+    lossless Annex-B HEVC stream: VPS + SPS + PPS + gorillaspark
+    marker SEI + one IDR access unit. Non-CTB-multiple sizes are
+    edge-padded and signalled via the SPS conformance window.
+    ``cands`` limits the luma intra modes tried; ``force_split``
+    True/False overrides the quadtree split heuristic."""
     Y = np.asarray(Y, dtype=np.int64)
     Cb = np.asarray(Cb, dtype=np.int64)
     Cr = np.asarray(Cr, dtype=np.int64)
@@ -2155,24 +1552,18 @@ def h265_encode_planes(Y, Cb, Cr, qp: int = 32, lossless: bool = False,
     bw = _BitW()
     _write_sps(bw, W, H, crop=crop)
     out += _nal(_NAL_SPS, bw.bytes())
-    dbf = bool(deblock) and not lossless
     bw = _BitW()
-    _write_pps(bw, qp, transquant_bypass=lossless, deblock=dbf)
+    _write_pps(bw)
     out += _nal(_NAL_PPS, bw.bytes())
     out += _marker_sei()
-    pps = {"qp": qp, "tq_bypass": 1 if lossless else 0,
-           "deblock": 1 if dbf else 0}
-    nal, _fr = _encode_frame(pY, pCb, pCr, W, H, pps, qp,
-                             cands=cands, force_split=force_split,
-                             sao=sao)
-    return out + nal
+    return out + _encode_frame(pY, pCb, pCr, W, H, cands=cands,
+                               force_split=force_split)
 
 
-def h265_encode(y: np.ndarray, qp: int = 32, cb=None, cr=None,
-                lossless: bool = False, cands=_ALL_MODES,
-                force_split=None, sao: bool = True,
-                deblock: bool = True) -> bytes:
-    """Encode a grayscale (neutral-chroma) or YCbCr 4:2:0 image."""
+def h265_encode(y: np.ndarray, cb=None, cr=None, cands=_ALL_MODES,
+                force_split=None) -> bytes:
+    """Encode a grayscale (neutral-chroma) or YCbCr 4:2:0 image
+    losslessly."""
     y = np.asarray(y)
     if y.ndim != 2:
         raise ValueError("h265_encode takes a 2-D luma array")
@@ -2182,23 +1573,8 @@ def h265_encode(y: np.ndarray, qp: int = 32, cb=None, cr=None,
         cb = np.full((ch, cw), 128, dtype=np.uint8)
     if cr is None:
         cr = np.full((ch, cw), 128, dtype=np.uint8)
-    return h265_encode_planes(y, cb, cr, qp=qp, lossless=lossless,
-                              cands=cands, force_split=force_split,
-                              sao=sao, deblock=deblock)
-
-
-def h265_encoder_reconstruction(y, qp: int = 32, cb=None, cr=None,
-                                lossless: bool = False,
-                                cands=_ALL_MODES, force_split=None,
-                                sao: bool = True,
-                                deblock: bool = True):
-    """The encoder's own reconstruction (= what a conformant decode
-    of its stream must produce), cropped — the pixel-parity test
-    anchor, mirroring h264.h264_encoder_reconstruction."""
-    payload = h265_encode(y, qp=qp, cb=cb, cr=cr, lossless=lossless,
-                          cands=cands, force_split=force_split,
-                          sao=sao, deblock=deblock)
-    return h265_decode_planes(payload)
+    return h265_encode_planes(y, cb, cr, cands=cands,
+                              force_split=force_split)
 
 
 def h265_decode_gop_planes(payload: bytes):

@@ -19,9 +19,10 @@ h264_decode_gop). The r8 rounds closed most of that module's old
 stub list (B slices, every inter partition shape, weighted
 prediction, High-profile Intra_8x8), and late r8 added HEVC
 Main-profile intra (h265.py — hvc1/hvcC MP4 tracks, lossless
-transquant-bypass). Out of scope, honestly: H.264 CABAC and HEVC
-inter (P/B) pictures, both rejected with NotImplementedError, H.264
-inter features beyond those, and the H.264 deblocking filter.
+transquant-bypass only). Out of scope, honestly: H.264 CABAC, lossy
+HEVC (transform, deblocking, SAO) and HEVC inter (P/B) pictures, all
+rejected with NotImplementedError, H.264 inter features beyond
+those, and the H.264 deblocking filter.
 
 Also defines GSV1, a minimal documented frame container (magic +
 frame interval + length-prefixed BMP frames) so video frame-sampling

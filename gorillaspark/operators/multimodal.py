@@ -14,12 +14,12 @@ every inter partition shape, quarter-pel MC, spatial+temporal
 direct, weighted prediction, and High-profile Intra_8x8 via
 h264_hi.py), and an HEVC Main-profile intra codec in late r8
 (h265.py — Annex-B and hvc1/hvcC MP4 tracks, CABAC on the shared
-M-coder, lossless transquant-bypass), so only H.264 CABAC, HEVC
-inter slices and interlaced H.264 stay honestly stubbed — behind
-``decoder=`` hooks / parsers that raise ``NotImplementedError``. Swapping in
-ffmpeg/torchaudio on a real cluster changes only the per-format
-branch: batch shapes, schemas and partitioning are already exercised
-end-to-end.
+M-coder, lossless transquant-bypass only), so only H.264 CABAC,
+lossy HEVC, HEVC inter slices and interlaced H.264 stay honestly
+stubbed — behind ``decoder=`` hooks / parsers that raise
+``NotImplementedError``. Swapping in ffmpeg/torchaudio on a real
+cluster changes only the per-format branch: batch shapes, schemas
+and partitioning are already exercised end-to-end.
 """
 
 from __future__ import annotations

@@ -3280,8 +3280,7 @@ def _synth_hvc1_udf():
             for k in range(2 + d % 3):
                 v = ((d * 7 + k * 37 + xg * 3 + yg * 5) % 256) \
                     .astype(np.uint8)
-                ab = h5.h265_encode(v, lossless=True,
-                                    cands=(0, 1, 10, 26),
+                ab = h5.h265_encode(v, cands=(0, 1, 10, 26),
                                     force_split=bool(d % 2))
                 if cfg is None:
                     cfg = mc._box(b"hvcC", h5.hevc_hvcc_config(ab))

@@ -83,6 +83,22 @@ def _stream_parquet(spark, path: str,
     return reader.parquet(path)
 
 
+def _run_to_completion(spark, agg: DataFrame, what: str) -> DataFrame:
+    """Run a bounded streaming aggregate to completion into a memory
+    sink (complete mode + availableNow trigger) and return the final
+    snapshot as a table."""
+    import uuid
+    name = f"gs_{what}_{uuid.uuid4().hex[:8]}"
+    q = (agg.writeStream.format("memory").queryName(name)
+         .outputMode("complete").trigger(availableNow=True).start())
+    if not q.awaitTermination(300):
+        # fail crisply: reading the snapshot mid-query would return a
+        # silently partial aggregate (and leave the query running)
+        q.stop()
+        raise TimeoutError(f"streaming {what} did not finish in 300s")
+    return spark.table(name)
+
+
 def rates_snapshot(spark, events_path: str, span: str = "1 hour",
                    ts_col: str = "ts",
                    key_col: str = "event_type") -> DataFrame:
@@ -97,21 +113,12 @@ def rates_snapshot(spark, events_path: str, span: str = "1 hour",
     the watermark never passes the final windows; a live pipeline
     would use append mode + watermark as in :func:`streaming_rollup`.
     """
-    import uuid
     stream = _stream_parquet(spark, events_path)
-    name = f"gs_snapshot_{uuid.uuid4().hex[:8]}"
     agg = (stream.groupBy(
                F.window(F.col(ts_col).cast("timestamp"), span).alias("w"),
                key_col)
            .agg(F.count(F.lit(1)).alias("messages")))
-    q = (agg.writeStream.format("memory").queryName(name)
-         .outputMode("complete").trigger(availableNow=True).start())
-    if not q.awaitTermination(300):
-        # fail crisply: reading the snapshot mid-query would return a
-        # silently partial aggregate (and leave the query running)
-        q.stop()
-        raise TimeoutError("streaming snapshot did not finish in 300s")
-    return (spark.table(name)
+    return (_run_to_completion(spark, agg, "snapshot")
             .select(F.unix_millis(F.col("w.start")).alias("bucket_ms"),
                     F.col(key_col), "messages"))
 
@@ -137,8 +144,6 @@ def sketch_snapshot(spark, points_path: str, tier: str = "1m",
     shape. Returns the final sketch snapshot
     (series_key, bucket_ms, sign, bin, cnt).
     """
-    import uuid
-
     from ..operators.sketch import DEFAULT_ALPHA, dd_sketch_tier
     alpha = DEFAULT_ALPHA if alpha is None else alpha
     stream = _stream_parquet(spark, points_path)
@@ -148,13 +153,7 @@ def sketch_snapshot(spark, points_path: str, tier: str = "1m",
     # ONE definition of the sketch aggregate, so batch/stream parity
     # is structural, not a convention two copies must maintain
     agg = dd_sketch_tier(stream, tier, alpha)
-    name = f"gs_sketch_{uuid.uuid4().hex[:8]}"
-    q = (agg.writeStream.format("memory").queryName(name)
-         .outputMode("complete").trigger(availableNow=True).start())
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming sketch did not finish in 300s")
-    return spark.table(name)
+    return _run_to_completion(spark, agg, "sketch")
 
 
 def dedup_snapshot(spark, docs_path: str, text_col: str = "text",
@@ -177,18 +176,10 @@ def dedup_snapshot(spark, docs_path: str, text_col: str = "text",
 
     Returns (content_hash, keep_id, n_copies).
     """
-    import uuid
-
     from ..operators.dedup import dedup_exact
     stream = _stream_parquet(spark, docs_path)
     agg = dedup_exact(stream, text_col, id_col)
-    name = f"gs_dedup_{uuid.uuid4().hex[:8]}"
-    q = (agg.writeStream.format("memory").queryName(name)
-         .outputMode("complete").trigger(availableNow=True).start())
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming dedup did not finish in 300s")
-    return spark.table(name)
+    return _run_to_completion(spark, agg, "dedup")
 
 
 def dedup_update_stream(spark, docs_path: str, emissions_dir: str,

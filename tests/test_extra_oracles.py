@@ -46,17 +46,22 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 # in-window queries whose values no other test compares: the three
 # codec round trips, one per kernel dispatch (last_value, v1, dfcm),
-# the time-series queries that run the encode, rollup, sketch and
-# streaming plans (their extra-list siblings compaction_inventory,
-# gapfill_1h_ffill and sessionize are checked above), and the MP4
-# and PNG media queries
+# the time-series queries that run the encode, rollup, sketch,
+# streaming, gap, downsampling, as-of and sessionization plans (their
+# extra-list siblings compaction_inventory, gapfill_1h_ffill and
+# sessionize are checked above), streaming dedup, and the MP4, PNG
+# and lossless HEVC media queries
 _WINDOW_NAMES = ["codec_roundtrip", "codec_roundtrip_v1",
                  "codec_roundtrip_dfcm", "rollup_1m", "rollup_1d",
                  "rollup_1h_cascade", "rollup_1d_sketch_p95",
                  "stream_rollup_1d_sketch_p95",
                  "rollup_1d_sketch_quantiles", "latency_stats_per_series",
                  "event_type_rates_1h", "stream_event_rates_1h",
-                 "block_inventory", "media_mp4_stats", "media_png_stats"]
+                 "block_inventory", "series_gaps", "m4_1h",
+                 "counter_rate_1h", "zscore_per_point",
+                 "histogram_1d_cascade", "asof_view_before_purchase",
+                 "session_error_counts_2tier", "stream_dedup_exact",
+                 "media_mp4_stats", "media_png_stats", "media_h265_stats"]
 
 
 def _extra_names():

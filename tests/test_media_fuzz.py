@@ -54,8 +54,8 @@ def _hvc1_track(img: np.ndarray) -> bytes:
     from gorillaspark.operators import h265 as h5
     frames, cfg = [], None
     for k in range(2):
-        ab = h5.h265_encode((img + 31 * k) % 256, lossless=True,
-                            cands=(0, 1), force_split=bool(k))
+        ab = h5.h265_encode((img + 31 * k) % 256, cands=(0, 1),
+                            force_split=bool(k))
         if cfg is None:
             cfg = mc._box(b"hvcC", h5.hevc_hvcc_config(ab))
         frames.append(h5.hevc_to_hvc1_sample(ab))

@@ -237,6 +237,58 @@ def test_open_day_carry_three_batches_one_block(spark, tmp_path):
     assert got[0]["block_ts"] == ref["block_ts"]
 
 
+def test_late_point_for_closed_day_is_counted_and_compacted(spark,
+                                                            tmp_path):
+    """A point that arrives after its series-day closed is encoded as a
+    fragment: decode stays exact, the fragment is counted, and
+    compaction merges it into the one block a single pass would write."""
+    import numpy as np
+
+    from gorillaspark.operators.encode import decode_points, encode_points
+    from gorillaspark.plans.maintenance import (
+        compact_sweep,
+        fragmented_group_count,
+    )
+    from gorillaspark.streaming.stream_rollup import flush_carry
+
+    day = 86_400_000
+    day0 = 1_700_000_000_000 - (1_700_000_000_000 % day)
+    schema = "series_key string, ts_ms long, value double"
+    batches = [
+        # day-0 points of two series
+        [("s1", day0 + i * 60_000, float(i % 7) + 0.5) for i in range(40)]
+        + [("s2", day0 + i * 90_000, -float(i)) for i in range(5)],
+        # a day-1 point of s1 closes its day 0
+        [("s1", day0 + day + 5_000, 3.25)],
+        # late: lands inside s1's already-encoded day 0
+        [("s1", day0 + 30 * 60_000 + 1, -1.75)],
+    ]
+    io = ParquetTableIO(spark, str(tmp_path / "wh"))
+    sink = incremental_encode(io)
+    for b, rows in enumerate(batches):
+        sink(spark.createDataFrame(rows, schema), b)
+    flush_carry(io, spark)
+    rows = [r for b in batches for r in b]
+    pts = spark.createDataFrame(rows, schema)
+
+    got = (decode_points(io.read("blocks"), as_double=False).toPandas()
+           .sort_values(["series_key", "ts_ms"]))
+    want = sorted(rows)
+    bits = np.array([v for _k, _t, v in want]).view(np.int64)
+    assert list(zip(got.series_key, got.ts_ms)) \
+        == [(k, t) for k, t, _v in want]
+    assert (got["value"].to_numpy() == bits).all()
+
+    assert fragmented_group_count(io.read("blocks")) == 1
+    assert compact_sweep(spark, io, "blocks", job_id="late") == 1
+    blocks = {(r.series_key, r.block_ts): (r.n_points, list(r.words))
+              for r in io.read("blocks").collect()}
+    ref = {(r.series_key, r.block_ts): (r.n_points, list(r.words))
+           for r in encode_points(pts, "double").collect()}
+    assert io.read("blocks").count() == len(blocks) == 3
+    assert blocks == ref
+
+
 def test_streaming_sketch_parity_across_microbatches(spark, tmp_path):
     """The DDSketch tier built incrementally by Structured Streaming
     (multiple micro-batches via maxFilesPerTrigger) must equal the
