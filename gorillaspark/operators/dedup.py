@@ -239,14 +239,16 @@ def minhash_lsh_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.8,
             db = batch.column("doc_b").to_numpy(zero_copy_only=False)
             sza = batch.column("sz_a").to_numpy(zero_copy_only=False)
             szb = batch.column("sz_b").to_numpy(zero_copy_only=False)
-            ha = batch.column("ha")
-            hb = batch.column("hb")
+            # each pair's sets are views into the lists' values buffers
+            ha, hb = batch.column("ha"), batch.column("hb")
+            oa, ob = ha.offsets.to_numpy(), hb.offsets.to_numpy()
+            va = ha.values.to_numpy(zero_copy_only=False)
+            vb = hb.values.to_numpy(zero_copy_only=False)
             out = np.empty(n, dtype=np.int64)
             for i in range(n):
-                out[i] = np.intersect1d(
-                    np.asarray(ha[i].as_py(), dtype=np.int64),
-                    np.asarray(hb[i].as_py(), dtype=np.int64),
-                    assume_unique=True).size
+                out[i] = np.intersect1d(va[oa[i]:oa[i + 1]],
+                                        vb[ob[i]:ob[i + 1]],
+                                        assume_unique=True).size
             yield pa.RecordBatch.from_arrays(
                 [pa.array(da, pa.int64()), pa.array(db, pa.int64()),
                  pa.array(sza, pa.int64()), pa.array(szb, pa.int64()),

@@ -12,6 +12,12 @@ with *per-partition lineage and metrics rows*. Implementation:
   output plan runs once — in its write — and nothing re-counts it;
 * a restarted job anti-joins pending units against completed ``_meta``
   rows — only unfinished units re-run;
+* the ledger is written and read on the driver: ``record_unit`` commits
+  its one-row ``pyarrow`` table through ``ParquetTableIO.append`` and
+  ``completed_units`` reads the live ``_meta`` files with
+  ``pq.read_table``, so neither starts a Spark job. ``_meta`` stays a
+  parquet table of ``META_SCHEMA``'s columns, so Spark (``unit_metrics``)
+  and other engines read it, including rows written through Spark;
 * output appends are keyed ``commit_key = f"{job_id}/{unit}"`` so a
   crash *between* output commit and meta commit replays the unit as a
   no-op append (idempotent exactly-once output) whose ``_meta`` row is
@@ -22,6 +28,8 @@ from __future__ import annotations
 
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -45,26 +53,33 @@ META_SCHEMA = StructType([
     StructField("committed_at_ms", LongType(), True),
 ])
 
+# META_SCHEMA for rows built on the driver (string / int64 columns)
+_META_ARROW = pa.schema([
+    pa.field(f.name, pa.string() if isinstance(f.dataType, StringType)
+             else pa.int64(), f.nullable)
+    for f in META_SCHEMA])
+
 
 def completed_units(spark: SparkSession, io, job_id: str) -> set[str]:
-    try:
-        meta = io.read(META_TABLE)
-    except FileNotFoundError:
+    files = io.live_files(META_TABLE)
+    if not files:
         return set()
-    rows = (meta.where((F.col("job_id") == job_id)
-                       & (F.col("status") == "done"))
-            .select("unit").distinct().collect())
-    return {r.unit for r in rows}
+    meta = pq.read_table(files, columns=["job_id", "unit", "status"])
+    d = meta.to_pydict()
+    return {u for j, u, s in zip(d["job_id"], d["unit"], d["status"])
+            if j == job_id and s == "done"}
 
 
 def record_unit(spark: SparkSession, io, job_id: str, unit: str,
                 rows_out: int | None, out_partitions: int | None,
                 out_bytes_est: int | None,
                 snapshot_id: str | None, wall_ms: int) -> None:
-    row = [(job_id, unit, "done", rows_out, out_partitions,
-            out_bytes_est, snapshot_id or "", wall_ms,
-            int(time.time() * 1000))]
-    io.append(META_TABLE, spark.createDataFrame(row, META_SCHEMA),
+    row = (job_id, unit, "done", rows_out, out_partitions,
+           out_bytes_est, snapshot_id or "", wall_ms,
+           int(time.time() * 1000))
+    io.append(META_TABLE,
+              pa.Table.from_pylist([dict(zip(_META_ARROW.names, row))],
+                                   _META_ARROW),
               commit_key=f"meta/{job_id}/{unit}")
 
 

@@ -23,6 +23,15 @@ block counts. ``compact_sweep`` repairs the table in place:
   matching ``_meta`` row are backfilled from their entries (wall_ms 0
   marks a backfill), mirroring run_resumable_shared's
   crash-between-commits contract.
+
+The sweep decides from the manifest first: a snapshot with fewer than
+two live entries holding files cannot be fragmented, because each
+writer of ``blocks`` (``encode_points``, ``compact_blocks``) writes at
+most one block per ``(series_key, block_ts)`` per commit. Only a table
+built by two or more live commits pays ``fragmented_group_count``'s
+Spark job. The lineage rows are written and read on the driver
+(plans/checkpoint.py), so a sweep of a single-commit table starts no
+Spark job at all.
 """
 
 from __future__ import annotations
@@ -71,17 +80,21 @@ def compact_sweep(spark: SparkSession, io, table: str = "blocks",
     snapshot id being compacted.
     """
     _backfill_lineage(spark, io, table, job_id)
+    snaps = io.snapshots(table)
+    if not snaps:
+        return 0
     # pin the read at the snapshot the commit key names: an append
     # landing between here and the rewrite neither enters the compacted
     # blocks nor gets its files dropped (rewrite preserves snapshots
     # after expected_snapshot_id)
-    snap_id = io.current_snapshot_id(table)
-    if snap_id is None:
+    snap_id = snaps[-1].snapshot_id
+    key = f"{job_id}/compact/{snap_id}"
+    if any(s.commit_key == key for s in snaps):
+        return 0
+    # one live commit holds at most one block per group (module doc)
+    if sum(1 for s in snaps if s.files) < 2:
         return 0
     blocks = io.read(table, snapshot_id=snap_id)
-    key = f"{job_id}/compact/{snap_id}"
-    if key in io.committed_keys(table):
-        return 0
     n_frag = fragmented_group_count(blocks)
     if n_frag == 0:
         return 0

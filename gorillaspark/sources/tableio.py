@@ -14,6 +14,18 @@ sizes of the new files after the write and before the manifest lock
 later rewrite empties the entry's file list; entries written before
 they existed read them as None.
 
+A write takes a Spark DataFrame or, for driver-side metadata such as
+the checkpoint ledger's one-row commits, a ``pyarrow.Table`` that is
+written with ``pq.write_table`` on the driver, so it starts no Spark
+job; both land in a fresh data directory and commit the same way.
+
+``read`` memoizes the DataFrame it resolves per table, keyed by the
+tuple of live data directories the read covers. A hit skips Spark's
+parquet schema-inference job and the file listing. This is safe
+because a committed directory never changes: every write goes to a
+fresh uuid directory, and ``rewrite`` and ``delete_snapshots_before``
+change the tuple. Snapshot-pinned reads use the same key.
+
 Writers are idempotent per ``commit_key``: re-running a failed job step
 with the same key is a no-op (the resume contract in SURVEY.md §3.4).
 """
@@ -29,6 +41,7 @@ import time
 import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
@@ -50,6 +63,8 @@ class ParquetTableIO:
     def __init__(self, spark: SparkSession, root: str) -> None:
         self.spark = spark
         self.root = root
+        # table -> (live data directories, the DataFrame reading them)
+        self._reads: dict[str, tuple[tuple[str, ...], DataFrame]] = {}
         os.makedirs(root, exist_ok=True)
 
     # -- manifest ------------------------------------------------------
@@ -103,11 +118,17 @@ class ParquetTableIO:
             json.dump([s.__dict__ for s in snaps], f)
         os.replace(tmp, self._manifest_path(table))  # atomic commit
 
-    def _write(self, table: str, df: DataFrame) -> tuple[str, dict]:
+    def _write(self, table: str,
+               df: DataFrame | pa.Table) -> tuple[str, dict]:
         """Write ``df`` to a fresh data directory; returns it with the
-        entry counts of the parquet files just written there."""
+        entry counts of the parquet files just written there. A
+        ``pyarrow.Table`` is written on the driver as one file."""
         path = os.path.join(self.root, table, "data", uuid.uuid4().hex[:12])
-        df.write.mode("overwrite").parquet(path)
+        if isinstance(df, pa.Table):
+            os.makedirs(path)
+            pq.write_table(df, os.path.join(path, "part-00000.parquet"))
+        else:
+            df.write.mode("overwrite").parquet(path)
         files = glob.glob(os.path.join(path, "*.parquet"))
         return path, {
             "added_rows": sum(pq.read_metadata(f).num_rows for f in files),
@@ -130,7 +151,7 @@ class ParquetTableIO:
                      if s.commit_key == commit_key), None)
 
     # -- I/O -------------------------------------------------------------
-    def append(self, table: str, df: DataFrame,
+    def append(self, table: str, df: DataFrame | pa.Table,
                commit_key: str | None = None) -> Snapshot | None:
         """Write df as a new snapshot; no-op if commit_key already done."""
         if commit_key and commit_key in self.committed_keys(table):
@@ -213,7 +234,10 @@ class ParquetTableIO:
             shutil.rmtree(f, ignore_errors=True)
         return snap
 
-    def read(self, table: str, snapshot_id: str | None = None) -> DataFrame:
+    def _live_dirs(self, table: str,
+                   snapshot_id: str | None = None) -> tuple[str, ...]:
+        """Data directories of the snapshots up to ``snapshot_id``
+        (all of them when None or not found)."""
         snaps = self.snapshots(table)
         if snapshot_id is not None:
             upto = []
@@ -222,10 +246,24 @@ class ParquetTableIO:
                 if s.snapshot_id == snapshot_id:
                     break
             snaps = upto
-        files = [f for s in snaps for f in s.files]
-        if not files:
+        return tuple(f for s in snaps for f in s.files)
+
+    def live_files(self, table: str) -> list[str]:
+        """The parquet files of the table's live snapshots, for reads
+        on the driver."""
+        return [p for d in self._live_dirs(table)
+                for p in sorted(glob.glob(os.path.join(d, "*.parquet")))]
+
+    def read(self, table: str, snapshot_id: str | None = None) -> DataFrame:
+        dirs = self._live_dirs(table, snapshot_id)
+        if not dirs:
             raise FileNotFoundError(f"table {table} has no snapshots")
-        return self.spark.read.parquet(*files)
+        hit = self._reads.get(table)
+        if hit is not None and hit[0] == dirs:
+            return hit[1]
+        df = self.spark.read.parquet(*dirs)
+        self._reads[table] = (dirs, df)
+        return df
 
     def current_snapshot_id(self, table: str) -> str | None:
         snaps = self.snapshots(table)

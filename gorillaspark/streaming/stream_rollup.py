@@ -240,10 +240,12 @@ def _carry_dir(io, carry_table: str) -> str:
     return os.path.join(io.root, carry_table)
 
 
-def _latest_carry(io, spark, carry_table: str,
+def _latest_carry(io, spark, carry_table: str, schema,
                   before_batch: int | None = None) -> DataFrame | None:
     """Newest carry snapshot (strictly before ``before_batch`` when
-    given, so a replayed batch sees exactly the carry it saw first)."""
+    given, so a replayed batch sees exactly the carry it saw first),
+    read with ``schema`` — the micro-batch's, whose columns the carry
+    holds (parquet matches them by name) — so no inference job runs."""
     import os
     root = _carry_dir(io, carry_table)
     if not os.path.isdir(root):
@@ -254,7 +256,8 @@ def _latest_carry(io, spark, carry_table: str,
                       or int(d.split("=", 1)[1]) < before_batch))
     if not ids:
         return None
-    return spark.read.parquet(os.path.join(root, f"batch={ids[-1]}"))
+    return spark.read.schema(schema).parquet(
+        os.path.join(root, f"batch={ids[-1]}"))
 
 
 def incremental_encode(io, out_table: str = "blocks",
@@ -272,7 +275,8 @@ def incremental_encode(io, out_table: str = "blocks",
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        prev = _latest_carry(io, spark, carry_table, before_batch=batch_id)
+        prev = _latest_carry(io, spark, carry_table, batch_df.schema,
+                             before_batch=batch_id)
         data = batch_df if prev is None \
             else batch_df.unionByName(prev)
         if data.isEmpty():
@@ -312,7 +316,10 @@ def flush_carry(io, spark, out_table: str = "blocks",
     Mid-stream callers must flush only after the previous batch's
     checkpoint committed — a replay of that batch would rebuild its
     carry and re-open the flushed day."""
+    import glob
     import os
+
+    import pyarrow.parquet as pq
     root = _carry_dir(io, carry_table)
     if not os.path.isdir(root):
         return
@@ -321,9 +328,10 @@ def flush_carry(io, spark, out_table: str = "blocks",
     if not ids:
         return
     path = os.path.join(root, f"batch={ids[-1]}")
-    tail = spark.read.parquet(path)
-    if tail.isEmpty():
+    if not sum(pq.read_metadata(f).num_rows
+               for f in glob.glob(os.path.join(path, "*.parquet"))):
         return
+    tail = spark.read.parquet(path)
     io.append(out_table, encode_points(tail, "double"),
               commit_key=f"stream-carry-flush/{ids[-1]}")
     # idempotent even if we crash between append and this overwrite:

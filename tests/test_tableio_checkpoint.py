@@ -5,6 +5,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import uuid
 
 import pyarrow.parquet as pq
 import pytest
@@ -16,7 +17,10 @@ from gorillaspark.operators.retention import (
     retention_sweep,
 )
 from gorillaspark.plans.checkpoint import (
+    META_SCHEMA,
+    META_TABLE,
     completed_units,
+    record_unit,
     run_resumable_shared,
     unit_metrics,
 )
@@ -38,6 +42,22 @@ def _on_disk(snap) -> tuple[int, int, int]:
 
 def _counts(snap) -> tuple[int, int, int]:
     return snap.added_rows, snap.added_bytes, snap.added_files
+
+
+def _spark_jobs(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` starts (tagged by a job group)."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _ids(df) -> list[int]:
+    return sorted(r.id for r in df.collect())
 
 
 def test_snapshot_append_read(spark, io):
@@ -377,3 +397,89 @@ def test_rewrite_time_travel_consistent_at_concurrent_snapshot(spark, io):
     assert at_rewrite.where(F.col("v") == "late").count() == 0
     # manifest order: rewrite sits at the anchor slot, late stays last
     assert io.current_snapshot_id("t") == late.snapshot_id
+
+
+def test_ledger_and_repeat_read_start_no_spark_job(spark, io):
+    """The ledger is written and read on the driver, and a second read
+    of an unchanged table reuses the first one's DataFrame: none of
+    these starts a Spark job."""
+    io.append("t", spark.range(3))
+    first = io.read("t")
+    assert _spark_jobs(spark, lambda: record_unit(
+        spark, io, "jj", "u1", 3, 1, 100, "s1", 5)) == 0
+    assert _spark_jobs(spark, lambda: completed_units(
+        spark, io, "jj")) == 0
+    got = []
+    assert _spark_jobs(spark, lambda: got.append(io.read("t"))) == 0
+    assert got[0] is first
+    assert completed_units(spark, io, "jj") == {"u1"}
+
+
+def test_ledger_reads_rows_written_through_spark(spark, io):
+    """A ``_meta`` holding a row written through Spark and rows written
+    on the driver reads as one ledger: completed_units sees every row,
+    unit_metrics keeps META_SCHEMA's names and types, DuckDB reads it."""
+    import duckdb
+    from pyspark.sql.types import DoubleType
+
+    io.append(META_TABLE, spark.createDataFrame(
+        [("jx", "u0", "done", 1, 1, 10, "s0", 5, 1)], META_SCHEMA),
+        commit_key="meta/jx/u0")
+    record_unit(spark, io, "jx", "u1", 2, 1, 20, "s1", 7)
+    record_unit(spark, io, "jx", "u2", None, None, None, None, 0)
+    record_unit(spark, io, "other", "u9", 1, 1, 1, "s9", 1)
+    assert completed_units(spark, io, "jx") == {"u0", "u1", "u2"}
+    assert completed_units(spark, io, "other") == {"u9"}
+    m = unit_metrics(spark, io, "jx")
+    assert [(f.name, f.dataType) for f in m.schema] == \
+        [(f.name, f.dataType) for f in META_SCHEMA] \
+        + [("rows_per_sec", DoubleType())]
+    rows = sorted(m.collect(), key=lambda r: r.unit)
+    assert [r.rows_out for r in rows] == [1, 2, None]
+    assert [r.snapshot_id for r in rows] == ["s0", "s1", ""]
+    files = io.live_files(META_TABLE)
+    assert duckdb.sql(
+        f"SELECT count(*) FROM read_parquet({files}) "
+        "WHERE status = 'done'").fetchone()[0] == 4
+
+
+def test_read_memo_follows_commits(spark, io):
+    """A memoized read never outlives the files it covers: append,
+    rewrite, retention and snapshot-pinned reads each return the
+    table's contents at that point."""
+    s1 = io.append("t", spark.range(0, 3))
+    assert _ids(io.read("t")) == [0, 1, 2]
+    io.append("t", spark.range(3, 5))
+    assert _ids(io.read("t")) == [0, 1, 2, 3, 4]
+    assert _ids(io.read("t", snapshot_id=s1.snapshot_id)) == [0, 1, 2]
+    assert _ids(io.read("t")) == [0, 1, 2, 3, 4]
+    io.rewrite("t", io.read("t").where("id >= 1"), commit_key="c/0")
+    assert _ids(io.read("t")) == [1, 2, 3, 4]
+    io.append("t", spark.range(10, 12))
+    assert _ids(io.read("t")) == [1, 2, 3, 4, 10, 11]
+    snaps = io.snapshots("t")
+    for s in snaps[:-1]:
+        s.committed_at_ms = 0  # age every entry but the newest
+    with open(io._manifest_path("t"), "w") as f:
+        json.dump([s.__dict__ for s in snaps], f)
+    assert io.delete_snapshots_before("t", cutoff_ms=1) == len(snaps) - 1
+    assert _ids(io.read("t")) == [10, 11]
+
+
+def test_compact_sweep_of_single_commit_table_starts_no_job(spark, io):
+    """One live commit holds at most one block per (series_key,
+    block_ts), so the sweep answers from the manifest."""
+    from gorillaspark.operators.encode import encode_points
+    from gorillaspark.plans.maintenance import compact_sweep
+
+    day = 86_400_000
+    pts = spark.createDataFrame(
+        [(f"s{k}", day + i * 60_000, float(i)) for k in range(3)
+         for i in range(20)],
+        "series_key string, ts_ms long, value double")
+    io.append("blocks", encode_points(pts), commit_key="b/0")
+    got = []
+    assert _spark_jobs(spark, lambda: got.append(
+        compact_sweep(spark, io, "blocks", job_id="j"))) == 0
+    assert got == [0]
+    assert io.read("blocks").count() == 3
