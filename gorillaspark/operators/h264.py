@@ -13,12 +13,9 @@ entropy coding:
   and 8x8 chroma (DC / H / V / Plane) prediction, 4:2:0.
 * Integer inverse core transform, Intra_16x16 luma DC Hadamard and
   2x2 chroma DC transforms, LevelScale dequantisation.
-* High-profile Intra_8x8 and the inter 8x8 transform (h264_hi.py),
-  accepted only from streams carrying the gorillaspark marker SEI
-  (see _GS_MARKER_UUID).
 
 The encoder is split into entropy-independent MB plans
-(_plan_mb_i16/_plan_mb_i4/_plan_mb_i8) and the CAVLC writer
+(_plan_mb_i16/_plan_mb_i4) and the CAVLC writer
 (_emit_mb_cavlc).
 
 B slices (r8): B_Skip / B_Direct_16x16 (spatial derivation
@@ -36,7 +33,7 @@ pred_weight_tables in P and B slices plus implicit B biprediction
 (8.4.2.3, weighted_bipred_idc 2).
 
 Out of scope, rejected loudly (NotImplementedError): CABAC
-(entropy_coding_mode_flag = 1), third-party 8x8-transform streams,
+(entropy_coding_mode_flag = 1), the High-profile 8x8 transform,
 multiple slice groups, fields/MBAFF, monochrome / 4:2:2 / 4:4:4,
 scaling matrices, and in-loop deblocking — the encoder below always signals
 ``disable_deblocking_filter_idc = 1`` and the decoder refuses
@@ -61,13 +58,6 @@ the same _loud_corruption ingestion contract.
 from __future__ import annotations
 
 import numpy as np
-
-# SEI user_data_unregistered UUID marking High-profile streams produced
-# by this module's encoder. The 8x8 dequant tables (h264_hi.py) are
-# transcribed without conformance vectors, so only streams carrying
-# this marker are accepted for 8x8-transform decode — a foreign one is
-# rejected loudly rather than risk a silent misdecode.
-_GS_MARKER_UUID = b"gorillaspark-cab"
 
 # ---------------------------------------------------------------------------
 # bit I/O over RBSP payloads
@@ -1085,9 +1075,11 @@ def _parse_pps(br: _Bits) -> dict:
     deblock_ctrl = br.flag()
     constrained_intra = br.flag()
     br.flag()                                 # redundant_pic_cnt_present
-    transform_8x8 = False
     if br.more_rbsp_data():                   # High-profile extension
-        transform_8x8 = bool(br.flag())
+        if br.flag():                         # transform_8x8_mode_flag
+            raise NotImplementedError(
+                "8x8 transform (transform_8x8_mode_flag = 1) "
+                "unsupported: only 4x4-transform CAVLC streams decode")
         if br.flag():
             raise NotImplementedError(
                 "pic_scaling_matrix_present (non-flat scaling "
@@ -1098,7 +1090,6 @@ def _parse_pps(br: _Bits) -> dict:
                 "chroma_qp_index_offset unsupported (shared Cb/Cr "
                 "qp offset only)")
     return {"pps_id": pps_id, "sps_id": sps_id,
-            "transform_8x8": transform_8x8,
             "init_qp": qp, "chroma_qp_off": chroma_qp_off,
             "deblock_ctrl": deblock_ctrl,
             "constrained_intra": constrained_intra,
@@ -1316,7 +1307,6 @@ def h264_decode_gop_planes(payload: bytes):
     quarter-pel motion compensation)."""
     sps = pps = None
     slices = []
-    gs_marker = False
     for nal_type, ref_idc, rbsp in _split_annexb(payload):
         if nal_type == 7:
             sps = _parse_sps(_Bits(rbsp))
@@ -1326,10 +1316,7 @@ def h264_decode_gop_planes(payload: bytes):
             if nal_type == 5 and ref_idc == 0:
                 raise ValueError("IDR NAL with nal_ref_idc 0")
             slices.append((rbsp, ref_idc, nal_type == 5))
-        elif nal_type == 6:
-            # gorillaspark High-profile marker (see _GS_MARKER_UUID)
-            gs_marker = gs_marker or _GS_MARKER_UUID in rbsp
-        # other SEI (6), AUD (9), filler (12): ignored
+        # SEI (6), AUD (9), filler (12): ignored
     if sps is None or pps is None or not slices:
         raise ValueError("stream lacks SPS, PPS or a coded slice")
     mbs_w, mbs_h = sps["w_mbs"], sps["h_mbs"]
@@ -1345,14 +1332,6 @@ def h264_decode_gop_planes(payload: bytes):
         raise ValueError("frame dimensions implausible for payload size")
     if n_mbs * len(slices) > 1 << 22:
         raise ValueError("implausible GOP size for frame dimensions")
-    if pps.get("transform_8x8") and not gs_marker:
-        raise NotImplementedError(
-            "third-party High-profile (8x8 transform) stream "
-            "unsupported: the 8x8 dequant norm tables are "
-            "transcribed without conformance vectors in this "
-            "environment, so decode only accepts gorillaspark-marked "
-            "streams rather than risk a silent misdecode (see "
-            "h264_hi.py's honesty contract)")
     W, H = mbs_w * 16, mbs_h * 16
     frames: list = []                # [(sort_key, planes)]
     cur = None                       # (Y, Cb, Cr, states, mvs)
@@ -2273,53 +2252,20 @@ def _decode_mb_p_skip(ref, Y, Cb, Cr, states, mv_map, mbx, mby,
     mv_map[(mbx, mby)] = (mvx, mvy)
 
 
-def _recon_inter_8x8(recon, predY, luma8, cbp_luma, qp):
-    """8x8-transform luma reconstruction over inter prediction
-    planes: per coded quadrant
-    dequant8 + idct8 on the scan-order levels."""
-    from . import h264_hi as hi
-    for b in range(4):
-        if not cbp_luma & (1 << b):
-            continue
-        d = np.zeros(64, dtype=np.int64)
-        d[hi.ZZ8] = luma8[b]
-        dq = hi.dequant8(d.reshape(8, 8), qp)
-        r = (hi.idct8(dq) + 32) >> 6
-        ox, oy = (b & 1) * 8, (b >> 1) * 8
-        recon[oy:oy + 8, ox:ox + 8] = _clip255(
-            predY[oy:oy + 8, ox:ox + 8] + r)
-
-
 def _cavlc_inter_tail(br, qp, pps, Y, Cb, Cr, states, st, predY,
-                      predCb, predCr, mbx, mby, mbs_w, ts8_ok=False):
+                      predCb, predCr, mbx, mby, mbs_w):
     """CBP + mb_qp_delta + residual + reconstruction of an inter MB
     over its assembled prediction planes (CAVLC) — shared by the P
-    and B macroblock decoders. ``ts8_ok`` (r8, High profile): the MB
-    shape permits transform_size_8x8_flag (all partitions >= 8x8);
-    the flag is read when the PPS enables the mode and luma is
-    coded, switching the residual to per-8x8 interleaved CAVLC."""
+    and B macroblock decoders."""
     cbp_code = br.ue()
     if cbp_code > 47:
         raise ValueError("invalid coded_block_pattern")
     cbp = _CBP_INTER[cbp_code]
     cbp_luma, cbp_chroma = cbp & 15, cbp >> 4
-    ts8 = bool(pps.get("transform_8x8") and ts8_ok and cbp_luma
-               and br.flag())
     if cbp:
         qp = _apply_qp_delta(br, qp)
     recon = predY.copy()
-    if cbp_luma and ts8:             # 8x8 transform (r8)
-        luma8 = np.zeros((4, 64), dtype=np.int64)
-        for b in range(4):
-            if not cbp_luma & (1 << b):
-                continue
-            for k in range(4):
-                nc = _luma_nc(states, mbx, mby, mbs_w, 4 * b + k)
-                coeffs = _decode_residual(br, nc, 16)
-                st.nnz_l[4 * b + k] = np.count_nonzero(coeffs)
-                luma8[b, 4 * np.arange(16) + k] = coeffs
-        _recon_inter_8x8(recon, predY, luma8, cbp_luma, qp)
-    elif cbp_luma:
+    if cbp_luma:
         for blk in range(16):
             if not (cbp_luma >> (blk // 4)) & 1:
                 continue
@@ -2383,11 +2329,8 @@ def _decode_mb_p(br, qp, pps, ref, Y, Cb, Cr, states, mv_map, mbx,
         mv_entry = pm
     predY, predCb, predCr = _wp_single((predY, predCb, predCr), wp,
                                        0)
-    ts8_ok = mb_type in (0, 1, 2) or (sub_types is not None
-                                      and all(t == 0
-                                              for t in sub_types))
     qp = _cavlc_inter_tail(br, qp, pps, Y, Cb, Cr, states, st, predY,
-                           predCb, predCr, mbx, mby, mbs_w, ts8_ok)
+                           predCb, predCr, mbx, mby, mbs_w)
     states[(mbx, mby)] = st
     mv_map[(mbx, mby)] = mv_entry
     return qp
@@ -2414,8 +2357,6 @@ def _decode_mb_b(br, qp, pps, ref0, ref1, col_mvs, Y, Cb, Cr,
     / the 16x8 and 8x16 two-partition types (4..21) / B_8x8 with all
     Table 7-18 sub-partitions incl. B_Direct_8x8 / intra."""
     mb_type = br.ue()
-    ts8_ok = True                    # 16x16/16x8/8x16 + direct (the
-    #                                  SPS sets direct_8x8_inference)
     if mb_type >= 23:                # intra macroblock in a B slice
         qp = _decode_mb_intra(br, mb_type - 23, qp, pps, Y, Cb, Cr,
                               states, mbx, mby, mbs_w)
@@ -2424,7 +2365,6 @@ def _decode_mb_b(br, qp, pps, ref0, ref1, col_mvs, Y, Cb, Cr,
         return qp
     if mb_type == 22:                # r8: B_8x8 sub-partitions
         sub_types = [br.ue() for _ in range(4)]
-        ts8_ok = all(t <= 3 for t in sub_types)   # 8x8-only subs
 
         def read_sub_mvd(li, q, pi, bx0, by0, w4, h4, mvp):
             return mvp[0] + br.se(), mvp[1] + br.se()
@@ -2466,7 +2406,7 @@ def _decode_mb_b(br, qp, pps, ref0, ref1, col_mvs, Y, Cb, Cr,
                                                preds[0][0])
     st = _MBState()
     qp = _cavlc_inter_tail(br, qp, pps, Y, Cb, Cr, states, st, predY,
-                           predCb, predCr, mbx, mby, mbs_w, ts8_ok)
+                           predCb, predCr, mbx, mby, mbs_w)
     states[(mbx, mby)] = st
     return qp
 
@@ -2510,13 +2450,8 @@ def _decode_mb_intra(br, mb_type, qp, pps, Y, Cb, Cr, states, mbx,
     if mb_type > 25:
         raise ValueError(f"invalid I-slice mb_type {mb_type}")
     if mb_type == 0:
-        if pps.get("transform_8x8") and br.flag():
-            # transform_size_8x8_flag = 1: Intra_8x8 (High profile)
-            qp = _decode_mb_i8(br, qp, pps, Y, Cb, Cr, states,
-                               mbx, mby, mbs_w, st)
-        else:
-            qp = _decode_mb_i4(br, qp, pps, Y, Cb, Cr, states,
-                               mbx, mby, mbs_w, st)
+        qp = _decode_mb_i4(br, qp, pps, Y, Cb, Cr, states,
+                           mbx, mby, mbs_w, st)
         states[(mbx, mby)] = st
         return qp
     # Intra_16x16: mode/CBP folded into mb_type
@@ -2685,127 +2620,6 @@ def _recon_mb_i4(Y, Cb, Cr, states, mbx, mby, mbs_w, modes, luma,
     _recon_chroma(Cb, Cr, mbx, mby, chroma_mode, cdc, cac, qp, pps)
 
 
-def _predict_i8_mode(states, st, mbx, mby, mbs_w, b: int) -> int:
-    """predIntra8x8PredMode (8.3.2.1): min of the left/top covering
-    blocks' modes at the 8x8's top-left 4x4 cell; DC when a
-    neighbour is missing. Reuses the 4x4 mode cells (an Intra_8x8 MB
-    stores its mode in all four covering cells)."""
-    bx, by = (b & 1) * 2, (b >> 1) * 2
-
-    def mode_at(gx, gy):
-        if gx < 0 or gy < 0:
-            return None
-        mx, my = gx >> 2, gy >> 2
-        if mx >= mbs_w:
-            return None
-        if mx == mbx and my == mby:
-            src = st
-        else:
-            src = states.get((mx, my))
-            if src is None:
-                return None
-            if src.intra16:
-                return 2
-        return int(src.i4_modes[_BLK_POS.index((gx & 3, gy & 3))])
-
-    gx, gy = mbx * 4 + bx, mby * 4 + by
-    ma = mode_at(gx - 1, gy)
-    mb = mode_at(gx, gy - 1)
-    if ma is None or mb is None:
-        return 2
-    return min(ma, mb)
-
-
-def _i8_refs(Y, px, py, b, mbx, mby, mbs_w):
-    """Gather the UNFILTERED Intra_8x8 reference samples of the 8x8
-    block at pixel (px, py): (top16, tl, left8), each None when
-    unavailable; unavailable top-right samples (t[8..15]) replicate
-    t[7] per 8.3.2.2."""
-    top_ok = py > 0 and (b >= 2 or mby > 0)
-    left_ok = px > 0 and ((b & 1) or mbx > 0)
-    top = tl = left = None
-    if top_ok:
-        top = np.empty(16, dtype=np.int64)
-        top[:8] = Y[py - 1, px:px + 8]
-        # top-right: block 2 reads block 1's bottom row, block 0 the
-        # above MB, block 1 the above-right MB; block 3 never
-        tr_ok = b == 0 or b == 2 or (b == 1 and mbx + 1 < mbs_w)
-        if tr_ok:
-            top[8:] = Y[py - 1, px + 8:px + 16]
-        else:
-            top[8:] = top[7]
-    if left_ok:
-        left = Y[py:py + 8, px - 1].copy()
-    if px > 0 and py > 0 and (top_ok or left_ok):
-        tl = int(Y[py - 1, px - 1])
-    return top, tl, left
-
-
-def _recon_mb_i8(Y, Cb, Cr, states, mbx, mby, mbs_w, modes, luma8,
-                 chroma_mode, qp, pps, cdc, cac):
-    """Intra_8x8 reconstruction from parsed levels (8.3.2.2 +
-    8.5.12-8.5.13) — block-by-block in raster order of the four 8x8
-    blocks."""
-    from . import h264_hi as hi
-    x0, y0 = mbx * 16, mby * 16
-    for b in range(4):
-        px, py = x0 + (b & 1) * 8, y0 + (b >> 1) * 8
-        top, tl, left = _i8_refs(Y, px, py, b, mbx, mby, mbs_w)
-        ft, ftl, fl = hi.filter_ref8(top, tl, left)
-        pred = hi.pred8(int(modes[b]), ft, ftl, fl)
-        d = np.zeros(64, dtype=np.int64)
-        d[hi.ZZ8] = luma8[b]
-        dq = hi.dequant8(d.reshape(8, 8), qp)
-        r = (hi.idct8(dq) + 32) >> 6
-        Y[py:py + 8, px:px + 8] = _clip255(pred + r)
-    _recon_chroma(Cb, Cr, mbx, mby, chroma_mode, cdc, cac, qp, pps)
-
-
-def _decode_mb_i8(br, qp, pps, Y, Cb, Cr, states, mbx, mby, mbs_w,
-                  st):
-    """Intra_8x8 macroblock (mb_type 0 + transform_size_8x8_flag,
-    High profile, CAVLC): four 8x8 blocks with prev/rem-coded
-    prediction modes; each coded 8x8 residual arrives as FOUR
-    interleaved 4x4 CAVLC blocks (7.4.5.3.3 — sub-block k carries
-    the 8x8 zigzag positions 4*i + k, and its totalCoeff feeds the
-    standard 4x4 nC contexts)."""
-    modes = np.full(4, 2, dtype=np.int64)
-    for b in range(4):
-        pred_mode = _predict_i8_mode(states, st, mbx, mby, mbs_w, b)
-        if br.flag():
-            modes[b] = pred_mode
-        else:
-            rem = br.u(3)
-            modes[b] = rem if rem < pred_mode else rem + 1
-        st.i4_modes[[_BLK_POS.index(((b & 1) * 2 + dx,
-                                     (b >> 1) * 2 + dy))
-                     for dx in (0, 1) for dy in (0, 1)]] = modes[b]
-    chroma_mode = br.ue()
-    if chroma_mode > 3:
-        raise ValueError("invalid intra_chroma_pred_mode")
-    cbp = _read_cbp_intra(br)
-    cbp_luma, cbp_chroma = cbp & 15, cbp >> 4
-    if cbp_chroma == 3:
-        raise ValueError("invalid chroma CBP")
-    if cbp:
-        qp = _apply_qp_delta(br, qp)
-    luma8 = np.zeros((4, 64), dtype=np.int64)
-    if cbp_luma:
-        for b in range(4):
-            if not cbp_luma & (1 << b):
-                continue
-            for k in range(4):
-                nc = _luma_nc(states, mbx, mby, mbs_w, 4 * b + k)
-                coeffs = _decode_residual(br, nc, 16)
-                st.nnz_l[4 * b + k] = np.count_nonzero(coeffs)
-                luma8[b, 4 * np.arange(16) + k] = coeffs
-    cdc, cac = _decode_chroma_residual(br, states, mbx, mby, mbs_w,
-                                       cbp_chroma, st)
-    _recon_mb_i8(Y, Cb, Cr, states, mbx, mby, mbs_w, modes, luma8,
-                 chroma_mode, qp, pps, cdc, cac)
-    return qp
-
-
 def _i4_top_right_available(bx, by, mbx, mby, mbs_w, states) -> bool:
     """Is the 4x4 block's top-right neighbour reconstructed?"""
     gx, gy = mbx * 4 + bx + 1, mby * 4 + by - 1
@@ -2879,20 +2693,12 @@ def _quant_dc(w: np.ndarray, qp: int, shift_extra: int = 0) -> np.ndarray:
     return np.sign(w) * ((np.abs(w) * mf + 2 * f) >> (qbits + shift_extra))
 
 
-def _write_sps(mbs_w: int, mbs_h: int, profile: int = 66,
-               poc_type: int = 2) -> bytes:
+def _write_sps(mbs_w: int, mbs_h: int, poc_type: int = 2) -> bytes:
     bw = _BitW()
-    bw.u(profile, 8)                         # 66 Baseline / 77 Main /
-    #                                          100 High (r8)
-    bw.u(0b11000000 if profile == 66 else 0, 8)  # constraint_set0/1
+    bw.u(66, 8)                              # profile_idc: Baseline
+    bw.u(0b11000000, 8)                      # constraint_set0/1
     bw.u(20, 8)                              # level 2.0
     bw.ue(0)                                 # sps_id
-    if profile == 100:                       # High-profile extension
-        bw.ue(1)                             # chroma_format_idc 4:2:0
-        bw.ue(0)                             # bit_depth_luma_minus8
-        bw.ue(0)                             # bit_depth_chroma_minus8
-        bw.u(0, 1)                           # qpprime_y_zero_bypass
-        bw.u(0, 1)                           # seq_scaling_matrix
     bw.ue(0)                                 # log2_max_frame_num_minus4
     bw.ue(poc_type)                          # pic_order_cnt_type
     if poc_type == 0:
@@ -2909,8 +2715,8 @@ def _write_sps(mbs_w: int, mbs_h: int, profile: int = 66,
     return bw.bytes()
 
 
-def _write_pps(weighted_pred: bool = False, weighted_bipred: int = 0,
-               transform_8x8: bool = False) -> bytes:
+def _write_pps(weighted_pred: bool = False,
+               weighted_bipred: int = 0) -> bytes:
     bw = _BitW()
     bw.ue(0)                                 # pps_id
     bw.ue(0)                                 # sps_id
@@ -2927,10 +2733,6 @@ def _write_pps(weighted_pred: bool = False, weighted_bipred: int = 0,
     bw.u(1, 1)                               # deblocking_filter_control
     bw.u(0, 1)                               # constrained_intra_pred
     bw.u(0, 1)                               # redundant_pic_cnt
-    if transform_8x8:                        # High-profile extension
-        bw.u(1, 1)                           # transform_8x8_mode_flag
-        bw.u(0, 1)                           # pic_scaling_matrix
-        bw.se(0)                             # second_chroma_qp_offset
     bw.trailing()
     return bw.bytes()
 
@@ -2949,20 +2751,11 @@ def _slice_header(bw: _BitW, qp: int, poc_lsb: int | None = None):
     bw.ue(1)                                 # disable_deblocking_filter
 
 
-def _assemble(sps: bytes, pps: bytes, slice_rbsp: bytes,
-              sei: bytes | None = None) -> bytes:
+def _assemble(sps: bytes, pps: bytes, slice_rbsp: bytes) -> bytes:
     sc = b"\x00\x00\x00\x01"
-    mid = sc + bytes([0x06]) + _escape(sei) if sei is not None else b""
-    return (sc + bytes([0x67]) + _escape(sps) + mid
+    return (sc + bytes([0x67]) + _escape(sps)
             + sc + bytes([0x68]) + _escape(pps)
             + sc + bytes([0x65]) + _escape(slice_rbsp))
-
-
-def _gs_marker_sei() -> bytes:
-    """SEI RBSP: user_data_unregistered (payloadType 5) carrying the
-    gorillaspark marker UUID (see _GS_MARKER_UUID)."""
-    payload = _GS_MARKER_UUID + b"ac-v1"
-    return bytes([5, len(payload)]) + payload + b"\x80"
 
 
 _CBP_INTRA_INV = {cbp: i for i, cbp in enumerate(_CBP_INTRA)}
@@ -2979,8 +2772,7 @@ def h264_encode(y: np.ndarray, qp: int = 30,
     optional (h/2, w/2) planes, default neutral 128) as a one-slice
     Annex-B IDR access unit. ``mb_mode``: 'i16' (Intra_16x16 DC
     prediction, full AC residual), 'i4' (Intra_4x4, per-block
-    SAD-chosen mode, full residual), 'i8' (r8: High-profile
-    Intra_8x8, marker SEI) or 'pcm' (r8: I_PCM raw macroblocks —
+    SAD-chosen mode, full residual) or 'pcm' (r8: I_PCM raw macroblocks —
     LOSSLESS, byte-aligned samples).
 
     A real lossy encoder with the standard reconstruction loop: each
@@ -3040,25 +2832,16 @@ def h264_encode(y: np.ndarray, qp: int = 30,
             elif mb_mode == "i4":
                 sym = _plan_mb_i4(y, cbp, crp, Yr, Cbr, Crr, states,
                                   mbx, mby, mbs_w, qp)
-            elif mb_mode == "i8":    # High profile (r8)
-                sym = _plan_mb_i8(y, cbp, crp, Yr, Cbr, Crr, states,
-                                  mbx, mby, mbs_w, qp)
             else:
                 raise ValueError(f"unknown mb_mode {mb_mode!r}")
             _emit_mb_cavlc(bw, states, sym, mbx, mby, mbs_w)
             states[(mbx, mby)] = sym["st"]
-    i8 = mb_mode == "i8"
     bw.trailing()
-    # High-profile streams carry the marker SEI: the 8x8 dequant
-    # tables are accepted from this repo's own streams only
-    stream = _assemble(
-        _write_sps(mbs_w, mbs_h, profile=100 if i8 else 66,
+    return _assemble(
+        _write_sps(mbs_w, mbs_h,
                    poc_type=0 if poc_lsb is not None else 2),
         _write_pps(weighted_pred=weighted_pred,
-                   weighted_bipred=weighted_bipred,
-                   transform_8x8=i8), bw.bytes(),
-        sei=_gs_marker_sei() if i8 else None)
-    return stream
+                   weighted_bipred=weighted_bipred), bw.bytes())
 
 
 def h264_encoder_reconstruction(y, qp: int = 30, cb=None, cr=None,
@@ -3082,9 +2865,6 @@ def h264_encoder_reconstruction(y, qp: int = 30, cb=None, cr=None,
             if mb_mode == "i16":
                 sym = _plan_mb_i16(y, cbp, crp, Yr, Cbr, Crr, states,
                                    mbx, mby, mbs_w, qp)
-            elif mb_mode == "i8":
-                sym = _plan_mb_i8(y, cbp, crp, Yr, Cbr, Crr, states,
-                                  mbx, mby, mbs_w, qp)
             else:
                 sym = _plan_mb_i4(y, cbp, crp, Yr, Cbr, Crr, states,
                                   mbx, mby, mbs_w, qp)
@@ -3164,34 +2944,8 @@ def _emit_mb_cavlc(bw, states, sym, mbx, mby, mbs_w):
             for blk in range(16):
                 nc = _luma_nc(states, mbx, mby, mbs_w, blk)
                 _encode_residual(bw, sym["qac"][blk, 1:], nc, 15)
-    elif sym["kind"] == "i8":                # High profile (r8)
-        bw.ue(0)                             # mb_type I_NxN
-        bw.u(1, 1)                           # transform_size_8x8_flag
-        for b in range(4):
-            pm = sym["pred_modes"][b]
-            m = int(sym["modes"][b])
-            if m == pm:
-                bw.u(1, 1)
-            else:
-                bw.u(0, 1)
-                bw.u(m if m < pm else m - 1, 3)
-        bw.ue(sym["chroma_mode"])
-        bw.ue(_CBP_INTRA_INV[sym["cbp_luma"] | (sym["cbp_chroma"] << 4)])
-        if sym["cbp_luma"] or sym["cbp_chroma"]:
-            bw.se(sym["qp_delta"])
-        if sym["cbp_luma"]:
-            for b in range(4):
-                if not sym["cbp_luma"] & (1 << b):
-                    continue
-                for k in range(4):           # interleaved sub-blocks
-                    nc = _luma_nc(states, mbx, mby, mbs_w, 4 * b + k)
-                    _encode_residual(
-                        bw, sym["q8"][b, 4 * np.arange(16) + k], nc,
-                        16)
     else:
         bw.ue(0)                             # mb_type I_4x4
-        if sym.get("ts8_bit"):               # transform_8x8 PPS: the
-            bw.u(0, 1)                       # flag is present, 0
         for blk in range(16):
             pm = sym["pred_modes"][blk]
             m = int(sym["modes"][blk])
@@ -3326,58 +3080,6 @@ def _plan_mb_i4(y, src_cb, src_cr, Yr, Cbr, Crr, states, mbx, mby,
             "qblocks": qblocks, "cdc": cdc, "cac": cac, "st": st}
 
 
-def _plan_mb_i8(y, src_cb, src_cr, Yr, Cbr, Crr, states, mbx, mby,
-                mbs_w, qp):
-    """Plan one Intra_8x8 MB (High profile, r8): per-8x8 SAD mode
-    search over the FILTERED references, 8x8 transform/quant chain
-    (h264_hi), reconstructing in place like :func:`_plan_mb_i4`."""
-    from . import h264_hi as hi
-    st = _MBState()
-    x0, y0 = mbx * 16, mby * 16
-    modes = np.empty(4, dtype=np.int64)
-    q8 = np.zeros((4, 64), dtype=np.int64)
-    for b in range(4):
-        px, py = x0 + (b & 1) * 8, y0 + (b >> 1) * 8
-        top, tl, left = _i8_refs(Yr, px, py, b, mbx, mby, mbs_w)
-        ft, ftl, fl = hi.filter_ref8(top, tl, left)
-        best = None
-        src = y[py:py + 8, px:px + 8]
-        for mode in range(9):
-            try:
-                p = hi.pred8(mode, ft, ftl, fl)
-            except ValueError:
-                continue
-            sad = int(np.abs(src - p).sum())
-            if best is None or sad < best[0]:
-                best = (sad, mode, p)
-        _, mode, p = best
-        modes[b] = mode
-        st.i4_modes[[_BLK_POS.index(((b & 1) * 2 + dx,
-                                     (b >> 1) * 2 + dy))
-                     for dx in (0, 1) for dy in (0, 1)]] = mode
-        q = hi.quant8(hi.fwd8(src - p), qp)
-        q8[b] = q.reshape(64)[hi.ZZ8]
-        d = np.zeros(64, dtype=np.int64)
-        d[hi.ZZ8] = q8[b]
-        r = (hi.idct8(hi.dequant8(d.reshape(8, 8), qp)) + 32) >> 6
-        Yr[py:py + 8, px:px + 8] = _clip255(p + r)
-    cbp_luma = 0
-    for b in range(4):
-        if np.any(q8[b]):
-            cbp_luma |= 1 << b
-            for k in range(4):       # interleaved sub-block nnz (nC)
-                st.nnz_l[4 * b + k] = np.count_nonzero(
-                    q8[b, 4 * np.arange(16) + k])
-    cbp_chroma, cdc, cac = _plan_chroma(src_cb, src_cr, Cbr, Crr,
-                                        mbx, mby, qp, st)
-    pred_modes = [_predict_i8_mode(states, st, mbx, mby, mbs_w, b)
-                  for b in range(4)]
-    return {"kind": "i8", "modes": modes, "pred_modes": pred_modes,
-            "chroma_mode": 0, "qp_delta": 0, "qp": qp,
-            "cbp_luma": cbp_luma, "cbp_chroma": cbp_chroma,
-            "q8": q8, "cdc": cdc, "cac": cac, "st": st}
-
-
 def h264_encode_flat_mbs(offsets: np.ndarray, qp: int = 36,
                          poc_lsb: int | None = None,
                          weighted_pred: bool = False,
@@ -3429,92 +3131,6 @@ def h264_encode_flat_mbs(offsets: np.ndarray, qp: int = 36,
                      _write_pps(weighted_pred=weighted_pred,
                                 weighted_bipred=weighted_bipred),
                      bw.bytes())
-
-
-def h264_encode_flat_i8(values: np.ndarray, qp: int = 0) -> bytes:
-    """The High-profile ORACLE FAMILY (r8): an IDR frame of
-    Intra_8x8 DC-predicted blocks, each carrying a single 8x8 DC
-    coefficient chosen so the block reconstructs EXACTLY to
-    ``values[gj][gi]`` (one target per 8x8 block; shape (rows, cols)
-    with rows/cols even).
-
-    At qp 0 the DC dequant is d = (320*c + 32) >> 6 = 5*c exactly
-    (LevelScale 16*20, shift 6) and a DC-only 8x8 inverse transform
-    is flat, so the reconstruction offset is (5*c + 32) >> 6 — every
-    integer offset is reachable. The generator replicates the
-    decoder's filtered-reference DC prediction (8.3.2.2.1-2) over
-    the flat neighbour blocks, so any drift between this replica and
-    the real decode shows up as a hard value mismatch in the
-    driver's oracle compare, never silently."""
-    v = np.asarray(values, dtype=np.int64)
-    rows, cols = v.shape
-    if rows % 2 or cols % 2:
-        raise ValueError("flat-i8 grid must be an even block grid")
-    if v.min() < 0 or v.max() > 255:
-        raise ValueError("targets would clip")
-    mbs_w, mbs_h = cols // 2, rows // 2
-
-    def dc_pred(gi, gj):
-        top, left = gj > 0, gi > 0
-        if not top and not left:
-            return 128
-        n = v[gj - 1, gi] if top else 0
-        w = v[gj, gi - 1] if left else 0
-        nw = v[gj - 1, gi - 1] if (top and left) else 0
-        tr_ok = gi < cols - 1 and not (gi % 2 == 1 and gj % 2 == 1)
-        ne = v[gj - 1, gi + 1] if (top and tr_ok) else n
-        if top:
-            ft0 = ((nw + 3 * n + 2) >> 2) if left else n
-            ft7 = (3 * n + ne + 2) >> 2
-            sum_top = ft0 + 6 * n + ft7
-        if left:
-            fl0 = ((nw + 3 * w + 2) >> 2) if top else w
-            sum_left = fl0 + 7 * w
-        if top and left:
-            return (sum_top + sum_left + 8) >> 4
-        if top:
-            return (sum_top + 4) >> 3
-        return (sum_left + 4) >> 3
-
-    def dc_level(off):
-        if off == 0:
-            return 0
-        c = -(-(64 * off - 32) // 5)             # ceil division
-        assert (5 * c + 32) >> 6 == off
-        return c
-
-    states: dict = {}
-    bw = _BitW()
-    _slice_header(bw, qp)
-    for mby in range(mbs_h):
-        for mbx in range(mbs_w):
-            st = _MBState()
-            q8 = np.zeros((4, 64), dtype=np.int64)
-            cbp_luma = 0
-            for b in range(4):
-                gi, gj = mbx * 2 + (b & 1), mby * 2 + (b >> 1)
-                c = dc_level(int(v[gj, gi]) - dc_pred(gi, gj))
-                if c:
-                    q8[b, 0] = c
-                    cbp_luma |= 1 << b
-                    for k in range(4):
-                        st.nnz_l[4 * b + k] = 1 if k == 0 else 0
-            sym = {"kind": "i8",
-                   "modes": np.full(4, 2, dtype=np.int64),
-                   "pred_modes": [
-                       _predict_i8_mode(states, st, mbx, mby,
-                                        mbs_w, b) for b in range(4)],
-                   "chroma_mode": 0, "qp_delta": 0, "qp": qp,
-                   "cbp_luma": cbp_luma, "cbp_chroma": 0, "q8": q8,
-                   "cdc": np.zeros((2, 4), dtype=np.int64),
-                   "cac": np.zeros((2, 4, 16), dtype=np.int64),
-                   "st": st}
-            _emit_mb_cavlc(bw, states, sym, mbx, mby, mbs_w)
-            states[(mbx, mby)] = st
-    bw.trailing()
-    return _assemble(_write_sps(mbs_w, mbs_h, profile=100),
-                     _write_pps(transform_8x8=True), bw.bytes(),
-                     sei=_gs_marker_sei())
 
 
 def _flat_mb_syms(offsets, qp):
@@ -3576,47 +3192,20 @@ def _split_annexb_raw(payload: bytes):
 _CBP_INTER_INV = {cbp: i for i, cbp in enumerate(_CBP_INTER)}
 
 
-def _emit_inter_levels_cavlc(bw, states, st, levels, ts8_stream,
-                             part_ok, mbx, mby, mbs_w):
-    """CBP + optional transform_size_8x8_flag + mb_qp_delta + luma
-    residual of one inter MB (CAVLC) — shared by the P and B
-    encoders. ``levels`` is None, a (16, 16) per-4x4 scan-order
-    array, or (r8, High profile) a (4, 64) per-8x8 scan-order array
-    (requires ``ts8_stream`` and an all->=8x8 partition shape)."""
-    lv8 = levels is not None and np.asarray(levels).shape == (4, 64)
-    if lv8 and not (ts8_stream and part_ok):
-        raise ValueError("8x8-transform levels need a transform_8x8 "
-                         "stream and an all->=8x8 partition shape")
+def _emit_inter_levels_cavlc(bw, states, st, levels, mbx, mby, mbs_w):
+    """CBP + mb_qp_delta + luma residual of one inter MB (CAVLC) —
+    shared by the P and B encoders. ``levels`` is None or a (16, 16)
+    per-4x4 scan-order array."""
     if levels is None:
         bw.ue(_CBP_INTER_INV[0])
         return
     levels = np.asarray(levels, dtype=np.int64)
-    if lv8:
-        cbp_luma = 0
-        for b in range(4):
-            if np.any(levels[b]):
-                cbp_luma |= 1 << b
-        bw.ue(_CBP_INTER_INV[cbp_luma])
-        if cbp_luma:
-            bw.u(1, 1)               # transform_size_8x8_flag
-            bw.se(0)                 # mb_qp_delta
-        for b in range(4):
-            if not cbp_luma & (1 << b):
-                continue
-            for k in range(4):       # interleaved sub-blocks
-                nc = _luma_nc(states, mbx, mby, mbs_w, 4 * b + k)
-                sub = levels[b, 4 * np.arange(16) + k]
-                _encode_residual(bw, sub, nc, 16)
-                st.nnz_l[4 * b + k] = np.count_nonzero(sub)
-        return
     cbp_luma = 0
     for blk in range(16):
         if np.any(levels[blk]):
             cbp_luma |= 1 << (blk // 4)
     bw.ue(_CBP_INTER_INV[cbp_luma])
     if cbp_luma:
-        if ts8_stream and part_ok:
-            bw.u(0, 1)               # transform_size_8x8_flag = 0
         bw.se(0)                     # mb_qp_delta
     for blk in range(16):
         if not (cbp_luma >> (blk // 4)) & 1:
@@ -3630,8 +3219,7 @@ def h264_encode_p_frame(mb_specs: list, mbs_w: int, mbs_h: int,
                         qp: int = 30, frame_num: int = 1,
                         ref_idc: int = 2,
                         poc_lsb: int | None = None,
-                        weights: dict | None = None,
-                        ts8_stream: bool = False) -> bytes:
+                        weights: dict | None = None) -> bytes:
     """Encode ONE P frame as an Annex-B non-IDR NAL (nal_ref_idc
     ``ref_idc``, single slice, CAVLC) to append after an IDR access
     unit. ``ref_idc=0`` emits a non-reference slice — legal for the
@@ -3643,11 +3231,7 @@ def h264_encode_p_frame(mb_specs: list, mbs_w: int, mbs_h: int,
       * ``(mvx, mvy)``      — P_L0_16x16, quarter-pel MV, no residual;
       * ``(mvx, mvy, lv)``  — P_L0_16x16 with a luma residual: ``lv``
         is a (16, 16) int array of per-4x4 CAVLC scan-order
-        coefficient LEVELS (inter blocks carry all 16 positions), or
-        (r8, High profile) a (4, 64) per-8x8 scan-order array coding
-        the MB with transform_size_8x8_flag = 1 (requires
-        ``ts8_stream=True``, i.e. a GOP anchored by an i8 IDR whose
-        PPS sets transform_8x8_mode);
+        coefficient LEVELS (inter blocks carry all 16 positions);
       * ``('p16x8', mv0, mv1[, lv])`` — P_L0_L0_16x8 (r8): top and
         bottom 16x8 partition MVs as (mvx, mvy) pairs;
       * ``('p8x16', mv0, mv1[, lv])`` — P_L0_L0_8x16: left and right;
@@ -3751,11 +3335,8 @@ def h264_encode_p_frame(mb_specs: list, mbs_w: int, mbs_h: int,
             bw.se(mvx - mvpx)
             bw.se(mvy - mvpy)
             mv_entry = (mvx, mvy)
-        part_ok = not isinstance(spec[0], str) or spec[0] != "p8x8" \
-            or all(s[0] == "8x8" for s in spec[1])
         st = _MBState()
-        _emit_inter_levels_cavlc(bw, states, st, levels, ts8_stream,
-                                 part_ok, mbx, mby, mbs_w)
+        _emit_inter_levels_cavlc(bw, states, st, levels, mbx, mby, mbs_w)
         states[(mbx, mby)] = st
         mv_map[(mbx, mby)] = mv_entry
     if skip_run:
@@ -3770,8 +3351,7 @@ def h264_encode_b_frame(mb_specs: list, mbs_w: int, mbs_h: int,
                         frame_num: int = 1,
                         col_mvs: dict | None = None,
                         temporal: tuple | None = None,
-                        weights: dict | None = None,
-                        ts8_stream: bool = False) -> bytes:
+                        weights: dict | None = None) -> bytes:
     """Encode ONE B frame as an Annex-B non-reference NAL (CAVLC,
     single slice) for a poc_type-0 stream (build the IDR with
     ``h264_encode(..., poc_lsb=...)`` and reference P frames with
@@ -3934,11 +3514,8 @@ def h264_encode_b_frame(mb_specs: list, mbs_w: int, mbs_h: int,
                         temporal, None, None, mbx, mby, mbs_w)
         else:
             raise ValueError(f"unknown B mb_spec kind {kind!r}")
-        part_ok = kind != "b8x8" or all(
-            s[0] == "direct" or s[1] == "8x8" for s in spec[1])
         st = _MBState()
-        _emit_inter_levels_cavlc(bw, states, st, levels, ts8_stream,
-                                 part_ok, mbx, mby, mbs_w)
+        _emit_inter_levels_cavlc(bw, states, st, levels, mbx, mby, mbs_w)
         states[(mbx, mby)] = st
     if skip_run:
         bw.ue(skip_run)

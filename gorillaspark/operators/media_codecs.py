@@ -15,14 +15,13 @@ decodes for real too: Annex-B CAVLC IDR frames — standalone or as
 avc1 MP4 tracks (avcC record + length-prefixed samples, ISO/IEC
 14496-15) — and GOPs with P slices (one reference, P_L0_16x16 /
 P_Skip / intra-in-P, quarter-pel motion compensation,
-h264_decode_gop). The r8 rounds closed most of that module's old
-stub list (B slices, every inter partition shape, weighted
-prediction, High-profile Intra_8x8), and late r8 added HEVC
-Main-profile intra (h265.py — hvc1/hvcC MP4 tracks, lossless
-transquant-bypass only). Out of scope, honestly: H.264 CABAC, lossy
-HEVC (transform, deblocking, SAO) and HEVC inter (P/B) pictures, all
-rejected with NotImplementedError, H.264 inter features beyond
-those, and the H.264 deblocking filter.
+h264_decode_gop), B slices, every inter partition shape and
+weighted prediction. Out of scope, rejected with
+NotImplementedError: H.264 CABAC and the High-profile 8x8
+transform, and H.265/HEVC in any form (Annex-B payloads, detected by
+_is_annexb_h265 so they are never misparsed as H.264, and hvc1/hev1
+MP4 tracks). The H.264 deblocking filter is not implemented either:
+the decoder refuses streams that need it.
 
 Also defines GSV1, a minimal documented frame container (magic +
 frame interval + length-prefixed BMP frames) so video frame-sampling
@@ -234,10 +233,9 @@ def image_features(payload: bytes) -> dict:
         px = _to_rgb(jpeg_decode(payload)).astype(np.int64)
     elif _is_annexb(payload):
         if _is_annexb_h265(payload):
-            from . import h265 as _h265
-            px = _h265.h265_decode(payload).astype(np.int64)
-        else:
-            px = h264_rgb(payload).astype(np.int64)
+            raise NotImplementedError("H.265/HEVC streams unsupported: "
+                                      "only H.264 Annex-B decodes")
+        px = h264_rgb(payload).astype(np.int64)
     else:
         px = bmp_decode(payload).astype(np.int64)
     return pixel_features(px)
@@ -1675,9 +1673,8 @@ def jpeg_decode(payload: bytes) -> np.ndarray:
 # (Motion-JPEG, a real QuickTime/MP4 sample format) entries the frame
 # DECODE path is real too, via jpeg_decode above; avc1 entries (r7)
 # rebuild Annex-B from the avcC record and decode through h264.py.
-# Other compressed sample formats (hev1/...) demux fine but their
-# frame decode raises — those bitstream codecs genuinely need
-# libraries.
+# HEVC tracks (hvc1/hev1) raise NotImplementedError at demux; other
+# compressed sample formats demux fine but their frame decode raises.
 
 
 def _box(tag: bytes, body: bytes) -> bytes:
@@ -1822,21 +1819,21 @@ def mp4_demux(payload: bytes) -> dict:
 
     off, _ = full(b"stsd")
     fourcc = payload[off + 4 + 4:off + 4 + 8]
+    if fourcc in (b"hvc1", b"hev1"):
+        raise NotImplementedError(
+            f"{fourcc.decode()} (H.265/HEVC) tracks unsupported")
     w, h = struct.unpack_from(">HH", payload, off + 4 + 8 + 24)
     # codec config boxes trail the 86-byte VisualSampleEntry (avcC
     # for avc1 tracks, ISO/IEC 14496-15)
     entry_start = off + 4
     (entry_size,) = struct.unpack_from(">I", payload, entry_start)
     entry_end = min(entry_start + entry_size, len(payload))
-    avcc = hvcc = None
+    avcc = None
     if entry_start + 86 < entry_end:
         for tag, boff, bend in _walk_boxes(payload, entry_start + 86,
                                            entry_end):
             if tag == b"avcC":
                 avcc = payload[boff:bend]
-                break
-            if tag == b"hvcC":
-                hvcc = payload[boff:bend]
                 break
 
     cap = len(payload)  # a sample needs >= 1 byte: counts beyond the
@@ -1921,17 +1918,6 @@ def mp4_demux(payload: bytes) -> dict:
             raise ValueError("avc1 track lacks an avcC record")
         from . import h264 as _h264
         samples = [_h264.h264_sample_to_annexb(s, avcc) for s in samples]
-    elif fourcc in (b"hvc1", b"hev1"):
-        # same contract for HEVC tracks (r8: h265.py) — hvc1 keeps
-        # parameter sets in the hvcC record; hev1 may carry them
-        # in-band, in which case samples pass through length-unwrapped
-        # via the record-free path
-        if hvcc is None:
-            raise ValueError(f"{fourcc.decode()} track lacks an "
-                             "hvcC record")
-        from . import h265 as _h265
-        samples = [_h265.hevc_sample_to_annexb(s, hvcc)
-                   for s in samples]
     return {"fourcc": fourcc, "timescale": timescale, "width": w,
             "height": h, "sample_ts": ts, "samples": samples,
             "composition_ts": comp_ts}
@@ -1966,18 +1952,6 @@ def mp4_sample_frame_features(payload: bytes, every_ms: int):
     samples the decoded frames (a standalone decode of a P sample
     raises 'P slice without a reference frame'; r7 ADVICE item)."""
     d = mp4_demux(payload)
-    if d["fourcc"] in (b"hvc1", b"hev1"):
-        from . import h265 as _h265
-        frames = _h265.h265_decode_gop(b"".join(d["samples"]))
-        if len(frames) != len(d["samples"]):
-            raise ValueError("hvc1 sample count != decoded frame count")
-        # intra-only pictures: decode order is presentation order
-        next_ts = 0
-        for i, (ts_, px) in enumerate(zip(d["sample_ts"], frames)):
-            if ts_ >= next_ts:
-                yield i, ts_, pixel_features(px)
-                next_ts = (ts_ // every_ms + 1) * every_ms
-        return
     if d["fourcc"] == b"avc1":
         from . import h264 as _h264
         # each demuxed sample is already a full Annex-B access unit

@@ -11,13 +11,10 @@ media_codecs.py grew a real baseline JPEG codec in r5 (MP4/MJPEG
 demux+decode with it), an H.264 decoder in r7-r8 (h264.py —
 Annex-B and avc1/avcC MP4 tracks, CAVLC, I/P/B GOPs with
 every inter partition shape, quarter-pel MC, spatial+temporal
-direct, weighted prediction, and High-profile Intra_8x8 via
-h264_hi.py), and an HEVC Main-profile intra codec in late r8
-(h265.py — Annex-B and hvc1/hvcC MP4 tracks, CABAC on the shared
-M-coder, lossless transquant-bypass only), so only H.264 CABAC,
-lossy HEVC, HEVC inter slices and interlaced H.264 stay honestly
-stubbed — behind ``decoder=`` hooks / parsers that raise
-``NotImplementedError``. Swapping in ffmpeg/torchaudio on a real
+direct and weighted prediction). H.264 CABAC, the High-profile 8x8
+transform, interlaced H.264 and H.265/HEVC (Annex-B payloads and
+hvc1/hev1 MP4 tracks) are not decoded: ``decoder=`` hooks / parsers
+raise ``NotImplementedError``. Swapping in ffmpeg/torchaudio on a real
 cluster changes only the per-format branch: batch shapes, schemas
 and partitioning are already exercised end-to-end.
 """
@@ -263,10 +260,9 @@ def video_frame_stats(media: DataFrame, every_ms: int = 1000,
     (BMP frames); real ISO-BMFF MP4 with Motion-JPEG samples (r5);
     avc1 H.264 tracks (r8: sample sequences decode as GOPs via
     h264_decode_gop, so P-frame samples predict from their references
-    instead of failing standalone); and hvc1/hev1 HEVC tracks (late
-    r8: IDR sample sequences via h265_decode_gop; inter P/B samples
-    raise ``NotImplementedError``). Unsupported fourccs raise at frame
-    decode.
+    instead of failing standalone). hvc1/hev1 HEVC tracks raise
+    ``NotImplementedError`` at demux; other unsupported fourccs raise
+    at frame decode.
     """
     cols = media.select(F.col(id_col).alias("media_id"),
                         F.col(payload_col).alias("payload"))

@@ -86,11 +86,11 @@ def record_unit(spark: SparkSession, io, job_id: str, unit: str,
 def unit_metrics(spark: SparkSession, io, job_id: str):
     """The per-unit lineage + metrics rows for a job (throughput,
     output volume, snapshot ids) — the operational view the north rule
-    asks for; empty DataFrame if the job never ran."""
+    asks for; no rows, with the same columns, if the job never ran."""
     try:
         meta = io.read(META_TABLE)
     except FileNotFoundError:
-        return spark.createDataFrame([], META_SCHEMA)
+        meta = spark.createDataFrame([], META_SCHEMA)
     return (meta.where(F.col("job_id") == job_id)
             .withColumn("rows_per_sec",
                         F.col("rows_out")

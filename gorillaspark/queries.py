@@ -2654,85 +2654,6 @@ _MEDIA_H264_PCM_SQL = """
 """
 
 
-def _synth_h264_i8_udf():
-    """Per-doc High-profile IDR (r8): Intra_8x8 DC-only blocks whose
-    8x8 transform chain is exact by construction — the 4x8 grid of
-    8x8-block targets v = 20 + (doc*7 + gi*9 + gj*31) % 200 comes
-    back pixel-exactly through the profile-100 SPS, the PPS
-    transform_8x8 extension, the transform_size_8x8_flag, the
-    filtered-reference DC prediction and the qp-0 dequant/IDCT8
-    (offset map (5c + 32) >> 6), driving the CAVLC Intra_8x8 path
-    (interleaved 4x4 sub-blocks)."""
-    from .operators import h264 as hh
-
-    @pandas_udf("binary")
-    def to_h264(ids: pd.Series) -> pd.Series:
-        def one(d):
-            gig, gjg = np.meshgrid(np.arange(8), np.arange(4))
-            v = 20 + (d * 7 + gig * 9 + gjg * 31) % 200
-            return hh.h264_encode_flat_i8(v)
-
-        return ids.map(one)
-
-    return to_h264
-
-
-def q_media_h264_i8_stats(spark, sf_dir):
-    """High-profile Intra_8x8 decode value-checked end to end (r8):
-    profile-100 parameter sets, the 8x8 transform chain and the
-    filtered-reference DC prediction — against a pure-SQL oracle
-    over the exact block-target construction."""
-    from .operators.multimodal import image_stats
-    from .operators.spread import spread as _sp
-    # widen before the synth UDF (the expensive stage; a small
-    # corpus is one parquet split - see operators/spread.py)
-    docs = _sp(_docs(spark, sf_dir))
-    img = docs.select(F.col("doc_id").cast("long").alias("media_id"),
-                      _synth_h264_i8_udf()(F.col("doc_id"))
-                      .alias("payload"))
-    st = image_stats(img)
-    return st.select(F.col("media_id").alias("doc_id"),
-                     F.col("width").cast("long").alias("width"),
-                     F.col("height").cast("long").alias("height"),
-                     "sum_r", "sum_g", "sum_b", "ahash")
-
-
-# 64x32 frame of 8x8-block constants v(gi, gj); each ahash cell is
-# 8x4 px = half of one block, so cell value = its block's v and the
-# bit criterion reduces to v*32 > sum-over-the-32-blocks; channel
-# sums are 64*v per block (grey via neutral chroma)
-_MEDIA_H264_I8_SQL = """
-    WITH blk AS (
-      SELECT doc_id, gi.gi, gj.gj,
-             20 + (doc_id*7 + gi.gi*9 + gj.gj*31) % 200 AS v
-      FROM documents
-      CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS gi) gi
-      CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS gj) gj
-    ),
-    tot AS (SELECT doc_id, sum(v) AS t FROM blk GROUP BY 1),
-    cell AS (
-      SELECT b.doc_id, i.i * 8 + b.gi AS bit, b.v
-      FROM blk b
-      JOIN (SELECT unnest(generate_series(0, 7)) AS i) i
-        ON i.i // 2 = b.gj
-    ),
-    ah AS (SELECT c.doc_id,
-                  sum(CASE WHEN c.v * 32 > t.t
-                           THEN (1::HUGEINT << CAST(c.bit AS INTEGER))
-                           ELSE 0::HUGEINT END) AS ahash_u
-           FROM cell c JOIN tot t USING (doc_id) GROUP BY 1)
-    SELECT t.doc_id, CAST(64 AS BIGINT) AS width,
-           CAST(32 AS BIGINT) AS height,
-           CAST(t.t * 64 AS BIGINT) AS sum_r,
-           CAST(t.t * 64 AS BIGINT) AS sum_g,
-           CAST(t.t * 64 AS BIGINT) AS sum_b,
-           CAST(CASE WHEN ahash_u >= 9223372036854775808::HUGEINT
-                     THEN ahash_u - 18446744073709551616::HUGEINT
-                     ELSE ahash_u END AS BIGINT) AS ahash
-    FROM tot t JOIN ah USING (doc_id)
-"""
-
-
 def q_media_jpeg_prog_stats(spark, sf_dir):
     """Progressive-JPEG (SOF2) decode value-checked end to end: the
     quantization-exact block-constant family of media_jpeg_stats,
@@ -3255,101 +3176,6 @@ _MEDIA_H264_B_SQL = """
 """
 
 
-def _synth_hvc1_udf():
-    """Per-doc hvc1 MP4 — a REAL ISO/IEC 14496-15 §8.4 HEVC track
-    (hvcC decoder-configuration record + 4-byte-length-prefixed
-    sample NALs) of LOSSLESS Main-profile intra frames (r8:
-    h265.py): each 16x16 frame carries the grey field
-    v = (doc*7 + k*37 + x*3 + y*5) % 256 through
-    cu_transquant_bypass CUs, so the full pipeline — hvcC parse,
-    sample→Annex-B rebuild, the shared-M-coder CABAC decode
-    (last-sig/sig/gt1/gt2/Rice-remaining residuals), planar/DC/
-    angular intra prediction and the quadtree — reproduces it
-    BIT-EXACTLY, the HEVC analogue of the I_PCM/FLAC lossless
-    families. Odd docs force the CTB quadtree split (8x8 CUs, NxN
-    where the encoder's SAD picks it), even docs code whole CTBs, so
-    one query drives both partitioning paths."""
-    from .operators import media_codecs as mc
-    from .operators import h265 as h5
-
-    @pandas_udf("binary")
-    def to_hvc1(ids: pd.Series) -> pd.Series:
-        def one(d):
-            xg, yg = np.meshgrid(np.arange(16), np.arange(16))
-            frames, cfg = [], None
-            for k in range(2 + d % 3):
-                v = ((d * 7 + k * 37 + xg * 3 + yg * 5) % 256) \
-                    .astype(np.uint8)
-                ab = h5.h265_encode(v, cands=(0, 1, 10, 26),
-                                    force_split=bool(d % 2))
-                if cfg is None:
-                    cfg = mc._box(b"hvcC", h5.hevc_hvcc_config(ab))
-                frames.append(h5.hevc_to_hvc1_sample(ab))
-            return mc.mp4_mux(frames, frame_ms=500, fourcc=b"hvc1",
-                              width=16, height=16, config=cfg)
-
-        return ids.map(one)
-
-    return to_hvc1
-
-
-def q_media_h265_stats(spark, sf_dir):
-    """Real HEVC decode end to end (r8, closing the last media
-    stub): hvc1 MP4 demux, hvcC parse, Annex-B rebuild, CABAC
-    residual decode, intra prediction and the lossless
-    transquant-bypass reconstruction — value-checked against a
-    pure-SQL oracle since the decode is bit-exact by construction."""
-    from .operators.multimodal import video_frame_stats
-    from .operators.spread import spread as _sp
-    # widen BEFORE the synth UDF: the per-doc GOP encode is the
-    # expensive stage, and a small corpus is one parquet split —
-    # without this the synthesis serializes on the scan partitions
-    docs = _sp(_docs(spark, sf_dir))
-    vid = docs.select(F.col("doc_id").cast("long").alias("media_id"),
-                      _synth_hvc1_udf()(F.col("doc_id"))
-                      .alias("payload"))
-    st = video_frame_stats(vid, every_ms=1000)
-    return st.select(F.col("media_id").alias("doc_id"),
-                     F.col("frame_index").cast("long")
-                     .alias("frame_index"),
-                     "frame_ts_ms", "ahash")
-
-
-# 16x16 grey lossless frames sampled at k % 2 == 0; ahash cell (i,j)
-# spans 2x2 px (area 4 of 256): block-mean > frame-mean reduces
-# exactly to 64*cellsum > total — the same reduction as the I_PCM
-# family, with the GOP dimension of the H.264 video families
-_MEDIA_H265_SQL = """
-    WITH f AS (
-      SELECT doc_id, unnest(generate_series(0, 1 + doc_id % 3)) AS k
-      FROM documents
-    ), sampled AS (SELECT doc_id, k FROM f WHERE k % 2 = 0),
-    px AS (
-      SELECT s.doc_id, s.k, x.x, y.y,
-             (s.doc_id*7 + s.k*37 + x.x*3 + y.y*5) % 256 AS v
-      FROM sampled s
-      CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS x) x
-      CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS y) y
-    ),
-    tot AS (SELECT doc_id, k, sum(v) AS t FROM px GROUP BY 1, 2),
-    cell AS (
-      SELECT doc_id, k, (y // 2) * 8 + (x // 2) AS bit, sum(v) AS cs
-      FROM px GROUP BY 1, 2, 3
-    ),
-    ah AS (SELECT c.doc_id, c.k,
-                  sum(CASE WHEN c.cs * 64 > t.t
-                           THEN (1::HUGEINT << CAST(c.bit AS INTEGER))
-                           ELSE 0::HUGEINT END) AS ahash_u
-           FROM cell c JOIN tot t USING (doc_id, k) GROUP BY 1, 2)
-    SELECT doc_id, CAST(k AS BIGINT) AS frame_index,
-           CAST(k * 500 AS BIGINT) AS frame_ts_ms,
-           CAST(CASE WHEN ahash_u >= 9223372036854775808::HUGEINT
-                     THEN ahash_u - 18446744073709551616::HUGEINT
-                     ELSE ahash_u END AS BIGINT) AS ahash
-    FROM ah
-"""
-
-
 QUERIES.update({
     "media_audio_stats": q_media_audio_stats,
     "media_image_stats": q_media_image_stats,
@@ -3365,9 +3191,7 @@ QUERIES.update({
     "media_h264_b_stats": q_media_h264_b_stats,
     "media_h264_part_stats": q_media_h264_part_stats,
     "media_h264_wp_stats": q_media_h264_wp_stats,
-    "media_h264_i8_stats": q_media_h264_i8_stats,
     "media_jpeg_prog_stats": q_media_jpeg_prog_stats,
-    "media_h265_stats": q_media_h265_stats,
 })
 ORACLES.update({
     "media_audio_stats": _MEDIA_AUDIO_SQL,
@@ -3386,10 +3210,7 @@ ORACLES.update({
     #                          temporal direct (r8), cell-aligned
     "media_h264_wp_stats": _MEDIA_H264_WP_SQL,  # explicit + implicit
     #                          weighted prediction (r8)
-    "media_h264_i8_stats": _MEDIA_H264_I8_SQL,  # High-profile
-    #                          Intra_8x8 transform chain (r8)
     "media_jpeg_prog_stats": _MEDIA_JPEG_SQL,  # same exact family, SOF2
-    "media_h265_stats": _MEDIA_H265_SQL,  # lossless HEVC intra (r8)
 })
 
 
@@ -3656,9 +3477,6 @@ _EXTRA_NAMES = [
                                #       media_h264_b_stats
     "media_audio_stats",       # kept: media_flac_stats shares the WAV
                                #       analytic oracle in-window
-    "doc_fingerprint",         # kept: doc_stats + the trigram
-                               #       families keep the textstats
-                               #       surface in-window
     "media_jpeg_stats",        # kept: media_jpeg_prog_stats decodes
                                #       the same exact block-constant
                                #       family in-window

@@ -78,78 +78,3 @@ def streaming_latency_points(turns: DataFrame) -> DataFrame:
             .applyInPandasWithState(
                 _update, LATENCY_SCHEMA, STATE_SCHEMA,
                 "append", GroupStateTimeout.NoTimeout))
-
-
-# ---------------------------------------------------------------------------
-# heartbeat / gap alerting — the genuinely streaming-only operator:
-# batch can find historical gaps (queries.q_series_gaps), but "this
-# series has been silent for N ms AS OF NOW" needs state + timeouts.
-# ---------------------------------------------------------------------------
-
-ALERT_SCHEMA = StructType([
-    StructField("series_key", StringType(), False),
-    StructField("last_seen_ms", LongType(), False),
-    StructField("silent_ms", LongType(), False),
-    StructField("kind", StringType(), False),   # silence|recovered
-])
-
-HEARTBEAT_STATE = StructType([
-    StructField("last_ts_ms", LongType(), True),
-    StructField("alerted", IntegerType(), True),
-])
-
-
-def make_heartbeat_update(silence_ms: int):
-    """Stateful update fn: remembers each series' last event time; a
-    processing-time timeout firing with no new data emits one
-    ``silence`` alert (deduped by the ``alerted`` flag); the next
-    event after an alert emits ``recovered``."""
-
-    def update(key, pdfs: Iterable[pd.DataFrame],
-               state: GroupState) -> Iterable[pd.DataFrame]:
-        (series_key,) = key
-        last_ts, alerted = state.get if state.exists else (None, 0)
-        rows = []
-        if state.hasTimedOut:
-            # no data for this key since the timeout was armed; alert
-            # once per episode and do NOT re-arm — the episode stays
-            # open (state parked) until data closes it
-            if not alerted:
-                rows.append((series_key, int(last_ts),
-                             int(silence_ms), "silence"))
-                state.update((last_ts, 1))
-        else:
-            batch_max = None
-            for pdf in pdfs:
-                if len(pdf):
-                    m = int(pdf["ts_ms"].max())
-                    batch_max = m if batch_max is None else max(m,
-                                                                batch_max)
-            if batch_max is not None:
-                if alerted:
-                    rows.append((series_key, int(batch_max),
-                                 int(batch_max - last_ts), "recovered"))
-                last_ts, alerted = batch_max, 0
-                state.update((last_ts, 0))
-            state.setTimeoutDuration(silence_ms)
-        yield pd.DataFrame(rows, columns=["series_key", "last_seen_ms",
-                                          "silent_ms", "kind"])
-
-    return update
-
-
-def streaming_heartbeat_alerts(points: DataFrame,
-                               silence_ms: int = 60_000) -> DataFrame:
-    """points(series_key, ts_ms, …) stream → silence/recovery alerts.
-
-    Uses processing-time timeouts: state stays O(#live series) (one
-    (long, int) per series), alerts emit at most once per silence
-    episode, and recovery closes the episode. The per-series state-
-    store layout is the same hash partitioning every other stateful
-    op uses — no extra shuffle when chained after them.
-    """
-    return (points.groupBy("series_key")
-            .applyInPandasWithState(
-                make_heartbeat_update(silence_ms), ALERT_SCHEMA,
-                HEARTBEAT_STATE, "append",
-                GroupStateTimeout.ProcessingTimeTimeout))

@@ -50,32 +50,17 @@ def streaming_rollup(turns: DataFrame, span: str = "1 minute",
     )
 
 
-def streaming_role_rates(turns: DataFrame, span: str = "1 minute",
-                         watermark: str = "10 minutes") -> DataFrame:
-    return (
-        turns
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", span).alias("w"), "role")
-        .agg(F.count(F.lit(1)).alias("messages"))
-        .select(F.col("w.start").alias("bucket"), "role", "messages")
-    )
-
-
-def _stream_parquet(spark, path: str,
-                    options: dict | None = None) -> DataFrame:
+def _stream_parquet(spark, path: str) -> DataFrame:
     """readStream a parquet directory, or a SINGLE parquet file by
     streaming its parent directory filtered to the exact basename
     (glob metacharacters escaped) — FileStreamSource insists on a
     directory; the old trailing-char bracket-glob trick broke when the
     path's last char was ']' and changed meaning with glob chars
-    earlier in the path (ADVICE r4). ``options`` pass through to the
-    reader (e.g. maxFilesPerTrigger to force multi-micro-batch runs)."""
+    earlier in the path (ADVICE r4)."""
     import os
     import re
     schema = spark.read.parquet(path).schema
     reader = spark.readStream.schema(schema)
-    for k, v in (options or {}).items():
-        reader = reader.option(k, v)
     if os.path.isfile(path):
         parent, base = os.path.split(path)
         safe = re.sub(r"([*?\[\]{}\\])", r"\\\1", base)
@@ -180,56 +165,6 @@ def dedup_snapshot(spark, docs_path: str, text_col: str = "text",
     stream = _stream_parquet(spark, docs_path)
     agg = dedup_exact(stream, text_col, id_col)
     return _run_to_completion(spark, agg, "dedup")
-
-
-def dedup_update_stream(spark, docs_path: str, emissions_dir: str,
-                        checkpoint_dir: str, text_col: str = "text",
-                        id_col: str = "doc_id",
-                        options: dict | None = None) -> DataFrame:
-    """Production-shape streaming exact dedup: update output mode.
-
-    :func:`dedup_snapshot` (complete mode) is the correctness-gate
-    surface, but it re-emits the FULL aggregate every micro-batch and
-    the snapshot lives in driver memory — state grows with unique
-    hashes, which is exactly what doesn't scale at ingest volume. This
-    variant runs the SAME single aggregate definition
-    (operators/dedup.py dedup_exact — min keep_id + copy count per
-    content sha256) in update mode: each micro-batch emits only the
-    keys whose aggregate changed, the running state lives in the
-    executor-side HDFS-backed state store under ``checkpoint_dir``
-    (partitioned by the shuffle hash of content_hash, restart-safe),
-    and a ``foreachBatch`` sink lands each delta with its batch id —
-    the shape a live pipeline uses to upsert a key-value store.
-
-    Because min/count are monotone (keep_id only shrinks, n_copies
-    only grows), the latest emission per key IS the final aggregate —
-    pytest pins that the per-key last emission across ≥3 micro-batches
-    equals the batch aggregate, and that each batch's emission set is
-    exactly the keys present in that batch's input (the delta
-    property). An at-most-once alternative for pure ingest filtering
-    is ``dropDuplicates`` on the hash in append mode, but its keep-id
-    depends on arrival order; the aggregate form stays
-    order-deterministic, which is what makes a value oracle possible.
-
-    Runs to completion (availableNow) and returns the emissions
-    DataFrame (content_hash, keep_id, n_copies, batch_id).
-    """
-    from ..operators.dedup import dedup_exact
-
-    stream = _stream_parquet(spark, docs_path, options)
-    agg = dedup_exact(stream, text_col, id_col)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(emissions_dir))
-
-    q = (agg.writeStream.foreachBatch(sink).outputMode("update")
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True).start())
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming dedup (update) did not finish in 300s")
-    return spark.read.parquet(emissions_dir)
 
 
 _DAY_MS = 86_400_000

@@ -49,8 +49,8 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
 # the time-series queries that run the encode, rollup, sketch,
 # streaming, gap, downsampling, as-of and sessionization plans (their
 # extra-list siblings compaction_inventory, gapfill_1h_ffill and
-# sessionize are checked above), streaming dedup, and the MP4, PNG
-# and lossless HEVC media queries
+# sessionize are checked above), streaming dedup, the MP4 and PNG
+# media queries, and the document fingerprint
 _WINDOW_NAMES = ["codec_roundtrip", "codec_roundtrip_v1",
                  "codec_roundtrip_dfcm", "rollup_1m", "rollup_1d",
                  "rollup_1h_cascade", "rollup_1d_sketch_p95",
@@ -61,7 +61,7 @@ _WINDOW_NAMES = ["codec_roundtrip", "codec_roundtrip_v1",
                  "counter_rate_1h", "zscore_per_point",
                  "histogram_1d_cascade", "asof_view_before_purchase",
                  "session_error_counts_2tier", "stream_dedup_exact",
-                 "media_mp4_stats", "media_png_stats", "media_h265_stats"]
+                 "media_mp4_stats", "media_png_stats", "doc_fingerprint"]
 
 
 def _extra_names():

@@ -196,32 +196,50 @@ def test_avc1_without_avcc_raises():
         mc.mp4_demux(mp4)
 
 
-def test_hev1_without_hvcc_raises():
-    # r8: hvc1/hev1 are real HEVC tracks (h265.py), no longer opaque
-    # stubs — a parameter-set-less hev1 track is rejected loudly at
-    # demux (ISO/IEC 14496-15 §8.4 requires an hvcC record in the
-    # sample entry for BOTH brands; hev1 only additionally allows
-    # in-band parameter sets).
+@pytest.mark.parametrize("with_hvcc", [False, True],
+                         ids=["no_hvcc", "hvcc"])
+@pytest.mark.parametrize("fourcc", [b"hvc1", b"hev1"],
+                         ids=["hvc1", "hev1"])
+def test_hevc_mp4_track_raises(fourcc, with_hvcc):
+    """HEVC tracks are refused at demux, with or without the hvcC
+    decoder-configuration record in the sample entry."""
+    cfg = mc._box(b"hvcC", bytes([1]) + bytes(22)) if with_hvcc else b""
     mp4 = mc.mp4_mux([b"\x00\x00\x00\x01junk"], frame_ms=500,
-                     fourcc=b"hev1", width=16, height=16)
-    with pytest.raises(OK_ERRORS):
+                     fourcc=fourcc, width=16, height=16, config=cfg)
+    with pytest.raises(NotImplementedError, match="HEVC"):
         mc.mp4_demux(mp4)
+
+
+def test_hevc_annexb_payload_raises():
+    """An H.265 Annex-B payload (here a VPS NAL header, type 32, then
+    junk) is recognised as HEVC and refused, not parsed as H.264: the
+    same bytes through the H.264 decoder fail as a corrupt stream."""
+    payload = b"\x00\x00\x00\x01\x40\x01" + b"junk" * 8
+    assert mc._is_annexb_h265(payload)
+    with pytest.raises(ValueError):
+        mc.h264_rgb(payload)
+    with pytest.raises(NotImplementedError, match="HEVC"):
+        mc.image_features(payload)
 
 
 @pytest.mark.parametrize("flag,match", [
     ("cabac", "CABAC"), ("transform_8x8", "8x8 transform")],
     ids=["cabac", "transform_8x8"])
 def test_cabac_and_8x8_transform_streams_raise(flag, match):
-    """The decoder is CAVLC-only, and the 8x8 transform decodes only
-    from streams carrying the gorillaspark marker SEI: a PPS that sets
-    entropy_coding_mode_flag, or an unmarked stream whose PPS sets
-    transform_8x8_mode_flag, is rejected loudly, on the raw decoder
-    and the media entrypoint."""
-    pps = bytearray(h._write_pps(transform_8x8=flag == "transform_8x8"))
-    assert pps[0] & 0xE0 == 0xC0
+    """The decoder is CAVLC-only with the 4x4 transform: a PPS that
+    sets entropy_coding_mode_flag or transform_8x8_mode_flag is
+    rejected loudly, on the raw decoder and the media entrypoint."""
+    pps = bytearray(h._write_pps())
+    assert pps[0] & 0xE0 == 0xC0 and pps[-1] == 0x80
     if flag == "cabac":
         # entropy_coding_mode_flag follows the two single-bit ue(0) ids
         pps[0] |= 0x20
+    else:
+        # the PPS ends on a byte-aligned stop bit; in its place put the
+        # High-profile extension: transform_8x8_mode_flag 1,
+        # pic_scaling_matrix_present 0, second_chroma_qp_index_offset
+        # se(0) and the stop bit
+        pps[-1] = 0b10110000
     bw = h._BitW()
     h._slice_header(bw, 26)
     bw.trailing()
@@ -230,6 +248,35 @@ def test_cabac_and_8x8_transform_streams_raise(flag, match):
         h.h264_decode_gop_planes(stream)
     with pytest.raises(NotImplementedError, match=match):
         mc.image_features(stream)
+
+
+def test_high_profile_sps_gates():
+    """Non-4:2:0 / deep-bit / scaling-matrix High streams reject in
+    the SPS parser."""
+    bw = h._BitW()
+    bw.u(100, 8)
+    bw.u(0, 8)
+    bw.u(20, 8)
+    bw.ue(0)                         # sps_id
+    bw.ue(2)                         # chroma_format_idc 4:2:2
+    with pytest.raises(NotImplementedError, match="chroma_format"):
+        h._parse_sps(h._Bits(bw.bytes() + b"\x80"))
+
+
+def test_foreign_cabac_rejected_loudly():
+    # a valid CAVLC stream whose PPS flips entropy_coding_mode_flag
+    # (the bit after the two single-bit ue(0) ids) must be REFUSED
+    off = np.full((1, 2), 5, dtype=np.int64)
+    stream = h.h264_encode_flat_mbs(off, qp=36)
+    pps = bytearray(h._write_pps())
+    assert pps[0] & 0xE0 == 0xC0
+    pps[0] |= 0x20
+    sc = b"\x00\x00\x00\x01"
+    nals = [sc + (b"\x68" + h._escape(bytes(pps))
+                  if (n[0] & 0x1F) == 8 else n)
+            for n in h._split_annexb_raw(stream)]
+    with pytest.raises(NotImplementedError, match="CABAC"):
+        h.h264_decode(b"".join(nals))
 
 
 # ---------------------------------------------------------------------------

@@ -45,22 +45,7 @@ def _valid_payloads():
         "png16": mc.png_encode((img.astype(np.uint16) * 257), depth=16),
         "png_adam7": mc.png_encode(rgb, interlace=True),
         "wav": mc.wav_encode(sine, 16000, 1),
-        "hvc1": _hvc1_track(img),
     }
-
-
-def _hvc1_track(img: np.ndarray) -> bytes:
-    # real hvc1 MP4: hvcC record + 2 lossless HEVC intra samples
-    from gorillaspark.operators import h265 as h5
-    frames, cfg = [], None
-    for k in range(2):
-        ab = h5.h265_encode((img + 31 * k) % 256, cands=(0, 1),
-                            force_split=bool(k))
-        if cfg is None:
-            cfg = mc._box(b"hvcC", h5.hevc_hvcc_config(ab))
-        frames.append(h5.hevc_to_hvc1_sample(ab))
-    return mc.mp4_mux(frames, 500, fourcc=b"hvc1", width=32,
-                      height=16, config=cfg)
 
 
 def _decode(kind: str, payload: bytes):
@@ -71,15 +56,13 @@ def _decode(kind: str, payload: bytes):
     if kind == "mp4":
         d = mc.mp4_demux(payload)
         return [mc.jpeg_decode(s) for s in d["samples"]]
-    if kind == "hvc1":
-        return list(mc.mp4_sample_frame_features(payload, 400))
     if kind.startswith("png"):
         return mc.png_decode(payload)
     return mc.wav_decode(payload)
 
 
 @pytest.mark.parametrize("kind", ["jpeg", "jpeg420", "jpeg_prog",
-                                  "flac", "mp4", "hvc1",
+                                  "flac", "mp4",
                                   "png", "png_pal", "png16",
                                   "png_adam7", "wav"])
 def test_fuzz_mutations_fail_cleanly(kind):

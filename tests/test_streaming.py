@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from gorillaspark.sources.tableio import ParquetTableIO
 from gorillaspark.streaming.stream_rollup import (
     incremental_encode,
-    streaming_role_rates,
     streaming_rollup,
 )
 
@@ -40,17 +39,6 @@ def test_streaming_rollup_matches_batch(spark, tmp_path, transcripts,
     w = want.sort_values(["series_key", "bucket"]).reset_index(drop=True)
     assert len(g) == len(w)
     assert (g["cnt"].to_numpy() == w["cnt"].to_numpy()).all()
-
-
-def test_streaming_role_rates_runs(spark, tmp_path, turn_stream):
-    out = streaming_role_rates(turn_stream)
-    q = (out.writeStream.format("memory").queryName("rates")
-         .outputMode("complete")
-         .option("checkpointLocation", str(tmp_path / "ck2"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = spark.sql("SELECT sum(messages) AS m FROM rates").collect()[0].m
-    assert got > 0
 
 
 def test_incremental_encode_foreachbatch(spark, tmp_path, transcripts):
@@ -163,49 +151,6 @@ def test_streaming_rollup_append_mode_with_watermark(spark, tmp_path,
                   suffixes=("", "_want"))
     assert len(m) == len(got)
     assert (m["cnt"] == m["cnt_want"]).all()
-
-
-def test_streaming_heartbeat_alerts(spark, tmp_path):
-    """Silence alerts fire via state timeouts when a series stops
-    reporting, dedup within an episode, and close with a recovery."""
-    import time
-
-    from gorillaspark.streaming.stateful import streaming_heartbeat_alerts
-
-    src = str(tmp_path / "hb_src")
-    import os
-    os.makedirs(src, exist_ok=True)
-
-    def feed(name, rows):
-        pdf = pd.DataFrame(rows, columns=["series_key", "ts_ms"])
-        spark.createDataFrame(pdf).coalesce(1).write.mode(
-            "append").parquet(src)
-
-    feed("b1", [("A", 1000), ("B", 1000)])
-    stream = spark.readStream.schema(
-        "series_key string, ts_ms long").parquet(src)
-    alerts = streaming_heartbeat_alerts(stream, silence_ms=2000)
-    q = (alerts.writeStream.format("memory").queryName("hb")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "hb_ck"))
-         .trigger(processingTime="500 milliseconds").start())
-    try:
-        time.sleep(6)                      # both series go silent
-        feed("b2", [("A", 60_000)])        # A recovers
-        time.sleep(6)
-        got = spark.sql("SELECT * FROM hb").toPandas()
-    finally:
-        q.stop()
-    a = got[got.series_key == "A"].sort_index()
-    assert "silence" in set(a.kind), got
-    assert "recovered" in set(a.kind), got
-    rec = a[a.kind == "recovered"].iloc[0]
-    assert rec.last_seen_ms == 60_000 and rec.silent_ms == 59_000
-    # episode dedup: silences never exceed recoveries + 1 per series
-    for k, grp in got.groupby("series_key"):
-        n_sil = (grp.kind == "silence").sum()
-        n_rec = (grp.kind == "recovered").sum()
-        assert n_sil <= n_rec + 1, got
 
 
 def test_open_day_carry_three_batches_one_block(spark, tmp_path):
@@ -330,67 +275,3 @@ def test_streaming_sketch_parity_across_microbatches(spark, tmp_path):
           .toPandas().sort_values(["series_key", "bucket_ms"])
           .reset_index(drop=True))
     pd.testing.assert_frame_equal(sq, bq)
-
-
-def test_dedup_update_mode_parity_across_microbatches(spark, tmp_path):
-    """Production-shape streaming dedup (update mode + state-store
-    checkpoint, stream_rollup.dedup_update_stream): across >=3
-    micro-batches (maxFilesPerTrigger=1, one parquet file each), the
-    per-key LAST emission must equal the batch dedup_exact aggregate
-    (min/count are monotone, so last == final), and each batch must
-    emit exactly the keys present in that batch's input — the update
-    -mode delta property that keeps emission volume proportional to
-    batch size, not state size."""
-    from gorillaspark.operators.dedup import dedup_exact
-    from gorillaspark.streaming.stream_rollup import dedup_update_stream
-
-    src = str(tmp_path / "docs_src")
-    # 4 files; "dup-A" spans batches 0/1/3, "dup-B" spans 1/2 — several
-    # keys must be re-emitted with grown counts in later batches
-    files = [
-        [(0, "dup-A"), (1, "only-zero")],
-        [(2, "dup-A"), (3, "dup-B"), (4, "only-one")],
-        [(5, "dup-B"), (6, "only-two")],
-        [(7, "dup-A"), (8, "only-three")],
-    ]
-    import os
-    import time
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    os.makedirs(src)
-    now = time.time()
-    for i, rows in enumerate(files):
-        # ONE bare file per micro-batch (the file source does not list
-        # non-partition subdirectories), mtimes strictly increasing so
-        # FileStreamSource's oldest-first pick order == file index
-        p = os.path.join(src, f"f{i}.parquet")
-        pq.write_table(pa.table({
-            "doc_id": pa.array([d for d, _ in rows], pa.int64()),
-            "text": pa.array([t for _, t in rows], pa.string())}), p)
-        os.utime(p, (now + 10 * i, now + 10 * i))
-    docs = spark.read.parquet(src)
-
-    em = dedup_update_stream(
-        spark, src, str(tmp_path / "emissions"), str(tmp_path / "ck_dd"),
-        options={"maxFilesPerTrigger": 1}).toPandas()
-    assert em["batch_id"].nunique() >= 3
-
-    # delta property: per batch, emitted keys == keys in that batch's
-    # input. batch->file order is the source's oldest-mtime-first pick
-    import hashlib
-    emitted = {b: set(g["content_hash"])
-               for b, g in em.groupby("batch_id")}
-    expect = {i: {hashlib.sha256(t.encode()).hexdigest()
-                  for _, t in rows}
-              for i, rows in enumerate(files)}
-    assert emitted == expect
-
-    # last emission per key == batch aggregate
-    last = (em.sort_values("batch_id").groupby("content_hash").tail(1)
-            [["content_hash", "keep_id", "n_copies"]]
-            .sort_values("content_hash").reset_index(drop=True))
-    batch = (dedup_exact(docs).toPandas()
-             .sort_values("content_hash").reset_index(drop=True))
-    pd.testing.assert_frame_equal(
-        last.astype({"keep_id": "int64", "n_copies": "int64"}),
-        batch.astype({"keep_id": "int64", "n_copies": "int64"}))

@@ -415,6 +415,18 @@ def test_ledger_and_repeat_read_start_no_spark_job(spark, io):
     assert completed_units(spark, io, "jj") == {"u1"}
 
 
+def test_unit_metrics_shape_without_a_ledger(spark, io):
+    """A job that never ran gets no rows but the same columns and types
+    as after one recorded unit, rows_per_sec included."""
+    empty = unit_metrics(spark, io, "jn")
+    assert empty.count() == 0
+    record_unit(spark, io, "jn", "u1", 4, 1, 40, "s1", 2)
+    one = unit_metrics(spark, io, "jn")
+    assert one.count() == 1
+    assert [(f.name, f.dataType) for f in empty.schema] == \
+        [(f.name, f.dataType) for f in one.schema]
+
+
 def test_ledger_reads_rows_written_through_spark(spark, io):
     """A ``_meta`` holding a row written through Spark and rows written
     on the driver reads as one ledger: completed_units sees every row,
